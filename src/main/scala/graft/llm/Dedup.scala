@@ -235,7 +235,9 @@ object Dedup {
     // batch's scan/union/regex stages. Within the house broadcast bound
     // the rows are pulled once (hashes computed distributed in the pull
     // job, values identical) and become a local relation; past the bound
-    // the distributed shape is unchanged.
+    // the distributed shape is unchanged. Within the bound Catalyst
+    // evaluates the sketch probe over the local rows while planning, so
+    // only the past-the-bound plan shows the per-row `might_contain`.
     val nhD = newDocs.select(col(idCol).as("id"), h(col(textCol)).as("h"))
     val nh = {
       val limit = MaxBroadcastBatchRows

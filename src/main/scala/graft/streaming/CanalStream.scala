@@ -21,7 +21,9 @@ import java.util.concurrent.atomic.AtomicReference
  * worker queues map to the shuffle; binlog order is carried explicitly as
  * `(es, ts, seq, pos)` (SURVEY §7.4 risk 1). DDL events act as a barrier:
  * each micro-batch is split at DDL boundaries and segments apply
- * sequentially (`PhoenixSyncService.java:180-198` runs DDL inline; risk 4).
+ * sequentially (`PhoenixSyncService.java:180-198` runs DDL inline; risk 4);
+ * a TRUNCATE splits it the same way. Different target tables apply
+ * concurrently (see [[CanalStream.start]]).
  *
  * X5 — config hot-reload: the route table is an `AtomicReference` read at
  * the top of every micro-batch, updated by a driver-side watcher
@@ -164,11 +166,39 @@ object CanalStream {
         flat0.coalesce(1).withColumn("seq", monotonically_increasing_id())
     }
 
+  /** One routed table's row of the batch's stats pass: whether it carries
+    * DDL or a TRUNCATE (both split the table's rows into segments), and
+    * the distinct source columns of its row images. */
+  private final case class TableStat(hasDdl: Boolean, hasTruncate: Boolean,
+                                     srcCols: Seq[String])
+
   /**
    * Start the sync stream. `applyBatch` receives (config, orderedSingles,
    * segmentCtx) per micro-batch segment — in production it applies through
    * [[graft.sink.UpsertSink]] (pass `ctx.sourceCols` to
    * [[applyBatchToJdbc]]); tests can capture state instead.
+   *
+   * Each micro-batch runs one stats pass, then one *chain* per target
+   * table (`dbMapping.targetTable`): the configs writing that table, in
+   * config order, each applying its DDL-barrier segments and `onDdl` calls
+   * in binlog order. Chains run concurrently on driver threads, so their
+   * planning and Spark jobs overlap — the reference likewise applies a
+   * push batch's tables through shared worker queues at once
+   * (`PhoenixSyncService.java:87-99,134-140`); only the per-key order
+   * within a table decides the final state. Consequences for callers:
+   *
+   *  - `applyBatch` and `onDdl` may run at the same time for different
+   *    target tables, so they (and any `heal` they pass on) must be
+   *    thread-safe; calls for one target table never overlap.
+   *  - Open JDBC connections are bounded by the executor task slots (one
+   *    per running apply task), not by `numPartitions`.
+   *  - A config whose table has no row in the micro-batch gets no work at
+   *    all: no job, no `applyBatch` call, no connection.
+   *  - When a chain fails, the batch still waits for every other chain,
+   *    then fails with the first chain's error (the others attached as
+   *    suppressed); the replay on restart re-applies the whole batch.
+   *  - `StreamingQuery.stop()` returns only after every chain of the
+   *    running batch has ended (see [[runChains]]).
    *
    * `checkpointLocation` enables restart/recovery: source offsets and batch
    * commits go to the WAL, so a restarted query resumes at the first
@@ -200,9 +230,9 @@ object CanalStream {
         flat0.persist()
         try {
           // ONE pass over the cached flatten yields, per routed table, the
-          // DDL-presence flag and the distinct source columns (replacing a
-          // DDL probe plus one agg per segment on the hot path; the mapped-
-          // column check itself is per-row in the reference,
+          // DDL/TRUNCATE-presence flags and the distinct source columns
+          // (replacing a DDL probe plus one agg per segment on the hot path;
+          // the mapped-column check itself is per-row in the reference,
           // `PhoenixSyncService.java:399-404`) — plus, for FileOrder, the
           // source-file set that ranks the batch's files
           val fileAgg =
@@ -211,6 +241,7 @@ object CanalStream {
             else Seq.empty
           val aggs = Seq(
             max(coalesce(col("isDdl"), lit(false))).as("any_ddl"),
+            max(coalesce(col("type") === CanalEvent.Truncate, lit(false))).as("any_truncate"),
             array_distinct(flatten(collect_set(map_keys(col("data"))))).as("src_cols")) ++
             fileAgg
           val statRows = flat0.groupBy("destination", "database", "table")
@@ -218,48 +249,117 @@ object CanalStream {
             .collect()
           val files =
             if (mode == IngressOrdering.FileOrder)
-              statRows.flatMap(r => Option(r.getSeq[String](5)).getOrElse(Seq.empty))
+              statRows.flatMap(r => Option(r.getSeq[String](6)).getOrElse(Seq.empty))
                 .distinct.sorted.toSeq
             else Seq.empty
           val tableStats = statRows
             .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-              ((r.getBoolean(3), Option(r.getSeq[String](4)).getOrElse(Seq.empty))))
+              TableStat(r.getBoolean(3), r.getBoolean(4),
+                Option(r.getSeq[String](5)).getOrElse(Seq.empty)))
             .toMap
           val flat = DmlTransforms.withOrderKey(assignSeq(flat0, mode, files))
-          configsRef.get().foreach { config =>
-            val m = config.dbMapping
-            val (tableHasDdl, srcCols) =
-              tableStats.getOrElse((config.destination, m.database, m.table),
-                (false, Seq.empty[String]))
-            val routedAll = routeFor(flat, config)
-            val ddl = if (tableHasDdl) DdlBarrier.ddlEvents(routedAll, config) else Seq.empty
-            val dml = routedAll.where(!coalesce(col("isDdl"), lit(false)))
-            val ctx = SegmentCtx(if (tableHasDdl) None else Some(srcCols))
-            // DDL acts as an ordering barrier (SURVEY §7.4 risk 4): apply
-            // each DML segment, then its following DDL, sequentially
-            DdlBarrier.segments(dml, ddl).foreach { case (ddlEvt, segment) =>
-              ddlEvt.foreach(d => onDdl(config, d))
-              val pk = m.targetPk.values.toSeq.sorted
-              // K2 pk-change expansion BEFORE the shuffle: the old-key DELETE
-              // must route to the OLD key's partition to stay ordered against
-              // that key's other ops. (The reference routes the whole UPDATE
-              // by the post-image hash — `PhoenixSyncService.java:609-628` —
-              // which races the old-key delete against concurrent old-key
-              // writes; the pre-shuffle expansion removes that race.)
-              val expanded = CdcApply.expandPkChanges(segment, pk)
-              val ordered =
-                if (config.concurrent)
-                  PkHash.routeConcurrent(expanded,
-                    pk.map(p => s"data.$p"), numPartitions, Seq("order_key", "sub_seq"))
-                else PkHash.routeSerial(expanded, Seq("order_key", "sub_seq"))
-              applyBatch(config, ordered, ctx)
+          // idle tables (no row in this batch) drop out here
+          val active = configsRef.get().flatMap { c =>
+            tableStats.get((c.destination, c.dbMapping.database, c.dbMapping.table))
+              .map(c -> _)
+          }
+          val chains = active.map(_._1.dbMapping.targetTable).distinct.map { target =>
+            val chain = active.filter(_._1.dbMapping.targetTable == target)
+            () => chain.foreach { case (config, stat) =>
+              applyTable(flat, config, stat, numPartitions, applyBatch, onDdl)
             }
           }
+          runChains(chains)
         } finally flat0.unpersist()
         ()
       }
       .start()
   }
+
+  /** One config's share of a micro-batch: its DML segments between DDL /
+    * TRUNCATE barriers, each barrier applied in binlog order between them. */
+  private def applyTable(flat: DataFrame, config: MappingConfig, stat: TableStat,
+                         numPartitions: Int,
+                         applyBatch: (MappingConfig, DataFrame, SegmentCtx) => Unit,
+                         onDdl: (MappingConfig, DdlBarrier.DdlEvent) => Unit): Unit = {
+    val m = config.dbMapping
+    val routedAll = routeFor(flat, config)
+    val barriers =
+      if (stat.hasDdl || stat.hasTruncate) DdlBarrier.ddlEvents(routedAll, config)
+      else Seq.empty
+    val dml = routedAll.where(!coalesce(col("isDdl"), lit(false)))
+    val ctx = SegmentCtx(if (stat.hasDdl) None else Some(stat.srcCols))
+    val pk = m.targetPk.values.toSeq.sorted
+    val order = Seq("order_key", "sub_seq")
+    // DDL and TRUNCATE act as ordering barriers (SURVEY §7.4 risk 4): apply
+    // each DML segment, then its following barrier, sequentially
+    DdlBarrier.segments(dml, barriers).foreach { case (barrier, segment) =>
+      barrier.filterNot(_.truncate).foreach(d => onDdl(config, d))
+      // K2 pk-change expansion BEFORE the shuffle: the old-key DELETE
+      // must route to the OLD key's partition to stay ordered against
+      // that key's other ops. (The reference routes the whole UPDATE
+      // by the post-image hash — `PhoenixSyncService.java:609-628` —
+      // which races the old-key delete against concurrent old-key
+      // writes; the pre-shuffle expansion removes that race.)
+      val expanded = CdcApply.expandPkChanges(segment, pk)
+      // a TRUNCATE row has no key: hashed, it would land in one PK
+      // partition and run while the others still apply earlier rows, so
+      // its segment (the marker row alone) applies on one partition
+      val ordered =
+        if (config.concurrent && !barrier.exists(_.truncate))
+          PkHash.routeConcurrent(expanded, pk.map(p => s"data.$p"), numPartitions, order)
+        else PkHash.routeSerial(expanded, order)
+      applyBatch(config, ordered, ctx)
+    }
+  }
+
+  /** Run a micro-batch's chains: a single chain on the calling thread,
+    * several on threads made for this batch (the first on the calling
+    * thread). Fresh threads inherit the stream thread's Spark local
+    * properties — batch id, job group, SQL execution id — where pooled
+    * ones would keep a previous batch's. Waits for every chain, then
+    * throws the first chain's failure with later ones suppressed.
+    *
+    * An interrupt of the calling thread (`StreamingQuery.stop()` interrupts
+    * the stream thread and joins only that thread) is passed on to the
+    * workers, and the call still returns only after every worker has
+    * ended: no chain outlives the batch, so a restart cannot overlap a
+    * leftover apply to the same target. The call then throws an
+    * `InterruptedException` with the thread's interrupt flag set again. */
+  private[streaming] def runChains(chains: Seq[() => Unit]): Unit =
+    if (chains.size <= 1) chains.foreach(_())
+    else {
+      val failures = new Array[Throwable](chains.size)
+      val workers = chains.zipWithIndex.tail.map { case (chain, i) =>
+        val t = new Thread(() => try chain() catch { case e: Throwable => failures(i) = e },
+          s"canal-stream-chain-$i")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      try chains.head() catch { case e: Throwable => failures(0) = e }
+      var interrupted = false
+      def interruptWorkers(): Unit =
+        if (!interrupted) { interrupted = true; workers.foreach(_.interrupt()) }
+      if (failures(0).isInstanceOf[InterruptedException] || Thread.interrupted())
+        interruptWorkers()
+      workers.foreach { t =>
+        while (t.isAlive)
+          try t.join() catch { case _: InterruptedException => interruptWorkers() }
+      }
+      val errors = failures.filter(_ != null).toList
+      val thrown =
+        if (!interrupted) errors.headOption
+        else {
+          Thread.currentThread().interrupt()
+          Some(errors.collectFirst { case e: InterruptedException => e }
+            .getOrElse(new InterruptedException("micro-batch apply interrupted")))
+        }
+      thrown.foreach { first =>
+        errors.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    }
 
   /**
    * Apply one routed+ordered micro-batch to a JDBC target (the production

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ddl.DdlParser
-import graft.model.MappingConfig
+import graft.model.{CanalEvent, MappingConfig}
 import graft.sink.{SchemaProbe, SqlDialect, PhoenixSqlDialect}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,7 +14,9 @@ import java.sql.Connection
  * (`PhoenixSyncService.java:180-198`), so DDL acts as an ordering barrier on
  * its table. In a micro-batch engine the equivalent is: split each
  * micro-batch at DDL positions and apply the segments sequentially —
- * `[DML ≤ seq₁) ; DDL₁ ; [DML < seq₂) ; DDL₂ ; …`.
+ * `[DML ≤ seq₁) ; DDL₁ ; [DML < seq₂) ; DDL₂ ; …`. A TRUNCATE is a split
+ * point as well: hashed by its (absent) key into one PK partition it would
+ * run while the other partitions still apply earlier rows.
  *
  * DDL application itself is driver-side (tiny): parse with [[DdlParser]]
  * (D1/D2), translate ADD/DROP to target DDL (`PhoenixSyncService.java:280-327`),
@@ -23,36 +25,44 @@ import java.sql.Connection
  */
 object DdlBarrier {
 
-  final case class DdlEvent(seq: Long, sql: String)
+  /** A split point of a table's micro-batch rows. A DDL statement runs
+    * through `onDdl`; a `truncate` point is a TRUNCATE row that came as
+    * DML (`isDdl=false`, no row image), applied through the sink as a
+    * segment of its own. */
+  final case class DdlEvent(seq: Long, sql: String, truncate: Boolean = false)
 
-  /** Collect the batch's DDL events for a config's table, in order.
-    * (DDL is rare and tiny — collecting to the driver is the right plan.) */
-  def ddlEvents(batch: DataFrame, config: MappingConfig): Seq[DdlEvent] =
-    batch.where(col("isDdl") && col("database") === config.dbMapping.database &&
+  /** Collect the batch's split points for a config's table, in order: its
+    * DDL events and every TRUNCATE row, whatever its `isDdl` flag (the
+    * batch fold treats TRUNCATE as a barrier too,
+    * [[graft.cdc.CdcApply.afterLastTruncate]]). DDL is rare and tiny —
+    * collecting to the driver is the right plan. */
+  def ddlEvents(batch: DataFrame, config: MappingConfig): Seq[DdlEvent] = {
+    val isDdl = coalesce(col("isDdl"), lit(false))
+    batch.where((isDdl || col("type") === CanalEvent.Truncate) &&
+        col("database") === config.dbMapping.database &&
         col("table") === config.dbMapping.table)
-      .select(col("seq"), col("sql"))
+      .select(col("seq"), col("sql"), isDdl)
       .collect().toSeq
-      .map(r => DdlEvent(r.getLong(0), r.getString(1)))
+      .map(r => DdlEvent(r.getLong(0), r.getString(1), truncate = !r.getBoolean(2)))
       .sortBy(_.seq)
+  }
 
-  /** Split the routed DML rows into segments between DDL barriers; returns
-    * (upperBoundExclusive → segment) in apply order plus the DDL to run
-    * before each subsequent segment. */
+  /** Split the routed DML rows at the split points, in apply order: each
+    * entry is (split point to apply first → rows up to the next point). A
+    * DDL point's entry carries the rows after it; a `truncate` point's
+    * entry carries just its TRUNCATE row, and the rows after it follow in
+    * an entry of their own. */
   def segments(routed: DataFrame, ddl: Seq[DdlEvent]): Seq[(Option[DdlEvent], DataFrame)] = {
-    if (ddl.isEmpty) Seq((None, routed))
-    else {
-      val bounds = ddl.map(_.seq)
-      val first = (Option.empty[DdlEvent], routed.where(col("seq") < bounds.head))
-      val rest = ddl.zipWithIndex.map { case (d, i) =>
-        val lower = d.seq
-        val upper = bounds.lift(i + 1)
-        val seg = upper match {
-          case Some(u) => routed.where(col("seq") > lower && col("seq") < u)
-          case None => routed.where(col("seq") > lower)
-        }
-        (Some(d), seg)
+    val seq = col("seq")
+    val bounds = ddl.map(_.seq)
+    val first = bounds.headOption.fold(routed)(b => routed.where(seq < b))
+    (Option.empty[DdlEvent], first) +: ddl.zipWithIndex.flatMap { case (d, i) =>
+      val after = bounds.lift(i + 1) match {
+        case Some(u) => routed.where(seq > d.seq && seq < u)
+        case None => routed.where(seq > d.seq)
       }
-      first +: rest
+      if (d.truncate) Seq((Some(d), routed.where(seq === d.seq)), (None, after))
+      else Seq((Some(d), after))
     }
   }
 

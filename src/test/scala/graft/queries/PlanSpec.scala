@@ -419,11 +419,33 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dedup_bloom: sketch probe is a codegen predicate; confirm join is a broadcast semi-join") {
-    val p = plan("dedup_bloom")
-    assert(p.contains("might_contain"),
-      "batch rows must probe the Bloom sketch per row\n" + p)
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+    import org.apache.spark.sql.functions._
+    // past the broadcast bound the batch stays distributed: every batch row
+    // probes the Bloom sketch in a codegen predicate
+    val batch = spark.range(graft.llm.Dedup.MaxBroadcastBatchRows + 1)
+      .select(col("id").as("doc_id"), concat(lit("batch doc "), col("id")).as("text"))
+    val past = graft.llm.Dedup.dedupIncrementalBloom(batch, Tables.documents(spark, sf),
+      "doc_id", "text", expectedCorpusItems = 100000L)
+    val pp = past.queryExecution.executedPlan.toString
+    assert(pp.contains("might_contain"), "batch rows must probe the Bloom sketch per row\n" + pp)
+    assert(pp.contains("BroadcastHashJoin") && pp.contains("LeftSemi"),
+      "exact confirm must broadcast the candidate set into the hash view\n" + pp)
+    // within the bound (the registry query) the batch is a local relation
+    // and Catalyst runs the probe while planning: the semi-join's broadcast
+    // side then holds only the rows the sketch let through
+    val q = graft.SparkEntry.queries("dedup_bloom")(spark, sf)
+    val p = q.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
       "exact confirm must broadcast the candidate set into the hash view\n" + p)
+    val candidates = q.queryExecution.optimizedPlan.collect {
+      case j: Join if j.joinType == LeftSemi =>
+        j.right.collect { case l: LocalRelation => l.data.size }.sum
+    }
+    val batchRows = q.count()
+    assert(candidates.size == 1 && candidates.head >= 1 && candidates.head < batchRows / 2,
+      s"candidates $candidates of $batchRows batch rows\n" + q.queryExecution.optimizedPlan)
   }
 
   test("semantic dedup: within-cell pair scan is an equi-join on the cell key, never a corpus nested loop") {

@@ -51,6 +51,56 @@ class DdlBarrierSpec extends AnyFunSuite {
     assert(segs(2)._2.select("v").collect().map(_.getString(0)).toSeq == Seq("d"))
   }
 
+  test("a TRUNCATE split point applies alone between its two segments") {
+    import spark.implicits._
+    val dml = Seq((1L, "INSERT"), (2L, "INSERT"), (3L, "TRUNCATE"), (4L, "INSERT"))
+      .toDF("seq", "type")
+    val segs = DdlBarrier.segments(dml, Seq(DdlBarrier.DdlEvent(3, null, truncate = true)))
+    assert(segs.map(_._1.map(_.truncate)) == Seq(None, Some(true), None))
+    assert(segs.map(_._2.select("seq").collect().map(_.getLong(0)).sorted.toSeq) ==
+      Seq(Seq(1L, 2L), Seq(3L), Seq(4L)))
+  }
+
+  test("streaming TRUNCATE (isDdl=false) is a barrier across 4 PK partitions") {
+    val cfg = MappingConfig(dataSourceKey = "ds", destination = "example", groupId = "g1",
+      concurrent = true,
+      dbMapping = DbMapping("mytest", "tr", "TR.T", targetPk = Map("id" -> "id"), mapAll = true))
+    def ins(es: Int, id: Int) =
+      s"""{"destination":"example","groupId":"g1","database":"mytest","table":"tr","type":"INSERT","isDdl":false,"es":$es,"ts":$es,"data":[{"id":"$id","v":"v$id"}],"old":null}"""
+    val truncate =
+      """{"destination":"example","groupId":"g1","database":"mytest","table":"tr","type":"TRUNCATE","isDdl":false,"es":41,"ts":41,"data":null,"old":null}"""
+    val lines = (1 to 40).map(i => ins(i, i)) ++ Seq(truncate) ++
+      (1 to 40).map(i => ins(41 + i, 100 + i))
+    (1 to 3).foreach { trial =>
+      val url = s"jdbc:derby:memory:truncdb$trial;create=true"
+      val c = DriverManager.getConnection(url)
+      c.createStatement().execute(
+        """CREATE TABLE "TR"."T" ("ID" BIGINT PRIMARY KEY, "V" VARCHAR(16))""")
+      c.close()
+      val dir = Files.createTempDirectory("canal-truncate").toFile
+      Files.write(new File(dir, "t.json").toPath, lines.mkString("\n").getBytes("UTF-8"))
+      val schema = graft.sink.SchemaProbe.probe(cfg.dbMapping, DerbyConn.factory(url),
+        DeleteInsertDialect)
+      val q = CanalStream.start(spark, spark.readStream.schema("value STRING")
+          .text(dir.getAbsolutePath),
+        new AtomicReference[Seq[MappingConfig]](Seq(cfg)), numPartitions = 4,
+        (cf, ordered, ctx) => CanalStream.applyBatchToJdbc(cf, ordered, schema,
+          DerbyConn.factory(url), DeleteInsertDialect, sourceColsHint = ctx.sourceCols))
+      q.processAllAvailable()
+      q.stop()
+      val rs = DriverManager.getConnection(url).createStatement().executeQuery(
+        """SELECT "ID", "V" FROM "TR"."T" ORDER BY "ID"""")
+      val got = scala.collection.mutable.ListBuffer[(Long, String)]()
+      while (rs.next()) got += ((rs.getLong(1), rs.getString(2)))
+      val expected = CanalStream.materialize(
+          CanalStream.parse(spark.read.text(dir.getAbsolutePath).toDF("value")),
+          pkCols = Seq("id"), payload = Seq("v"))
+        .collect().map(r => (r.getString(0).toLong, r.getString(1))).sortBy(_._1).toSeq
+      assert(got.toSeq == (101L to 140L).map(i => (i, s"v$i")), s"trial $trial")
+      assert(got.toSeq == expected, s"trial $trial")
+    }
+  }
+
   test("streaming DDL barrier e2e: ALTER lands between DML segments") {
     val url = "jdbc:derby:memory:ddldb;create=true"
     val c = DriverManager.getConnection(url)

@@ -106,14 +106,21 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
     val p0 = 0L; val p1 = 1L << 42
+    // tables ta and tb apply concurrently, so only the order within each
+    // table is defined (the reference's shared worker queues define none
+    // across tables either)
+    val seen = events.asScala.toSeq
+    val ta = seen.filter(e => e._1 == "ta" || e._1 == "ddl:ta")
+    val tb = seen.filter(_._1 == "tb")
     // ta: [DML < ddl] ; DDL ; [DML > ddl] — offsets place the UPDATE after
     // the barrier even though (es, ts) are identical everywhere
-    assert(events.get(0) == (("ta", Seq((p0 + 100, "INSERT", "a0")), None)))
-    assert(events.get(1)._1 == "ddl:ta" && events.get(1)._2.head._1 == p0 + 101)
-    assert(events.get(2) == (("ta", Seq((p0 + 102, "UPDATE", "a1")), None)))
+    assert(ta.size == 3)
+    assert(ta(0) == (("ta", Seq((p0 + 100, "INSERT", "a0")), None)))
+    assert(ta(1)._1 == "ddl:ta" && ta(1)._2.head._1 == p0 + 101)
+    assert(ta(2) == (("ta", Seq((p0 + 102, "UPDATE", "a1")), None)))
     // tb: no DDL → single segment, per-partition offset order within it, and
     // the source columns came from the batch-level stats pass (no extra agg)
-    assert(events.get(3) == (("tb",
+    assert(tb == Seq(("tb",
       Seq((p1 + 7, "INSERT", "b0"), (p1 + 8, "UPDATE", "b1")), Some(Set("id", "v")))))
     assert(events.size == 4)
   }
@@ -340,6 +347,200 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0).toLong, r.getString(1))).sortBy(_._1)
     assert(expected.toSeq == Seq((2L, "b2"), (3L, "c2"), (4L, "d1")))
     assert(got.toSeq == expected.toSeq)
+  }
+
+  /** Canal JSON line for one row change of `table` at binlog position `es`. */
+  private def canal(table: String, es: Int, typ: String, id: Int, v: String): String =
+    s"""{"destination":"example","groupId":"g1","database":"mytest","table":"$table","type":"$typ","isDdl":false,"es":$es,"ts":$es,"data":[{"id":"$id","v":"$v"}],"old":null}"""
+
+  /** A mapped config for source `table` writing `target` (an `(ID, V)` table). */
+  private def cfgFor(table: String, target: String): MappingConfig =
+    config.copy(dbMapping = config.dbMapping.copy(
+      table = table, targetTable = target, enumColumns = Map.empty))
+
+  private def createIdV(url: String, tables: String*): Unit = {
+    val c = DriverManager.getConnection(url)
+    try tables.foreach { t =>
+      val Array(schema, name) = t.split('.')
+      c.createStatement().execute(
+        s"""CREATE TABLE "$schema"."$name" ("ID" BIGINT PRIMARY KEY, "V" VARCHAR(64))""")
+    } finally c.close()
+  }
+
+  private def readIdV(url: String, table: String): Seq[(Long, String)] = {
+    val Array(schema, name) = table.split('.')
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"""SELECT "ID", "V" FROM "$schema"."$name" ORDER BY "ID"""")
+      val out = scala.collection.mutable.ListBuffer[(Long, String)]()
+      while (rs.next()) out += ((rs.getLong(1), rs.getString(2)))
+      out.toSeq
+    } finally c.close()
+  }
+
+  /** The batch fold of every canal line under `dir` for one source table. */
+  private def foldOf(dir: java.nio.file.Path, table: String): Seq[(Long, String)] =
+    CanalStream.materialize(
+        CanalStream.parse(spark.read.text(dir.toString).toDF("value"))
+          .where(col("table") === table),
+        pkCols = Seq("id"), payload = Seq("v"))
+      .collect().map(r => (r.getString(0).toLong, r.getString(1))).sortBy(_._1).toSeq
+
+  test("idle mapped table: no applyBatch call and no connection to its target") {
+    val busyUrl = "jdbc:derby:memory:idlebusy;create=true"
+    val idleUrl = "jdbc:derby:memory:idleidle;create=true"
+    createIdV(busyUrl, "IDL.BUSY")
+    createIdV(idleUrl, "IDL.IDLE")
+    val busy = cfgFor("busy", "IDL.BUSY")
+    val idle = cfgFor("idle", "IDL.IDLE")
+    val urls = Map("busy" -> busyUrl, "idle" -> idleUrl)
+    val schemas = Map(
+      "busy" -> SchemaProbe.probe(busy.dbMapping, DerbyConn.factory(busyUrl), DeleteInsertDialect),
+      "idle" -> SchemaProbe.probe(idle.dbMapping, DerbyConn.factory(idleUrl), DeleteInsertDialect))
+    val dir = Files.createTempDirectory("canal-idle")
+    Files.write(dir.resolve("f1.json"), Seq(canal("busy", 1, "INSERT", 1, "a"),
+      canal("busy", 2, "INSERT", 2, "b")).mkString("\n").getBytes("UTF-8"))
+    val applied = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val q = CanalStream.start(spark, spark.readStream.schema("value STRING").text(dir.toString),
+      new AtomicReference[Seq[MappingConfig]](Seq(busy, idle)), numPartitions = 3,
+      (cfg, ordered, ctx) => {
+        val t = cfg.dbMapping.table
+        applied.add(t)
+        CanalStream.applyBatchToJdbc(cfg, ordered, schemas(t), DerbyConn.counting(urls(t)),
+          DeleteInsertDialect, sourceColsHint = ctx.sourceCols)
+      })
+    q.processAllAvailable()
+    q.stop()
+    assert(applied.asScala.toSeq == Seq("busy"))
+    assert(DerbyConn.openedTo(busyUrl) > 0)
+    assert(DerbyConn.openedTo(idleUrl) == 0)
+    assert(readIdV(busyUrl, "IDL.BUSY") == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("a failing table fails the batch only after the other tables finish; restart converges") {
+    val u = "jdbc:derby:memory:chainfaildb;create=true"
+    createIdV(u, "CF.A", "CF.B")
+    val cfgs = Seq(cfgFor("fa", "CF.A"), cfgFor("fb", "CF.B"))
+    val schemas = cfgs.map(c => c.dbMapping.table ->
+      SchemaProbe.probe(c.dbMapping, DerbyConn.factory(u), DeleteInsertDialect)).toMap
+    val dir = Files.createTempDirectory("canal-chainfail")
+    val ckpt = Files.createTempDirectory("canal-chainfail-ckpt").toString
+    Files.write(dir.resolve("f1.json"), Seq(
+      canal("fa", 1, "INSERT", 1, "a1"), canal("fb", 2, "INSERT", 1, "b1"),
+      canal("fa", 3, "UPDATE", 1, "a2"), canal("fb", 4, "INSERT", 2, "b2"))
+      .mkString("\n").getBytes("UTF-8"))
+    val failing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val fbDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def startQ() = CanalStream.start(spark,
+      spark.readStream.schema("value STRING").text(dir.toString),
+      new AtomicReference[Seq[MappingConfig]](cfgs), numPartitions = 3,
+      (cfg, ordered, ctx) => {
+        val t = cfg.dbMapping.table
+        // fa's chain fails at once; fb's is still busy when it does
+        if (t == "fa" && failing.get()) throw new IllegalStateException("apply failed for fa")
+        if (t == "fb") Thread.sleep(1500)
+        CanalStream.applyBatchToJdbc(cfg, ordered, schemas(t), DerbyConn.factory(u),
+          DeleteInsertDialect, sourceColsHint = ctx.sourceCols)
+        if (t == "fb") fbDone.set(true)
+      },
+      checkpointLocation = Some(ckpt))
+
+    val q1 = startQ()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q1.processAllAvailable()
+    }
+    val fbDoneAtFailure = fbDone.get()
+    q1.stop()
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.getMessage == "apply failed for fa"), e)
+    assert(fbDoneAtFailure, "the batch failed before fb's chain finished")
+    assert(readIdV(u, "CF.A").isEmpty)
+
+    // the failed batch has no commit marker: the restart replays it whole
+    failing.set(false)
+    val q2 = startQ()
+    q2.processAllAvailable()
+    q2.stop()
+    assert(readIdV(u, "CF.A") == foldOf(dir, "fa"))
+    assert(readIdV(u, "CF.B") == foldOf(dir, "fb"))
+    assert(readIdV(u, "CF.A") == Seq((1L, "a2")))
+  }
+
+  test("configs sharing a target table apply in config order; other targets overlap them") {
+    val dir = Files.createTempDirectory("canal-sametarget")
+    Files.write(dir.resolve("f1.json"), Seq(
+      canal("s2", 1, "INSERT", 1, "x"), canal("s1", 2, "INSERT", 2, "y"),
+      canal("s3", 3, "INSERT", 3, "z")).mkString("\n").getBytes("UTF-8"))
+    val cfgs = Seq(cfgFor("s1", "ST.T"), cfgFor("s2", "ST.T"), cfgFor("s3", "ST.U"))
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    val q = CanalStream.start(spark, spark.readStream.schema("value STRING").text(dir.toString),
+      new AtomicReference[Seq[MappingConfig]](cfgs), numPartitions = 2,
+      (cfg, ordered, _) => {
+        val t0 = System.nanoTime()
+        assert(ordered.count() == 1)
+        // s1 holds its target long enough that a concurrent s2 would start
+        if (cfg.dbMapping.table == "s1") Thread.sleep(1000)
+        calls.put(cfg.dbMapping.table, (t0, System.nanoTime()))
+      })
+    q.processAllAvailable()
+    q.stop()
+    assert(calls.keySet.asScala == Set("s1", "s2", "s3"))
+    assert(calls.get("s1")._2 <= calls.get("s2")._1, "s2 started before s1 finished")
+    assert(calls.get("s3")._1 < calls.get("s1")._2, "ST.U waited for ST.T's chain")
+  }
+
+  test("runChains waits for every chain and throws the first failure, later ones suppressed") {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      CanalStream.runChains(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(300); done.set(true) },
+        () => throw new IllegalArgumentException("third")))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("third"))
+    assert(done.get())
+    // a single chain runs on the calling thread
+    val caller = Thread.currentThread()
+    var ranOn: Thread = null
+    CanalStream.runChains(Seq(() => ranOn = Thread.currentThread()))
+    assert(ranOn eq caller)
+  }
+
+  test("stop() during a slow chain returns only after every applyBatch call has ended") {
+    val dir = Files.createTempDirectory("canal-stopchain")
+    Files.write(dir.resolve("f1.json"), Seq(
+      canal("p1", 1, "INSERT", 1, "x"), canal("p2", 2, "INSERT", 2, "y"))
+      .mkString("\n").getBytes("UTF-8"))
+    val cfgs = Seq(cfgFor("p1", "SC.P1"), cfgFor("p2", "SC.P2"))
+    val slowStarted = new java.util.concurrent.CountDownLatch(1)
+    // (table, start, end) of every applyBatch call, end taken however it ends
+    val calls = new java.util.concurrent.CopyOnWriteArrayList[(String, Long, Long)]()
+    val q = CanalStream.start(spark, spark.readStream.schema("value STRING").text(dir.toString),
+      new AtomicReference[Seq[MappingConfig]](cfgs), numPartitions = 2,
+      (cfg, _, _) => {
+        val t0 = System.nanoTime()
+        try {
+          // p2's chain runs on a worker thread; like a JDBC write it does
+          // not give way to an interrupt
+          if (cfg.dbMapping.table == "p2") {
+            slowStarted.countDown()
+            val until = t0 + 1500L * 1000 * 1000
+            while (System.nanoTime() < until)
+              try Thread.sleep(50) catch { case _: InterruptedException => () }
+          }
+        } finally calls.add((cfg.dbMapping.table, t0, System.nanoTime()))
+      })
+    assert(slowStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    q.stop()
+    val stoppedAt = System.nanoTime()
+    Thread.sleep(2000)
+    val seen = calls.asScala.toSeq
+    assert(seen.exists(_._1 == "p2"), "the slow call had not ended when stop() returned")
+    seen.foreach { case (t, start, end) =>
+      assert(start < stoppedAt && end < stoppedAt, s"$t's applyBatch ran past stop()")
+    }
   }
 
   test("X5 config hot-swap between micro-batches routes new tables") {
