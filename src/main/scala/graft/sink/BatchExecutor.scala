@@ -99,9 +99,8 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
     conn.rollback()
   }
 
-  override def close(): Unit = {
-    try commit() finally {
-      stmts.values.foreach(_.close()); conn.close()
-    }
-  }
+  /** Releases statements and the connection; commits nothing — the
+    * caller ends the transaction with [[commit]] or [[rollback]]. */
+  override def close(): Unit =
+    try stmts.values.foreach(_.close()) finally conn.close()
 }

@@ -44,14 +44,17 @@ object UpsertSink {
   }
 
   /**
-   * Apply a partition of ordered ops. Exposed separately so semantics are
-   * unit-testable against any JDBC-ish target.
+   * Apply a partition of ordered ops: one connection and one final commit
+   * (plus a commit every `commitBatch` statements), none at all for an
+   * empty partition. Exposed separately so semantics are unit-testable
+   * against any JDBC-ish target.
    */
   def applyPartition(ops: Iterator[RowOp], mapping: DbMapping, targetCols: Seq[String],
                      conn: () => Connection,
                      heal: Option[Throwable => Unit] = None,
                      dialect: SqlDialect = PhoenixSqlDialect): Unit = {
     val buffered = ops.toSeq // partition batch must be replayable for D5
+    if (buffered.isEmpty) return // an empty partition opens no connection
     def run(): Unit = {
       val exec = new BatchExecutor(conn(), mapping.commitBatch)
       try {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupState
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 /**
@@ -54,16 +54,8 @@ object StreamingDedup {
   /** TTL judgment: the stored keeper wins while the hash has been seen
     * within `horizonMs` of the watermark (every arrival of the hash —
     * keeper replay or duplicate — refreshes the horizon: a hot hash never
-    * expires). Two eviction paths, both required:
-    *  - DATA path: a marker whose `lastSeenMs + horizon` the watermark has
-    *    passed is treated as absent even though the key got data this
-    *    batch — Spark never flags `hasTimedOut` for a key WITH data, so
-    *    without this check a dup arriving just past the horizon would
-    *    still match.
-    *  - TIMEOUT path: keys idle past the horizon are evicted when the
-    *    watermark passes their timeout timestamp, bounding state size.
-    * Each arrival re-arms the timeout at `maxTs + horizon` (clamped above
-    * the current watermark — Spark rejects timestamps at or below it). */
+    * expires), under the family's two-path eviction contract
+    * ([[BandedDedup]]) applied to a single marker instead of a bucket. */
   def judgeTtl(horizonMs: Long)(hash: String, rows: Iterator[TimedDoc],
                state: GroupState[Seen]): Iterator[Judged] = {
     if (state.hasTimedOut) { state.remove(); return Iterator.empty }
@@ -81,8 +73,7 @@ object StreamingDedup {
 
   /** Wire the stateful dedup over a stream of pre-hashed docs. */
   def judged(docs: Dataset[Doc]): Dataset[Judged] =
-    docs.groupByKey(_.contentHash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(judge _)
+    BandedDedup.wire(docs, (_: Doc).contentHash, None)(judge _)
 
   /** [[Judged]] with the group's content hash carried through — the form
     * the `foreachBatch` store bridge ([[absorbKeepers]]) consumes. */
@@ -92,11 +83,10 @@ object StreamingDedup {
 
   /** [[judged]] emitting the content hash alongside each verdict. */
   def judgedHash(docs: Dataset[Doc]): Dataset[JudgedHash] =
-    docs.groupByKey(_.contentHash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (hash: String, rows: Iterator[Doc], state: GroupState[Seen]) =>
-          judge(hash, rows, state)
-            .map(j => JudgedHash(j.docId, hash, j.keeperId, j.keep)))
+    BandedDedup.wire(docs, (_: Doc).contentHash, None) {
+      (hash: String, rows: Iterator[Doc], state: GroupState[Seen]) =>
+        judge(hash, rows, state).map(j => JudgedHash(j.docId, hash, j.keeperId, j.keep))
+    }
 
   /**
    * `foreachBatch` bridge for the EXACT family — the [[graft.queries
@@ -133,9 +123,6 @@ object StreamingDedup {
     */
   def judgedTtl(docs: Dataset[TimedDoc], horizon: java.time.Duration,
                 watermarkDelay: String): Dataset[Judged] =
-    docs.withWatermark("ts", watermarkDelay)
-      .as[TimedDoc]
-      .groupByKey(_.contentHash)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(judgeTtl(horizon.toMillis) _)
+    BandedDedup.wire(docs, (_: TimedDoc).contentHash, Some(watermarkDelay))(
+      judgeTtl(horizon.toMillis) _)
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.Similarity
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming EMBEDDING near-dup (banded sign-LSH): the vector counterpart
@@ -39,7 +38,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  */
 final case class StreamingEmbDedup(bands: Int = 16, planesPerBand: Int = 8,
                                    dims: Int = 64, threshold: Double = 0.9) {
+  import BandedDedup.stringKeyEnc
   import StreamingEmbDedup._
+  // a cosine: outside (-1, 1] the threshold matches nothing (> 1) or lets
+  // a bucket with no candidate look like a match (<= -1)
+  require(threshold > -1.0 && threshold <= 1.0,
+    s"threshold is a cosine and must be in (-1, 1], got $threshold")
 
   /** Shared signer closure: plane matrix built once on the driver,
     * shipped in the task closure (bands×planes×dims doubles). */
@@ -47,26 +51,14 @@ final case class StreamingEmbDedup(bands: Int = 16, planesPerBand: Int = 8,
     Similarity.lshBandSignatureKernel(bands, planesPerBand, dims)
 
   /** Explode a vector into its band rows (band key = band index + that
-    * band's bucket id — exact, no re-hash collisions). The vector rides
-    * on EVERY row (each bucket needs it to verify and register); `carry`
-    * marks band 0 so downstream `foreachBatch` consumers re-emit each
-    * doc's vector exactly once. Per-row kernel work only; no shuffle
-    * until the stateful groupByKey. */
-  def bandRows(docs: Dataset[VecDoc]): Dataset[EmbBandRow] =
-    docs.flatMap(d => explode(d.vecId, d.vec, null))(embBandRowEnc)
-
-  /** Shared band-row kernel: one row per band (sentinel band for
-    * degenerate vectors), `ts` riding on every row so the TTL path can
-    * watermark the EXPLODED rows — a typed flatMap strips event-time
-    * column metadata, so the watermark must be declared downstream of it. */
+    * band's bucket id — exact, no re-hash collisions; degenerate vectors
+    * take one sentinel band). The vector rides on EVERY row (each bucket
+    * needs it to verify and register); `carry` marks band 0 so downstream
+    * `foreachBatch` consumers re-emit each doc's vector exactly once; `ts`
+    * rides on every row for the TTL path's watermark. */
   private def explode(vecId: Long, v: Array[Double],
-                      ts: java.sql.Timestamp): Iterator[EmbBandRow] = {
-    val bad = v == null || v.length != dims || {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      !(s > 0.0) || s.isInfinite
-    }
-    if (bad)
+                      ts: java.sql.Timestamp): Iterator[EmbBandRow] =
+    if (degenerateVec(v, dims))
       Iterator.single(EmbBandRow(vecId, s"empty:$vecId",
         Array.emptyDoubleArray, carry = true, ts))
     else {
@@ -75,84 +67,23 @@ final case class StreamingEmbDedup(bands: Int = 16, planesPerBand: Int = 8,
         EmbBandRow(vecId, s"$bi:${sig(bi)}", v, carry = bi == 0, ts)
       }
     }
-  }
 
-  /** Per-bucket judgment: candidates are the stored entries plus earlier
-    * (smaller-id) same-batch registrants; best EXACT cosine ≥ threshold
-    * wins (ties to the smaller id), otherwise the arrival registers.
-    * Pure function of (state, batch) — replays are deterministic. */
-  def judgeBand(key: String, rows: Iterator[EmbBandRow],
-                state: GroupState[EmbBucket]): Iterator[EmbBandVerdict] =
-    judgeBandImpl(0L)(key, rows, state)
-
-  /** Core per-bucket judgment, TTL-aware when `horizonMs > 0` — the same
-    * two-path eviction contract as
-    * [[StreamingNearDedup.judgeBandImpl]]: expired entries are dropped on
-    * the DATA path (Spark never flags `hasTimedOut` for a key with data),
-    * idle buckets are evicted wholesale on the TIMEOUT path, and any
-    * arrival re-warms its entry (sliding per-entry horizon). */
-  private def judgeBandImpl(horizonMs: Long)(key: String,
-      rows: Iterator[EmbBandRow],
-      state: GroupState[EmbBucket]): Iterator[EmbBandVerdict] = {
-    if (horizonMs > 0 && state.hasTimedOut) {
-      state.remove(); return Iterator.empty
-    }
-    val batch = rows.toSeq.sortBy(_.vecId)
-    if (batch.isEmpty) return Iterator.empty
-    val wm = if (horizonMs > 0) state.getCurrentWatermarkMs() else 0L
-    var entries = state.getOption.map(_.entries.toVector).getOrElse(Vector.empty)
-    var changed = false
-    if (horizonMs > 0) {
-      val live = entries.filter(_.lastSeenMs + horizonMs > wm)
-      if (live.size != entries.size) { entries = live; changed = true }
-    }
-    val out = batch.map { r =>
-      if (r.vec.isEmpty) EmbBandVerdict(r.vecId, None, None, r.carry, None)
-      else {
-        val ts = if (r.ts == null) 0L else r.ts.getTime
-        val rn = norm(r.vec)
-        var bestAt = -1
-        var bestId = Long.MaxValue
-        var bestCos = -2.0
-        var i = 0
-        entries.foreach { e =>
-          if (e.id != r.vecId) { // keeper replay never matches itself
-            val cos = dot(r.vec, e.vec) / (rn * e.norm)
-            if (cos > bestCos || (cos == bestCos && e.id < bestId)) {
-              bestCos = cos; bestId = e.id; bestAt = i
-            }
-          }
-          i += 1
-        }
-        if (bestCos >= threshold) {
-          if (entries(bestAt).lastSeenMs < ts) { // matched keeper stays hot
-            entries = entries.updated(bestAt,
-              entries(bestAt).copy(lastSeenMs = ts))
-            changed = true
-          }
-          EmbBandVerdict(r.vecId, Some(bestId), Some(bestCos), r.carry,
-            if (r.carry) Some(r.vec) else None)
-        } else {
-          val at = entries.indexWhere(_.id == r.vecId)
-          if (at < 0) {
-            entries = entries :+ EmbEntry(r.vecId, r.vec, rn, ts)
-            changed = true
-          } else if (entries(at).lastSeenMs < ts) { // replay re-warms
-            entries = entries.updated(at, entries(at).copy(lastSeenMs = ts))
-            changed = true
-          }
-          EmbBandVerdict(r.vecId, None, None, r.carry,
-            if (r.carry) Some(r.vec) else None)
-        }
-      }
-    }
-    if (changed) {
-      if (entries.isEmpty) state.remove() else state.update(EmbBucket(entries))
-    }
-    if (horizonMs > 0 && entries.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(entries.iterator.map(_.lastSeenMs).max + horizonMs, wm + 1))
-    out.iterator
+  /** The per-bucket judgment ([[BandedDedup.Judge]]): score = EXACT
+    * cosine, the arrival's norm computed once per row. */
+  private val judge = new BandedDedup.Judge[EmbBandRow, EmbEntry, EmbBucket, EmbBandVerdict] {
+    def threshold: Double = StreamingEmbDedup.this.threshold
+    def rowId(r: EmbBandRow): Long = r.vecId
+    def rowTs(r: EmbBandRow): java.sql.Timestamp = r.ts
+    def degenerate(r: EmbBandRow): Boolean = r.vec.isEmpty
+    override def perRow(r: EmbBandRow): Double = norm(r.vec)
+    def score(r: EmbBandRow, q: Double, e: EmbEntry): Double =
+      dot(r.vec, e.vec) / (q * e.norm)
+    def entry(r: EmbBandRow, q: Double, ts: Long): EmbEntry = EmbEntry(r.vecId, r.vec, q, ts)
+    def warmed(e: EmbEntry, ts: Long): EmbEntry = e.copy(lastSeenMs = ts)
+    def entries(s: EmbBucket): Seq[EmbEntry] = s.entries
+    def bucket(es: Seq[EmbEntry]): EmbBucket = EmbBucket(es)
+    def verdict(r: EmbBandRow, candId: Option[Long], est: Option[Double]): EmbBandVerdict =
+      EmbBandVerdict(r.vecId, candId, est, r.carry, Option.when(r.carry && r.vec.nonEmpty)(r.vec))
   }
 
   /** Wire the stateful banded judgment over an embedding stream. Output is
@@ -160,9 +91,7 @@ final case class StreamingEmbDedup(bands: Int = 16, planesPerBand: Int = 8,
     * [[StreamingNearDedup.verdicts]] (shared column contract) inside
     * `foreachBatch`. */
   def judged(docs: Dataset[VecDoc]): Dataset[EmbBandVerdict] =
-    bandRows(docs).groupByKey(_.bandKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        judgeBand _)(embBucketEnc, embBandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.vecId, d.vec, null)), _.bandKey, None)
 
   /** Horizon-bounded embedding near-dup: verdicts match [[judged]] for
     * any arrival within `horizon` (event time) of the matched keeper's
@@ -174,12 +103,8 @@ final case class StreamingEmbDedup(bands: Int = 16, planesPerBand: Int = 8,
     * evicted-then-reseen duplicate. */
   def judgedTtl(docs: Dataset[TimedVecDoc], horizon: java.time.Duration,
                 watermarkDelay: String): Dataset[EmbBandVerdict] =
-    docs.flatMap(d => explode(d.vecId, d.vec, d.ts))(embBandRowEnc)
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.bandKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        judgeBandImpl(horizon.toMillis) _)(embBucketEnc, embBandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.vecId, d.vec, d.ts)), _.bandKey,
+      Some(horizon -> watermarkDelay))
 }
 
 object StreamingEmbDedup {
@@ -193,7 +118,7 @@ object StreamingEmbDedup {
                               vec: Array[Double], carry: Boolean,
                               ts: java.sql.Timestamp = null)
   final case class EmbEntry(id: Long, vec: Array[Double], norm: Double,
-                            lastSeenMs: Long = 0L)
+                            lastSeenMs: Long = 0L) extends BandedDedup.Keeper
   final case class EmbBucket(entries: Seq[EmbEntry])
   /** Column contract shared with [[StreamingNearDedup.verdicts]]:
     * `docId`, `candId`, `est` (here: exact cosine). */
@@ -216,6 +141,23 @@ object StreamingEmbDedup {
   }
   private def norm(a: Array[Double]): Double = math.sqrt(dot(a, a))
 
+  /** Null, wrong-dims, zero or non-finite-norm vectors: cosine is
+    * undefined, so the family keeps them under a per-doc sentinel key. */
+  private[streaming] def degenerateVec(v: Array[Double], dims: Int): Boolean =
+    v == null || v.length != dims || {
+      val s = dot(v, v)
+      !(s > 0.0) || s.isInfinite
+    }
+
+  /** A micro-batch's per-doc verdicts, and the (docId, vec) of its kept
+    * docs read off the carry rows — what the absorb bridges publish. */
+  private[streaming] def keptVectors(bandVerdicts: DataFrame): (DataFrame, DataFrame) = {
+    val v = StreamingNearDedup.verdicts(bandVerdicts)
+    (v, bandVerdicts.where(col("carry") && col("vec").isNotNull)
+      .select(col("docId"), col("vec"))
+      .join(v.where(col("keep")).select("docId"), Seq("docId"), "left_semi"))
+  }
+
   /**
    * `foreachBatch` bridge from the stream to the BATCH signature store:
    * reduce the micro-batch's band verdicts, then absorb the kept vectors'
@@ -231,10 +173,7 @@ object StreamingEmbDedup {
   def absorbKeepers(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                     bandVerdicts: DataFrame, streamId: String,
                     microBatchId: Long): DataFrame = {
-    val v = StreamingNearDedup.verdicts(bandVerdicts)
-    val keptVecs = bandVerdicts.where(col("carry") && col("vec").isNotNull)
-      .select(col("docId"), col("vec"))
-      .join(v.where(col("keep")).select("docId"), Seq("docId"), "left_semi")
+    val (v, keptVecs) = keptVectors(bandVerdicts)
     graft.queries.Materialized.absorbEmbeddingSignatures(spark, sfDir,
       Similarity.lshSigRowsTyped(keptVecs, "docId", "vec",
         bands = 128, planesPerBand = 16, dims = 64),
@@ -260,10 +199,7 @@ object StreamingEmbDedup {
   def absorbKeepersIvf(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                        bandVerdicts: DataFrame, streamId: String,
                        microBatchId: Long): DataFrame = {
-    val v = StreamingNearDedup.verdicts(bandVerdicts)
-    val keptVecs = bandVerdicts.where(col("carry") && col("vec").isNotNull)
-      .select(col("docId"), col("vec"))
-      .join(v.where(col("keep")).select("docId"), Seq("docId"), "left_semi")
+    val (v, keptVecs) = keptVectors(bandVerdicts)
     graft.queries.Materialized.appendIvfIndex(spark, sfDir, keptVecs,
       "docId", "vec", s"ivf-$streamId-$microBatchId")
     v

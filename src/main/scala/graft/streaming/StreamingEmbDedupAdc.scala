@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.llm.Similarity
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming embedding near-dup with an ADC (asymmetric-distance)
@@ -29,17 +28,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * probabilistic. Both `s` and `Σ|q_k|` are exact integers, so replays
  * and restarts re-verify identically.
  *
- * Everything else is the family contract verbatim: per-doc verdicts
- * reduce with [[StreamingNearDedup.verdicts]] (`est` = the estimated
- * cosine; best candidate by (est desc, id asc)); degenerate vectors take
- * a per-doc sentinel band, match nothing, register nothing, are kept;
- * keeper replay never matches itself and re-emits `keep = true`;
- * [[judgedTtl]] bounds state to one dedup horizon via the two-path
- * eviction (expired entries dropped on the data path, idle buckets on
- * the timeout path, arrivals re-warm).
+ * Everything else is the family contract ([[BandedDedup]]): per-doc
+ * verdicts reduce with [[StreamingNearDedup.verdicts]] (`est` = the
+ * estimated cosine); degenerate vectors take a per-doc sentinel band and
+ * are kept; [[judgedTtl]] bounds state to one dedup horizon.
  */
 final case class StreamingEmbDedupAdc(bands: Int = 16, planesPerBand: Int = 8,
                                       dims: Int = 64, threshold: Double = 0.9) {
+  import BandedDedup.stringKeyEnc
   import StreamingEmbDedupAdc._
   require(dims <= 64,
     s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
@@ -58,26 +54,16 @@ final case class StreamingEmbDedupAdc(bands: Int = 16, planesPerBand: Int = 8,
     * transiently, never the state store). */
   private def explode(vecId: Long, v: Array[Double],
                       ts: java.sql.Timestamp): Iterator[AdcBandRow] = {
-    val bad = v == null || v.length != dims || {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      !(s > 0.0) || s.isInfinite
-    }
-    if (bad)
-      Iterator.single(AdcBandRow(vecId, s"empty:$vecId", 0L, 0L,
-        Array.emptyLongArray, carry = true, ts, Array.emptyDoubleArray))
+    def sentinel = Iterator.single(AdcBandRow(vecId, s"empty:$vecId", 0L, 0L,
+      Array.emptyLongArray, carry = true, ts, Array.emptyDoubleArray))
+    if (StreamingEmbDedup.degenerateVec(v, dims)) sentinel
     else {
       val proj = Similarity.superBitProj(v.toSeq)
       // a vector whose every projection magnitude is zero carries no
       // angle through the sketch — treat as degenerate (kept), the
       // sentinel-band verdict; cannot happen for nonzero 6-dp vectors
       // short of pathological cancellation on all 128 planes
-      var qabs = 0L
-      var i = 0
-      while (i < proj.length) { qabs += math.abs(proj(i)); i += 1 }
-      if (qabs == 0L)
-        Iterator.single(AdcBandRow(vecId, s"empty:$vecId", 0L, 0L,
-          Array.emptyLongArray, carry = true, ts, Array.emptyDoubleArray))
+      if (absSum(proj) == 0L) sentinel
       else {
         // the shared packer — stream and batch sketch bit-parity is
         // structural, not a convention maintained by hand
@@ -94,108 +80,36 @@ final case class StreamingEmbDedupAdc(bands: Int = 16, planesPerBand: Int = 8,
     }
   }
 
-  /** The ADC estimate of the cosine between the arrival (projections,
-    * with its Σ|q_k| precomputed ONCE per row — it is a per-arrival
-    * constant, not a per-entry one) and a stored keeper (sign bits).
-    * Score via the shared [[Similarity.adcScoreKernel]] — exact-integer,
-    * deterministic across replays, bit-identical to the batch ADC. */
-  private def estCosine(proj: Array[Long], qabs: Long, lo: Long, hi: Long): Double = {
-    val s = Similarity.adcScoreKernel(proj, lo, hi)
-    math.cos(math.Pi / 2.0 * (1.0 - s.toDouble / qabs.toDouble))
-  }
-
-  def judgeBand(key: String, rows: Iterator[AdcBandRow],
-                state: GroupState[AdcBucket]): Iterator[AdcBandVerdict] =
-    judgeBandImpl(0L)(key, rows, state)
-
-  private def judgeBandImpl(horizonMs: Long)(key: String,
-      rows: Iterator[AdcBandRow],
-      state: GroupState[AdcBucket]): Iterator[AdcBandVerdict] = {
-    if (horizonMs > 0 && state.hasTimedOut) {
-      state.remove(); return Iterator.empty
-    }
-    val batch = rows.toSeq.sortBy(_.vecId)
-    if (batch.isEmpty) return Iterator.empty
-    val wm = if (horizonMs > 0) state.getCurrentWatermarkMs() else 0L
-    var entries = state.getOption.map(_.entries.toVector).getOrElse(Vector.empty)
-    var changed = false
-    if (horizonMs > 0) {
-      val live = entries.filter(_.lastSeenMs + horizonMs > wm)
-      if (live.size != entries.size) { entries = live; changed = true }
-    }
-    val out = batch.map { r =>
-      if (r.proj.isEmpty) AdcBandVerdict(r.vecId, None, None, r.carry, None)
-      else {
-        val ts = if (r.ts == null) 0L else r.ts.getTime
-        var qabs = 0L
-        var pi = 0
-        while (pi < r.proj.length) { qabs += math.abs(r.proj(pi)); pi += 1 }
-        var bestAt = -1
-        var bestId = Long.MaxValue
-        var bestEst = -2.0
-        var i = 0
-        entries.foreach { e =>
-          if (e.id != r.vecId) { // keeper replay never matches itself
-            val est = estCosine(r.proj, qabs, e.slo, e.shi)
-            if (est > bestEst || (est == bestEst && e.id < bestId)) {
-              bestEst = est; bestId = e.id; bestAt = i
-            }
-          }
-          i += 1
-        }
-        // bestAt >= 0 is implied by the threshold require (> -1 > the -2.0
-        // no-candidate sentinel) — kept local so the index below is
-        // self-evidently in bounds
-        if (bestAt >= 0 && bestEst >= threshold) {
-          if (entries(bestAt).lastSeenMs < ts) { // matched keeper stays hot
-            entries = entries.updated(bestAt,
-              entries(bestAt).copy(lastSeenMs = ts))
-            changed = true
-          }
-          AdcBandVerdict(r.vecId, Some(bestId), Some(bestEst), r.carry,
-            if (r.carry) Some(r.vec) else None)
-        } else {
-          val at = entries.indexWhere(_.id == r.vecId)
-          if (at < 0) {
-            entries = entries :+ AdcEntry(r.vecId, r.slo, r.shi, ts)
-            changed = true
-          } else if (entries(at).lastSeenMs < ts) { // replay re-warms
-            entries = entries.updated(at, entries(at).copy(lastSeenMs = ts))
-            changed = true
-          }
-          AdcBandVerdict(r.vecId, None, None, r.carry,
-            if (r.carry) Some(r.vec) else None)
-        }
-      }
-    }
-    if (changed) {
-      if (entries.isEmpty) state.remove() else state.update(AdcBucket(entries))
-    }
-    if (horizonMs > 0 && entries.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(entries.iterator.map(_.lastSeenMs).max + horizonMs, wm + 1))
-    out.iterator
+  /** The per-bucket judgment ([[BandedDedup.Judge]]): score = the ADC
+    * cosine estimate, Σ|q_k| computed once per row. */
+  private val judge = new BandedDedup.Judge[AdcBandRow, AdcEntry, AdcBucket, AdcBandVerdict] {
+    def threshold: Double = StreamingEmbDedupAdc.this.threshold
+    def rowId(r: AdcBandRow): Long = r.vecId
+    def rowTs(r: AdcBandRow): java.sql.Timestamp = r.ts
+    def degenerate(r: AdcBandRow): Boolean = r.proj.isEmpty
+    override def perRow(r: AdcBandRow): Double = absSum(r.proj).toDouble
+    def score(r: AdcBandRow, q: Double, e: AdcEntry): Double =
+      estCosine(r.proj, q, e.slo, e.shi)
+    def entry(r: AdcBandRow, q: Double, ts: Long): AdcEntry = AdcEntry(r.vecId, r.slo, r.shi, ts)
+    def warmed(e: AdcEntry, ts: Long): AdcEntry = e.copy(lastSeenMs = ts)
+    def entries(s: AdcBucket): Seq[AdcEntry] = s.entries
+    def bucket(es: Seq[AdcEntry]): AdcBucket = AdcBucket(es)
+    def verdict(r: AdcBandRow, candId: Option[Long], est: Option[Double]): AdcBandVerdict =
+      AdcBandVerdict(r.vecId, candId, est, r.carry, Option.when(r.carry && r.vec.nonEmpty)(r.vec))
   }
 
   /** Wire the stateful ADC judgment over an embedding stream. Output is
     * one verdict per (doc, band) — reduce with
     * [[StreamingNearDedup.verdicts]] (shared column contract). */
   def judged(docs: Dataset[StreamingEmbDedup.VecDoc]): Dataset[AdcBandVerdict] =
-    docs.flatMap(d => explode(d.vecId, d.vec, null))(adcBandRowEnc)
-      .groupByKey(_.bandKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        judgeBand _)(adcBucketEnc, adcBandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.vecId, d.vec, null)), _.bandKey, None)
 
   /** Horizon-bounded variant: state plateaus at one dedup horizon. */
   def judgedTtl(docs: Dataset[StreamingEmbDedup.TimedVecDoc],
                 horizon: java.time.Duration,
                 watermarkDelay: String): Dataset[AdcBandVerdict] =
-    docs.flatMap(d => explode(d.vecId, d.vec, d.ts))(adcBandRowEnc)
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.bandKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        judgeBandImpl(horizon.toMillis) _)(adcBucketEnc, adcBandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.vecId, d.vec, d.ts)), _.bandKey,
+      Some(horizon -> watermarkDelay))
 }
 
 object StreamingEmbDedupAdc {
@@ -232,11 +146,7 @@ object StreamingEmbDedupAdc {
   def absorbKeepers(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                     bandVerdicts: org.apache.spark.sql.DataFrame,
                     streamId: String, microBatchId: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val v = StreamingNearDedup.verdicts(bandVerdicts)
-    val keptVecs = bandVerdicts.where(col("carry") && col("vec").isNotNull)
-      .select(col("docId"), col("vec"))
-      .join(v.where(col("keep")).select("docId"), Seq("docId"), "left_semi")
+    val (v, keptVecs) = StreamingEmbDedup.keptVectors(bandVerdicts)
     graft.queries.Materialized.absorbHammingSigs(spark, sfDir,
       Similarity.hammingSigRows(keptVecs, "docId", "vec", dims = 64),
       s"$streamId-$microBatchId")
@@ -251,6 +161,25 @@ object StreamingEmbDedupAdc {
     v
   }
 
+  /** Σ|q_k| of a projection table (exact integer). */
+  private[streaming] def absSum(proj: Array[Long]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < proj.length) { s += math.abs(proj(i)); i += 1 }
+    s
+  }
+
+  /** The ADC estimate of the cosine between an arrival (projections, with
+    * its Σ|q_k| precomputed ONCE per row — a per-arrival constant, not a
+    * per-entry one) and a stored keeper (sign bits). Score via the shared
+    * [[Similarity.adcScoreKernel]] — exact-integer, deterministic across
+    * replays, bit-identical to the batch ADC. */
+  private[streaming] def estCosine(proj: Array[Long], qabs: Double,
+                                   lo: Long, hi: Long): Double = {
+    val s = Similarity.adcScoreKernel(proj, lo, hi)
+    math.cos(math.Pi / 2.0 * (1.0 - s.toDouble / qabs))
+  }
+
   final case class AdcBandRow(vecId: Long, bandKey: String, slo: Long,
                               shi: Long, proj: Array[Long], carry: Boolean,
                               ts: java.sql.Timestamp = null,
@@ -258,7 +187,7 @@ object StreamingEmbDedupAdc {
   /** State entry: 16 bytes of sketch + id + last-seen — the keeper's
     * vector never enters the state store. */
   final case class AdcEntry(id: Long, slo: Long, shi: Long,
-                            lastSeenMs: Long = 0L)
+                            lastSeenMs: Long = 0L) extends BandedDedup.Keeper
   final case class AdcBucket(entries: Seq[AdcEntry])
   /** Column contract shared with [[StreamingNearDedup.verdicts]]:
     * `est` is the ADC-estimated cosine; `vec` rides carry rows only,

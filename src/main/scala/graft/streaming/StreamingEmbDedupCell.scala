@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.llm.Similarity
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming embedding near-dup partitioned by IVF CELL — the streaming
@@ -67,7 +66,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * stored search artifacts with [[StreamingEmbDedupAdc.absorbKeepers]]
  * (absorb-time assignment replays the same argmin, so the absorbed cell
  * store agrees with the stream's registration cells). [[judgedTtl]]
- * bounds state to one dedup horizon via the family's two-path eviction.
+ * bounds state to one dedup horizon ([[BandedDedup]]).
  *
  * 100 TB shape: per-arrival work is `Σ probed-cell sizes` ≈
  * `nprobe · N/C` sketch scores — the inverted-list scan; size `C` so
@@ -79,7 +78,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 final case class StreamingEmbDedupCell(cents: Array[(Long, Array[Double])],
                                        nprobe: Int = 2, dims: Int = 64,
                                        threshold: Double = 0.9) {
-  import StreamingEmbDedupAdc.{AdcBucket, AdcEntry, AdcBandVerdict, adcBucketEnc, adcBandVerdictEnc}
+  import BandedDedup.stringKeyEnc
+  import StreamingEmbDedupAdc.{AdcBucket, AdcEntry, AdcBandVerdict, absSum, adcBucketEnc, adcBandVerdictEnc, estCosine}
   import StreamingEmbDedupCell._
   require(cents.nonEmpty, "empty centroid sidecar")
   require(cents.forall(_._2.length == dims),
@@ -97,14 +97,9 @@ final case class StreamingEmbDedupCell(cents: Array[(Long, Array[Double])],
     * registration on the home row only). */
   private def explode(vecId: Long, v: Array[Double],
                       ts: java.sql.Timestamp): Iterator[CellProbeRow] = {
-    val bad = v == null || v.length != dims || {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      !(s > 0.0) || s.isInfinite
-    }
-    if (bad)
-      Iterator.single(CellProbeRow(vecId, s"empty:$vecId", 0L, 0L,
-        Array.emptyLongArray, home = true, ts, Array.emptyDoubleArray))
+    def sentinel = Iterator.single(CellProbeRow(vecId, s"empty:$vecId", 0L, 0L,
+      Array.emptyLongArray, home = true, ts, Array.emptyDoubleArray))
+    if (StreamingEmbDedup.degenerateVec(v, dims)) sentinel
     else {
       // nprobe nearest cells by (squared L2, cid) — the house probe rule
       val top = new Array[Int](math.min(nprobe, sorted.length))
@@ -132,10 +127,7 @@ final case class StreamingEmbDedupCell(cents: Array[(Long, Array[Double])],
         var i = 0
         while (i < v.length) { r(i) = v(i) - cv(i); i += 1 }
         val proj = Similarity.superBitProj(r.toSeq)
-        var qabs = 0L
-        i = 0
-        while (i < proj.length) { qabs += math.abs(proj(i)); i += 1 }
-        if (qabs == 0L) {
+        if (absSum(proj) == 0L) {
           // a zero residual carries no angle. On the HOME cell that means
           // the arrival sits exactly on its centroid: it can neither
           // verify nor register — the family's degenerate verdict (kept,
@@ -149,108 +141,42 @@ final case class StreamingEmbDedupCell(cents: Array[(Long, Array[Double])],
         }
         p += 1
       }
-      if (homeDegenerate)
-        Iterator.single(CellProbeRow(vecId, s"empty:$vecId", 0L, 0L,
-          Array.emptyLongArray, home = true, ts, Array.emptyDoubleArray))
-      else rows.result().iterator
+      if (homeDegenerate) sentinel else rows.result().iterator
     }
   }
 
-  def judgeCell(key: String, rows: Iterator[CellProbeRow],
-                state: GroupState[AdcBucket]): Iterator[AdcBandVerdict] =
-    judgeCellImpl(0L)(key, rows, state)
-
-  /** The per-cell judgment — [[StreamingEmbDedupAdc.judgeBand]]'s body
-    * with registration gated on the HOME row: non-home probes only
-    * report candidates, so each keeper owns exactly one state entry. */
-  private def judgeCellImpl(horizonMs: Long)(key: String,
-      rows: Iterator[CellProbeRow],
-      state: GroupState[AdcBucket]): Iterator[AdcBandVerdict] = {
-    if (horizonMs > 0 && state.hasTimedOut) {
-      state.remove(); return Iterator.empty
-    }
-    val batch = rows.toSeq.sortBy(_.vecId)
-    if (batch.isEmpty) return Iterator.empty
-    val wm = if (horizonMs > 0) state.getCurrentWatermarkMs() else 0L
-    var entries = state.getOption.map(_.entries.toVector).getOrElse(Vector.empty)
-    var changed = false
-    if (horizonMs > 0) {
-      val live = entries.filter(_.lastSeenMs + horizonMs > wm)
-      if (live.size != entries.size) { entries = live; changed = true }
-    }
-    val out = batch.map { r =>
-      if (r.proj.isEmpty) AdcBandVerdict(r.vecId, None, None, r.home, None)
-      else {
-        val ts = if (r.ts == null) 0L else r.ts.getTime
-        var qabs = 0L
-        var pi = 0
-        while (pi < r.proj.length) { qabs += math.abs(r.proj(pi)); pi += 1 }
-        var bestAt = -1
-        var bestId = Long.MaxValue
-        var bestEst = -2.0
-        var i = 0
-        entries.foreach { e =>
-          if (e.id != r.vecId) { // keeper replay never matches itself
-            val s = Similarity.adcScoreKernel(r.proj, e.slo, e.shi)
-            val est = math.cos(math.Pi / 2.0 * (1.0 - s.toDouble / qabs.toDouble))
-            if (est > bestEst || (est == bestEst && e.id < bestId)) {
-              bestEst = est; bestId = e.id; bestAt = i
-            }
-          }
-          i += 1
-        }
-        if (bestAt >= 0 && bestEst >= threshold) {
-          if (entries(bestAt).lastSeenMs < ts) { // matched keeper stays hot
-            entries = entries.updated(bestAt,
-              entries(bestAt).copy(lastSeenMs = ts))
-            changed = true
-          }
-          AdcBandVerdict(r.vecId, Some(bestId), Some(bestEst), r.home,
-            if (r.home) Some(r.vec) else None)
-        } else {
-          if (r.home) { // registration: home cell only, one entry per keeper
-            val at = entries.indexWhere(_.id == r.vecId)
-            if (at < 0) {
-              entries = entries :+ AdcEntry(r.vecId, r.slo, r.shi, ts)
-              changed = true
-            } else if (entries(at).lastSeenMs < ts) { // replay re-warms
-              entries = entries.updated(at, entries(at).copy(lastSeenMs = ts))
-              changed = true
-            }
-          }
-          AdcBandVerdict(r.vecId, None, None, r.home,
-            if (r.home) Some(r.vec) else None)
-        }
-      }
-    }
-    if (changed) {
-      if (entries.isEmpty) state.remove() else state.update(AdcBucket(entries))
-    }
-    if (horizonMs > 0 && entries.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(entries.iterator.map(_.lastSeenMs).max + horizonMs, wm + 1))
-    out.iterator
+  /** The per-cell judgment ([[BandedDedup.Judge]]): the ADC stream's
+    * estimate, with registration gated on the HOME row — non-home probes
+    * only report candidates, so each keeper owns exactly one state entry. */
+  private val judge = new BandedDedup.Judge[CellProbeRow, AdcEntry, AdcBucket, AdcBandVerdict] {
+    def threshold: Double = StreamingEmbDedupCell.this.threshold
+    def rowId(r: CellProbeRow): Long = r.vecId
+    def rowTs(r: CellProbeRow): java.sql.Timestamp = r.ts
+    def degenerate(r: CellProbeRow): Boolean = r.proj.isEmpty
+    override def perRow(r: CellProbeRow): Double = absSum(r.proj).toDouble
+    def score(r: CellProbeRow, q: Double, e: AdcEntry): Double =
+      estCosine(r.proj, q, e.slo, e.shi)
+    override def mayRegister(r: CellProbeRow): Boolean = r.home
+    def entry(r: CellProbeRow, q: Double, ts: Long): AdcEntry = AdcEntry(r.vecId, r.slo, r.shi, ts)
+    def warmed(e: AdcEntry, ts: Long): AdcEntry = e.copy(lastSeenMs = ts)
+    def entries(s: AdcBucket): Seq[AdcEntry] = s.entries
+    def bucket(es: Seq[AdcEntry]): AdcBucket = AdcBucket(es)
+    def verdict(r: CellProbeRow, candId: Option[Long], est: Option[Double]): AdcBandVerdict =
+      AdcBandVerdict(r.vecId, candId, est, r.home, Option.when(r.home && r.vec.nonEmpty)(r.vec))
   }
 
   /** Wire the cell-partitioned judgment over an embedding stream. Output
     * is one verdict per (doc, probed cell) — reduce with
     * [[StreamingNearDedup.verdicts]] (shared column contract). */
   def judged(docs: Dataset[StreamingEmbDedup.VecDoc]): Dataset[AdcBandVerdict] =
-    docs.flatMap(d => explode(d.vecId, d.vec, null))(cellProbeRowEnc)
-      .groupByKey(_.cellKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        judgeCell _)(adcBucketEnc, adcBandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.vecId, d.vec, null)), _.cellKey, None)
 
   /** Horizon-bounded variant: state plateaus at one dedup horizon. */
   def judgedTtl(docs: Dataset[StreamingEmbDedup.TimedVecDoc],
                 horizon: java.time.Duration,
                 watermarkDelay: String): Dataset[AdcBandVerdict] =
-    docs.flatMap(d => explode(d.vecId, d.vec, d.ts))(cellProbeRowEnc)
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.cellKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        judgeCellImpl(horizon.toMillis) _)(adcBucketEnc, adcBandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.vecId, d.vec, d.ts)), _.cellKey,
+      Some(horizon -> watermarkDelay))
 }
 
 object StreamingEmbDedupCell {

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.llm.Multimodal
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming PERCEPTUAL media dedup — the media pillar's member of the
@@ -32,8 +31,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *  - Unsketchable media (null payload / featureless) have no perceptual
  *    identity: sentinel key, match nothing, register nothing, kept — the
  *    batch [[Multimodal.phashIncremental]] verdict.
- *  - Keeper replay never matches itself and re-emits `keep = true`
- *    (checkpoint-replay safety, the family contract).
  *  - STATE KEY FORMAT v2 (round 14): group keys are packed longs, not
  *    the previous `"ci:key"` strings — a checkpoint written by the
  *    string-keyed version cannot be restarted against this one. Spark's
@@ -53,6 +50,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *    best-candidate election picks the MINIMUM distance).
  */
 final case class StreamingMediaDedup(maxHamming: Int = 3) {
+  import BandedDedup.longKeyEnc
   import StreamingMediaDedup._
   require(maxHamming >= 0 && maxHamming <= 3,
     s"6-block combo keys are exhaustive only for hamming <= 3, got $maxHamming")
@@ -109,101 +107,39 @@ final case class StreamingMediaDedup(maxHamming: Int = 3) {
     }
   }
 
-  /** Per-bucket judgment: candidates are the stored entries plus earlier
-    * (smaller-id) same-batch registrants; best exact sketch Hamming ≤
-    * maxHamming wins (min distance, ties to the smaller id), otherwise
-    * the arrival registers. Pure function of (state, batch). */
-  def judgeBand(key: Long, rows: Iterator[MediaBandRow],
-                state: GroupState[MediaBucket]): Iterator[MediaBandVerdict] =
-    judgeBandImpl(0L)(key, rows, state)
-
-  /** Core judgment, TTL-aware when `horizonMs > 0` — the family's
-    * two-path eviction contract (expired entries dropped on the data
-    * path, idle buckets evicted on the timeout path, arrivals re-warm). */
-  private def judgeBandImpl(horizonMs: Long)(key: Long,
-      rows: Iterator[MediaBandRow],
-      state: GroupState[MediaBucket]): Iterator[MediaBandVerdict] = {
-    if (horizonMs > 0 && state.hasTimedOut) {
-      state.remove(); return Iterator.empty
-    }
-    val batch = rows.toSeq.sortBy(_.mediaId)
-    if (batch.isEmpty) return Iterator.empty
-    val wm = if (horizonMs > 0) state.getCurrentWatermarkMs() else 0L
-    var entries = state.getOption.map(_.entries.toVector).getOrElse(Vector.empty)
-    var changed = false
-    if (horizonMs > 0) {
-      val live = entries.filter(_.lastSeenMs + horizonMs > wm)
-      if (live.size != entries.size) { entries = live; changed = true }
-    }
-    val out = batch.map { r =>
-      if (!r.sketchable) MediaBandVerdict(r.mediaId, None, None, r.carry)
-      else {
-        val ts = if (r.ts == null) 0L else r.ts.getTime
-        var bestAt = -1
-        var bestId = Long.MaxValue
-        var bestHam = Int.MaxValue
-        var i = 0
-        entries.foreach { e =>
-          if (e.id != r.mediaId) { // keeper replay never matches itself
-            val ham = java.lang.Long.bitCount(e.sig ^ r.sig)
-            if (ham < bestHam || (ham == bestHam && e.id < bestId)) {
-              bestHam = ham; bestId = e.id; bestAt = i
-            }
-          }
-          i += 1
-        }
-        if (bestHam <= maxHamming) {
-          if (entries(bestAt).lastSeenMs < ts) { // matched keeper stays hot
-            entries = entries.updated(bestAt,
-              entries(bestAt).copy(lastSeenMs = ts))
-            changed = true
-          }
-          // est = −hamming: the shared verdict election maximizes est, so
-          // the minimum distance wins under the family's (est desc, id) rule
-          MediaBandVerdict(r.mediaId, Some(bestId), Some(-bestHam.toDouble),
-            r.carry)
-        } else {
-          val at = entries.indexWhere(_.id == r.mediaId)
-          if (at < 0) {
-            entries = entries :+ MediaEntry(r.mediaId, r.sig, ts)
-            changed = true
-          } else if (entries(at).lastSeenMs < ts) { // replay re-warms
-            entries = entries.updated(at, entries(at).copy(lastSeenMs = ts))
-            changed = true
-          }
-          MediaBandVerdict(r.mediaId, None, None, r.carry)
-        }
-      }
-    }
-    if (changed) {
-      if (entries.isEmpty) state.remove() else state.update(MediaBucket(entries))
-    }
-    if (horizonMs > 0 && entries.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(entries.iterator.map(_.lastSeenMs).max + horizonMs, wm + 1))
-    out.iterator
+  /** The per-bucket judgment ([[BandedDedup.Judge]]): score = −(exact
+    * sketch Hamming) against threshold −maxHamming, so the family's
+    * (score desc, id asc) election picks the minimum distance, ties to the
+    * smaller id — and `est` = −hamming is what [[StreamingNearDedup.verdicts]]
+    * reduces. */
+  private[streaming] val judge = new BandedDedup.Judge[MediaBandRow, MediaEntry, MediaBucket, MediaBandVerdict] {
+    val threshold: Double = -maxHamming.toDouble
+    def rowId(r: MediaBandRow): Long = r.mediaId
+    def rowTs(r: MediaBandRow): java.sql.Timestamp = r.ts
+    def degenerate(r: MediaBandRow): Boolean = !r.sketchable
+    def score(r: MediaBandRow, q: Double, e: MediaEntry): Double =
+      -java.lang.Long.bitCount(e.sig ^ r.sig).toDouble
+    def entry(r: MediaBandRow, q: Double, ts: Long): MediaEntry = MediaEntry(r.mediaId, r.sig, ts)
+    def warmed(e: MediaEntry, ts: Long): MediaEntry = e.copy(lastSeenMs = ts)
+    def entries(s: MediaBucket): Seq[MediaEntry] = s.entries
+    def bucket(es: Seq[MediaEntry]): MediaBucket = MediaBucket(es)
+    def verdict(r: MediaBandRow, candId: Option[Long], est: Option[Double]): MediaBandVerdict =
+      MediaBandVerdict(r.mediaId, candId, est, r.carry)
   }
 
   /** Wire the stateful judgment over a media stream. Output is one verdict
     * per (media, key) — reduce with [[StreamingNearDedup.verdicts]]
     * (shared column contract) inside `foreachBatch`. */
   def judged(media: Dataset[MediaDoc]): Dataset[MediaBandVerdict] =
-    media.flatMap(m => explode(m.mediaId, m.payload, null))(mediaBandRowEnc)
-      .groupByKey(_.bandKey)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        judgeBand _)(mediaBucketEnc, mediaBandVerdictEnc)
+    judge.wired(media.flatMap(m => explode(m.mediaId, m.payload, null)), _.bandKey, None)
 
   /** Horizon-bounded perceptual dedup: verdicts match [[judged]] for any
     * arrival within `horizon` (event time) of the matched keeper's last
     * sighting, and bucket state plateaus at one horizon of kept items. */
   def judgedTtl(media: Dataset[TimedMediaDoc], horizon: java.time.Duration,
                 watermarkDelay: String): Dataset[MediaBandVerdict] =
-    media.flatMap(m => explode(m.mediaId, m.payload, m.ts))(mediaBandRowEnc)
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.bandKey)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        judgeBandImpl(horizon.toMillis) _)(mediaBucketEnc, mediaBandVerdictEnc)
+    judge.wired(media.flatMap(m => explode(m.mediaId, m.payload, m.ts)), _.bandKey,
+      Some(horizon -> watermarkDelay))
 }
 
 object StreamingMediaDedup {
@@ -217,6 +153,7 @@ object StreamingMediaDedup {
                                 sketchable: Boolean, carry: Boolean,
                                 ts: java.sql.Timestamp = null)
   final case class MediaEntry(id: Long, sig: Long, lastSeenMs: Long = 0L)
+    extends BandedDedup.Keeper
   final case class MediaBucket(entries: Seq[MediaEntry])
   /** Column contract shared with [[StreamingNearDedup.verdicts]]:
     * `docId`, `candId`, `est` (here: −hamming, so est desc = min

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.TextHashing
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming NEAR-dup (banded MinHash): the fuzzy counterpart of
@@ -33,9 +32,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *    is the classic LSH state trade — RocksDB-backed state stores absorb
  *    it; unbounded feeds use [[judgedTtl]], which bounds state to one
  *    dedup horizon via event-time eviction.
- *  - Keeper replay is idempotent: a re-arrival of a registered id never
- *    matches itself, never re-registers, and re-emits `keep = true` —
- *    at-least-once sources keep the output stable.
  *  - Shingle-less docs (null/short text) take a per-doc sentinel band,
  *    match nothing, register nothing, and are kept — the batch family's
  *    verdict for an undefined Jaccard.
@@ -43,7 +39,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 final case class StreamingNearDedup(shingleN: Int = 3, bands: Int = 32,
                                     rowsPerBand: Int = 4,
                                     threshold: Double = 0.8) {
+  import BandedDedup.stringKeyEnc
   import StreamingNearDedup._
+  require(threshold > 0.0 && threshold <= 1.0,
+    s"threshold is a Jaccard estimate and must be in (0, 1], got $threshold")
 
   /** Signature length, k = bands×rows as in the batch family. */
   val k: Int = bands * rowsPerBand
@@ -87,19 +86,13 @@ final case class StreamingNearDedup(shingleN: Int = 3, bands: Int = 32,
 
   /** Explode a doc into its band rows: one row per band carrying the FULL
     * signature (the bucket needs it to verify future arrivals), band key =
-    * the band's sub-signature (exact — no re-hash collisions). The text
-    * rides on exactly ONE band row per doc (band 0) so downstream
-    * `foreachBatch` consumers — [[StreamingNearDedup.absorbKeepers]] —
-    * can re-sign keepers for the shared store without a second input; the
-    * other `bands − 1` rows carry None. Per-row kernel work only; no
-    * shuffle until the stateful groupByKey. */
-  def bandRows(docs: Dataset[TextDoc]): Dataset[BandRow] =
-    docs.flatMap(d => explode(d.docId, d.text, null))(bandRowEnc)
-
-  /** Shared band-row kernel: one row per band (sentinel band for
-    * shingle-less docs), `ts` riding on every row so the TTL path can
-    * watermark the EXPLODED rows — a typed flatMap strips event-time
-    * column metadata, so the watermark must be declared downstream of it. */
+    * the band's sub-signature (exact — no re-hash collisions); shingle-less
+    * docs take one sentinel band. The text rides on exactly ONE band row
+    * per doc (band 0) so downstream `foreachBatch` consumers —
+    * [[StreamingNearDedup.absorbKeepers]] — can re-sign keepers for the
+    * shared store without a second input; `ts` rides on every row for the
+    * TTL path's watermark. Per-row kernel work only; no shuffle until the
+    * stateful groupByKey. */
   private def explode(docId: Long, text: String,
                       ts: java.sql.Timestamp): Iterator[BandRow] = {
     val sh = if (text == null) Array.empty[String]
@@ -118,93 +111,27 @@ final case class StreamingNearDedup(shingleN: Int = 3, bands: Int = 32,
     }
   }
 
-  /** Per-bucket judgment: candidates are the stored entries plus earlier
-    * (smaller-id) same-batch registrants; the best estimate ≥ threshold
-    * wins, otherwise the arrival registers. Pure function of (state,
-    * batch) — replays are deterministic. */
-  def judgeBand(key: String, rows: Iterator[BandRow],
-                state: GroupState[Bucket]): Iterator[BandVerdict] =
-    judgeBandImpl(0L)(key, rows, state)
-
-  /** Core per-bucket judgment, TTL-aware when `horizonMs > 0`. Two
-    * eviction paths, both required (Spark never flags `hasTimedOut` for a
-    * key WITH data in the batch):
-    *  - DATA path: entries whose `lastSeenMs + horizon` the watermark has
-    *    passed are dropped before judging, so an arrival just past the
-    *    horizon cannot match a stale keeper.
-    *  - TIMEOUT path: buckets idle past the horizon (no arrival re-armed
-    *    the timeout) are evicted wholesale when the watermark passes,
-    *    bounding state size.
-    * Any arrival refreshes its entry's `lastSeenMs` (matched keepers stay
-    * hot; replays re-register nothing but re-warm), making the horizon
-    * sliding per entry. */
-  private def judgeBandImpl(horizonMs: Long)(key: String,
-      rows: Iterator[BandRow],
-      state: GroupState[Bucket]): Iterator[BandVerdict] = {
-    if (horizonMs > 0 && state.hasTimedOut) {
-      state.remove(); return Iterator.empty
-    }
-    val batch = rows.toSeq.sortBy(_.docId)
-    if (batch.isEmpty) return Iterator.empty
-    val wm = if (horizonMs > 0) state.getCurrentWatermarkMs() else 0L
-    var entries = state.getOption.map(_.entries.toVector).getOrElse(Vector.empty)
-    var changed = false
-    if (horizonMs > 0) {
-      val live = entries.filter(_.lastSeenMs + horizonMs > wm)
-      if (live.size != entries.size) { entries = live; changed = true }
-    }
-    val out = batch.map { r =>
-      if (r.sig.isEmpty) BandVerdict(r.docId, None, None, r.text)
-      else {
-        val ts = if (r.ts == null) 0L else r.ts.getTime
-        var bestAt = -1
-        var bestId = Long.MaxValue
-        var bestEst = -1.0
-        var i = 0
-        entries.foreach { e =>
-          if (e.id != r.docId) { // keeper replay never matches itself
-            val est = sigEstimate(r.sig, e.sig)
-            if (est > bestEst || (est == bestEst && e.id < bestId)) {
-              bestEst = est; bestId = e.id; bestAt = i
-            }
-          }
-          i += 1
-        }
-        if (bestEst >= threshold) {
-          if (entries(bestAt).lastSeenMs < ts) { // matched keeper stays hot
-            entries = entries.updated(bestAt,
-              entries(bestAt).copy(lastSeenMs = ts))
-            changed = true
-          }
-          BandVerdict(r.docId, Some(bestId), Some(bestEst), r.text)
-        } else {
-          val at = entries.indexWhere(_.id == r.docId)
-          if (at < 0) {
-            entries = entries :+ Entry(r.docId, r.sig, ts); changed = true
-          } else if (entries(at).lastSeenMs < ts) { // replay re-warms
-            entries = entries.updated(at, entries(at).copy(lastSeenMs = ts))
-            changed = true
-          }
-          BandVerdict(r.docId, None, None, r.text)
-        }
-      }
-    }
-    if (changed) {
-      if (entries.isEmpty) state.remove() else state.update(Bucket(entries))
-    }
-    if (horizonMs > 0 && entries.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(entries.iterator.map(_.lastSeenMs).max + horizonMs, wm + 1))
-    out.iterator
+  /** The per-bucket judgment ([[BandedDedup.Judge]]): score = the
+    * signature-estimate Jaccard. */
+  private val judge = new BandedDedup.Judge[BandRow, Entry, Bucket, BandVerdict] {
+    def threshold: Double = StreamingNearDedup.this.threshold
+    def rowId(r: BandRow): Long = r.docId
+    def rowTs(r: BandRow): java.sql.Timestamp = r.ts
+    def degenerate(r: BandRow): Boolean = r.sig.isEmpty
+    def score(r: BandRow, q: Double, e: Entry): Double = sigEstimate(r.sig, e.sig)
+    def entry(r: BandRow, q: Double, ts: Long): Entry = Entry(r.docId, r.sig, ts)
+    def warmed(e: Entry, ts: Long): Entry = e.copy(lastSeenMs = ts)
+    def entries(s: Bucket): Seq[Entry] = s.entries
+    def bucket(es: Seq[Entry]): Bucket = Bucket(es)
+    def verdict(r: BandRow, candId: Option[Long], est: Option[Double]): BandVerdict =
+      BandVerdict(r.docId, candId, est, r.text)
   }
 
   /** Wire the stateful banded judgment over a document stream. Output is
     * one verdict per (doc, band) — reduce with [[StreamingNearDedup.verdicts]]
     * inside `foreachBatch`. */
   def judged(docs: Dataset[TextDoc]): Dataset[BandVerdict] =
-    bandRows(docs).groupByKey(_.bandKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        judgeBand _)(bucketEnc, bandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.docId, d.text, null)), _.bandKey, None)
 
   /** Horizon-bounded near-dup: verdicts match [[judged]] for any arrival
     * within `horizon` (event time) of the matched keeper's last sighting —
@@ -216,12 +143,8 @@ final case class StreamingNearDedup(shingleN: Int = 3, bands: Int = 32,
     * still catches the evicted-then-reseen duplicate. */
   def judgedTtl(docs: Dataset[TimedTextDoc], horizon: java.time.Duration,
                 watermarkDelay: String): Dataset[BandVerdict] =
-    docs.flatMap(d => explode(d.docId, d.text, d.ts))(bandRowEnc)
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.bandKey)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        judgeBandImpl(horizon.toMillis) _)(bucketEnc, bandVerdictEnc)
+    judge.wired(docs.flatMap(d => explode(d.docId, d.text, d.ts)), _.bandKey,
+      Some(horizon -> watermarkDelay))
 }
 
 object StreamingNearDedup {
@@ -235,6 +158,7 @@ object StreamingNearDedup {
                            text: Option[String],
                            ts: java.sql.Timestamp = null)
   final case class Entry(id: Long, sig: Array[Long], lastSeenMs: Long = 0L)
+    extends BandedDedup.Keeper
   final case class Bucket(entries: Seq[Entry])
   final case class BandVerdict(docId: Long, candId: Option[Long],
                                est: Option[Double], text: Option[String])

@@ -1,11 +1,13 @@
 package graft.sink
 
-import graft.TestSpark
+import graft.{DerbyConn, TestSpark}
 import graft.model.DbMapping
 import graft.sink.UpsertSink.RowOp
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.lang.reflect.{InvocationTargetException, Method, Proxy}
 import java.sql.{Connection, DriverManager}
+import java.util.concurrent.atomic.AtomicInteger
 
 /**
  * Sink semantics against a real embedded JDBC target (Derby in-memory).
@@ -37,6 +39,19 @@ class SinkSpec extends AnyFunSuite {
       while (rs.next()) buf += ((rs.getLong(1), rs.getString(2)))
       buf.toSeq
     } finally c.close()
+  }
+
+  /** [[derby]] whose connections count `commit` / `rollback` calls. */
+  private def countingTx(db: String, commits: AtomicInteger,
+                         rollbacks: AtomicInteger): () => Connection = () => {
+    val c = derby(db)()
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
+      (_: AnyRef, m: Method, args: Array[AnyRef]) => {
+        if (m.getName == "commit") commits.incrementAndGet()
+        if (m.getName == "rollback") rollbacks.incrementAndGet()
+        try { if (args == null) m.invoke(c) else m.invoke(c, args: _*) }
+        catch { case e: InvocationTargetException => throw e.getCause }
+      }).asInstanceOf[Connection]
   }
 
   val mapping: DbMapping = DbMapping("mytest", "user", "MYTEST2.USER",
@@ -155,5 +170,35 @@ class SinkSpec extends AnyFunSuite {
     UpsertSink.writeUpserts(df, mapping, derby("t4"), numPartitions = 2,
       dialect = DeleteInsertDialect)
     assert(queryAll("t4") == Seq((1L, "x"), (2L, "y"), (3L, "z")))
+  }
+
+  test("an empty partition opens no connection") {
+    val url = "jdbc:derby:memory:t5;create=true"
+    UpsertSink.applyPartition(Iterator.empty, mapping, Seq("id", "name"),
+      DerbyConn.counting(url), dialect = DeleteInsertDialect)
+    assert(DerbyConn.openedTo(url) == 0)
+  }
+
+  test("a partition commits exactly once; a failed one rolls back and never commits") {
+    setup("t6")
+    val (commits, rollbacks) = (new AtomicInteger, new AtomicInteger)
+    val wide = mapping.copy(commitBatch = 100) // no cadence commit mid-partition
+    val ops = Seq(
+      RowOp("INSERT", Seq(1L, "a"), Seq(1L)),
+      RowOp("INSERT", Seq(2L, "b"), Seq(2L)),
+      RowOp("DELETE", Seq.empty, Seq(1L)))
+    UpsertSink.applyPartition(ops.iterator, wide, Seq("id", "name"),
+      countingTx("t6", commits, rollbacks), dialect = DeleteInsertDialect)
+    assert((commits.get, rollbacks.get) == ((1, 0)))
+    assert(queryAll("t6") == Seq((2L, "b")))
+    // NAME is VARCHAR(64): the over-long value fails the batch at commit
+    commits.set(0)
+    intercept[Throwable] {
+      UpsertSink.applyPartition(Iterator(RowOp("INSERT", Seq(3L, "x" * 65), Seq(3L))),
+        wide, Seq("id", "name"), countingTx("t6", commits, rollbacks),
+        dialect = DeleteInsertDialect)
+    }
+    assert((commits.get, rollbacks.get) == ((0, 1)))
+    assert(queryAll("t6") == Seq((2L, "b")))
   }
 }
