@@ -24,24 +24,24 @@ import java.sql.{Connection, PreparedStatement}
  * own statements keep their relative order because every dialect emits its
  * statements in a fixed SQL order (DELETE before INSERT for
  * [[DeleteInsertDialect]], a single statement for Phoenix UPSERT /
- * [[MergeDialect]]). This recovers the `executeBatch` round-trip win even
- * for dialects that alternate statement text per row (DELETE+INSERT),
- * where naive run-length batching degrades to batches of 1.
+ * [[MergeDialect]]). This batches even dialects that alternate statement
+ * text per row (DELETE+INSERT).
  *
  * A required global SQL order across ops of one dialect is the one
  * precondition (upsert ops must not emit INSERT-then-DELETE while delete
  * ops batch DELETEs) — both shipped dialect families satisfy it.
+ *
+ * Owns `conn`: it is closed even when `setAutoCommit(false)` throws here.
  */
 final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends AutoCloseable {
-  conn.setAutoCommit(false)
+  try conn.setAutoCommit(false)
+  catch { case t: Throwable => BatchExecutor.suppressing(t)(conn.close()); throw t }
 
   private var sinceCommit = 0  // statements since last commit (cadence counter)
   private val stmts = scala.collection.mutable.Map[String, PreparedStatement]()
-  // the open window: per-SQL pending counts in first-seen order + keys seen
-  private val openSqls = scala.collection.mutable.ArrayBuffer[String]()
-  private val pending = scala.collection.mutable.Map[String, Int]()
+  // the open window: SQL texts in first-seen order + keys seen
+  private val openSqls = scala.collection.mutable.LinkedHashSet[String]()
   private val windowKeys = scala.collection.mutable.HashSet[Seq[Any]]()
-  private var lastSql: String = null
 
   private def stmt(sql: String): PreparedStatement =
     stmts.getOrElseUpdate(sql, conn.prepareStatement(sql))
@@ -49,32 +49,22 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
   /**
    * Queue one row-op (all the statements one logical CDC/ETL row expands
    * to, e.g. DELETE+INSERT) under its PK; auto-commits every `commitBatch`
-   * statements. `key == null` means "unknown key": the op degrades to
-   * strict run-length batching (flush whenever the SQL text changes).
+   * statements.
    */
   def addOp(key: Seq[Any], ops: Seq[(String, Seq[Any])]): Unit = {
-    if (key == null) {
-      // unknown key: only a homogeneous run is provably order-safe
-      if (ops.exists { case (sql, _) => lastSql != null && sql != lastSql }) flush()
-    } else if (!windowKeys.add(key)) {
+    if (!windowKeys.add(key)) {
       flush() // second op for this key → new window keeps per-key order exact
       windowKeys.add(key)
     }
     ops.foreach { case (sql, params) =>
       val ps = stmt(sql)
-      if (!pending.contains(sql)) { openSqls += sql; pending(sql) = 0 }
+      openSqls += sql
       params.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
       ps.addBatch()
-      pending(sql) += 1
-      lastSql = sql
       sinceCommit += 1
     }
     if (sinceCommit >= commitBatch) commit()
   }
-
-  /** Queue one parameterized statement with no key context (run-length
-    * batching only). */
-  def execute(sql: String, params: Seq[Any]): Unit = addOp(null, Seq(sql -> params))
 
   /** Execute an unparameterized DDL/utility statement immediately (a hard
     * ordering barrier: the open window flushes first). */
@@ -86,16 +76,14 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
 
   private def flush(): Unit = {
     openSqls.foreach(sql => stmts(sql).executeBatch())
-    openSqls.clear(); pending.clear(); windowKeys.clear()
-    lastSql = null
+    openSqls.clear(); windowKeys.clear()
   }
 
   def commit(): Unit = { flush(); sinceCommit = 0; conn.commit() }
 
   def rollback(): Unit = {
     stmts.values.foreach(_.clearBatch())
-    openSqls.clear(); pending.clear(); windowKeys.clear()
-    lastSql = null; sinceCommit = 0
+    openSqls.clear(); windowKeys.clear(); sinceCommit = 0
     conn.rollback()
   }
 
@@ -103,4 +91,11 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
     * caller ends the transaction with [[commit]] or [[rollback]]. */
   override def close(): Unit =
     try stmts.values.foreach(_.close()) finally conn.close()
+}
+
+object BatchExecutor {
+  /** Run a cleanup step after `primary` was thrown: a failure of the step is
+    * attached to `primary` as suppressed instead of replacing it. */
+  private[sink] def suppressing(primary: Throwable)(step: => Unit): Unit =
+    try step catch { case t: Throwable => primary.addSuppressed(t) }
 }

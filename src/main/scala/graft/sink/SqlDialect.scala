@@ -8,16 +8,19 @@ import graft.model.DbMapping
  * `UPSERT` (`PhoenixSyncService.java:379-423`); targets without a native
  * upsert (Derby in tests, vanilla RDBMS) get the reference's *ETL* shape —
  * DELETE-by-PK then INSERT (`PhoenixEtlService.java:409-451`), which has
- * identical last-write-wins semantics.
+ * identical last-write-wins semantics. Every dialect shares the Phoenix
+ * identifier quoting and DELETE-by-PK; each states only its upsert and
+ * truncate.
  */
 trait SqlDialect extends Serializable {
   /** Statements for an INSERT/UPDATE (upsert) of a full post-image. */
   def upsert(mapping: DbMapping, cols: Seq[String], values: Seq[Any],
              pkValues: Seq[Any]): Seq[(String, Seq[Any])]
-  def delete(mapping: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])]
   def truncate(mapping: DbMapping): String
-  def quote(id: String, escapeUpper: Boolean): String
-  def tableName(mapping: DbMapping): String
+  def delete(mapping: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])] =
+    Seq(PhoenixDialect.deleteSql(mapping) -> pkValues)
+  def quote(id: String, escapeUpper: Boolean): String = PhoenixDialect.escape(id, escapeUpper)
+  def tableName(mapping: DbMapping): String = PhoenixDialect.tableName(mapping)
 }
 
 /** Phoenix-style: native UPSERT, double-quoted upper-cased identifiers. */
@@ -25,30 +28,20 @@ object PhoenixSqlDialect extends SqlDialect {
   def upsert(m: DbMapping, cols: Seq[String], values: Seq[Any],
              pkValues: Seq[Any]): Seq[(String, Seq[Any])] =
     Seq(PhoenixDialect.upsertSql(m, cols) -> values)
-  def delete(m: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])] =
-    Seq(PhoenixDialect.deleteSql(m) -> pkValues)
   def truncate(m: DbMapping): String = PhoenixDialect.truncateSql(m)
-  def quote(id: String, escapeUpper: Boolean): String = PhoenixDialect.escape(id, escapeUpper)
-  def tableName(m: DbMapping): String = PhoenixDialect.tableName(m)
 }
 
 /**
  * ANSI `MERGE` upsert (Derby ≥10.11, DB2, SQL Server, Oracle): ONE statement
- * per row-op, like Phoenix's native UPSERT — so a run of consecutive upserts
- * shares one `PreparedStatement` and [[BatchExecutor]]'s run-length batching
- * actually batches (`executeBatch` round trips). [[DeleteInsertDialect]]
- * alternates DELETE/INSERT SQL per row, which degrades the run length to 1 —
- * correct, but single-row round trips; prefer MERGE wherever the target
- * supports it.
+ * per row-op, like Phoenix's native UPSERT, so an upsert is one batched
+ * statement where [[DeleteInsertDialect]] needs two (a DELETE and an
+ * INSERT, each batched by [[BatchExecutor]]'s pk-distinct windows).
  *
  * Parameter order: ON (pk), UPDATE SET (non-pk columns), INSERT (all
  * columns). PK columns are excluded from SET (immutable under MERGE; K2
  * pk-changes arrive as DELETE+INSERT upstream, `CdcApply.expandPkChanges`).
  */
 final case class MergeDialect(dummyTable: String = "SYSIBM.SYSDUMMY1") extends SqlDialect {
-  def quote(id: String, escapeUpper: Boolean): String =
-    PhoenixDialect.escape(id, escapeUpper)
-  def tableName(m: DbMapping): String = PhoenixDialect.tableName(m)
   def upsert(m: DbMapping, cols: Seq[String], values: Seq[Any],
              pkValues: Seq[Any]): Seq[(String, Seq[Any])] = {
     val pkCols = m.targetPk.keys.toSeq.sorted // same order as pkValues (sink contract)
@@ -63,16 +56,11 @@ final case class MergeDialect(dummyTable: String = "SYSIBM.SYSDUMMY1") extends S
       matched + s" WHEN NOT MATCHED THEN INSERT ($colList) VALUES ($qs)"
     Seq(sql -> (pkValues ++ setCols.map { case (_, i) => values(i) } ++ values))
   }
-  def delete(m: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])] =
-    Seq(PhoenixDialect.deleteSql(m) -> pkValues)
   def truncate(m: DbMapping): String = s"DELETE FROM ${tableName(m)}"
 }
 
 /** Generic JDBC (no native upsert): DELETE-by-PK + INSERT, idempotent. */
 object DeleteInsertDialect extends SqlDialect {
-  def quote(id: String, escapeUpper: Boolean): String =
-    PhoenixDialect.escape(id, escapeUpper)
-  def tableName(m: DbMapping): String = PhoenixDialect.tableName(m)
   def upsert(m: DbMapping, cols: Seq[String], values: Seq[Any],
              pkValues: Seq[Any]): Seq[(String, Seq[Any])] = {
     val colList = cols.map(quote(_, m.escapeUpper)).mkString(", ")
@@ -80,8 +68,6 @@ object DeleteInsertDialect extends SqlDialect {
     delete(m, pkValues) :+
       (s"INSERT INTO ${tableName(m)} ($colList) VALUES ($qs)" -> values)
   }
-  def delete(m: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])] =
-    Seq(PhoenixDialect.deleteSql(m) -> pkValues)
   def truncate(m: DbMapping): String =
     s"DELETE FROM ${tableName(m)}" // Derby lacks TRUNCATE in older modes; DELETE-all is equivalent here
 }

@@ -13,13 +13,13 @@ import java.sql.Connection
  *
  * Architecture: rows are routed with [[graft.cdc.PkHash]] (same-key →
  * same-partition, per-key order restored by a local sort), then each
- * partition opens one connection and applies its rows *sequentially* through
- * a [[BatchExecutor]] — the Spark analog of the reference's N single-thread
- * workers. D5 self-heal (schema-miss retry) wraps the partition body: on
- * `ColumnNotFound`/`TableNotFound`-style failures the supplied `heal`
- * callback runs (schema sync) and the partition batch replays once
- * (`PhoenixSyncService.java:103-131`) — safe because UPSERT/DELETE-by-PK are
- * idempotent (at-least-once, SURVEY §7.4 risk 5).
+ * partition opens one connection and streams its rows *sequentially*
+ * through a [[BatchExecutor]] — the Spark analog of the reference's N
+ * single-thread workers. A partition is read once and never buffered, so
+ * sink memory is bounded by the open JDBC window (at most `commitBatch`
+ * statements), not by partition size. D5 self-heal lives on the driver
+ * ([[graft.streaming.CanalStream.applyBatchToJdbc]] replays the whole
+ * segment after a schema miss; [[isSchemaMiss]] is its detector).
  *
  * `connFactory` must be serializable-friendly (a function creating the
  * connection *on the executor*); no connection ever crosses the driver
@@ -31,7 +31,7 @@ object UpsertSink {
 
   /** Names whose presence in an exception chain triggers self-heal
     * (`PhoenixSyncService.java:107-119` checks cause suffixes). */
-  private def isSchemaMiss(t: Throwable): Boolean = {
+  private[graft] def isSchemaMiss(t: Throwable): Boolean = {
     var cur = t
     while (cur != null) {
       val n = cur.getClass.getSimpleName
@@ -44,37 +44,61 @@ object UpsertSink {
   }
 
   /**
-   * Apply a partition of ordered ops: one connection and one final commit
-   * (plus a commit every `commitBatch` statements), none at all for an
-   * empty partition. Exposed separately so semantics are unit-testable
-   * against any JDBC-ish target.
+   * Apply a partition of ordered ops as they are read: one connection and
+   * one final commit (plus a commit every `commitBatch` statements), none
+   * at all for an empty partition. On failure the open transaction rolls
+   * back and the apply's own error is thrown, with any rollback/close
+   * failure attached as suppressed. Exposed separately so semantics are
+   * unit-testable against any JDBC-ish target.
    */
   def applyPartition(ops: Iterator[RowOp], mapping: DbMapping, targetCols: Seq[String],
                      conn: () => Connection,
-                     heal: Option[Throwable => Unit] = None,
                      dialect: SqlDialect = PhoenixSqlDialect): Unit = {
-    val buffered = ops.toSeq // partition batch must be replayable for D5
-    if (buffered.isEmpty) return // an empty partition opens no connection
-    def run(): Unit = {
-      val exec = new BatchExecutor(conn(), mapping.commitBatch)
-      try {
-        buffered.foreach {
-          case RowOp("DELETE", _, pkVals) =>
-            exec.addOp(pkVals, dialect.delete(mapping, pkVals))
-          case RowOp("TRUNCATE", _, _) => exec.executeDirect(dialect.truncate(mapping))
-          case RowOp(_, values, pkVals) => // INSERT/UPDATE → UPSERT (K1)
-            exec.addOp(pkVals, dialect.upsert(mapping, targetCols, values, pkVals))
-        }
-        exec.commit()
-      } catch {
-        case t: Throwable => exec.rollback(); throw t
-      } finally exec.close()
+    if (!ops.hasNext) return // an empty partition opens no connection
+    val exec = new BatchExecutor(conn(), mapping.commitBatch)
+    try {
+      ops.foreach {
+        case RowOp("DELETE", _, pkVals) =>
+          exec.addOp(pkVals, dialect.delete(mapping, pkVals))
+        case RowOp("TRUNCATE", _, _) => exec.executeDirect(dialect.truncate(mapping))
+        case RowOp(_, values, pkVals) => // INSERT/UPDATE → UPSERT (K1)
+          exec.addOp(pkVals, dialect.upsert(mapping, targetCols, values, pkVals))
+      }
+      exec.commit()
+    } catch {
+      case t: Throwable =>
+        BatchExecutor.suppressing(t)(exec.rollback())
+        BatchExecutor.suppressing(t)(exec.close())
+        throw t
     }
-    try run()
-    catch {
-      case t: Throwable if heal.isDefined && isSchemaMiss(t) =>
-        heal.get.apply(t) // D4 schema sync
-        run()             // single replay (PhoenixSyncService.java:121-127)
+    exec.close()
+  }
+
+  /**
+   * Apply `df` to the target, one [[applyPartition]] per partition — the
+   * one partition job of the CDC and ETL paths. `df`'s columns are the op
+   * name (when `withOp`; else every row is an INSERT) followed by the
+   * values of `cols`; the target PK columns resolve among `cols`
+   * case-insensitively, failing fast when absent. `onRow` sees each row as
+   * it is applied.
+   */
+  private[graft] def applyRows(df: DataFrame, withOp: Boolean, cols: Seq[String],
+                               mapping: DbMapping, connFactory: () => Connection,
+                               dialect: SqlDialect, onRow: Row => Unit = _ => ()): Unit = {
+    val off = if (withOp) 1 else 0
+    val pkIdx = mapping.targetPk.keys.toSeq.sorted.map { p =>
+      val i = cols.indexWhere(_.equalsIgnoreCase(p))
+      // a -1 here would otherwise crash opaquely inside the partition job
+      require(i >= 0, s"target PK column '$p' not found among (${cols.mkString(", ")})")
+      i + off
+    }
+    val valIdx = cols.indices.map(_ + off)
+    df.foreachPartition { (rows: Iterator[Row]) =>
+      val ops = rows.map { r =>
+        onRow(r)
+        RowOp(if (withOp) r.getString(0) else "INSERT", valIdx.map(r.get), pkIdx.map(r.get))
+      }
+      applyPartition(ops, mapping, cols, connFactory, dialect)
     }
   }
 
@@ -94,28 +118,13 @@ object UpsertSink {
                    dialect: SqlDialect = PhoenixSqlDialect,
                    debug: Boolean = false): Long = {
     val cols = df.columns.toSeq
-    // case-insensitive, fail-fast: consistent with applyBatchToJdbc's lookup;
-    // a -1 here would otherwise crash opaquely inside foreachPartition
-    val pkIdx = mapping.targetPk.keys.toSeq.sorted.map { p =>
-      val i = cols.indexWhere(_.equalsIgnoreCase(p))
-      require(i >= 0, s"target PK column '$p' not found in DataFrame columns " +
-        s"(${cols.mkString(", ")})")
-      i
-    }
     val applied = df.sparkSession.sparkContext.longAccumulator("graft.upserts.applied")
     val routed = if (numPartitions > 0) df.repartition(numPartitions) else df
-    routed.foreachPartition { (rows: Iterator[Row]) =>
-      val log = if (debug) org.slf4j.LoggerFactory.getLogger("graft.sink.UpsertSink") else null
-      var n = 0L
-      val ops = rows.map { r =>
-        n += 1
-        val vals = cols.indices.map(r.get)
-        if (debug) log.info(s"etl row ${cols.zip(vals).map { case (c, v) => s"$c=$v" }.mkString(", ")}")
-        RowOp("INSERT", vals, pkIdx.map(r.get))
-      }
-      applyPartition(ops, mapping, cols, connFactory, dialect = dialect)
-      applied.add(n) // ops fully consumed by applyPartition's buffering
-    }
+    applyRows(routed, withOp = false, cols, mapping, connFactory, dialect, { r =>
+      applied.add(1)
+      if (debug) org.slf4j.LoggerFactory.getLogger("graft.sink.UpsertSink")
+        .info(s"etl row ${cols.zip(r.toSeq).map { case (c, v) => s"$c=$v" }.mkString(", ")}")
+    })
     applied.value
   }
 }

@@ -362,11 +362,21 @@ object CanalStream {
     }
 
   /**
-   * Apply one routed+ordered micro-batch to a JDBC target (the production
-   * `applyBatch` for [[start]]): K2 pk-change expansion, T3 coercion of the
-   * string row images to the probed target schema (S4), E1 enum decode,
-   * then per-partition sequential apply through the sink (K1–K4) with D5
-   * self-heal delegated to the caller-supplied `heal`.
+   * Apply one routed+ordered micro-batch segment to a JDBC target (the
+   * production `applyBatch` for [[start]]): T3 coercion of the string row
+   * images to the probed target schema (S4), E1 enum decode, then
+   * per-partition sequential apply through the sink (K1–K4), each
+   * partition streamed once through a bounded JDBC window.
+   *
+   * D5 self-heal (`PhoenixSyncService.java:103-131`) runs here on the
+   * driver, once per failing segment: when an attempt fails with a schema
+   * miss ([[graft.sink.UpsertSink.isSchemaMiss]] — a mapped column absent
+   * from the target, or a `TableNotFound`/`ColumnNotFound` raised by JDBC
+   * inside a task), `heal` (D4 schema sync) runs, the target is re-probed
+   * and the whole segment replays once — safe because the segment is
+   * deterministic and the apply idempotent (at-least-once, SURVEY §7.4
+   * risk 5). A second failure is thrown as is. `heal` must be thread-safe
+   * (see [[start]]) but need not be serializable.
    */
   def applyBatchToJdbc(config: MappingConfig, ordered: DataFrame,
                        targetSchema: org.apache.spark.sql.types.StructType,
@@ -379,11 +389,11 @@ object CanalStream {
     val m = config.dbMapping
     // skipMissing (reference PhoenixSyncService.java:399-404): a mapped
     // column absent from the probed target schema is warn-and-skipped when
-    // true; when false the miss is a schema error — heal (D4 sync) then
-    // re-probe, failing if still missing. Mapped columns come from the
-    // batch's own row images — via `sourceColsHint` when the caller already
-    // derived them ([[start]]'s single stats pass), else one distinct-keys
-    // agg here (the reference checks the same per row against metadata).
+    // true; when false the miss is a schema error (healed below). Mapped
+    // columns come from the batch's own row images — via `sourceColsHint`
+    // when the caller already derived them ([[start]]'s single stats pass),
+    // else one distinct-keys agg here (the reference checks the same per
+    // row against metadata).
     val batchSourceCols = sourceColsHint.getOrElse {
       ordered
         .agg(array_distinct(flatten(collect_set(map_keys(col("data"))))).as("ks"))
@@ -392,61 +402,36 @@ object CanalStream {
           case r => r.getSeq[String](0)
         }
     }
-    val mappedTargets = graft.transform.ColumnMapper.columnsMap(m, batchSourceCols).map(_._1)
-    def missingFrom(schema: org.apache.spark.sql.types.StructType): Seq[String] =
-      mappedTargets.filterNot(t => schema.fieldNames.exists(_.equalsIgnoreCase(t)))
     // segments with no row images (TRUNCATE-only, or empty between two DDL
     // barriers) have nothing to project — never trigger a spurious heal
-    val missing = if (batchSourceCols.isEmpty) Seq.empty else missingFrom(targetSchema)
-    val effectiveSchema =
-      if (missing.isEmpty) targetSchema
-      else if (m.skipMissing) {
+    val mappedTargets =
+      if (batchSourceCols.isEmpty) Seq.empty
+      else graft.transform.ColumnMapper.columnsMap(m, batchSourceCols).map(_._1)
+    def attempt(schema: org.apache.spark.sql.types.StructType): Unit = {
+      val missing = mappedTargets.filterNot(t => schema.fieldNames.exists(_.equalsIgnoreCase(t)))
+      if (missing.nonEmpty && m.skipMissing)
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"skipMissing: target ${m.targetTable} lacks mapped columns " +
             s"${missing.mkString(", ")} — skipped")
-        targetSchema
-      } else {
-        val err = new RuntimeException(
-          s"ColumnNotFound: target ${m.targetTable} lacks mapped columns ${missing.mkString(", ")}")
-        heal match {
-          case Some(h) =>
-            h(err) // D4 schema sync, then re-probe the healed target
-            val reprobed = SchemaProbe.probe(m, connFactory, dialect)
-            val still = missingFrom(reprobed)
-            if (still.nonEmpty) throw new RuntimeException(
-              s"ColumnNotFound: target ${m.targetTable} still lacks ${still.mkString(", ")} after heal")
-            reprobed
-          case None => throw err
+      else if (missing.nonEmpty) throw new RuntimeException(
+        s"ColumnNotFound: target ${m.targetTable} lacks mapped columns ${missing.mkString(", ")}")
+      // input is already pk-change-expanded and partition-ordered by start()
+      val decoded = schema.fields.toSeq.map { f =>
+        val raw = element_at(col("data"), f.name)
+        val withEnum = m.enumColumns.get(f.name) match {
+          case Some(labels) => graft.transform.EnumDecode.decode(raw, labels)
+          case None => raw
         }
+        Coercion.coerce(withEnum, f.dataType).as(f.name)
       }
-    // input is already pk-change-expanded and partition-ordered by start()
-    val fields = effectiveSchema.fields.toSeq
-    val decoded = fields.map { f =>
-      val raw = element_at(col("data"), f.name)
-      val withEnum = m.enumColumns.get(f.name) match {
-        case Some(labels) => graft.transform.EnumDecode.decode(raw, labels)
-        case None => raw
-      }
-      Coercion.coerce(withEnum, f.dataType).as(f.name)
+      UpsertSink.applyRows(ordered.select(Seq(col("type")) ++ decoded: _*), withOp = true,
+        schema.fieldNames.toSeq, m, connFactory, dialect)
     }
-    val projected = ordered.select(Seq(col("type")) ++ decoded: _*)
-    val names = fields.map(_.name)
-    val pkTargetCols = m.targetPk.keys.toSeq.sorted
-    val pkIdx = pkTargetCols.map { p =>
-      val i = names.indexWhere(_.equalsIgnoreCase(p))
-      // -1 + 1 = 0 would silently read the op column as the PK value
-      require(i >= 0, s"target PK column '$p' missing from probed target schema " +
-        s"(${names.mkString(", ")})")
-      i + 1
-    }
-    val mapping = m
-    projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      val ops = rows.map { r =>
-        val op = r.getString(0)
-        val vals = (1 to names.size).map(r.get)
-        UpsertSink.RowOp(op, vals, pkIdx.map(r.get))
-      }
-      UpsertSink.applyPartition(ops, mapping, names, connFactory, heal, dialect)
+    try attempt(targetSchema)
+    catch {
+      case t: Throwable if heal.isDefined && UpsertSink.isSchemaMiss(t) =>
+        heal.get.apply(t) // D4 schema sync, then replay once on the healed target
+        attempt(SchemaProbe.probe(m, connFactory, dialect))
     }
   }
 

@@ -1,12 +1,14 @@
 package graft.sink
 
 import graft.{DerbyConn, TestSpark}
-import graft.model.DbMapping
+import graft.model.{DbMapping, MappingConfig}
 import graft.sink.UpsertSink.RowOp
+import graft.streaming.CanalStream
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.lang.reflect.{InvocationTargetException, Method, Proxy}
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, SQLException}
 import java.util.concurrent.atomic.AtomicInteger
 
 /**
@@ -16,10 +18,8 @@ import java.util.concurrent.atomic.AtomicInteger
  */
 class SinkSpec extends AnyFunSuite {
 
-  private def derby(db: String): () => Connection = {
-    val url = s"jdbc:derby:memory:$db;create=true"
-    () => DriverManager.getConnection(url)
-  }
+  private def url(db: String): String = s"jdbc:derby:memory:$db;create=true"
+  private def derby(db: String): () => Connection = DerbyConn.factory(url(db))
 
   private def setup(db: String): Unit = {
     val c = derby(db)()
@@ -41,21 +41,21 @@ class SinkSpec extends AnyFunSuite {
     } finally c.close()
   }
 
-  /** [[derby]] whose connections count `commit` / `rollback` calls. */
-  private def countingTx(db: String, commits: AtomicInteger,
-                         rollbacks: AtomicInteger): () => Connection = () => {
-    val c = derby(db)()
-    Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
-      (_: AnyRef, m: Method, args: Array[AnyRef]) => {
-        if (m.getName == "commit") commits.incrementAndGet()
-        if (m.getName == "rollback") rollbacks.incrementAndGet()
-        try { if (args == null) m.invoke(c) else m.invoke(c, args: _*) }
-        catch { case e: InvocationTargetException => throw e.getCause }
-      }).asInstanceOf[Connection]
-  }
-
   val mapping: DbMapping = DbMapping("mytest", "user", "MYTEST2.USER",
     targetPk = Map("id" -> "id"), commitBatch = 2)
+
+  // the segment-level (applyBatchToJdbc) view of the same target
+  private val config = MappingConfig(dataSourceKey = "ds", destination = "example",
+    dbMapping = mapping.copy(mapAll = true))
+  private val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+
+  /** A routed segment of INSERTs for ids `1..n`, spread over `parts` partitions. */
+  private def inserts(n: Int, parts: Int): DataFrame = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    spark.sparkContext.parallelize((1 to n).map(i => ("INSERT", Map("id" -> s"$i", "name" -> s"n$i"))), parts)
+      .toDF("type", "data")
+  }
 
   test("Phoenix statement text golden (PhoenixSyncService.java:379-423,473-513)") {
     assert(PhoenixDialect.upsertSql(mapping, Seq("id", "name")) ==
@@ -109,27 +109,54 @@ class SinkSpec extends AnyFunSuite {
       healed += 1
       setup("t3")
     }
-    val ops = Seq(RowOp("INSERT", Seq(1L, "a"), Seq(1L)))
-    // Derby's missing-table error doesn't carry the Phoenix class names the
-    // detector looks for, so wrap to emulate the Phoenix failure shape:
+    val segment = inserts(1, 1)
     val thrown = intercept[Throwable] {
-      UpsertSink.applyPartition(ops.iterator, mapping, Seq("id", "name"),
-        derby("t3"), heal = None, dialect = DeleteInsertDialect)
+      CanalStream.applyBatchToJdbc(config, segment, schema, derby("t3"), DeleteInsertDialect,
+        heal = None)
     }
     assert(thrown != null && healed == 0)
-    // now with a heal hook and an error whose message mentions the miss:
-    class TableNotFoundException(msg: String) extends RuntimeException(msg)
-    val failingOnce: () => Connection = {
-      var first = true
-      () => {
-        if (first) { first = false; throw new TableNotFoundException("TableNotFound: USER") }
-        derby("t3")()
-      }
-    }
-    UpsertSink.applyPartition(ops.iterator, mapping, Seq("id", "name"),
-      failingOnce, heal = Some(heal), dialect = DeleteInsertDialect)
+    // now with a heal hook and the Phoenix failure shape (Derby's
+    // missing-table error doesn't carry the names the detector looks for):
+    CanalStream.applyBatchToJdbc(config, segment, schema, DerbyConn.schemaMissOnce(url("t3")),
+      DeleteInsertDialect, heal = Some(heal))
     assert(healed == 1)
-    assert(queryAll("t3") == Seq((1L, "a")))
+    assert(queryAll("t3") == Seq((1L, "n1")))
+  }
+
+  test("D5 heal runs once per failing segment, on the driver, however many partitions miss") {
+    setup("th1")
+    SinkSpec.heals.set(0)
+    val heal: Throwable => Unit = _ => SinkSpec.heals.incrementAndGet()
+    // every one of the 4 partitions' first connection raises TableNotFound
+    CanalStream.applyBatchToJdbc(config, inserts(40, 4), schema,
+      DerbyConn.schemaMissOnce(url("th1")), DeleteInsertDialect, heal = Some(heal))
+    assert(SinkSpec.heals.get == 1)
+    assert(queryAll("th1") == (1 to 40).map(i => (i.toLong, s"n$i")))
+  }
+
+  test("D5 heal need not be serializable") {
+    setup("th2")
+    val driverOnly = new Object // not Serializable: shipping it to a task would fail
+    var healed = 0
+    val heal: Throwable => Unit = _ => driverOnly.synchronized(healed += 1)
+    CanalStream.applyBatchToJdbc(config, inserts(8, 2), schema,
+      DerbyConn.schemaMissOnce(url("th2")), DeleteInsertDialect, heal = Some(heal))
+    assert(healed == 1)
+    assert(queryAll("th2") == (1 to 8).map(i => (i.toLong, s"n$i")))
+  }
+
+  test("a partition is streamed: at most commitBatch + 1 ops are read before the first commit") {
+    setup("t7")
+    val readBeforeCommit = new AtomicInteger
+    val ops = (1 to 1000).iterator.map { i =>
+      if (DerbyConn.callsTo(url("t7"), "commit") == 0) readBeforeCommit.incrementAndGet()
+      RowOp("INSERT", Seq(i.toLong, s"n$i"), Seq(i.toLong))
+    }
+    // MergeDialect: one statement per op, so the cadence commit comes every 100 ops
+    UpsertSink.applyPartition(ops, mapping.copy(commitBatch = 100), Seq("id", "name"),
+      DerbyConn.countingTx(url("t7")), dialect = MergeDialect())
+    assert(readBeforeCommit.get <= 101)
+    assert(queryAll("t7") == (1 to 1000).map(i => (i.toLong, s"n$i")))
   }
 
   test("MergeDialect: single-statement upsert matches DeleteInsertDialect final state; runs batch") {
@@ -139,7 +166,7 @@ class SinkSpec extends AnyFunSuite {
       RowOp("INSERT", Seq(2L, "bob"), Seq(2L)),
       RowOp("UPDATE", Seq(1L, "alice2"), Seq(1L)), // same-key rewrite inside one run
       RowOp("INSERT", Seq(4L, "dan"), Seq(4L)),
-      RowOp("DELETE", Seq.empty, Seq(2L)),         // breaks the run (different SQL)
+      RowOp("DELETE", Seq.empty, Seq(2L)),         // repeats key 2: a new window
       RowOp("INSERT", Seq(3L, "carol"), Seq(3L)))
     UpsertSink.applyPartition(ops.iterator, mapping, Seq("id", "name"),
       derby("tm1"), dialect = MergeDialect())
@@ -151,8 +178,8 @@ class SinkSpec extends AnyFunSuite {
     UpsertSink.applyPartition(ops.iterator, mapping, Seq("id", "name"),
       derby("tm1"), dialect = MergeDialect())
     assert(queryAll("tm1") == Seq((1L, "alice2"), (3L, "carol"), (4L, "dan")))
-    // the homogeneous upsert run shares ONE statement text — the batching
-    // precondition DeleteInsertDialect (alternating DELETE/INSERT) lacks
+    // every upsert is ONE shared statement text (DeleteInsertDialect emits
+    // a DELETE and an INSERT per upsert, each batched per pk-distinct window)
     val stmts = ops.take(4).flatMap(op =>
       MergeDialect().upsert(mapping, Seq("id", "name"), op.values, op.pkValues)).map(_._1)
     assert(stmts.distinct.size == 1)
@@ -179,26 +206,53 @@ class SinkSpec extends AnyFunSuite {
     assert(DerbyConn.openedTo(url) == 0)
   }
 
+  private val wide = mapping.copy(commitBatch = 100) // no cadence commit mid-partition
+  private def txCalls(db: String): (Int, Int) =
+    (DerbyConn.callsTo(url(db), "commit"), DerbyConn.callsTo(url(db), "rollback"))
+
   test("a partition commits exactly once; a failed one rolls back and never commits") {
     setup("t6")
-    val (commits, rollbacks) = (new AtomicInteger, new AtomicInteger)
-    val wide = mapping.copy(commitBatch = 100) // no cadence commit mid-partition
     val ops = Seq(
       RowOp("INSERT", Seq(1L, "a"), Seq(1L)),
       RowOp("INSERT", Seq(2L, "b"), Seq(2L)),
       RowOp("DELETE", Seq.empty, Seq(1L)))
     UpsertSink.applyPartition(ops.iterator, wide, Seq("id", "name"),
-      countingTx("t6", commits, rollbacks), dialect = DeleteInsertDialect)
-    assert((commits.get, rollbacks.get) == ((1, 0)))
+      DerbyConn.countingTx(url("t6")), dialect = DeleteInsertDialect)
+    assert(txCalls("t6") == ((1, 0)))
     assert(queryAll("t6") == Seq((2L, "b")))
     // NAME is VARCHAR(64): the over-long value fails the batch at commit
-    commits.set(0)
     intercept[Throwable] {
       UpsertSink.applyPartition(Iterator(RowOp("INSERT", Seq(3L, "x" * 65), Seq(3L))),
-        wide, Seq("id", "name"), countingTx("t6", commits, rollbacks),
+        wide, Seq("id", "name"), DerbyConn.countingTx(url("t6")),
         dialect = DeleteInsertDialect)
     }
-    assert((commits.get, rollbacks.get) == ((0, 1)))
+    assert(txCalls("t6") == ((1, 1))) // no commit, one rollback since the first check
     assert(queryAll("t6") == Seq((2L, "b")))
   }
+
+  test("a failing rollback or close never hides the apply's own error") {
+    setup("t8")
+    val thrown = intercept[SQLException] {
+      UpsertSink.applyPartition(Iterator(RowOp("INSERT", Seq(3L, "x" * 65), Seq(3L))),
+        wide, Seq("id", "name"), DerbyConn.countingTx(url("t8"), failing = Set("rollback", "close")),
+        dialect = DeleteInsertDialect)
+    }
+    assert(thrown.getSQLState == "22001") // Derby's string-truncation state
+    assert(thrown.getSuppressed.map(_.getMessage).toSeq == Seq("rollback failed", "close failed"))
+    assert(txCalls("t8") == ((0, 1)))
+  }
+
+  test("a connection whose setAutoCommit throws is still closed") {
+    intercept[SQLException] {
+      UpsertSink.applyPartition(Iterator(RowOp("INSERT", Seq(1L, "a"), Seq(1L))), mapping,
+        Seq("id", "name"), DerbyConn.countingTx(url("t9"), failing = Set("setAutoCommit")),
+        dialect = DeleteInsertDialect)
+    }
+    assert(DerbyConn.callsTo(url("t9"), "close") == 1)
+  }
+}
+
+object SinkSpec {
+  /** Heal calls, JVM-wide: counts a heal wherever it runs (driver or task). */
+  val heals = new AtomicInteger
 }
