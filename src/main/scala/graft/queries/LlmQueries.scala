@@ -1655,7 +1655,8 @@ object LlmQueries {
     * judged against the stored content-hash view
     * ([[Materialized.contentHashes]] — corpus text hashed once, ever), its
     * keeps' hashes are ABSORBED as a delta generation
-    * ([[Materialized.absorbContentHashes]]), and batch B2 (the last 50
+    * ([[Materialized.absorb]] into [[Materialized.Stores.ContentHashes]]),
+    * and batch B2 (the last 50
     * docs, 'qx'-copies of three absorbed B1 keeps, a copy of corpus doc
     * 10, and a 'zz'-rewrite pair for within-batch dedup) is judged against
     * corpus ∪ kept(B1) — sketch build AND exact confirm both read the
@@ -1681,7 +1682,7 @@ object LlmQueries {
         .where(col("keep")).select(col("doc_id")).as[Long].collect().toSeq
       val keptIds = keptIdSeq.toDF("doc_id")
       val keptDocs = b1.join(broadcast(keptIds), Seq("doc_id"), "left_semi")
-      Materialized.absorbContentHashes(s, d,
+      Materialized.absorb(s, d, Materialized.Stores.ContentHashes,
         keptDocs.select(col("doc_id").as("id"),
           Dedup.contentHashSafe(col("text")).as("h")), "bloom2_b1")
       val b2 = docs.where(col("doc_id") >= cut + 50).select(col("doc_id"), col("text"))
@@ -3898,7 +3899,8 @@ object LlmQueries {
     * 'qx'-interleaved rewrites of docs 0-4 at synthetic ids) is judged
     * against the preceding corpus via the stored signatures, its keeps'
     * signatures are ABSORBED into the store as a batch-sized delta
-    * generation ([[Materialized.absorbMinhashSignatures]]), and batch B2
+    * generation ([[Materialized.absorb]] into
+    * [[Materialized.Stores.MinhashSigs]]), and batch B2
     * (the last 50 docs plus last-word-dropped near-copies of three
     * absorbed B1 keeps and of corpus doc 10) is judged against corpus ∪
     * kept(B1) — the day-2 signatures resolved THROUGH the absorbed store
@@ -3931,7 +3933,7 @@ object LlmQueries {
         .where(col("keep")).select(col("doc_id")).as[Long].collect().toSeq
       val keptIds = keptIdSeq.toDF("doc_id")
       val keptDocs = b1.join(broadcast(keptIds), Seq("doc_id"), "left_semi")
-      Materialized.absorbMinhashSignatures(s, d,
+      Materialized.absorb(s, d, Materialized.Stores.MinhashSigs,
         Dedup.minhashSignatureTable(keptDocs, "doc_id", "text"), "near2_b1v2")
       val b2 = docs.where(col("doc_id") >= cut + 50).select(col("doc_id"), col("text"))
         .unionByName(docs.where(col("doc_id") < 3)
@@ -3999,7 +4001,8 @@ object LlmQueries {
     * the last 25, plus five novel negated copies of vectors 0-4 at
     * synthetic ids) is judged against the preceding corpus via its stored
     * sign-LSH buckets, kept vectors' signatures are absorbed
-    * ([[Materialized.absorbEmbeddingSignatures]]), and batch B2 (the last
+    * ([[Materialized.absorb]] into [[Materialized.Stores.EmbSigs]]), and
+    * batch B2 (the last
     * 25 vectors plus exact copies of three absorbed keeps and of corpus
     * vector 7) is judged against corpus ∪ kept(B1) through the absorbed
     * store — deterministic hyperplanes keep every generation's signatures
@@ -4026,7 +4029,7 @@ object LlmQueries {
         .where(col("keep")).select(col("vec_id")).as[Long].collect().toSeq
       val keptIds = keptIdSeq.toDF("vec_id")
       val keptVecs = b1.join(broadcast(keptIds), Seq("vec_id"), "left_semi")
-      Materialized.absorbEmbeddingSignatures(s, d,
+      Materialized.absorb(s, d, Materialized.Stores.EmbSigs,
         Similarity.lshSigRowsTyped(keptVecs, "vec_id", "embedding",
           bands = 128, planesPerBand = 16, dims = 64), "emb2_b1v2")
       val b2 = emb.where(col("vec_id") >= cut + 25).select(col("vec_id"), col("embedding"))

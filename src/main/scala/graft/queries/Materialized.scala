@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.llm.Dedup
+import graft.llm.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,7 +59,7 @@ object Materialized {
     * (a second consumer must NOT increment it). */
   private[queries] val buildsStarted = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Delta-publish count of [[absorbInto]], separate from [[buildsStarted]]
+  /** Delta-publish count of [[absorb]], separate from [[buildsStarted]]
     * so specs can prove an absorb never re-signs the corpus AND that
     * re-absorbing an already-absorbed batch publishes nothing. */
   private[graft] val absorbsPublished = new java.util.concurrent.atomic.AtomicInteger()
@@ -78,6 +78,14 @@ object Materialized {
   private def storeRoot(spark: SparkSession): Path =
     Paths.get(spark.conf.get("spark.graft.materialized.dir",
       Paths.get(sys.props("java.io.tmpdir"), "graft-materialized").toString))
+
+  /** The current [[FormatVersion]]'s directory under the store root. */
+  private def vdir(spark: SparkSession): Path =
+    storeRoot(spark).resolve(s"v$FormatVersion")
+
+  /** Is the entry `name` a committed table (its `_SUCCESS` published)? */
+  private def committed(spark: SparkSession, name: String): Boolean =
+    Files.exists(vdir(spark).resolve(name).resolve("_SUCCESS"))
 
   private def md5Hex(s: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -205,6 +213,29 @@ object Materialized {
     statsCache.keys.filter(_.contains(p.toString)).foreach(statsCache.remove)
   }
 
+  /** Delete the entries of one (kind, input path, config) group that
+    * `keep` does not name, past the age gate ([[gcAgeMs]]) — the one sweep
+    * both retention points below share. */
+  private def sweepGroup(spark: SparkSession, kind: String, pfp: String,
+                         config: String, keep: Set[String]): Unit = {
+    val vd = vdir(spark)
+    if (!Files.isDirectory(vd)) return
+    val cutoff = System.currentTimeMillis() - gcAgeMs(spark)
+    val s = Files.list(vd)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter { p =>
+        p.getFileName.toString match {
+          case n @ EntryName(`kind`, `pfp`, _, `config`) =>
+            !keep.contains(n) &&
+              (try Files.getLastModifiedTime(p).toMillis < cutoff
+               catch { case _: java.io.IOException => false })
+          case _ => false
+        }
+      }.toSeq.foreach(deleteEntry)
+    } finally s.close()
+  }
+
   /**
    * Retention at build time: publishing a fresh entry for (kind, input
    * path, config) supersedes every sibling with the SAME three components
@@ -216,34 +247,19 @@ object Materialized {
    * parallel corpus, e.g. another scale factor in the shared default root)
    * are untouched, as is anything younger than the age gate.
    */
-  private def sweepSuperseded(spark: SparkSession, live: Path): Unit = {
-    val parent = live.getParent
-    live.getFileName.toString match {
-      case EntryName(kind, pfp, cfp, cfg) if parent != null && Files.isDirectory(parent) =>
+  private def sweepSuperseded(spark: SparkSession, live: String): Unit =
+    live match {
+      case EntryName(kind, pfp, cfp, cfg) =>
         // entries referenced by this group's head — when the head belongs to
         // the SAME corpus generation as the just-published entry — are live
         // (absorb deltas / a compacted chain whose names embed the ledger
         // hash, never the corpus fingerprint) and must survive a base
         // rebuild; a stale head (other baseFp) protects nothing
-        val headRef = readHead(parent.resolve(s"${kind}_p${pfp}_head_$cfg.json"))
+        val headRef = readHead(vdir(spark).resolve(s"${kind}_p${pfp}_head_$cfg.json"))
           .filter(_.baseFp == cfp).map(_.entries.toSet).getOrElse(Set.empty)
-        val cutoff = System.currentTimeMillis() - gcAgeMs(spark)
-        val s = Files.list(parent)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { p =>
-            p.getFileName.toString match {
-              case EntryName(`kind`, `pfp`, fp2, `cfg`) =>
-                fp2 != cfp && !headRef.contains(p.getFileName.toString) &&
-                  (try Files.getLastModifiedTime(p).toMillis < cutoff
-                   catch { case _: java.io.IOException => false })
-              case _ => false
-            }
-          }.toSeq.foreach(deleteEntry)
-        } finally s.close()
+        sweepGroup(spark, kind, pfp, cfg, headRef + live)
       case _ => ()
     }
-  }
 
   /**
    * Explicit store-wide retention sweep: within every (kind, input path,
@@ -255,10 +271,10 @@ object Materialized {
    * alone.
    */
   def gc(spark: SparkSession, olderThanMs: Long = StaleTmpMs): Seq[Path] = {
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    if (!Files.isDirectory(vdir)) return Nil
+    val vd = vdir(spark)
+    if (!Files.isDirectory(vd)) return Nil
     val (entries, headRefs) = {
-      val s = Files.list(vdir)
+      val s = Files.list(vd)
       try {
         import scala.jdk.CollectionConverters._
         val all = s.iterator().asScala.toSeq
@@ -298,7 +314,7 @@ object Materialized {
                   withHeadLock(p) {
                     readHead(p) match {
                       case Some(h2) if h2.entries.forall(e =>
-                          Files.exists(vdir.resolve(e).resolve("_SUCCESS"))) =>
+                          Files.exists(vd.resolve(e).resolve("_SUCCESS"))) =>
                         h2.entries.map(e => ((kind, pfp, cfg), e)) // live after all
                       case _ =>
                         Files.deleteIfExists(p)
@@ -334,6 +350,8 @@ object Materialized {
     dead
   }
 
+  @volatile private var warnedRebalanceNoAqe = false
+
   /** Compact output files on store writes (guide §6: small files hurt
     * twice — driver listing and per-file open cost; the 32-partition local
     * shuffles were writing 256-row tables as 32 KB-sized files, and every
@@ -342,8 +360,6 @@ object Materialized {
     * corpus-scale stores split at the advisory partition size — the same
     * hint a 100 TB deployment wants in front of its writes (r15
     * optimization). */
-  @volatile private var warnedRebalanceNoAqe = false
-
   private def compactOnWrite(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
     // REBALANCE is silently a no-op when AQE is disabled (r15 ADVICE) —
     // warn once so a non-adaptive session's 32-tiny-files-per-store write
@@ -360,39 +376,91 @@ object Materialized {
     else df.hint("rebalance")
   }
 
+  /** Write the store entry `name` — the ONE entry write path: staged in a
+    * `.tmp-` sibling, compacted ([[compactOnWrite]]), partitioned by
+    * `partitionCols`, then atomically published ([[publish]]). `df` is
+    * evaluated only when the entry is not committed yet and unpersisted
+    * after the write (no-op if it wasn't cached), so builders may hand
+    * back their eagerly-cached form. Returns whether this call wrote. */
+  private def writeEntry(spark: SparkSession, name: String,
+                         partitionCols: Seq[String] = Nil)(df: => DataFrame): Boolean =
+    !committed(spark, name) && {
+      val dir = vdir(spark).resolve(name)
+      Files.createDirectories(dir.getParent)
+      sweepStaleTmp(dir)
+      val tmp = dir.getParent.resolve(s"$name.tmp-${java.util.UUID.randomUUID()}")
+      val rows = df
+      val w = compactOnWrite(rows, partitionCols).write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp.toString)
+      rows.unpersist()
+      publish(tmp, dir)
+      true
+    }
+
   /** Write-once / read-many parquet table: build + write on first use (per
     * corpus fingerprint + config, atomic publish), read back everywhere
-    * else — including a fresh session after restart. `build`'s result is
-    * unpersisted after the write (no-op if it wasn't cached), so builders
-    * may hand back their eagerly-cached form. */
+    * else — including a fresh session after restart. */
   private def parquetBacked(spark: SparkSession, kind: String, config: String,
                             sfDir: String, inputTable: String,
                             partitionCols: Seq[String] = Nil)
-                           (build: => DataFrame): DataFrame = {
-    val dir = storeRoot(spark).resolve(s"v$FormatVersion")
-      .resolve(entryName(kind, sfDir, inputTable, config))
+                           (build: => DataFrame): DataFrame =
+    entryTable(spark, entryName(kind, sfDir, inputTable, config), partitionCols)(build)
+
+  /** [[parquetBacked]] under an already-resolved entry name. */
+  private def entryTable(spark: SparkSession, name: String, partitionCols: Seq[String])
+                        (build: => DataFrame): DataFrame = {
+    val dir = vdir(spark).resolve(name)
     dfCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$dir", {
-      if (!Files.exists(dir.resolve("_SUCCESS"))) {
-        buildsStarted.incrementAndGet()
-        Files.createDirectories(dir.getParent)
-        sweepStaleTmp(dir)
-        val tmp = dir.getParent.resolve(
-          s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-        val df = build
-        val w = compactOnWrite(df, partitionCols).write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(tmp.toString)
-        df.unpersist()
-        publish(tmp, dir)
-        sweepSuperseded(spark, dir)
-      }
+      if (writeEntry(spark, name, partitionCols) { buildsStarted.incrementAndGet(); build })
+        sweepSuperseded(spark, name)
       spark.read.parquet(dir.toString)
     })
   }
 
   // ------------------------------------------------------------------
-  // Absorb-able stores: base + delta generations behind a head pointer
+  // Head-aware stores: base + delta generations behind a head pointer
   // ------------------------------------------------------------------
+
+  /** A store's rows for a batch of vectors: `(spark, sfDir, batch, idCol,
+    * vecCol)`, `sfDir` being the store's own corpus (the cell stores
+    * assign the batch against its pinned centroids). */
+  private[graft] type VectorRows = (SparkSession, String, DataFrame, String, String) => DataFrame
+
+  /**
+   * One head-aware store, declared once: the pinned base read, the head
+   * read, [[absorb]] and [[compact]] are all derived from this value, so
+   * no operation can restate a kind, config, layout or base build
+   * differently from the others.
+   *
+   *  - `kind`, `config` and `table` name the entries
+   *    (`<kind>_p<pathFp>_<contentFp>_<config>`, keyed on
+   *    `<sfDir>/<table>.parquet`);
+   *  - `build` is the base generation — the corpus signed once, ever;
+   *  - `partitionCols` is the write layout of every generation;
+   *  - `columns` is the read projection, in order (empty: as stored); a
+   *    partition column round-trips through directory names as an
+   *    inferred int and is cast back to the build-time long;
+   *  - `vectorRows` makes the store's rows from a batch of vectors, where
+   *    the store builds them itself.
+   */
+  private[graft] final case class Store(kind: String, config: String, table: String,
+      build: (SparkSession, String) => DataFrame,
+      partitionCols: Seq[String] = Nil, columns: Seq[String] = Nil,
+      vectorRows: Option[VectorRows] = None) {
+
+    /** The read projection every derived view goes through. */
+    def view(df: DataFrame): DataFrame =
+      if (columns.isEmpty) df
+      else df.select(columns.map(c =>
+        if (partitionCols.contains(c)) col(c).cast("long").as(c) else col(c)): _*)
+
+    /** This store's rows for the vector batch `vecs`, ready for [[absorb]]. */
+    def rowsOf(spark: SparkSession, sfDir: String, vecs: DataFrame,
+               idCol: String, vecCol: String): DataFrame =
+      vectorRows.getOrElse(throw new UnsupportedOperationException(
+        s"$kind rows are not made from vectors"))(spark, sfDir, vecs, idCol, vecCol)
+  }
 
   /** Head state of an absorb-able signature store: `baseFp` pins the corpus
     * generation the chain grew from (a regenerated corpus invalidates the
@@ -422,10 +490,9 @@ object Materialized {
   /** Head pointer sidecar: `<kind>_p<pathFp>_head_<config>.json`. The
     * `head` token can never collide with a content fingerprint (not
     * 16-hex), so entry-name parsing ignores it. */
-  private def headFile(spark: SparkSession, kind: String, config: String,
-                       sfDir: String, table: String): Path =
-    storeRoot(spark).resolve(s"v$FormatVersion").resolve(
-      s"${kind}_p${pathFingerprint(sfDir, table)}_head_$config.json")
+  private def headFile(spark: SparkSession, s: Store, sfDir: String): Path =
+    vdir(spark).resolve(
+      s"${s.kind}_p${pathFingerprint(sfDir, s.table)}_head_${s.config}.json")
 
   /** Parse of [[headFile]] names — (kind, pathFp, config). */
   private val HeadFileName = """(.+)_p([0-9a-f]{8})_head_(.+)\.json""".r
@@ -433,28 +500,34 @@ object Materialized {
   private def readHead(hf: Path): Option[StoreHead] =
     if (Files.exists(hf)) parseHead(Files.readString(hf)) else None
 
-  /** The head, IF it is live: base fingerprint matches the current corpus
-    * and every listed entry is a committed table. A lost/corrupt delta
-    * degrades to the base build path — absorbed batches re-absorb safely
-    * (exactly-once by batch id makes replay idempotent). */
-  private def liveHead(spark: SparkSession, kind: String, config: String,
-                       sfDir: String, table: String): Option[(StoreHead, Seq[Path])] =
-    liveHeadAt(spark, kind, config, sfDir, table, corpusFingerprint(sfDir, table))
+  /** Entry name of `s`'s base generation for corpus fingerprint `fp`. */
+  private def baseName(s: Store, sfDir: String, fp: String): String =
+    s"${s.kind}_p${pathFingerprint(sfDir, s.table)}_${fp}_${s.config}"
 
-  /** [[liveHead]] against a PRE-COMPUTED corpus fingerprint — the in-lock
-    * resolution path: the fingerprint walk (every corpus file's tail) must
-    * not run while the exclusive head lock blocks other writers. */
-  private def liveHeadAt(spark: SparkSession, kind: String, config: String,
-                         sfDir: String, table: String,
-                         baseFp: String): Option[(StoreHead, Seq[Path])] =
-    readHead(headFile(spark, kind, config, sfDir, table))
-      .filter(_.baseFp == baseFp)
-      .flatMap { h =>
-        val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-        val dirs = h.entries.map(vdir.resolve(_))
-        if (dirs.forall(d => Files.exists(d.resolve("_SUCCESS")))) Some((h, dirs))
-        else None
-      }
+  /** Entry name of a generation derived from `s`'s chain (absorb delta,
+    * compaction, split or retrain output): the hash of `tag` stands where
+    * a base carries the corpus fingerprint. */
+  private def derivedName(s: Store, sfDir: String, tag: String): String =
+    s"${s.kind}_p${pathFingerprint(sfDir, s.table)}_${md5Hex(tag).take(16)}_${s.config}"
+
+  /** The head, IF it is live: base fingerprint matches the current corpus
+    * fingerprint `fp` and every listed entry is a committed table. A
+    * lost/corrupt delta degrades to the base build path — absorbed batches
+    * re-absorb safely (exactly-once by batch id makes replay idempotent).
+    * Every derived operation computes `fp` once and passes it down: the
+    * fingerprint walk reads every corpus file's tail, and it must not run
+    * while an exclusive head lock blocks other writers. */
+  private def liveHeadAt(spark: SparkSession, s: Store, sfDir: String,
+                         fp: String): Option[(StoreHead, Seq[Path])] =
+    readHead(headFile(spark, s, sfDir)).filter(_.baseFp == fp)
+      .filter(_.entries.forall(committed(spark, _)))
+      .map(h => (h, h.entries.map(vdir(spark).resolve(_))))
+
+  /** The live head, or else a fresh chain holding only the base entry. */
+  private def headOrBase(spark: SparkSession, s: Store, sfDir: String,
+                         fp: String): StoreHead =
+    liveHeadAt(spark, s, sfDir, fp).map(_._1)
+      .getOrElse(StoreHead(fp, Nil, Seq(baseName(s, sfDir, fp))))
 
   /** Union view over a generation list — one read per generation:
     * partition discovery rejects multiple partitioned roots in a single
@@ -465,25 +538,35 @@ object Materialized {
       s"${spark.sparkContext.applicationId}|${dirs.mkString(";")}",
       dirs.map(d => spark.read.parquet(d.toString)).reduce(_.unionByName(_)))
 
+  /** `s`'s base generation (built at most once per corpus fingerprint),
+    * not projected. */
+  private def baseAt(spark: SparkSession, sfDir: String, s: Store,
+                     fp: String): DataFrame =
+    entryTable(spark, baseName(s, sfDir, fp), s.partitionCols)(s.build(spark, sfDir))
+
   /** Read through the head when one is live (union of base + deltas);
     * otherwise serve/build the base generation and clear a stale head —
     * this is the ONE point where the current corpus fingerprint is in
     * hand, so heads orphaned by a corpus regeneration die here and their
-    * deltas become [[gc]]-able. */
-  private def headAware(spark: SparkSession, kind: String, config: String,
-                        sfDir: String, table: String,
-                        partitionCols: Seq[String] = Nil)
-                       (buildBase: => DataFrame): DataFrame =
-    liveHead(spark, kind, config, sfDir, table) match {
+    * deltas become [[gc]]-able. Not projected. */
+  private def headAware(spark: SparkSession, sfDir: String, s: Store,
+                        fp: String): DataFrame =
+    liveHeadAt(spark, s, sfDir, fp) match {
       case Some((_, dirs)) => readView(spark, dirs)
       case None =>
-        val df = parquetBacked(spark, kind, config, sfDir, table,
-          partitionCols)(buildBase)
-        val hf = headFile(spark, kind, config, sfDir, table)
-        if (readHead(hf).exists(_.baseFp != corpusFingerprint(sfDir, table)))
-          Files.deleteIfExists(hf)
+        val df = baseAt(spark, sfDir, s, fp)
+        val hf = headFile(spark, s, sfDir)
+        if (readHead(hf).exists(_.baseFp != fp)) Files.deleteIfExists(hf)
         df
     }
+
+  private def readAt(spark: SparkSession, sfDir: String, s: Store, fp: String): DataFrame =
+    s.view(headAware(spark, sfDir, s, fp))
+
+  /** `s`'s current view — base ∪ every absorbed generation behind a live
+    * head — through its read projection. */
+  private[graft] def read(spark: SparkSession, sfDir: String, s: Store): DataFrame =
+    readAt(spark, sfDir, s, corpusFingerprint(sfDir, s.table))
 
   /** Atomically (re)write a small sidecar file. */
   private def replaceFile(dest: Path, content: String): Unit = {
@@ -495,51 +578,14 @@ object Materialized {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Entries of (kind, pathFp, config) that the new head no longer
-    * references — a superseded absorb chain (or a base generation the
-    * corpus regenerated away) — deleted past the age gate. */
-  private def sweepUnreferenced(spark: SparkSession, kind: String, config: String,
-                                sfDir: String, table: String,
-                                head: StoreHead): Unit = {
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    if (!Files.isDirectory(vdir)) return
-    val pfp = pathFingerprint(sfDir, table)
-    val keep = head.entries.toSet
-    val cutoff = System.currentTimeMillis() - gcAgeMs(spark)
-    val s = Files.list(vdir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter { p =>
-        p.getFileName.toString match {
-          case EntryName(`kind`, `pfp`, _, `config`) =>
-            !keep.contains(p.getFileName.toString) &&
-              (try Files.getLastModifiedTime(p).toMillis < cutoff
-               catch { case _: java.io.IOException => false })
-          case _ => false
-        }
-      }.toSeq.foreach(deleteEntry)
-    } finally s.close()
-  }
+  /** Entries of `s`'s (kind, input path, config) group that `head` no
+    * longer references — a superseded absorb chain (or a base generation
+    * the corpus regenerated away) — deleted past the age gate. */
+  private def sweepUnreferenced(spark: SparkSession, sfDir: String, s: Store,
+                                head: StoreHead): Unit =
+    sweepGroup(spark, s.kind, pathFingerprint(sfDir, s.table), s.config,
+      head.entries.toSet)
 
-  /**
-   * Absorb a judged batch's kept signature rows into an absorb-able store:
-   * the continuous-ingestion write path. The corpus base table is built
-   * (once, ever) if absent; the batch's NOVEL rows — ids not already in
-   * the current view — are written as a small DELTA entry (batch-sized,
-   * never a rewrite of the corpus artifact); the head pointer then
-   * atomically advances to `entries :+ delta`, so a day-3 batch is judged
-   * against corpus ∪ kept(day 1) ∪ kept(day 2). Absorption is
-   * exactly-once per `batchId`: re-absorbing an absorbed id is a no-op
-   * (idempotent replay after a crashed writer), and the delta entry name
-   * chains `baseFp` with the absorbed-id ledger, so a half-published
-   * retry resolves to the same entry and the atomic publish dedupes.
-   *
-   * 100 TB shape: the store grows by one batch-sized delta per absorb;
-   * reads union base + deltas (compaction = absorb-all into a fresh base,
-   * out of scope here). The novelty anti-join ships only the store's id
-   * column — 8 bytes/doc — against the (small) batch side; in production
-   * ids are globally unique and it degenerates to a no-match pass.
-   */
   /** Per-lock-file JVM-local monitors: `FileChannel.lock` throws
     * `OverlappingFileLockException` (it does not block) when another
     * THREAD of the same JVM holds the lock — exactly the
@@ -565,30 +611,48 @@ object Materialized {
     }
   }
 
-  private def absorbInto(spark: SparkSession, kind: String, config: String,
-                         sfDir: String, table: String, keptRows: DataFrame,
-                         batchId: String, partitionCols: Seq[String] = Nil)
-                        (buildBase: => DataFrame): DataFrame = {
+  /**
+   * Absorb a judged batch's kept rows (in `s`'s row schema) into `s`: the
+   * continuous-ingestion write path. The corpus base table is built
+   * (once, ever) if absent; the batch's NOVEL rows — ids not already in
+   * the current view — are written as a small DELTA entry (batch-sized,
+   * never a rewrite of the corpus artifact); the head pointer then
+   * atomically advances to `entries :+ delta`, so a day-3 batch is judged
+   * against corpus ∪ kept(day 1) ∪ kept(day 2). Absorption is
+   * exactly-once per `batchId`: re-absorbing an absorbed id is a no-op
+   * (idempotent replay after a crashed writer), and the delta entry name
+   * chains `baseFp` with the absorbed-id ledger, so a half-published
+   * retry resolves to the same entry and the atomic publish dedupes.
+   * Returns the absorbed view through `s`'s read projection — exactly
+   * what [[read]] returns.
+   *
+   * 100 TB shape: the store grows by one batch-sized delta per absorb;
+   * reads union base + deltas until [[compact]] folds the chain. The
+   * novelty anti-join ships only the store's id column — 8 bytes/doc —
+   * against the (small) batch side; in production ids are globally unique
+   * and it degenerates to a no-match pass.
+   */
+  private[graft] def absorb(spark: SparkSession, sfDir: String, s: Store,
+                            rows: DataFrame, batchId: String): DataFrame =
+    absorbAt(spark, sfDir, s, corpusFingerprint(sfDir, s.table), rows, batchId)
+
+  private def absorbAt(spark: SparkSession, sfDir: String, s: Store, fp: String,
+                       rows: DataFrame, batchId: String): DataFrame = {
     require(batchId.matches("[A-Za-z0-9_.-]+"),
       s"batchId must be [A-Za-z0-9_.-]+ (it is stored in the head ledger): $batchId")
-    val baseFp = corpusFingerprint(sfDir, table)
-    val pfp = pathFingerprint(sfDir, table)
-    val baseName = s"${kind}_p${pfp}_${baseFp}_$config"
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
     // guarantees the base entry exists (built at most once) and clears any
     // head orphaned by a corpus regeneration — OUTSIDE the lock: the base
     // build is the expensive corpus signing, and its publish is idempotent
-    headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
-    val hf = headFile(spark, kind, config, sfDir, table)
+    headAware(spark, sfDir, s, fp)
+    val hf = headFile(spark, s, sfDir)
     withHeadLock(hf) {
-      // resolve the head through liveHead, NOT a raw read: a head whose
+      // resolve the head through liveHeadAt, NOT a raw read: a head whose
       // entries were lost is broken — trusting its ledger would make the
       // exactly-once check permanently swallow the very re-absorbs that
       // recover the lost rows. A broken head restarts the chain from the
       // base (batch ids become re-absorbable, which is safe: their rows
       // are gone from the view, so the anti-join re-admits them).
-      val (head0, dirs0) = liveHeadAt(spark, kind, config, sfDir, table, baseFp)
-        .getOrElse((StoreHead(baseFp, Nil, Seq(baseName)), Seq(vdir.resolve(baseName))))
+      val head0 = headOrBase(spark, s, sfDir, fp)
       if (!head0.absorbed.contains(batchId)) { // exactly-once
         val absorbed1 = head0.absorbed :+ batchId
         // the novelty view MUST resolve inside the lock, from head0's own
@@ -596,38 +660,27 @@ object Materialized {
         // visible to the anti-join, or an id shared between racing batches
         // is written twice. Persisted because both the isEmpty probe and
         // the delta write consume it — unpersisted before returning.
-        val current = readView(spark, dirs0)
-        val novel = keptRows.join(current.select("id"), Seq("id"), "left_anti")
+        val current = readView(spark, head0.entries.map(vdir(spark).resolve(_)))
+        val novel = rows.join(current.select("id"), Seq("id"), "left_anti")
           .persist()
         try {
           val head1 = if (novel.isEmpty) {
             // nothing novel: record the batch id in the ledger with NO entry —
             // a partitioned write of an empty frame leaves a directory with no
             // readable footer, which would poison every later head read
-            StoreHead(baseFp, absorbed1, head0.entries)
+            StoreHead(fp, absorbed1, head0.entries)
           } else {
-            val deltaName = s"${kind}_p${pfp}_" +
-              s"${md5Hex(s"$baseFp:${absorbed1.mkString(",")}").take(16)}_$config"
-            val deltaDir = vdir.resolve(deltaName)
-            if (!Files.exists(deltaDir.resolve("_SUCCESS"))) {
+            val delta = derivedName(s, sfDir, s"$fp:${absorbed1.mkString(",")}")
+            if (writeEntry(spark, delta, s.partitionCols)(novel))
               absorbsPublished.incrementAndGet()
-              Files.createDirectories(deltaDir.getParent)
-              sweepStaleTmp(deltaDir)
-              val tmp = deltaDir.getParent.resolve(
-                s"${deltaDir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-              val w = compactOnWrite(novel, partitionCols).write.mode("overwrite")
-              (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-                .parquet(tmp.toString)
-              publish(tmp, deltaDir)
-            }
-            StoreHead(baseFp, absorbed1, head0.entries :+ deltaName)
+            StoreHead(fp, absorbed1, head0.entries :+ delta)
           }
           replaceFile(hf, renderHead(head1))
-          sweepUnreferenced(spark, kind, config, sfDir, table, head1)
+          sweepUnreferenced(spark, sfDir, s, head1)
         } finally novel.unpersist()
       }
     }
-    headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
+    readAt(spark, sfDir, s, fp)
   }
 
   /**
@@ -637,107 +690,147 @@ object Materialized {
    * compaction, and nothing is re-signed/re-assigned (rows are copied,
    * not recomputed). Bounds the read amplification of a long absorb
    * chain: after N days of daily batches a reader unions N+1 entries;
-   * compaction resets that to 1. The superseded base + deltas age out
-   * via [[sweepUnreferenced]]/[[gc]]. No-op when the head has no deltas.
+   * compaction resets that to 1. The compacted entry keeps `s`'s
+   * partition layout, so probed-cell pruning holds across the fold. The
+   * superseded base + deltas age out via [[sweepUnreferenced]]/[[gc]].
+   * No-op when the head has no deltas. Returns the view through `s`'s
+   * read projection, like [[read]].
    */
-  private def compactStore(spark: SparkSession, kind: String, config: String,
-                           sfDir: String, table: String,
-                           partitionCols: Seq[String] = Nil)
-                          (buildBase: => DataFrame): DataFrame = {
-    val current = headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
-    val hf = headFile(spark, kind, config, sfDir, table)
-    val baseFp = corpusFingerprint(sfDir, table)
-    // resolve through liveHead, NOT a raw head read: a BROKEN head (lost
+  private[graft] def compact(spark: SparkSession, sfDir: String, s: Store): DataFrame = {
+    val fp = corpusFingerprint(sfDir, s.table)
+    headAware(spark, sfDir, s, fp)
+    // resolve through liveHeadAt, NOT a raw head read: a BROKEN head (lost
     // delta) must never be compacted — the degraded view would be
     // installed as the single entry while the ledger still lists the lost
     // batches, permanently swallowing the re-absorbs that recover them
-    liveHeadAt(spark, kind, config, sfDir, table, baseFp) match {
+    liveHeadAt(spark, s, sfDir, fp) match {
       case Some((h, dirs)) if h.entries.size > 1 =>
-        val snapshot = readView(spark, dirs)
-        val name = s"${kind}_p${pathFingerprint(sfDir, table)}_" +
-          s"${md5Hex(s"$baseFp:compact:${h.absorbed.mkString(",")}").take(16)}_$config"
-        val dir = storeRoot(spark).resolve(s"v$FormatVersion").resolve(name)
+        val name = derivedName(s, sfDir, s"$fp:compact:${h.absorbed.mkString(",")}")
         // the rewrite (the expensive step) runs OUTSIDE the lock, from the
         // snapshot's own entry list — concurrent absorbers are not blocked
-        if (!Files.exists(dir.resolve("_SUCCESS"))) {
-          Files.createDirectories(dir.getParent)
-          sweepStaleTmp(dir)
-          val tmp = dir.getParent.resolve(
-            s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-          val w = compactOnWrite(snapshot, partitionCols).write.mode("overwrite")
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-            .parquet(tmp.toString)
-          publish(tmp, dir)
-        }
-        val h1 = StoreHead(baseFp, h.absorbed, Seq(name))
+        writeEntry(spark, name, s.partitionCols)(readView(spark, dirs))
+        val h1 = StoreHead(fp, h.absorbed, Seq(name))
         // install iff the head is UNCHANGED since the snapshot (a CAS): a
         // delta published by a concurrent absorber after our snapshot must
         // not be dropped from the view. On a lost race the compacted entry
         // is simply unreferenced (ages out via the sweeps) and the caller
         // may re-compact against the longer chain.
+        val hf = headFile(spark, s, sfDir)
         val installed = withHeadLock(hf) {
           if (readHead(hf).contains(h)) { replaceFile(hf, renderHead(h1)); true }
           else false
         }
-        if (installed) sweepUnreferenced(spark, kind, config, sfDir, table, h1)
-        headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
-      case _ => current
+        if (installed) sweepUnreferenced(spark, sfDir, s, h1)
+      case _ => ()
+    }
+    readAt(spark, sfDir, s, fp)
+  }
+
+  /** Append `entry` to `s`'s head — the live head, or else a fresh chain
+    * from the base — unless it is listed already: phase 1 of a split or a
+    * retrain, invisible until the centroid head swap exposes its cells. */
+  private def appendToHead(spark: SparkSession, sfDir: String, s: Store,
+                           fp: String, entry: String): Unit = {
+    val hf = headFile(spark, s, sfDir)
+    withHeadLock(hf) {
+      val h0 = headOrBase(spark, s, sfDir, fp)
+      if (!h0.entries.contains(entry))
+        replaceFile(hf, renderHead(h0.copy(entries = h0.entries :+ entry)))
     }
   }
 
-  /** [[compactStore]] for the MinHash signature store. */
-  def compactMinhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "minhash_sigs", "n3_k128", sfDir, "documents") {
-      Dedup.minhashSignatureTable(Tables.documents(spark, sfDir),
-        "doc_id", "text", shingleN = 3, k = 128, spread = true)
-    }
-
-  /** [[compactStore]] for the embedding signature store. */
-  def compactEmbeddingSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "emb_sigs", "d64_r16b128", sfDir, "embeddings") {
-      graft.llm.Similarity.lshSigRowsTyped(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        bands = 128, planesPerBand = 16, dims = 64, spread = true)
-    }
-
-  /** [[compactStore]] for the IVF index (keeps the cell-partitioned
-    * layout, so searches over the compacted index prune identically).
-    * Retired split-parent cells are copied into the compacted entry as
-    * dead weight — the live-cell filter keeps hiding them; a periodic
-    * retrain is the rewrite that actually drops them. */
-  def compactIvfIndex(spark: SparkSession, sfDir: String,
-                      k: Int = 8, iters: Int = 2): IvfIndex = {
-    val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
-    val view = compactStore(spark, "ivf_index", s"k${k}_i$iters", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      ivfBaseRows(spark, sfDir, ivfCentroids(spark, sfDir, k, iters))
-    }
-    IvfIndex(filterLiveCells(normalizeIvf(view), cents), cents)
+  /** Point `s`'s head at the single `entry`, keeping its ledger extended by
+    * `mark`. The caller holds `s`'s head lock. */
+  private def resetHead(spark: SparkSession, sfDir: String, s: Store, fp: String,
+                        entry: String,
+                        mark: Seq[String] => Seq[String] = identity): StoreHead = {
+    val hf = headFile(spark, s, sfDir)
+    val ledger = readHead(hf).filter(_.baseFp == fp).map(_.absorbed).getOrElse(Nil)
+    val h = StoreHead(fp, mark(ledger), Seq(entry))
+    replaceFile(hf, renderHead(h))
+    h
   }
 
-  /** Absorb kept batch docs' MinHash signatures (schema of
-    * [[graft.llm.Dedup.minhashSignatureTable]]: `(id, n_sh, sig)`) into
-    * [[minhashSignatures]]'s store — after this, the next batch judged via
-    * the stored signatures sees corpus ∪ kept(this batch). */
-  def absorbMinhashSignatures(spark: SparkSession, sfDir: String,
-                              keptSigs: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "minhash_sigs", "n3_k128", sfDir, "documents",
-        keptSigs, batchId) {
-      Dedup.minhashSignatureTable(Tables.documents(spark, sfDir),
-        "doc_id", "text", shingleN = 3, k = 128, spread = true)
-    }
+  /** Cells and Lloyd rounds of the stored IVF index. Fixed, not knobs: the
+    * PQ codebooks and codes are trained over this one index, so any other
+    * value would filter codes by centroids they were not encoded against. */
+  private val IvfK = 8
+  private val IvfIters = 2
 
-  /** Absorb kept batch vectors' sign-LSH signatures (schema of
-    * [[graft.llm.Similarity.lshSigRowsTyped]]: `(id, sig)`) into
-    * [[embeddingSignatures]]'s store. */
-  def absorbEmbeddingSignatures(spark: SparkSession, sfDir: String,
-                                keptSigs: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "emb_sigs", "d64_r16b128", sfDir, "embeddings",
-        keptSigs, batchId) {
-      graft.llm.Similarity.lshSigRowsTyped(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        bands = 128, planesPerBand = 16, dims = 64, spread = true)
-    }
+  /** The head-aware stores, one [[Store]] descriptor each. Kind, config,
+    * table and partition layout are part of every deployed entry's name —
+    * StoreLayoutSpec pins them. */
+  private[graft] object Stores {
+    private val cell = Seq("centroid_id")
+
+    /** A vector store's base: its batch rows made from the whole corpus. */
+    private def ofCorpus(rows: VectorRows): (SparkSession, String) => DataFrame =
+      (s, d) => rows(s, d, Tables.embeddings(s, d), "vec_id", "embedding")
+
+    private val hammingRows: VectorRows =
+      (_, _, v, i, c) => Similarity.hammingSigRows(v, i, c, dims = 64)
+    private val q8Rows: VectorRows = (_, _, v, i, c) => Similarity.q8CodeRows(v, i, c)
+    private val residualRows: VectorRows = (s, d, v, i, c) =>
+      Similarity.hammingResidualSigRows(v, i, c, ivfIndex(s, d).centroids, dims = 64)
+
+    /** `rows` laid out by IVF cell: the corpus joins the stored assignment,
+      * a batch is assigned against the pinned base centroids at absorb
+      * time — the generation whose layout the store is. */
+    private def cellStore(kind: String, config: String, columns: Seq[String],
+                          rows: VectorRows): Store =
+      Store(kind, config, "embeddings",
+        (s, d) => ofCorpus(rows)(s, d)
+          .join(ivfIndex(s, d).assignment.select(col("id"), col("centroid_id")), "id"),
+        cell, columns :+ "centroid_id",
+        Some((s, d, v, i, c) => rows(s, d, v, i, c)
+          .join(Similarity.ivfAssign(v, i, c, ivfIndex(s, d).centroids)
+            .select(col("id").cast("long").as("id"), col("centroid_id")), "id")))
+
+    val MinhashSigs: Store = Store("minhash_sigs", "n3_k128", "documents", (s, d) =>
+      Dedup.minhashSignatureTable(Tables.documents(s, d),
+        "doc_id", "text", shingleN = 3, k = 128, spread = true))
+
+    val EmbSigs: Store = Store("emb_sigs", "d64_r16b128", "embeddings", (s, d) =>
+      Similarity.lshSigRowsTyped(Tables.embeddings(s, d), "vec_id", "embedding",
+        bands = 128, planesPerBand = 16, dims = 64, spread = true))
+
+    val ContentHashes: Store = Store("content_hashes", "md5", "documents", (s, d) =>
+      Tables.documents(s, d).select(col("doc_id").cast("long").as("id"),
+        Dedup.contentHashSafe(col("text")).as("h")))
+
+    val HammingSigs: Store = Store("hamming_sigs", "d64_b1_k128", "embeddings",
+      ofCorpus(hammingRows), vectorRows = Some(hammingRows))
+
+    val Q8Codes: Store = Store("q8_codes", "d64_s127", "embeddings",
+      ofCorpus(q8Rows), vectorRows = Some(q8Rows))
+
+    val HammingSigsIvf: Store = cellStore("hamming_sigs_ivf", "d64_k128_cell",
+      Seq("id", "sig", "slo", "shi"), hammingRows)
+
+    /** Assigned AND residual-sketched against the pinned base centroids in
+      * one pass — the builder does both. */
+    val HammingSigsIvfRes: Store = Store("hamming_sigs_ivfres", "d64_k128_rescell",
+      "embeddings", ofCorpus(residualRows), cell,
+      Seq("id", "slo", "shi", "centroid_id"), Some(residualRows))
+
+    val Q8CodesIvf: Store = cellStore("q8_codes_ivf", "d64_s127_cell",
+      Seq("id", "scale", "q"), q8Rows)
+
+    val IvfCentroids: Store = Store("ivf_centroids", s"k${IvfK}_i$IvfIters",
+      "embeddings", (s, d) => Similarity.ivfTrainCentroids(
+        Tables.embeddings(s, d), "vec_id", "embedding", IvfK, IvfIters))
+
+    val IvfIndex: Store = Store("ivf_index", s"k${IvfK}_i$IvfIters", "embeddings",
+      (s, d) => Similarity.ivfIndexRows(Tables.embeddings(s, d), "vec_id", "embedding",
+        baseAt(s, d, IvfCentroids, corpusFingerprint(d, "embeddings"))),
+      cell, Seq("id", "centroid_id", "dist", "norm", "v", "scale", "qcode"))
+
+    val PqCodes: Store = Store("pq_codes", "m8_k16_i2_res", "embeddings", (s, d) => {
+        val idx = ivfIndex(s, d)
+        Similarity.pqEncode(Similarity.ivfResiduals(idx.assignment, idx.centroids),
+          "id", "rv", pqCodebooks(s, d), dims = 64, cellCol = Some("centroid_id"))
+      }, cell, Seq("id", "centroid_id", "codes"))
+  }
 
   /** Stored content-hash table `(id, h)` over `documents` — the corpus
     * artifact Bloom-gated incremental exact dedup
@@ -745,26 +838,10 @@ object Materialized {
     * batches against: the corpus text is hashed ONCE; every future batch
     * builds its membership sketch from this 16-byte/doc view and
     * exact-confirms candidates against the SAME view, so day-2 judgments
-    * never touch corpus text. Absorb-able: after [[absorbContentHashes]]
-    * the view is corpus ∪ absorbed keeps. */
+    * never touch corpus text. Absorb-able: after an [[absorb]] into
+    * [[Stores.ContentHashes]] the view is corpus ∪ absorbed keeps. */
   def contentHashes(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "content_hashes", "md5", sfDir, "documents") {
-      Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long").as("id"),
-        Dedup.contentHashSafe(col("text")).as("h"))
-    }
-
-  /** Absorb kept batch docs' content hashes (`(id, h)`) into
-    * [[contentHashes]]'s store — the next batch's sketch and confirm view
-    * see corpus ∪ kept(this batch), exactly once per batch id. */
-  def absorbContentHashes(spark: SparkSession, sfDir: String,
-                          keptHashes: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "content_hashes", "md5", sfDir, "documents",
-        keptHashes, batchId) {
-      Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long").as("id"),
-        Dedup.contentHashSafe(col("text")).as("h"))
-    }
+    read(spark, sfDir, Stores.ContentHashes)
 
   /** Stored BPE tokenizer artifact: the rank-ordered merge table
     * ([[graft.llm.TextAnalysis.bpeTrain]], 256 merges in 32-pair
@@ -954,26 +1031,11 @@ object Materialized {
     * code per row (column-pruned) instead of re-reading and re-signing
     * the 512-byte raw vectors. Codes are exact integer sign decisions,
     * so a search through the store is bit-replayable with the live
-    * re-sketch path. Absorb-able ([[absorbHammingSigs]]): after a
+    * re-sketch path. Absorb-able ([[Stores.HammingSigs]]): after a
     * streaming ADC micro-batch commits its keepers, the view is
     * corpus ∪ absorbed keeps. */
   def hammingSigs(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "hamming_sigs", "d64_b1_k128", sfDir, "embeddings") {
-      graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
-    }
-
-  /** Absorb kept batch vectors' binary-sketch rows (schema of
-    * [[graft.llm.Similarity.hammingSigRows]]: `(id, sig, slo, shi)`)
-    * into [[hammingSigs]]' store — exactly once per batch id; the next
-    * `FromSigs` search sees corpus ∪ kept(this batch). */
-  def absorbHammingSigs(spark: SparkSession, sfDir: String,
-                        keptSigs: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "hamming_sigs", "d64_b1_k128", sfDir, "embeddings",
-        keptSigs, batchId) {
-      graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
-    }
+    read(spark, sfDir, Stores.HammingSigs)
 
   /** Stored INT8 scalar-quantization code table `(id, scale, q)` over
     * `embeddings` ([[graft.llm.Similarity.q8CodeRows]]) — the rerank
@@ -986,22 +1048,7 @@ object Materialized {
     * them by construction; head-aware + absorb-able on the same
     * batch-id ledger. */
   def q8Codes(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "q8_codes", "d64_s127", sfDir, "embeddings") {
-      graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-    }
-
-  /** Absorb kept batch vectors' int8 code rows into [[q8Codes]]' store —
-    * exactly once per batch id, the [[absorbHammingSigs]] contract: after
-    * a streaming micro-batch commits its keepers, the SQ-rerank search
-    * sees the same corpus every other stored path does. */
-  def absorbQ8Codes(spark: SparkSession, sfDir: String, keptVecs: DataFrame,
-                    idCol: String, vecCol: String, batchId: String): DataFrame =
-    absorbInto(spark, "q8_codes", "d64_s127", sfDir, "embeddings",
-        graft.llm.Similarity.q8CodeRows(keptVecs, idCol, vecCol), batchId) {
-      graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-    }
+    read(spark, sfDir, Stores.Q8Codes)
 
   /** Stored winnowing fingerprint table `(id, fp)` (distinct,
     * [[graft.llm.Dedup.winnowFingerprints]] k=4/w=4) — the corpus-side
@@ -1073,51 +1120,18 @@ object Materialized {
     * probed cell AND reads only the 16-byte sketch columns per surviving
     * row: the two pruning axes composed in one store. Rebuilt when the
     * index retrains (the cell layout IS the index's). Absorb-able
-    * ([[absorbHammingSigsIvf]], the [[hammingSigs]] contract): after a
-    * streaming ADC micro-batch commits its keepers, the hybrid search
-    * sees the SAME corpus the flat `FromSigs` searches do — the two
-    * stored paths can no longer disagree on membership. Absorb deltas
-    * carry their own `centroid_id=` layout, so probed-cell partition
-    * pruning holds across every generation of the union view. */
-  def hammingSigsIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = headAware(spark, "hamming_sigs_ivf", "d64_k128_cell",
-        sfDir, "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfBase(spark, sfDir)
-    }
-    view.select(col("id"), col("sig"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-  }
-
-  private def hammingSigsIvfBase(spark: SparkSession, sfDir: String): DataFrame = {
-    val idx = ivfIndex(spark, sfDir)
-    graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
-      .join(idx.assignment.select(col("id"), col("centroid_id")), "id")
-  }
-
-  /** Absorb kept batch vectors into the CELL-PARTITIONED sig store —
-    * exactly once per batch id: each keeper is assigned to its IVF cell
-    * AT ABSORB TIME ([[graft.llm.Similarity.ivfAssign]] against the
-    * PINNED base index's centroids — the generation whose layout this
-    * store is), its sig rows ([[graft.llm.Similarity.hammingSigRows]])
-    * land in that cell's partition, and the head advances. Keepers with
-    * no angle (zero-norm) emit no sig row — exactly the base build's
-    * exclusion — and the inner join on `id` keeps assignment and codes
-    * consistent by construction. Centroid drift is the documented IVF
-    * trade: absorbed keepers live in cells trained on the original
-    * corpus until a retrain rebuilds the base layout. */
-  def absorbHammingSigsIvf(spark: SparkSession, sfDir: String,
-                           keptVecs: DataFrame, idCol: String, vecCol: String,
-                           batchId: String): DataFrame = {
-    val cents = ivfIndex(spark, sfDir).centroids
-    val rows = graft.llm.Similarity.hammingSigRows(keptVecs, idCol, vecCol, dims = 64)
-      .join(graft.llm.Similarity.ivfAssign(keptVecs, idCol, vecCol, cents)
-        .select(col("id").cast("long").as("id"), col("centroid_id")), "id")
-    absorbInto(spark, "hamming_sigs_ivf", "d64_k128_cell", sfDir, "embeddings",
-        rows, batchId, partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfBase(spark, sfDir)
-    }
-  }
+    * ([[Stores.HammingSigsIvf]]): each keeper is assigned to its IVF cell
+    * AT ABSORB TIME against the PINNED base centroids, so after a
+    * streaming ADC micro-batch commits its keepers the hybrid search sees
+    * the SAME corpus the flat `FromSigs` searches do. Keepers with no
+    * angle (zero-norm) emit no sig row — exactly the base build's
+    * exclusion. Absorb deltas carry their own `centroid_id=` layout, so
+    * probed-cell partition pruning holds across every generation of the
+    * union view. Centroid drift is the documented IVF trade: absorbed
+    * keepers live in cells trained on the original corpus until a retrain
+    * rebuilds the base layout. */
+  def hammingSigsIvf(spark: SparkSession, sfDir: String): DataFrame =
+    read(spark, sfDir, Stores.HammingSigsIvf)
 
   /** CELL-PARTITIONED RESIDUAL-sketch signature table
     * `(id, slo, shi, centroid_id)` over `embeddings`
@@ -1126,44 +1140,11 @@ object Materialized {
     * FAISS binary-IVF refinement): same partition-pruned 16-byte stage 1
     * as [[hammingSigsIvf]], with the sketch entropy concentrated on the
     * within-cell variance the coarse quantizer leaves. Absorb-able
-    * ([[absorbHammingSigsIvfRes]]) like its raw twin, so all three
+    * ([[Stores.HammingSigsIvfRes]]) like its raw twin, so all three
     * stored search paths agree on corpus membership after a streaming
     * micro-batch. */
-  def hammingSigsIvfRes(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = headAware(spark, "hamming_sigs_ivfres", "d64_k128_rescell",
-        sfDir, "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfResBase(spark, sfDir)
-    }
-    view.select(col("id"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-  }
-
-  private def hammingSigsIvfResBase(spark: SparkSession, sfDir: String): DataFrame =
-    graft.llm.Similarity.hammingResidualSigRows(
-      Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-      ivfIndex(spark, sfDir).centroids, dims = 64)
-
-  /** [[absorbHammingSigsIvf]] for the RESIDUAL-sketch cell store —
-    * keepers are assigned AND residual-sketched against the pinned base
-    * centroids in one pass (the builder does both), exactly-once per
-    * batch id. */
-  def absorbHammingSigsIvfRes(spark: SparkSession, sfDir: String,
-                              keptVecs: DataFrame, idCol: String,
-                              vecCol: String, batchId: String): DataFrame =
-    absorbInto(spark, "hamming_sigs_ivfres", "d64_k128_rescell", sfDir,
-        "embeddings",
-        graft.llm.Similarity.hammingResidualSigRows(keptVecs, idCol, vecCol,
-          ivfIndex(spark, sfDir).centroids, dims = 64),
-        batchId, partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfResBase(spark, sfDir)
-    }
-
-  /** [[compactStore]] for the binary-sketch signature store. */
-  def compactHammingSigs(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "hamming_sigs", "d64_b1_k128", sfDir, "embeddings") {
-      graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
-    }
+  def hammingSigsIvfRes(spark: SparkSession, sfDir: String): DataFrame =
+    read(spark, sfDir, Stores.HammingSigsIvfRes)
 
   /** CELL-PARTITIONED int8 code table `(id, scale, q, centroid_id)` —
     * the [[q8Codes]] rows laid out by the stored IVF index's cell
@@ -1175,86 +1156,10 @@ object Materialized {
     * store. Same exclusion rule and assignment as
     * [[hammingSigsIvfRes]], so the coverage contract holds
     * cell-by-cell. Rebuilt when the index retrains; absorb-able
-    * ([[absorbQ8CodesIvf]]). */
-  def q8CodesIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = headAware(spark, "q8_codes_ivf", "d64_s127_cell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      q8CodesIvfBase(spark, sfDir)
-    }
-    view.select(col("id"), col("scale"), col("q"),
-      col("centroid_id").cast("long").as("centroid_id"))
-  }
-
-  private def q8CodesIvfBase(spark: SparkSession, sfDir: String): DataFrame = {
-    val idx = ivfIndex(spark, sfDir)
-    graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-      .join(idx.assignment.select(col("id"), col("centroid_id")), "id")
-  }
-
-  /** [[absorbHammingSigsIvf]] for the cell-partitioned code store —
-    * keepers assigned against the pinned base centroids and their int8
-    * code rows landed in that cell's partition, exactly-once per batch
-    * id, so the composed search's PRUNED rerank still covers every
-    * absorbed keeper's cell. */
-  def absorbQ8CodesIvf(spark: SparkSession, sfDir: String,
-                       keptVecs: DataFrame, idCol: String, vecCol: String,
-                       batchId: String): DataFrame = {
-    val cents = ivfIndex(spark, sfDir).centroids
-    val rows = graft.llm.Similarity.q8CodeRows(keptVecs, idCol, vecCol)
-      .join(graft.llm.Similarity.ivfAssign(keptVecs, idCol, vecCol, cents)
-        .select(col("id").cast("long").as("id"), col("centroid_id")), "id")
-    absorbInto(spark, "q8_codes_ivf", "d64_s127_cell", sfDir, "embeddings",
-        rows, batchId, partitionCols = Seq("centroid_id")) {
-      q8CodesIvfBase(spark, sfDir)
-    }
-  }
-
-  /** [[compactStore]] for the int8 code store — maintenance parity with
-    * its sig-store twin, so a long-absorbing deployment can fold either
-    * chain without the other drifting out of the coverage contract. */
-  def compactQ8Codes(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "q8_codes", "d64_s127", sfDir, "embeddings") {
-      graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-    }
-
-  /** [[compactStore]] for the CELL-PARTITIONED stores — the compacted
-    * entry is rewritten `partitionBy(centroid_id)`, so probed-cell
-    * partition pruning holds across the fold exactly as it holds across
-    * absorb deltas. A streaming deployment absorbing every micro-batch
-    * into five stores needs all five chains foldable, or read
-    * amplification returns through whichever store was left out. */
-  def compactHammingSigsIvf(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "hamming_sigs_ivf", "d64_k128_cell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfBase(spark, sfDir)
-    }.select(col("id"), col("sig"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-
-  /** [[compactHammingSigsIvf]] for the residual-sketch cell store. */
-  def compactHammingSigsIvfRes(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "hamming_sigs_ivfres", "d64_k128_rescell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfResBase(spark, sfDir)
-    }.select(col("id"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-
-  /** [[compactHammingSigsIvf]] for the cell-partitioned code store. */
-  def compactQ8CodesIvf(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "q8_codes_ivf", "d64_s127_cell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      q8CodesIvfBase(spark, sfDir)
-    }.select(col("id"), col("scale"), col("q"),
-      col("centroid_id").cast("long").as("centroid_id"))
-
-  /** [[compactStore]] for the content-hash store. */
-  def compactContentHashes(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "content_hashes", "md5", sfDir, "documents") {
-      Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long").as("id"),
-        Dedup.contentHashSafe(col("text")).as("h"))
-    }
+    * ([[Stores.Q8CodesIvf]]), so the composed search's PRUNED rerank
+    * still covers every absorbed keeper's cell. */
+  def q8CodesIvf(spark: SparkSession, sfDir: String): DataFrame =
+    read(spark, sfDir, Stores.Q8CodesIvf)
 
   /** Verified MinHash(128)+LSH(32×4) near-dup pair table at J ≥ 0.8 over
     * `documents` — written once, read by `dedup_minhash`, `dedup_clusters`
@@ -1273,14 +1178,11 @@ object Materialized {
     * ([[graft.llm.Dedup.dedupIncrementalNear]]) judges new batches
     * against: the corpus is signed ONCE; every future batch band-joins
     * its (broadcast) band keys into this table and touches corpus text
-    * only to exact-verify the tiny candidate set. Absorb-able: after
-    * [[absorbMinhashSignatures]] the view is corpus ∪ absorbed batches
-    * (base + delta union behind the head pointer). */
+    * only to exact-verify the tiny candidate set. Absorb-able: after an
+    * [[absorb]] into [[Stores.MinhashSigs]] the view is corpus ∪ absorbed
+    * batches (base + delta union behind the head pointer). */
   def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "minhash_sigs", "n3_k128", sfDir, "documents") {
-      Dedup.minhashSignatureTable(Tables.documents(spark, sfDir),
-        "doc_id", "text", shingleN = 3, k = 128, spread = true)
-    }
+    read(spark, sfDir, Stores.MinhashSigs)
 
   /** Stored sign-LSH bucket table `(id, sig)` over `embeddings` at the
     * DEEP banding production config (16 planes × 128 bands — the 252×
@@ -1292,11 +1194,7 @@ object Materialized {
     * formula, so a later batch signs itself consistently with this
     * table without any persisted RNG state. */
   def embeddingSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "emb_sigs", "d64_r16b128", sfDir, "embeddings") {
-      graft.llm.Similarity.lshSigRowsTyped(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        bands = 128, planesPerBand = 16, dims = 64, spread = true)
-    }
+    read(spark, sfDir, Stores.EmbSigs)
 
   /** Exact word-3-gram Jaccard pair table at J ≥ 0.6 (inverted-index /
     * PPJoin adaptive join) — `dedup_ngram_jaccard` reads it. */
@@ -1341,24 +1239,15 @@ object Materialized {
    * `partitionBy(centroid_id)`, so the directory layout IS the inverted
    * file and a probed-cell search scans only `nprobe/k` of the corpus via
    * partition pruning. Keyed like every other store entry (corpus
-   * fingerprint + (k, iters) config): a regenerated corpus or changed
-   * config builds a fresh index instead of serving a stale one.
+   * fingerprint + the fixed `k8_i2` config): a regenerated corpus builds a
+   * fresh index instead of serving a stale one. The pinned BASE
+   * generation of [[Stores.IvfIndex]] / [[Stores.IvfCentroids]].
    */
-  def ivfIndex(spark: SparkSession, sfDir: String,
-               k: Int = 8, iters: Int = 2): IvfIndex = {
-    val cents = ivfCentroids(spark, sfDir, k, iters)
-    val assignment = parquetBacked(spark, "ivf_index", s"k${k}_i$iters", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      ivfBaseRows(spark, sfDir, cents)
-    }
-    // the partition column round-trips through directory names (inferred
-    // int) — restore the build-time long type and column order for consumers
-    IvfIndex(normalizeIvf(assignment), cents)
+  def ivfIndex(spark: SparkSession, sfDir: String): IvfIndex = {
+    val fp = corpusFingerprint(sfDir, Stores.IvfIndex.table)
+    val cents = baseAt(spark, sfDir, Stores.IvfCentroids, fp)
+    IvfIndex(Stores.IvfIndex.view(baseAt(spark, sfDir, Stores.IvfIndex, fp)), cents)
   }
-
-  private def normalizeIvf(assignment: DataFrame): DataFrame =
-    assignment.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-      col("dist"), col("norm"), col("v"), col("scale"), col("qcode"))
 
   /** Restrict an index/code view to the cells the given centroid table
     * lists. Cells retired by [[splitIvfCells]] keep their rows in old
@@ -1373,29 +1262,13 @@ object Materialized {
     view.where(col("centroid_id").isin(live: _*))
   }
 
-  private def ivfCentroids(spark: SparkSession, sfDir: String,
-                           k: Int, iters: Int): DataFrame =
-    parquetBacked(spark, "ivf_centroids", s"k${k}_i$iters", sfDir, "embeddings") {
-      graft.llm.Similarity.ivfTrainCentroids(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
-    }
-
   /** The CURRENT centroid sidecar: the trained base until
     * [[splitIvfCells]] installs a revision (parent cell replaced by its
     * 2-means children) behind the `ivf_centroids` head. [[ivfIndex]] and
     * the PQ base artifacts deliberately keep reading the pinned trained
-    * table ([[ivfCentroids]]). */
-  def ivfCentroidsCurrent(spark: SparkSession, sfDir: String,
-                          k: Int = 8, iters: Int = 2): DataFrame =
-    headAware(spark, "ivf_centroids", s"k${k}_i$iters", sfDir, "embeddings") {
-      graft.llm.Similarity.ivfTrainCentroids(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
-    }
-
-  private def ivfBaseRows(spark: SparkSession, sfDir: String,
-                          cents: DataFrame): DataFrame =
-    graft.llm.Similarity.ivfIndexRows(
-      Tables.embeddings(spark, sfDir), "vec_id", "embedding", cents)
+    * table. */
+  def ivfCentroidsCurrent(spark: SparkSession, sfDir: String): DataFrame =
+    read(spark, sfDir, Stores.IvfCentroids)
 
   /**
    * Incremental IVF maintenance: assign a NEW vector batch against the
@@ -1414,26 +1287,22 @@ object Materialized {
    * standard IVF trade until a periodic retrain rebuilds the base.
    */
   def appendIvfIndex(spark: SparkSession, sfDir: String, newVectors: DataFrame,
-                     idCol: String, vecCol: String, batchId: String,
-                     k: Int = 8, iters: Int = 2): IvfIndex = {
+                     idCol: String, vecCol: String, batchId: String): IvfIndex = {
+    val fp = corpusFingerprint(sfDir, Stores.IvfIndex.table)
     // ensure the trained base exists OUTSIDE the centroid lock (the train
     // is the expensive step; its publish is idempotent)
-    ivfCentroids(spark, sfDir, k, iters)
+    baseAt(spark, sfDir, Stores.IvfCentroids, fp)
     // serialize on the CENTROID head: a split committing between this
     // batch's assignment (against pre-split centroids) and its delta
     // publish would retire the very cells the batch just landed in,
     // hiding its rows from the current view. Lock order centroid → index
-    // (absorbInto takes the index head lock inside) matches
+    // (absorb takes the index head lock inside) matches
     // [[splitIvfCells]], so the two writers cannot deadlock.
-    withHeadLock(headFile(spark, "ivf_centroids", s"k${k}_i$iters", sfDir,
-        "embeddings")) {
-      val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
-      val batchRows = graft.llm.Similarity.ivfIndexRows(newVectors, idCol, vecCol, cents)
-      val view = absorbInto(spark, "ivf_index", s"k${k}_i$iters", sfDir, "embeddings",
-          batchRows, batchId, partitionCols = Seq("centroid_id")) {
-        ivfBaseRows(spark, sfDir, ivfCentroids(spark, sfDir, k, iters))
-      }
-      IvfIndex(filterLiveCells(normalizeIvf(view), cents), cents)
+    withHeadLock(headFile(spark, Stores.IvfCentroids, sfDir)) {
+      val cents = readAt(spark, sfDir, Stores.IvfCentroids, fp)
+      val view = absorbAt(spark, sfDir, Stores.IvfIndex, fp,
+        Similarity.ivfIndexRows(newVectors, idCol, vecCol, cents), batchId)
+      IvfIndex(filterLiveCells(view, cents), cents)
     }
   }
 
@@ -1441,14 +1310,12 @@ object Materialized {
     * split reassignments, restricted to the CURRENT centroid set (equal
     * to [[ivfIndex]] until the first [[appendIvfIndex]] or
     * [[splitIvfCells]]). */
-  def ivfIndexCurrent(spark: SparkSession, sfDir: String,
-                      k: Int = 8, iters: Int = 2): IvfIndex = {
-    val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
-    val view = headAware(spark, "ivf_index", s"k${k}_i$iters", sfDir, "embeddings",
-        partitionCols = Seq("centroid_id")) {
-      ivfBaseRows(spark, sfDir, ivfCentroids(spark, sfDir, k, iters))
-    }
-    IvfIndex(filterLiveCells(normalizeIvf(view), cents), cents)
+  def ivfIndexCurrent(spark: SparkSession, sfDir: String): IvfIndex =
+    ivfIndexAt(spark, sfDir, corpusFingerprint(sfDir, Stores.IvfIndex.table))
+
+  private def ivfIndexAt(spark: SparkSession, sfDir: String, fp: String): IvfIndex = {
+    val cents = readAt(spark, sfDir, Stores.IvfCentroids, fp)
+    IvfIndex(filterLiveCells(readAt(spark, sfDir, Stores.IvfIndex, fp), cents), cents)
   }
 
   /** Trained PQ codebooks (8 subspaces × 16 codes × 8 dims, 2 Lloyd
@@ -1478,17 +1345,8 @@ object Materialized {
     * ~8× less than the int8 `qcode`s). Built from the stored IVF
     * assignment's residuals in one shuffle-free encode scan. */
   def pqCodes(spark: SparkSession, sfDir: String): DataFrame = {
-    val cb = pqCodebooks(spark, sfDir)
-    val view = parquetBacked(spark, "pq_codes", "m8_k16_i2_res", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqEncode(
-        graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-        "id", "rv", cb, dims = 64, cellCol = Some("centroid_id"))
-    }
-    // partition column round-trips through directory names — restore type
-    view.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-      col("codes"))
+    val fp = corpusFingerprint(sfDir, Stores.PqCodes.table)
+    Stores.PqCodes.view(baseAt(spark, sfDir, Stores.PqCodes, fp))
   }
 
   /** OPQ-lite rotation seed: fully determines the sign-flip diagonal of
@@ -1540,30 +1398,17 @@ object Materialized {
     * [[ivfCentroidsCurrent]] (and the unchanged [[pqCodebooks]] — split
     * children re-encode against the SAME codebooks) for ADC searches over
     * the maintained index. */
-  def pqCodesCurrent(spark: SparkSession, sfDir: String,
-                     k: Int = 8, iters: Int = 2): DataFrame = {
-    val cb = pqCodebooks(spark, sfDir)
-    val view = headAware(spark, "pq_codes", "m8_k16_i2_res", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqEncode(
-        graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-        "id", "rv", cb, dims = 64, cellCol = Some("centroid_id"))
-    }
-    filterLiveCells(
-      view.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-        col("codes")),
-      ivfCentroidsCurrent(spark, sfDir, k, iters))
+  def pqCodesCurrent(spark: SparkSession, sfDir: String): DataFrame = {
+    val fp = corpusFingerprint(sfDir, Stores.PqCodes.table)
+    filterLiveCells(readAt(spark, sfDir, Stores.PqCodes, fp),
+      readAt(spark, sfDir, Stores.IvfCentroids, fp))
   }
 
-  /** Is a committed artifact (base entry or live head) available for this
-    * (kind, config) WITHOUT triggering a build? The dispatch probe of
-    * [[knnJoinAuto]]. */
-  private def artifactAvailable(spark: SparkSession, kind: String, config: String,
-                                sfDir: String, table: String): Boolean =
-    Files.exists(storeRoot(spark).resolve(s"v$FormatVersion")
-      .resolve(entryName(kind, sfDir, table, config)).resolve("_SUCCESS")) ||
-      liveHead(spark, kind, config, sfDir, table).isDefined
+  /** Is a committed artifact (base entry or live head) of `s` available
+    * WITHOUT triggering a build? The dispatch probe of [[knnJoinAuto]]. */
+  private def artifactAvailable(spark: SparkSession, sfDir: String, s: Store,
+                                fp: String): Boolean =
+    committed(spark, baseName(s, sfDir, fp)) || liveHeadAt(spark, s, sfDir, fp).isDefined
 
   /** [[knnJoinAuto]]'s outcome: which join ran (pinned by spec per
     * regime) and its result. */
@@ -1590,26 +1435,25 @@ object Materialized {
    * Probed variants follow index maintenance ([[ivfIndexCurrent]] /
    * [[pqCodesCurrent]]). The query frame carries `(qIdCol, vecCol)`;
    * the corpus side is the `embeddings` table / its stored artifacts.
+   *
+   * `baseView = true` pins dispatch to the BASE index generation instead
+   * of the head-aware live view — the registry query's mode: the DuckDB
+   * oracle replays train→assign from the corpus alone and cannot see
+   * maintenance history, so serving absorbed generations is correct
+   * production behavior but a DATA-DEPENDENT divergence from the replay
+   * (surfaced at sf0.1: an absorbed batch vector cracked a query's
+   * top-5). Production callers keep the live view.
    */
-  /** `baseView = true` pins dispatch to the BASE index generation instead
-    * of the head-aware live view — the registry query's mode: the DuckDB
-    * oracle replays train→assign from the corpus alone and cannot see
-    * maintenance history, so serving absorbed generations is correct
-    * production behavior but a DATA-DEPENDENT divergence from the replay
-    * (surfaced at sf0.1: an absorbed batch vector cracked a query's
-    * top-5). Production callers keep the live view. */
   def knnJoinAuto(spark: SparkSession, sfDir: String, queries: DataFrame,
                   qIdCol: String, vecCol: String, k: Int, nprobe: Int,
                   excludeSelf: Boolean = true, allowApprox: Boolean = true,
                   heapBound: Int = 4096, ivfBound: Int = 65536,
                   pqMinQ: Int = 4096,
-                  kIvf: Int = 8, iters: Int = 2,
                   baseView: Boolean = false): KnnJoinChoice = {
-    import graft.llm.Similarity
-    val cfg = s"k${kIvf}_i$iters"
     val qCount = queries.count()
-    val hasIvf = artifactAvailable(spark, "ivf_index", cfg, sfDir, "embeddings")
-    val hasPq = artifactAvailable(spark, "pq_codes", "m8_k16_i2_res", sfDir, "embeddings")
+    val fp = corpusFingerprint(sfDir, Stores.IvfIndex.table)
+    val hasIvf = artifactAvailable(spark, sfDir, Stores.IvfIndex, fp)
+    val hasPq = artifactAvailable(spark, sfDir, Stores.PqCodes, fp)
     if (!hasIvf && qCount <= heapBound) {
       require(qIdCol != "embedding", "knnJoinAuto: query id column shadows the corpus vector column")
       val q = queries.select(col(qIdCol), col(vecCol).as("embedding"))
@@ -1620,8 +1464,7 @@ object Materialized {
     } else {
       // stored index present — or Q is past the heap bound and the build
       // is the amortized cost of entering the indexed regime
-      val idx = if (baseView) ivfIndex(spark, sfDir, kIvf, iters)
-                else ivfIndexCurrent(spark, sfDir, kIvf, iters)
+      val idx = if (baseView) ivfIndex(spark, sfDir) else ivfIndexCurrent(spark, sfDir)
       val built = if (hasIvf) "" else " (index built)"
       if (qCount > ivfBound)
         KnnJoinChoice("distributed" + built,
@@ -1629,7 +1472,7 @@ object Materialized {
             queries, qIdCol, vecCol, k, nprobe, excludeSelf))
       else if (allowApprox && hasPq && qCount > pqMinQ)
         KnnJoinChoice("pq-adc" + built,
-          Similarity.knnJoinPq(pqCodesCurrent(spark, sfDir, kIvf, iters),
+          Similarity.knnJoinPq(pqCodesCurrent(spark, sfDir),
             pqCodebooks(spark, sfDir), idx.centroids,
             queries, qIdCol, vecCol, k, nprobe, excludeSelf,
             residual = true))
@@ -1671,85 +1514,75 @@ object Materialized {
    * heavy cell. Balance is [[splitIvfCells]]'s job, and the two compose:
    * retrain, then split the cells that remain hot.
    */
-  def retrainIvfIndex(spark: SparkSession, sfDir: String,
-                      k: Int = 8, iters: Int = 2): IvfIndex = {
+  def retrainIvfIndex(spark: SparkSession, sfDir: String): IvfIndex = {
     import spark.implicits._
-    val cfg = s"k${k}_i$iters"
-    val pqCfg = "m8_k16_i2_res"
-    ivfIndex(spark, sfDir, k, iters) // ensure base entries exist
-    val baseFp = corpusFingerprint(sfDir, "embeddings")
-    val pfp = pathFingerprint(sfDir, "embeddings")
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    val chf = headFile(spark, "ivf_centroids", cfg, sfDir, "embeddings")
-    val ihf = headFile(spark, "ivf_index", cfg, sfDir, "embeddings")
-    val phf = headFile(spark, "pq_codes", pqCfg, sfDir, "embeddings")
-    val pqBaseName = entryName("pq_codes", sfDir, "embeddings", pqCfg)
+    ivfIndex(spark, sfDir) // ensure base entries exist
+    val fp = corpusFingerprint(sfDir, Stores.IvfIndex.table)
+    val chf = headFile(spark, Stores.IvfCentroids, sfDir)
     withHeadLock(chf) {
-      val curCents = ivfCentroidsCurrent(spark, sfDir, k, iters)
+      val curCents = readAt(spark, sfDir, Stores.IvfCentroids, fp)
         .select(col("centroid_id").cast("long").as("centroid_id"), col("vec"))
       val maxId = curCents.agg(max("centroid_id")).head().getLong(0)
-      val cur = ivfIndexCurrent(spark, sfDir, k, iters).assignment
-      val ledger = readHead(ihf).filter(_.baseFp == baseFp)
-        .map(_.absorbed).getOrElse(Nil)
-      val tag = s"$baseFp:retrain:${md5Hex(ledger.mkString(",")).take(8)}:" +
+      val cur = ivfIndexAt(spark, sfDir, fp).assignment
+      val ledger = readHead(headFile(spark, Stores.IvfIndex, sfDir))
+        .filter(_.baseFp == fp).map(_.absorbed).getOrElse(Nil)
+      val tag = s"$fp:retrain:${md5Hex(ledger.mkString(",")).take(8)}:" +
         readHead(chf).map(_.absorbed.size).getOrElse(0)
       // k smallest live ids seed the train, labels relocated past maxId so
       // the retrained cells overlap no existing (live or retired) cell id
-      val seedIds = cur.select("id").orderBy("id").limit(k)
+      val seedIds = cur.select("id").orderBy("id").limit(IvfK)
         .as[Long].collect()
       val init = cur.where(col("id").isin(seedIds: _*))
         .select((col("id") + maxId + 1).as("centroid_id"), col("v").as("vec"))
-      val trained = graft.llm.Similarity.ivfTrainCentroids(
-          cur, "id", "v", k, iters, init = Some(init))
+      val trained = Similarity.ivfTrainCentroids(
+          cur, "id", "v", IvfK, IvfIters, init = Some(init))
         .select(col("centroid_id").cast("long"), col("vec"))
         .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
       val newCents = trained.toDF("centroid_id", "vec")
-      val rows = graft.llm.Similarity.ivfIndexRows(cur, "id", "v", newCents)
+      val rows = Similarity.ivfIndexRows(cur, "id", "v", newCents)
       // phase 1: entries + appended heads — invisible behind the old centroids
-      val idxEntry = s"ivf_index_p${pfp}_${md5Hex(s"$tag:idx").take(16)}_$cfg"
-      writeEntry(spark, idxEntry, rows, Seq("centroid_id"))
-      withHeadLock(ihf) {
-        val h0 = liveHeadAt(spark, "ivf_index", cfg, sfDir, "embeddings", baseFp)
-          .map(_._1).getOrElse(StoreHead(baseFp, Nil,
-            Seq(entryName("ivf_index", sfDir, "embeddings", cfg))))
-        if (!h0.entries.contains(idxEntry))
-          replaceFile(ihf, renderHead(h0.copy(entries = h0.entries :+ idxEntry)))
-      }
-      val pqExists = Files.exists(vdir.resolve(pqBaseName).resolve("_SUCCESS"))
-      val pqEntry = s"pq_codes_p${pfp}_${md5Hex(s"$tag:pq").take(16)}_$pqCfg"
-      if (pqExists) {
-        val codes = graft.llm.Similarity.pqEncode(
-          graft.llm.Similarity.ivfResiduals(rows, newCents),
-          "id", "rv", pqCodebooks(spark, sfDir), dims = 64,
-          cellCol = Some("centroid_id"))
-        writeEntry(spark, pqEntry, codes, Seq("centroid_id"))
-        withHeadLock(phf) {
-          val h0 = liveHeadAt(spark, "pq_codes", pqCfg, sfDir, "embeddings", baseFp)
-            .map(_._1).getOrElse(StoreHead(baseFp, Nil, Seq(pqBaseName)))
-          if (!h0.entries.contains(pqEntry))
-            replaceFile(phf, renderHead(h0.copy(entries = h0.entries :+ pqEntry)))
-        }
-      }
+      val pq = publishCells(spark, sfDir, fp, tag, rows, newCents)
       // phase 2 — COMMIT: the centroid swap retires every old cell at once
-      val centEntry = s"ivf_centroids_p${pfp}_${md5Hex(s"$tag:cents").take(16)}_$cfg"
-      writeEntry(spark, centEntry, newCents)
-      val ledger0 = readHead(chf).filter(_.baseFp == baseFp)
-        .map(_.absorbed).getOrElse(Nil)
-      replaceFile(chf, renderHead(
-        StoreHead(baseFp, ledger0 :+ s"retrain-${ledger0.size}", Seq(centEntry))))
+      val centEntry = derivedName(Stores.IvfCentroids, sfDir, s"$tag:cents")
+      writeEntry(spark, centEntry)(newCents)
+      resetHead(spark, sfDir, Stores.IvfCentroids, fp, centEntry,
+        l => l :+ s"retrain-${l.size}")
       // phase 3 — collapse the data heads to the single fresh generation
       // (read-amplification cleanup; every old entry is already invisible)
-      withHeadLock(ihf) {
-        replaceFile(ihf, renderHead(StoreHead(baseFp, ledger, Seq(idxEntry))))
+      val idxEntry = derivedName(Stores.IvfIndex, sfDir, s"$tag:idx")
+      val idxHead = withHeadLock(headFile(spark, Stores.IvfIndex, sfDir)) {
+        resetHead(spark, sfDir, Stores.IvfIndex, fp, idxEntry, _ => ledger)
       }
-      if (pqExists) withHeadLock(phf) {
-        val pl = readHead(phf).filter(_.baseFp == baseFp)
-          .map(_.absorbed).getOrElse(Nil)
-        replaceFile(phf, renderHead(StoreHead(baseFp, pl, Seq(pqEntry))))
+      pq.foreach { pqEntry =>
+        withHeadLock(headFile(spark, Stores.PqCodes, sfDir)) {
+          resetHead(spark, sfDir, Stores.PqCodes, fp, pqEntry)
+        }
       }
-      sweepUnreferenced(spark, "ivf_index", cfg, sfDir, "embeddings",
-        StoreHead(baseFp, ledger, Seq(idxEntry)))
-      ivfIndexCurrent(spark, sfDir, k, iters)
+      sweepUnreferenced(spark, sfDir, Stores.IvfIndex, idxHead)
+      ivfIndexAt(spark, sfDir, fp)
+    }
+  }
+
+  /** Phase 1 of a split or retrain: write the reassigned index `rows` (and,
+    * when a PQ code table exists, their residual codes against `cents` and
+    * the UNCHANGED codebooks) as entries named after `tag`, and append them
+    * to their heads — invisible until the caller's centroid head swap, as
+    * no live centroid references their cells yet. Returns the code entry,
+    * if one was written. */
+  private def publishCells(spark: SparkSession, sfDir: String, fp: String,
+                           tag: String, rows: DataFrame,
+                           cents: DataFrame): Option[String] = {
+    val idxEntry = derivedName(Stores.IvfIndex, sfDir, s"$tag:idx")
+    writeEntry(spark, idxEntry, Stores.IvfIndex.partitionCols)(rows)
+    appendToHead(spark, sfDir, Stores.IvfIndex, fp, idxEntry)
+    Option.when(committed(spark, baseName(Stores.PqCodes, sfDir, fp))) {
+      val pqEntry = derivedName(Stores.PqCodes, sfDir, s"$tag:pq")
+      writeEntry(spark, pqEntry, Stores.PqCodes.partitionCols)(
+        Similarity.pqEncode(Similarity.ivfResiduals(rows, cents),
+          "id", "rv", pqCodebooks(spark, sfDir), dims = 64,
+          cellCol = Some("centroid_id")))
+      appendToHead(spark, sfDir, Stores.PqCodes, fp, pqEntry)
+      pqEntry
     }
   }
 
@@ -1768,7 +1601,7 @@ object Materialized {
   def withStoreSandbox[A](spark: SparkSession,
                           kindPrefixes: Seq[String])(body: => A): A = {
     import scala.jdk.CollectionConverters._
-    val src = storeRoot(spark).resolve(s"v$FormatVersion")
+    val src = vdir(spark)
     val tmpRoot = Files.createTempDirectory("graft-sandbox")
     val dst = tmpRoot.resolve(s"v$FormatVersion")
     Files.createDirectories(dst)
@@ -1796,24 +1629,6 @@ object Materialized {
         case None => spark.conf.unset("spark.graft.materialized.dir")
       }
       clearSessionCache()
-    }
-  }
-
-  /** Write a store entry under an explicit name (tmp + atomic publish,
-    * no-op when already committed) — the split path's writer; the keyed
-    * builders go through [[parquetBacked]]. */
-  private def writeEntry(spark: SparkSession, name: String, df: DataFrame,
-                         partitionCols: Seq[String] = Nil): Unit = {
-    val dir = storeRoot(spark).resolve(s"v$FormatVersion").resolve(name)
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
-      Files.createDirectories(dir.getParent)
-      sweepStaleTmp(dir)
-      val tmp = dir.getParent.resolve(
-        s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-      val w = compactOnWrite(df, partitionCols).write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp.toString)
-      publish(tmp, dir)
     }
   }
 
@@ -1855,29 +1670,19 @@ object Materialized {
    * 2 rows) is skipped — `maxShareAfter` then reports the floor honestly.
    */
   def splitIvfCells(spark: SparkSession, sfDir: String,
-                    k: Int = 8, iters: Int = 2,
                     maxShare: Double = 0.30, maxRounds: Int = 8): IvfSplitReport = {
     import spark.implicits._
-    val cfg = s"k${k}_i$iters"
-    val pqCfg = "m8_k16_i2_res"
-    ivfIndex(spark, sfDir, k, iters) // ensure trained base entries exist
-    val baseFp = corpusFingerprint(sfDir, "embeddings")
-    val pfp = pathFingerprint(sfDir, "embeddings")
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    val chf = headFile(spark, "ivf_centroids", cfg, sfDir, "embeddings")
-    val ihf = headFile(spark, "ivf_index", cfg, sfDir, "embeddings")
-    val phf = headFile(spark, "pq_codes", pqCfg, sfDir, "embeddings")
-    val pqBaseName = entryName("pq_codes", sfDir, "embeddings", pqCfg)
+    ivfIndex(spark, sfDir) // ensure trained base entries exist
+    val fp = corpusFingerprint(sfDir, Stores.IvfIndex.table)
 
-    withHeadLock(chf) {
+    withHeadLock(headFile(spark, Stores.IvfCentroids, sfDir)) {
       var splits = Vector.empty[Long]
       var stuck = Set.empty[Long]
       var shareBefore = -1.0
       var shareAfter = -1.0
 
       def occupancy(): Array[(Long, Long)] = {
-        val idx = ivfIndexCurrent(spark, sfDir, k, iters)
-        idx.assignment.groupBy("centroid_id").count().collect()
+        ivfIndexAt(spark, sfDir, fp).assignment.groupBy("centroid_id").count().collect()
           .map(r => (r.getLong(0), r.getLong(1)))
       }
 
@@ -1895,10 +1700,10 @@ object Materialized {
           .find { case (cid, c) => !stuck(cid) && c >= 2 && c / total > maxShare } match {
           case None => done = true
           case Some((hotCell, _)) =>
-            val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
+            val cents = readAt(spark, sfDir, Stores.IvfCentroids, fp)
               .select(col("centroid_id").cast("long").as("centroid_id"), col("vec"))
             val centRows = cents.as[(Long, Seq[Double])].collect().sortBy(_._1)
-            val view = ivfIndexCurrent(spark, sfDir, k, iters).assignment
+            val view = ivfIndexAt(spark, sfDir, fp).assignment
             val cellRows = view.where(col("centroid_id") === hotCell)
             // deterministic 2-means seeds: the cell's two smallest ids
             val seedIds = cellRows.select("id").orderBy("id").limit(2)
@@ -1908,8 +1713,8 @@ object Materialized {
               else {
                 val init = cellRows.where(col("id").isin(seedIds: _*))
                   .select(col("id").as("centroid_id"), col("v").as("vec"))
-                val sub = graft.llm.Similarity.ivfTrainCentroids(
-                    cellRows, "id", "v", 2, iters, init = Some(init))
+                val sub = Similarity.ivfTrainCentroids(
+                    cellRows, "id", "v", 2, IvfIters, init = Some(init))
                   .select(col("centroid_id").cast("long"), col("vec"))
                   .as[(Long, Seq[Double])].collect().sortBy(_._1)
                 val nextId = centRows.map(_._1).max + 1
@@ -1917,48 +1722,20 @@ object Materialized {
               }
             if (children.size < 2) stuck += hotCell
             else {
-              val tag = s"$baseFp:split:${(splits :+ hotCell).mkString(",")}"
+              val tag = s"$fp:split:${(splits :+ hotCell).mkString(",")}"
               val childCents = children.toDF("centroid_id", "vec")
-              val childRows = graft.llm.Similarity.ivfIndexRows(
-                cellRows, "id", "v", childCents)
-              // phase 1a: child index rows — invisible until the head swap
-              // (no live centroid references the child cells yet)
-              val idxDelta = s"ivf_index_p${pfp}_${md5Hex(s"$tag:idx").take(16)}_$cfg"
-              writeEntry(spark, idxDelta, childRows, Seq("centroid_id"))
-              withHeadLock(ihf) {
-                val h0 = liveHeadAt(spark, "ivf_index", cfg, sfDir, "embeddings", baseFp)
-                  .map(_._1).getOrElse(StoreHead(baseFp, Nil,
-                    Seq(entryName("ivf_index", sfDir, "embeddings", cfg))))
-                if (!h0.entries.contains(idxDelta))
-                  replaceFile(ihf, renderHead(h0.copy(entries = h0.entries :+ idxDelta)))
-              }
-              // phase 1b: remap the affected PQ codes, when a code table
-              // exists — residuals vs the CHILD centroids, same codebooks
-              val pqExists = Files.exists(vdir.resolve(pqBaseName).resolve("_SUCCESS"))
-              if (pqExists) {
-                val childCodes = graft.llm.Similarity.pqEncode(
-                  graft.llm.Similarity.ivfResiduals(childRows, childCents),
-                  "id", "rv", pqCodebooks(spark, sfDir), dims = 64,
-                  cellCol = Some("centroid_id"))
-                val pqDelta = s"pq_codes_p${pfp}_${md5Hex(s"$tag:pq").take(16)}_$pqCfg"
-                writeEntry(spark, pqDelta, childCodes, Seq("centroid_id"))
-                withHeadLock(phf) {
-                  val h0 = liveHeadAt(spark, "pq_codes", pqCfg, sfDir, "embeddings", baseFp)
-                    .map(_._1).getOrElse(StoreHead(baseFp, Nil, Seq(pqBaseName)))
-                  if (!h0.entries.contains(pqDelta))
-                    replaceFile(phf, renderHead(h0.copy(entries = h0.entries :+ pqDelta)))
-                }
-              }
+              // phase 1: child index rows and their remapped PQ codes —
+              // residuals vs the CHILD centroids, same codebooks
+              publishCells(spark, sfDir, fp, tag,
+                Similarity.ivfIndexRows(cellRows, "id", "v", childCents), childCents)
               // phase 2 — COMMIT: one atomic centroid-head swap retires the
               // parent and exposes the children everywhere at once
               val revised = (centRows.filterNot(_._1 == hotCell) ++ children)
                 .sortBy(_._1).toSeq
-              val revName = s"ivf_centroids_p${pfp}_${md5Hex(s"$tag:cents").take(16)}_$cfg"
-              writeEntry(spark, revName, revised.toDF("centroid_id", "vec"))
-              val ledger0 = readHead(chf).filter(_.baseFp == baseFp)
-                .map(_.absorbed).getOrElse(Nil)
-              replaceFile(chf, renderHead(
-                StoreHead(baseFp, ledger0 :+ s"split-$hotCell", Seq(revName))))
+              val revName = derivedName(Stores.IvfCentroids, sfDir, s"$tag:cents")
+              writeEntry(spark, revName)(revised.toDF("centroid_id", "vec"))
+              resetHead(spark, sfDir, Stores.IvfCentroids, fp, revName,
+                _ :+ s"split-$hotCell")
               splits :+= hotCell
               occFresh = false
             }
@@ -1970,8 +1747,7 @@ object Materialized {
         val total = occ.map(_._2).sum.toDouble
         shareAfter = if (total == 0) 0.0 else occ.map(_._2).max / total
       }
-      IvfSplitReport(splits, shareBefore, shareAfter,
-        ivfIndexCurrent(spark, sfDir, k, iters))
+      IvfSplitReport(splits, shareBefore, shareAfter, ivfIndexAt(spark, sfDir, fp))
     }
   }
 
@@ -1995,11 +1771,11 @@ object Materialized {
    * local/shared-FS by construction).
    */
   def storeStatus(spark: SparkSession): Seq[StoreEntryStatus] = {
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    if (!Files.isDirectory(vdir)) return Nil
+    val vd = vdir(spark)
+    if (!Files.isDirectory(vd)) return Nil
     import scala.jdk.CollectionConverters._
     val all = {
-      val s = Files.list(vdir)
+      val s = Files.list(vd)
       // in-flight `.tmp-` staging copies are not entries — reporting them
       // would inflate the reclaimable-bytes picture with phantom rows
       try s.iterator().asScala
@@ -2007,7 +1783,7 @@ object Materialized {
       finally s.close()
     }
     // a head is trusted only after the SAME existence validation readers
-    // apply ([[liveHead]]'s entry check): a head whose chain lost an entry
+    // apply ([[liveHeadAt]]'s entry check): a head whose chain lost an entry
     // is BROKEN — reads degrade past it, so reporting its roles as live
     // would hide exactly the store damage this report exists to surface.
     // (baseFp currency needs the corpus path, which the store-wide walk
@@ -2017,7 +1793,7 @@ object Materialized {
         case HeadFileName(kind, pfp, cfg) =>
           readHead(p).map { h =>
             val intact = h.entries.forall(e =>
-              Files.exists(vdir.resolve(e).resolve("_SUCCESS")))
+              Files.exists(vd.resolve(e).resolve("_SUCCESS")))
             ((kind, pfp, cfg), (h, intact))
           }
         case _ => None
@@ -2071,7 +1847,7 @@ object Materialized {
    * join.
    */
   def embeddingPairStats(spark: SparkSession, sfDir: String): EmbeddingPairStats = {
-    val file = storeRoot(spark).resolve(s"v$FormatVersion").resolve(
+    val file = vdir(spark).resolve(
       entryName("emb_pair_stats", sfDir, "embeddings", "d64_t030_r3b64") + ".json")
     statsCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$file", {
       if (Files.exists(file)) parseStats(Files.readString(file))
@@ -2089,7 +1865,7 @@ object Materialized {
           s"${file.getFileName}.tmp-${java.util.UUID.randomUUID()}")
         Files.writeString(tmp, renderStats(stats))
         publish(tmp, file)
-        sweepSuperseded(spark, file)
+        sweepSuperseded(spark, file.getFileName.toString)
         stats
       }
     })

@@ -106,8 +106,8 @@ object StreamingDedup {
     import org.apache.spark.sql.functions.col
     val kept = judgedBatch.where(col("keep"))
       .select(col("docId").as("id"), col("contentHash").as("h"))
-    graft.queries.Materialized.absorbContentHashes(spark, sfDir, kept,
-      s"$streamId-$microBatchId")
+    graft.queries.Materialized.absorb(spark, sfDir,
+      graft.queries.Materialized.Stores.ContentHashes, kept, s"$streamId-$microBatchId")
     judgedBatch
   }
 

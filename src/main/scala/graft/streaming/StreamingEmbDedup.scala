@@ -174,7 +174,8 @@ object StreamingEmbDedup {
                     bandVerdicts: DataFrame, streamId: String,
                     microBatchId: Long): DataFrame = {
     val (v, keptVecs) = keptVectors(bandVerdicts)
-    graft.queries.Materialized.absorbEmbeddingSignatures(spark, sfDir,
+    graft.queries.Materialized.absorb(spark, sfDir,
+      graft.queries.Materialized.Stores.EmbSigs,
       Similarity.lshSigRowsTyped(keptVecs, "docId", "vec",
         bands = 128, planesPerBand = 16, dims = 64),
       s"$streamId-$microBatchId")

@@ -119,14 +119,15 @@ object StreamingEmbDedupAdc {
    * stores: reduce the micro-batch's band verdicts, then absorb the kept
    * vectors' full signature rows ([[Similarity.hammingSigRows]] —
    * axis-sign word + densified sketch, the store's `d64_b1_k128` config)
-   * into ALL the stored search artifacts:
-   * [[graft.queries.Materialized.hammingSigs]] (flat),
-   * [[graft.queries.Materialized.absorbHammingSigsIvf]] (cell-
+   * into ALL the stored search artifacts, each store making its own rows
+   * from the kept vectors:
+   * [[graft.queries.Materialized.Stores.HammingSigs]] (flat),
+   * [[graft.queries.Materialized.Stores.HammingSigsIvf]] (cell-
    * partitioned raw sketches, keepers assigned to their IVF cell at
-   * absorb time), [[graft.queries.Materialized.absorbHammingSigsIvfRes]]
+   * absorb time), [[graft.queries.Materialized.Stores.HammingSigsIvfRes]]
    * (cell-partitioned RESIDUAL sketches),
-   * [[graft.queries.Materialized.absorbQ8Codes]] (flat int8 rerank
-   * codes) and [[graft.queries.Materialized.absorbQ8CodesIvf]]
+   * [[graft.queries.Materialized.Stores.Q8Codes]] (flat int8 rerank
+   * codes) and [[graft.queries.Materialized.Stores.Q8CodesIvf]]
    * (cell-partitioned int8 codes, assigned at absorb time) — so batch
    * `FromSigs` searches, both hybrid searches, the flat SQ search AND
    * the fully-composed search see the same corpus after the micro-batch; no
@@ -146,18 +147,12 @@ object StreamingEmbDedupAdc {
   def absorbKeepers(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                     bandVerdicts: org.apache.spark.sql.DataFrame,
                     streamId: String, microBatchId: Long): org.apache.spark.sql.DataFrame = {
+    import graft.queries.Materialized
+    import graft.queries.Materialized.Stores._
     val (v, keptVecs) = StreamingEmbDedup.keptVectors(bandVerdicts)
-    graft.queries.Materialized.absorbHammingSigs(spark, sfDir,
-      Similarity.hammingSigRows(keptVecs, "docId", "vec", dims = 64),
-      s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbHammingSigsIvf(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbHammingSigsIvfRes(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbQ8Codes(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbQ8CodesIvf(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
+    for (store <- Seq(HammingSigs, HammingSigsIvf, HammingSigsIvfRes, Q8Codes, Q8CodesIvf))
+      Materialized.absorb(spark, sfDir, store,
+        store.rowsOf(spark, sfDir, keptVecs, "docId", "vec"), s"$streamId-$microBatchId")
     v
   }
 

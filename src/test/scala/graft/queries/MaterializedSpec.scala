@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.TestSpark
-import graft.llm.Dedup
+import graft.llm.{Dedup, Similarity}
+import graft.queries.Materialized.Stores
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,6 +36,40 @@ class MaterializedSpec extends AnyFunSuite {
       // drop handles pointing into the temp root so later suites re-resolve
       // against the default store
       Materialized.clearSessionCache()
+    }
+  }
+
+  /** Every absorb-able store with its public reader and one novel batch in
+    * its row schema (ids absent from every test corpus). */
+  private def absorbable(): Seq[(Materialized.Store, (SparkSession, String) => DataFrame, DataFrame)] = {
+    import spark.implicits._
+    val docs = Seq((9301L, "a novel document absorbed into every text store"))
+      .toDF("doc_id", "text")
+    val vecs = Seq((9302L, Seq.tabulate(64)(i => math.cos(5.0 * i + 0.2))))
+      .toDF("vec_id", "embedding")
+    def fromVecs(s: Materialized.Store) = s.rowsOf(spark, TestSpark.sf, vecs, "vec_id", "embedding")
+    Seq(
+      (Stores.MinhashSigs, Materialized.minhashSignatures _,
+        Dedup.minhashSignatureTable(docs, "doc_id", "text")),
+      (Stores.ContentHashes, Materialized.contentHashes _,
+        docs.select(col("doc_id").as("id"), Dedup.contentHashSafe(col("text")).as("h"))),
+      (Stores.EmbSigs, Materialized.embeddingSignatures _,
+        Similarity.lshSigRowsTyped(vecs, "vec_id", "embedding",
+          bands = 128, planesPerBand = 16, dims = 64)),
+      (Stores.HammingSigs, Materialized.hammingSigs _, fromVecs(Stores.HammingSigs)),
+      (Stores.Q8Codes, Materialized.q8Codes _, fromVecs(Stores.Q8Codes)),
+      (Stores.HammingSigsIvf, Materialized.hammingSigsIvf _, fromVecs(Stores.HammingSigsIvf)),
+      (Stores.HammingSigsIvfRes, Materialized.hammingSigsIvfRes _,
+        fromVecs(Stores.HammingSigsIvfRes)),
+      (Stores.Q8CodesIvf, Materialized.q8CodesIvf _, fromVecs(Stores.Q8CodesIvf)))
+  }
+
+  test("absorb returns the reader's view: every absorb-able store's absorb schema equals its reader's") {
+    withTempStore { _ =>
+      for ((store, reader, rows) <- absorbable()) {
+        val absorbed = Materialized.absorb(spark, TestSpark.sf, store, rows, "schema-b1")
+        assert(absorbed.schema == reader(spark, TestSpark.sf).schema, store.kind)
+      }
     }
   }
 
@@ -261,8 +297,7 @@ class MaterializedSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       val sigs = Dedup.minhashSignatureTable(batch, "doc_id", "text")
       val a0 = Materialized.absorbsPublished.get()
-      val absorbed = Materialized.absorbMinhashSignatures(
-        spark, TestSpark.sf, sigs, "batch-1")
+      val absorbed = Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, sigs, "batch-1")
       assert(Materialized.absorbsPublished.get() == a0 + 1)
       assert(Materialized.buildsStarted.get() == b0 + 1, "absorb must not re-sign the corpus")
       assert(absorbed.count() == nBase + 2)
@@ -278,8 +313,7 @@ class MaterializedSpec extends AnyFunSuite {
       assert(Materialized.buildsStarted.get() == b0 + 1)
 
       // exactly-once: re-absorbing the same batch id publishes nothing
-      val replay = Materialized.absorbMinhashSignatures(
-        spark, TestSpark.sf, sigs, "batch-1")
+      val replay = Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, sigs, "batch-1")
       assert(Materialized.absorbsPublished.get() == a0 + 1, "replay must be a no-op")
       assert(replay.count() == nBase + 2)
 
@@ -287,7 +321,7 @@ class MaterializedSpec extends AnyFunSuite {
       val sigs2 = Dedup.minhashSignatureTable(
         Seq((9003L, "a third batch brings one more novel doc into the store"))
           .toDF("doc_id", "text"), "doc_id", "text")
-      val v2 = Materialized.absorbMinhashSignatures(spark, TestSpark.sf, sigs2, "batch-2")
+      val v2 = Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, sigs2, "batch-2")
       assert(v2.count() == nBase + 3)
       assert(Materialized.buildsStarted.get() == b0 + 1, "corpus still signed exactly once")
     }
@@ -308,12 +342,12 @@ class MaterializedSpec extends AnyFunSuite {
         Materialized.contentHashes(spark, TestSpark.sf), "doc_id", "text",
         expectedCorpusItems = 100000L)
       assert(day1.where(col("keep")).count() == 1)
-      Materialized.absorbContentHashes(spark, TestSpark.sf, hashesOf(b1), "d1")
+      Materialized.absorb(spark, TestSpark.sf, Stores.ContentHashes, hashesOf(b1), "d1")
       // view grew by one; corpus hashed exactly once; replay is a no-op
       Materialized.clearSessionCache()
       assert(Materialized.contentHashes(spark, TestSpark.sf).count() == nBase + 1)
       assert(Materialized.buildsStarted.get() == b0 + 1)
-      Materialized.absorbContentHashes(spark, TestSpark.sf, hashesOf(b1), "d1")
+      Materialized.absorb(spark, TestSpark.sf, Stores.ContentHashes, hashesOf(b1), "d1")
       assert(Materialized.contentHashes(spark, TestSpark.sf).count() == nBase + 1)
       // day 2: an exact copy of the absorbed B1 keep classifies as already
       // ingested THROUGH the head view — sketch and confirm, no corpus text
@@ -332,15 +366,15 @@ class MaterializedSpec extends AnyFunSuite {
       def hashesOf(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
         .select(col("doc_id").as("id"), Dedup.contentHashSafe(col("text")).as("h"))
       val nBase = Materialized.contentHashes(spark, TestSpark.sf).count()
-      Materialized.absorbContentHashes(spark, TestSpark.sf,
+      Materialized.absorb(spark, TestSpark.sf, Stores.ContentHashes,
         hashesOf(Seq((9001L, "novel compact one"))), "c1")
-      Materialized.absorbContentHashes(spark, TestSpark.sf,
+      Materialized.absorb(spark, TestSpark.sf, Stores.ContentHashes,
         hashesOf(Seq((9002L, "novel compact two"))), "c2")
-      val compacted = Materialized.compactContentHashes(spark, TestSpark.sf)
+      val compacted = Materialized.compact(spark, TestSpark.sf, Stores.ContentHashes)
       assert(compacted.count() == nBase + 2)
       // ledger survives the compaction: replayed batch ids stay exactly-once
       Materialized.clearSessionCache()
-      Materialized.absorbContentHashes(spark, TestSpark.sf,
+      Materialized.absorb(spark, TestSpark.sf, Stores.ContentHashes,
         hashesOf(Seq((9001L, "novel compact one"))), "c1")
       assert(Materialized.contentHashes(spark, TestSpark.sf).count() == nBase + 2)
       // superseded base+deltas age out; the compacted view keeps serving
@@ -366,7 +400,7 @@ class MaterializedSpec extends AnyFunSuite {
       val day1 = Dedup.dedupIncrementalNear(b1,
         Materialized.minhashSignatures(spark, sfDir), corpus, "doc_id", "text")
       assert(day1.where(col("keep")).count() == 1, "novel B1 doc must be kept")
-      Materialized.absorbMinhashSignatures(spark, sfDir,
+      Materialized.absorb(spark, sfDir, Stores.MinhashSigs,
         Dedup.minhashSignatureTable(b1, "doc_id", "text"), "day1")
 
       // day 2: a near-copy of the B1 keep (last word dropped) arrives —
@@ -393,7 +427,7 @@ class MaterializedSpec extends AnyFunSuite {
         writeCorpus(corpusDir, "gen1")
         val sfDir = corpusDir.toString
         Materialized.minhashSignatures(spark, sfDir).count()
-        Materialized.absorbMinhashSignatures(spark, sfDir,
+        Materialized.absorb(spark, sfDir, Stores.MinhashSigs,
           Dedup.minhashSignatureTable(
             Seq((500L, "an absorbed doc that dies with its corpus generation"))
               .toDF("doc_id", "text"), "doc_id", "text"), "b1")
@@ -429,13 +463,13 @@ class MaterializedSpec extends AnyFunSuite {
       // every later head read) — the ledger alone records the batch
       val a0 = Materialized.absorbsPublished.get()
       val dup = sigsOf(Seq((0L, "id collides with a stored row")))
-      assert(Materialized.absorbMinhashSignatures(spark, TestSpark.sf, dup, "noop-1")
+      assert(Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, dup, "noop-1")
         .count() == n0)
       assert(Materialized.absorbsPublished.get() == a0, "no delta for a zero-novel batch")
       Materialized.clearSessionCache()
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0,
         "head view must stay readable after a ledger-only absorb")
-      Materialized.absorbMinhashSignatures(spark, TestSpark.sf, dup, "noop-1")
+      Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, dup, "noop-1")
       assert(Materialized.absorbsPublished.get() == a0, "ledger-only batch replays as no-op")
 
       // destroy an absorbed delta: the broken head degrades to the base
@@ -443,7 +477,7 @@ class MaterializedSpec extends AnyFunSuite {
       // (the ledger must not swallow the recovery)
       val before = sigDirs(root).toSet
       val novel = sigsOf(Seq((9100L, "novel doc for the loss recovery test words")))
-      Materialized.absorbMinhashSignatures(spark, TestSpark.sf, novel, "lost-1")
+      Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, novel, "lost-1")
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0 + 1)
       val deltaDir = (sigDirs(root).toSet -- before).head
       val v = root.resolve(s"v${Materialized.FormatVersion}")
@@ -453,7 +487,7 @@ class MaterializedSpec extends AnyFunSuite {
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0,
         "a lost delta must degrade reads to the surviving entries")
       val a1 = Materialized.absorbsPublished.get()
-      Materialized.absorbMinhashSignatures(spark, TestSpark.sf, novel, "lost-1")
+      Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs, novel, "lost-1")
       assert(Materialized.absorbsPublished.get() == a1 + 1,
         "the broken head must re-open the lost batch id for recovery")
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0 + 1)
@@ -469,15 +503,15 @@ class MaterializedSpec extends AnyFunSuite {
         Materialized.minhashSignatures(spark, TestSpark.sf).count()
         def sigsOf(rows: Seq[(Long, String)]) = Dedup.minhashSignatureTable(
           rows.toDF("doc_id", "text"), "doc_id", "text")
-        Materialized.absorbMinhashSignatures(spark, TestSpark.sf,
+        Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs,
           sigsOf(Seq((9001L, "first absorbed batch novel doc with its words"))), "c-b1")
-        Materialized.absorbMinhashSignatures(spark, TestSpark.sf,
+        Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs,
           sigsOf(Seq((9002L, "second absorbed batch novel doc other words"))), "c-b2")
         val before = Materialized.minhashSignatures(spark, TestSpark.sf)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(sigDirs(root).size == 3) // base + 2 deltas
 
-        val compacted = Materialized.compactMinhashSignatures(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Stores.MinhashSigs)
         assert(compacted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == before,
           "compaction must not change the view's content")
         assert(sigDirs(root).size == 1, s"superseded chain must be swept: ${sigDirs(root)}")
@@ -485,7 +519,7 @@ class MaterializedSpec extends AnyFunSuite {
 
         // ledger preserved: absorbed batch ids replay as no-ops
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbMinhashSignatures(spark, TestSpark.sf,
+        Materialized.absorb(spark, TestSpark.sf, Stores.MinhashSigs,
           sigsOf(Seq((9001L, "first absorbed batch novel doc with its words"))), "c-b1")
         assert(Materialized.absorbsPublished.get() == a0,
           "compaction must preserve the exactly-once ledger")
@@ -494,7 +528,7 @@ class MaterializedSpec extends AnyFunSuite {
         Materialized.clearSessionCache()
         assert(Materialized.minhashSignatures(spark, TestSpark.sf)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == before)
-        Materialized.compactMinhashSignatures(spark, TestSpark.sf)
+        Materialized.compact(spark, TestSpark.sf, Stores.MinhashSigs)
         assert(sigDirs(root).size == 1)
         assert(Materialized.buildsStarted.get() == b0 + 1)
       } finally spark.conf.unset("spark.graft.materialized.gc.ageMs")
@@ -517,7 +551,7 @@ class MaterializedSpec extends AnyFunSuite {
         val kept = graft.llm.Similarity.hammingSigRows(
           Seq((9001L, vNew)).toDF("vec_id", "embedding"),
           "vec_id", "embedding", dims = 64)
-        Materialized.absorbHammingSigs(spark, TestSpark.sf, kept, "h-b1")
+        Materialized.absorb(spark, TestSpark.sf, Stores.HammingSigs, kept, "h-b1")
         val view = Materialized.hammingSigs(spark, TestSpark.sf)
         assert(view.count() == n0 + 1)
         // the absorbed row's codes are the kernel's, bit for bit
@@ -527,13 +561,13 @@ class MaterializedSpec extends AnyFunSuite {
         assert(got._2 == elo && got._3 == ehi)
         // exactly-once: batch id replays as a no-op
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbHammingSigs(spark, TestSpark.sf, kept, "h-b1")
+        Materialized.absorb(spark, TestSpark.sf, Stores.HammingSigs, kept, "h-b1")
         assert(Materialized.absorbsPublished.get() == a0)
         // compaction: chain → one entry, content identical
         assert(hamDirs.size == 2) // base + 1 delta
         val before = view.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-        val compacted = Materialized.compactHammingSigs(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Stores.HammingSigs)
         assert(compacted.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet == before,
           "compaction must not change the view's content")
@@ -559,8 +593,8 @@ class MaterializedSpec extends AnyFunSuite {
           "sig and code stores must cover the same ids")
         val vNew = Array.tabulate(64)(i => math.sin(7.0 * i + 0.3)).toSeq
         val kept = Seq((9001L, vNew)).toDF("vec_id", "embedding")
-        Materialized.absorbQ8Codes(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8-b1")
+        Materialized.absorb(spark, TestSpark.sf, Stores.Q8Codes,
+          Stores.Q8Codes.rowsOf(spark, TestSpark.sf, kept, "vec_id", "embedding"), "q8-b1")
         val view = Materialized.q8Codes(spark, TestSpark.sf)
         assert(view.count() == n0 + 1)
         // the absorbed row's codes are the quantizer's, byte for byte
@@ -573,14 +607,14 @@ class MaterializedSpec extends AnyFunSuite {
         assert(got == exp, s"absorbed codes must replay quantizeInt8")
         // exactly-once: batch id replays as a no-op
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbQ8Codes(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8-b1")
+        Materialized.absorb(spark, TestSpark.sf, Stores.Q8Codes,
+          Stores.Q8Codes.rowsOf(spark, TestSpark.sf, kept, "vec_id", "embedding"), "q8-b1")
         assert(Materialized.absorbsPublished.get() == a0)
         // compaction: chain → one entry, content identical
         assert(q8Dirs.size == 2) // base + 1 delta
         val before = view.select("id", "q").collect()
           .map(r => (r.getLong(0), r.getSeq[Byte](1))).toSet
-        val compacted = Materialized.compactQ8Codes(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Stores.Q8Codes)
         assert(compacted.select("id", "q").collect()
           .map(r => (r.getLong(0), r.getSeq[Byte](1))).toSet == before,
           "compaction must not change the view's content")
@@ -603,14 +637,14 @@ class MaterializedSpec extends AnyFunSuite {
         val n0 = Materialized.q8CodesIvf(spark, TestSpark.sf).count()
         val vNew = Array.tabulate(64)(i => math.cos(3.0 * i + 0.7)).toSeq
         val kept = Seq((9101L, vNew)).toDF("vec_id", "embedding")
-        Materialized.absorbQ8CodesIvf(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8i-b1")
+        Materialized.absorb(spark, TestSpark.sf, Stores.Q8CodesIvf,
+          Stores.Q8CodesIvf.rowsOf(spark, TestSpark.sf, kept, "vec_id", "embedding"), "q8i-b1")
         val view = Materialized.q8CodesIvf(spark, TestSpark.sf)
         assert(view.count() == n0 + 1)
         val before = view.select("id", "centroid_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(entries("q8_codes_ivf_").size == 2) // base + 1 delta
-        val compacted = Materialized.compactQ8CodesIvf(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Stores.Q8CodesIvf)
         assert(compacted.select("id", "centroid_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet == before,
           "compaction must not change the view's content")
@@ -627,16 +661,32 @@ class MaterializedSpec extends AnyFunSuite {
         // exactly-once survives the fold: the absorbed batch id replays
         // as a no-op against the compacted head
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbQ8CodesIvf(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8i-b1")
+        Materialized.absorb(spark, TestSpark.sf, Stores.Q8CodesIvf,
+          Stores.Q8CodesIvf.rowsOf(spark, TestSpark.sf, kept, "vec_id", "embedding"), "q8i-b1")
         assert(Materialized.absorbsPublished.get() == a0,
           "compaction must preserve the exactly-once ledger")
         // the sig-store twins fold the same way (content-identical)
         val sigBefore = Materialized.hammingSigsIvfRes(spark, TestSpark.sf)
           .select("id").as[Long].collect().toSet
-        Materialized.compactHammingSigsIvfRes(spark, TestSpark.sf)
+        Materialized.compact(spark, TestSpark.sf, Stores.HammingSigsIvfRes)
         assert(Materialized.hammingSigsIvfRes(spark, TestSpark.sf)
           .select("id").as[Long].collect().toSet == sigBefore)
+        // every absorb-able store folds the same way: a novel batch absorbed,
+        // then compacted to ONE entry with the view's content unchanged
+        def content(df: DataFrame) = df.collect().map(_.toSeq.map {
+          case a: Array[_] => a.toSeq
+          case x => x
+        }).toSet
+        for ((store, reader, rows) <- absorbable()) {
+          val n0 = reader(spark, TestSpark.sf).count()
+          Materialized.absorb(spark, TestSpark.sf, store, rows, "fold-b1")
+          val before = content(reader(spark, TestSpark.sf))
+          assert(before.size == n0 + 1, store.kind)
+          assert(content(Materialized.compact(spark, TestSpark.sf, store)) == before,
+            s"${store.kind}: compaction must not change the view's content")
+          val live = Materialized.storeStatus(spark).filter(_.kind == store.kind)
+          assert(live.size == 1, s"${store.kind}: superseded chain must be swept: $live")
+        }
       } finally spark.conf.unset("spark.graft.materialized.gc.ageMs")
     }
   }
@@ -871,7 +921,8 @@ class MaterializedSpec extends AnyFunSuite {
 
       // compaction folds base ∪ split delta into ONE entry; the live-cell
       // filter keeps hiding the copied retired-parent rows
-      val compacted = Materialized.compactIvfIndex(spark, sfDir)
+      Materialized.compact(spark, sfDir, Stores.IvfIndex)
+      val compacted = Materialized.ivfIndexCurrent(spark, sfDir)
       assert(compacted.assignment.count() == n &&
         compacted.assignment.select("id").distinct().count() == n)
       val roles = Materialized.storeStatus(spark).filter(_.kind == "ivf_index")
@@ -945,7 +996,7 @@ class MaterializedSpec extends AnyFunSuite {
         // a headless entry (plain pair table) and an absorb-able chain
         Materialized.minhashPairs(spark, sfDir).count()
         Materialized.minhashSignatures(spark, sfDir).count()
-        Materialized.absorbMinhashSignatures(spark, sfDir,
+        Materialized.absorb(spark, sfDir, Stores.MinhashSigs,
           Dedup.minhashSignatureTable(
             Seq((500L, "a novel absorbed document with several words"))
               .toDF("doc_id", "text"), "doc_id", "text"), "s1")
@@ -993,7 +1044,7 @@ class MaterializedSpec extends AnyFunSuite {
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
               gate.await()
-              Materialized.absorbMinhashSignatures(spark, sfDir, b, bid); ()
+              Materialized.absorb(spark, sfDir, Stores.MinhashSigs, b, bid); ()
             }
           })
         }
@@ -1017,7 +1068,7 @@ class MaterializedSpec extends AnyFunSuite {
       writeCorpus(corpusDir, "status2")
       val sfDir = corpusDir.toString
       Materialized.minhashSignatures(spark, sfDir).count()
-      Materialized.absorbMinhashSignatures(spark, sfDir,
+      Materialized.absorb(spark, sfDir, Stores.MinhashSigs,
         Dedup.minhashSignatureTable(
           Seq((800L, "a freshly absorbed novel doc with words"))
             .toDF("doc_id", "text"), "doc_id", "text"), "st-1")
