@@ -186,6 +186,14 @@ object EtlJob {
    * X3 — task orchestration (`PhoenixAdapter.java:162-207`): run one config
    * by name, or fan out over all configs whose `destination == task`,
    * aggregating per-table results (with counts).
+   *
+   * The fan-out imports different target tables concurrently, one chain per
+   * `dbMapping.targetTable` on a thread made for this call
+   * ([[graft.Chains.run]]), so their planning and Spark jobs overlap;
+   * configs sharing a target table import one after another, in config
+   * order. Fresh threads carry the caller's Spark local properties (job
+   * group, scheduler pool) into every import. Results keep the order of the
+   * selected configs.
    */
   def etl(spark: SparkSession, task: String, configs: Map[String, MappingConfig],
           params: Seq[String], sourceFor: MappingConfig => EtlSource,
@@ -193,8 +201,15 @@ object EtlJob {
           dialect: graft.sink.SqlDialect = graft.sink.PhoenixSqlDialect): Seq[EtlResult] = {
     val selected = configs.get(task).map(Seq(_)).getOrElse(
       configs.values.filter(_.destination == task).toSeq)
-    selected.map(c => importSource(spark, c, sourceFor(c), params, connFactory,
-      dialect = dialect))
+    val results = new Array[EtlResult](selected.size)
+    graft.Chains.run(
+      graft.Chains.byKey(selected.zipWithIndex)(_._1.dbMapping.targetTable).map { chain =>
+        () => chain.foreach { case (c, i) =>
+          results(i) = importSource(spark, c, sourceFor(c), params, connFactory,
+            dialect = dialect)
+        }
+      })
+    results.toSeq
   }
 
   /** A1 — count endpoint (`PhoenixAdapter.java:216-255`). Against a remote

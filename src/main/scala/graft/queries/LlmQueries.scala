@@ -3933,8 +3933,9 @@ object LlmQueries {
         .where(col("keep")).select(col("doc_id")).as[Long].collect().toSeq
       val keptIds = keptIdSeq.toDF("doc_id")
       val keptDocs = b1.join(broadcast(keptIds), Seq("doc_id"), "left_semi")
-      Materialized.absorb(s, d, Materialized.Stores.MinhashSigs,
-        Dedup.minhashSignatureTable(keptDocs, "doc_id", "text"), "near2_b1v2")
+      val store = Materialized.Stores.MinhashSigs
+      Materialized.absorb(s, d, store, store.rowsOf(s, d, keptDocs, "doc_id", "text"),
+        "near2_b1v2")
       val b2 = docs.where(col("doc_id") >= cut + 50).select(col("doc_id"), col("text"))
         .unionByName(docs.where(col("doc_id") < 3)
           .select((col("doc_id") + maxd + 2001).as("doc_id"),
@@ -4029,9 +4030,9 @@ object LlmQueries {
         .where(col("keep")).select(col("vec_id")).as[Long].collect().toSeq
       val keptIds = keptIdSeq.toDF("vec_id")
       val keptVecs = b1.join(broadcast(keptIds), Seq("vec_id"), "left_semi")
-      Materialized.absorb(s, d, Materialized.Stores.EmbSigs,
-        Similarity.lshSigRowsTyped(keptVecs, "vec_id", "embedding",
-          bands = 128, planesPerBand = 16, dims = 64), "emb2_b1v2")
+      val store = Materialized.Stores.EmbSigs
+      Materialized.absorb(s, d, store, store.rowsOf(s, d, keptVecs, "vec_id", "embedding"),
+        "emb2_b1v2")
       val b2 = emb.where(col("vec_id") >= cut + 25).select(col("vec_id"), col("embedding"))
         .unionByName(emb.where(col("vec_id") < 3)
           .select((col("vec_id") + maxe + 2001).as("vec_id"), neg.as("embedding")))

@@ -422,10 +422,11 @@ object Materialized {
   // Head-aware stores: base + delta generations behind a head pointer
   // ------------------------------------------------------------------
 
-  /** A store's rows for a batch of vectors: `(spark, sfDir, batch, idCol,
-    * vecCol)`, `sfDir` being the store's own corpus (the cell stores
-    * assign the batch against its pinned centroids). */
-  private[graft] type VectorRows = (SparkSession, String, DataFrame, String, String) => DataFrame
+  /** A store's rows for a batch of its source rows: `(spark, sfDir, batch,
+    * idCol, valueCol)` — the value is a vector, or a text for the MinHash
+    * store — `sfDir` being the store's own corpus (the cell stores assign
+    * the batch against its pinned centroids). */
+  private[graft] type BatchRows = (SparkSession, String, DataFrame, String, String) => DataFrame
 
   /**
    * One head-aware store, declared once: the pinned base read, the head
@@ -441,13 +442,13 @@ object Materialized {
    *  - `columns` is the read projection, in order (empty: as stored); a
    *    partition column round-trips through directory names as an
    *    inferred int and is cast back to the build-time long;
-   *  - `vectorRows` makes the store's rows from a batch of vectors, where
-   *    the store builds them itself.
+   *  - `batchRows` signs a batch of source rows into the store's rows, with
+   *    the parameters of its base build, where the store makes them.
    */
   private[graft] final case class Store(kind: String, config: String, table: String,
       build: (SparkSession, String) => DataFrame,
       partitionCols: Seq[String] = Nil, columns: Seq[String] = Nil,
-      vectorRows: Option[VectorRows] = None) {
+      batchRows: Option[BatchRows] = None) {
 
     /** The read projection every derived view goes through. */
     def view(df: DataFrame): DataFrame =
@@ -455,11 +456,11 @@ object Materialized {
       else df.select(columns.map(c =>
         if (partitionCols.contains(c)) col(c).cast("long").as(c) else col(c)): _*)
 
-    /** This store's rows for the vector batch `vecs`, ready for [[absorb]]. */
-    def rowsOf(spark: SparkSession, sfDir: String, vecs: DataFrame,
-               idCol: String, vecCol: String): DataFrame =
-      vectorRows.getOrElse(throw new UnsupportedOperationException(
-        s"$kind rows are not made from vectors"))(spark, sfDir, vecs, idCol, vecCol)
+    /** This store's rows for the source batch `batch`, ready for [[absorb]]. */
+    def rowsOf(spark: SparkSession, sfDir: String, batch: DataFrame,
+               idCol: String, valueCol: String): DataFrame =
+      batchRows.getOrElse(throw new UnsupportedOperationException(
+        s"$kind rows are not made from a batch"))(spark, sfDir, batch, idCol, valueCol)
   }
 
   /** Head state of an absorb-able signature store: `baseFp` pins the corpus
@@ -764,20 +765,20 @@ object Materialized {
     private val cell = Seq("centroid_id")
 
     /** A vector store's base: its batch rows made from the whole corpus. */
-    private def ofCorpus(rows: VectorRows): (SparkSession, String) => DataFrame =
+    private def ofCorpus(rows: BatchRows): (SparkSession, String) => DataFrame =
       (s, d) => rows(s, d, Tables.embeddings(s, d), "vec_id", "embedding")
 
-    private val hammingRows: VectorRows =
+    private val hammingRows: BatchRows =
       (_, _, v, i, c) => Similarity.hammingSigRows(v, i, c, dims = 64)
-    private val q8Rows: VectorRows = (_, _, v, i, c) => Similarity.q8CodeRows(v, i, c)
-    private val residualRows: VectorRows = (s, d, v, i, c) =>
+    private val q8Rows: BatchRows = (_, _, v, i, c) => Similarity.q8CodeRows(v, i, c)
+    private val residualRows: BatchRows = (s, d, v, i, c) =>
       Similarity.hammingResidualSigRows(v, i, c, ivfIndex(s, d).centroids, dims = 64)
 
     /** `rows` laid out by IVF cell: the corpus joins the stored assignment,
       * a batch is assigned against the pinned base centroids at absorb
       * time — the generation whose layout the store is. */
     private def cellStore(kind: String, config: String, columns: Seq[String],
-                          rows: VectorRows): Store =
+                          rows: BatchRows): Store =
       Store(kind, config, "embeddings",
         (s, d) => ofCorpus(rows)(s, d)
           .join(ivfIndex(s, d).assignment.select(col("id"), col("centroid_id")), "id"),
@@ -786,23 +787,29 @@ object Materialized {
           .join(Similarity.ivfAssign(v, i, c, ivfIndex(s, d).centroids)
             .select(col("id").cast("long").as("id"), col("centroid_id")), "id")))
 
-    val MinhashSigs: Store = Store("minhash_sigs", "n3_k128", "documents", (s, d) =>
-      Dedup.minhashSignatureTable(Tables.documents(s, d),
-        "doc_id", "text", shingleN = 3, k = 128, spread = true))
+    /** Signed as the base is; `spread` only lays out a corpus-scale scan. */
+    private def minhashRows(spread: Boolean): BatchRows = (_, _, b, i, t) =>
+      Dedup.minhashSignatureTable(b, i, t, shingleN = 3, k = 128, spread = spread)
+    private def embSigRows(spread: Boolean): BatchRows = (_, _, b, i, v) =>
+      Similarity.lshSigRowsTyped(b, i, v, bands = 128, planesPerBand = 16, dims = 64,
+        spread = spread)
 
-    val EmbSigs: Store = Store("emb_sigs", "d64_r16b128", "embeddings", (s, d) =>
-      Similarity.lshSigRowsTyped(Tables.embeddings(s, d), "vec_id", "embedding",
-        bands = 128, planesPerBand = 16, dims = 64, spread = true))
+    val MinhashSigs: Store = Store("minhash_sigs", "n3_k128", "documents",
+      (s, d) => minhashRows(spread = true)(s, d, Tables.documents(s, d), "doc_id", "text"),
+      batchRows = Some(minhashRows(spread = false)))
+
+    val EmbSigs: Store = Store("emb_sigs", "d64_r16b128", "embeddings",
+      ofCorpus(embSigRows(spread = true)), batchRows = Some(embSigRows(spread = false)))
 
     val ContentHashes: Store = Store("content_hashes", "md5", "documents", (s, d) =>
       Tables.documents(s, d).select(col("doc_id").cast("long").as("id"),
         Dedup.contentHashSafe(col("text")).as("h")))
 
     val HammingSigs: Store = Store("hamming_sigs", "d64_b1_k128", "embeddings",
-      ofCorpus(hammingRows), vectorRows = Some(hammingRows))
+      ofCorpus(hammingRows), batchRows = Some(hammingRows))
 
     val Q8Codes: Store = Store("q8_codes", "d64_s127", "embeddings",
-      ofCorpus(q8Rows), vectorRows = Some(q8Rows))
+      ofCorpus(q8Rows), batchRows = Some(q8Rows))
 
     val HammingSigsIvf: Store = cellStore("hamming_sigs_ivf", "d64_k128_cell",
       Seq("id", "sig", "slo", "shi"), hammingRows)

@@ -4,6 +4,7 @@ import graft.cdc.{CdcApply, PkHash}
 import graft.model.{CanalEvent, MappingConfig}
 import graft.transform.DmlTransforms
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -23,7 +24,8 @@ import java.util.concurrent.atomic.AtomicReference
  * each micro-batch is split at DDL boundaries and segments apply
  * sequentially (`PhoenixSyncService.java:180-198` runs DDL inline; risk 4);
  * a TRUNCATE splits it the same way. Different target tables apply
- * concurrently (see [[CanalStream.start]]).
+ * concurrently, and a barrier-free micro-batch runs one stats job plus one
+ * job per active table (see [[CanalStream.start]]).
  *
  * X5 — config hot-reload: the route table is an `AtomicReference` read at
  * the top of every micro-batch, updated by a driver-side watcher
@@ -80,10 +82,10 @@ object CanalStream {
   private val SeqPosBits = 42
 
   /** Per-segment context handed to `applyBatch`: the distinct source
-    * columns seen in this table's batch rows (from the same single pass
-    * that probes DDL presence), or None when the table has a DDL barrier in
-    * the batch — then columns must be re-derived per segment, since a
-    * column may only exist after the ALTER. */
+    * columns of the segment's row images. [[start]] always sets them —
+    * from the batch's stats pass, or, for a table with a DDL barrier in
+    * the batch, from one pass over its rows split at the barriers (a
+    * column may only exist after the ALTER). */
   final case class SegmentCtx(sourceCols: Option[Seq[String]] = None)
 
   /** Parse a raw JSON-line stream into Dml rows. */
@@ -129,7 +131,7 @@ object CanalStream {
 
   /** Materialize the mode's order key as the `seq` column over the cached
     * flattened batch (exposed for tests). `files` is the batch's sorted
-    * file list (FileOrder only — aggregated for free in the stats pass);
+    * file list (FileOrder only — gathered by the stats pass);
     * no mode runs an extra Spark job here. */
   private[streaming] def assignSeq(flat0: DataFrame, mode: IngressOrdering,
                                    files: Seq[String] = Seq.empty): DataFrame =
@@ -166,11 +168,49 @@ object CanalStream {
         flat0.coalesce(1).withColumn("seq", monotonically_increasing_id())
     }
 
-  /** One routed table's row of the batch's stats pass: whether it carries
-    * DDL or a TRUNCATE (both split the table's rows into segments), and
-    * the distinct source columns of its row images. */
+  /** One routed table's share of the batch's stats pass: whether it
+    * carries DDL or a TRUNCATE (both split the table's rows into segments),
+    * and the distinct source columns of its row images. */
   private final case class TableStat(hasDdl: Boolean, hasTruncate: Boolean,
-                                     srcCols: Seq[String])
+                                     srcCols: Set[String]) {
+    def merge(o: TableStat): TableStat =
+      TableStat(hasDdl || o.hasDdl, hasTruncate || o.hasTruncate, srcCols ++ o.srcCols)
+  }
+
+  /** The batch's stats: a [[TableStat]] per routed
+    * `(destination, database, table)`, and the source-file set (FileOrder
+    * only). Partials of the per-partition fold merge into the whole. */
+  private final case class BatchStats(tables: Map[(String, String, String), TableStat],
+                                      files: Set[String]) {
+    def merge(o: BatchStats): BatchStats = BatchStats(
+      o.tables.foldLeft(tables) { case (acc, (k, t)) =>
+        acc.updated(k, acc.get(k).fold(t)(_.merge(t)))
+      },
+      files ++ o.files)
+  }
+
+  /** The stats pass: one job with no exchange — each partition of the
+    * flattened batch folds its rows into a [[BatchStats]], merged on the
+    * driver. It is the batch's first job over `flat0`, so it also fills
+    * the cache. */
+  private def batchStats(flat0: DataFrame, withFiles: Boolean): BatchStats = {
+    val cols = Seq(col("destination"), col("database"), col("table"),
+      coalesce(col("isDdl"), lit(false)),
+      coalesce(col("type") === CanalEvent.Truncate, lit(false)),
+      map_keys(col("data"))) ++ (if (withFiles) Seq(col("_src_file")) else Nil)
+    flat0.select(cols: _*).rdd.mapPartitions { rows =>
+      val tables = scala.collection.mutable.HashMap.empty[(String, String, String), TableStat]
+      val files = scala.collection.mutable.HashSet.empty[String]
+      rows.foreach { r =>
+        val stat = TableStat(r.getBoolean(3), r.getBoolean(4),
+          if (r.isNullAt(5)) Set.empty else r.getSeq[String](5).toSet)
+        val k = (r.getString(0), r.getString(1), r.getString(2))
+        tables.update(k, tables.get(k).fold(stat)(_.merge(stat)))
+        if (withFiles) files += r.getString(6)
+      }
+      Iterator.single(BatchStats(tables.toMap, files.toSet))
+    }.collect().foldLeft(BatchStats(Map.empty, Set.empty))(_.merge(_))
+  }
 
   /**
    * Start the sync stream. `applyBatch` receives (config, orderedSingles,
@@ -185,7 +225,24 @@ object CanalStream {
    * planning and Spark jobs overlap — the reference likewise applies a
    * push batch's tables through shared worker queues at once
    * (`PhoenixSyncService.java:87-99,134-140`); only the per-key order
-   * within a table decides the final state. Consequences for callers:
+   * within a table decides the final state.
+   *
+   * The Spark jobs of a micro-batch: the stats pass is one job with no
+   * exchange (a per-partition fold over the cached flatten, merged on the
+   * driver; it also fills the cache), then each segment is one job — its
+   * PK-hash shuffle and its ordered apply as two stages. A table with
+   * DDL or TRUNCATE barriers adds one job that collects them and, with
+   * DDL, one that derives every segment's source columns. A barrier-free
+   * batch over `n` active tables so runs `1 + n` jobs. Every batch plans
+   * on the stream's own session (a clone the caller never sees) with
+   * adaptive query execution off: each exchange has an explicit partition
+   * count (`numPartitions`, or 1 for a serial table), so AQE has nothing
+   * to adapt, and with it on each segment ran its shuffle as a job of its
+   * own and then re-planned the apply as another. `applyBatch` callbacks
+   * therefore run non-adaptively too; `spark.sql.shuffle.partitions`
+   * sizes no shuffle of the stream path.
+   *
+   * Consequences for callers:
    *
    *  - `applyBatch` and `onDdl` may run at the same time for different
    *    target tables, so they (and any `heal` they pass on) must be
@@ -198,7 +255,7 @@ object CanalStream {
    *    then fails with the first chain's error (the others attached as
    *    suppressed); the replay on restart re-applies the whole batch.
    *  - `StreamingQuery.stop()` returns only after every chain of the
-   *    running batch has ended (see [[runChains]]).
+   *    running batch has ended (see [[graft.Chains.run]]).
    *
    * `checkpointLocation` enables restart/recovery: source offsets and batch
    * commits go to the WAL, so a restarted query resumes at the first
@@ -223,6 +280,11 @@ object CanalStream {
     checkpointLocation.foreach(writer.option("checkpointLocation", _))
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // the stream's own session, a clone of the caller's: every exchange
+        // below has an explicit partition count, so AQE has nothing to
+        // adapt — it would only run each table's shuffle as a job of its
+        // own and re-plan the apply as another
+        batch.sparkSession.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
         // flatten first (order-preserving per partition), THEN derive the
         // order key — so the single stats pass below can also collect the
         // batch's file list and no ingress mode pays an extra job
@@ -231,45 +293,21 @@ object CanalStream {
         try {
           // ONE pass over the cached flatten yields, per routed table, the
           // DDL/TRUNCATE-presence flags and the distinct source columns
-          // (replacing a DDL probe plus one agg per segment on the hot path;
-          // the mapped-column check itself is per-row in the reference,
+          // (the mapped-column check itself is per-row in the reference,
           // `PhoenixSyncService.java:399-404`) — plus, for FileOrder, the
           // source-file set that ranks the batch's files
-          val fileAgg =
-            if (mode == IngressOrdering.FileOrder)
-              Seq(collect_set(col("_src_file")).as("src_files"))
-            else Seq.empty
-          val aggs = Seq(
-            max(coalesce(col("isDdl"), lit(false))).as("any_ddl"),
-            max(coalesce(col("type") === CanalEvent.Truncate, lit(false))).as("any_truncate"),
-            array_distinct(flatten(collect_set(map_keys(col("data"))))).as("src_cols")) ++
-            fileAgg
-          val statRows = flat0.groupBy("destination", "database", "table")
-            .agg(aggs.head, aggs.tail: _*)
-            .collect()
-          val files =
-            if (mode == IngressOrdering.FileOrder)
-              statRows.flatMap(r => Option(r.getSeq[String](6)).getOrElse(Seq.empty))
-                .distinct.sorted.toSeq
-            else Seq.empty
-          val tableStats = statRows
-            .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-              TableStat(r.getBoolean(3), r.getBoolean(4),
-                Option(r.getSeq[String](5)).getOrElse(Seq.empty)))
-            .toMap
-          val flat = DmlTransforms.withOrderKey(assignSeq(flat0, mode, files))
+          val stats = batchStats(flat0, mode == IngressOrdering.FileOrder)
+          val flat = DmlTransforms.withOrderKey(assignSeq(flat0, mode, stats.files.toSeq.sorted))
           // idle tables (no row in this batch) drop out here
           val active = configsRef.get().flatMap { c =>
-            tableStats.get((c.destination, c.dbMapping.database, c.dbMapping.table))
+            stats.tables.get((c.destination, c.dbMapping.database, c.dbMapping.table))
               .map(c -> _)
           }
-          val chains = active.map(_._1.dbMapping.targetTable).distinct.map { target =>
-            val chain = active.filter(_._1.dbMapping.targetTable == target)
+          graft.Chains.run(graft.Chains.byKey(active)(_._1.dbMapping.targetTable).map { chain =>
             () => chain.foreach { case (config, stat) =>
               applyTable(flat, config, stat, numPartitions, applyBatch, onDdl)
             }
-          }
-          runChains(chains)
+          })
         } finally flat0.unpersist()
         ()
       }
@@ -277,7 +315,11 @@ object CanalStream {
   }
 
   /** One config's share of a micro-batch: its DML segments between DDL /
-    * TRUNCATE barriers, each barrier applied in binlog order between them. */
+    * TRUNCATE barriers, each barrier applied in binlog order between them.
+    * Each segment runs as one job (shuffle + ordered apply); a table with
+    * barriers adds one job to collect them and, when one is DDL, one to
+    * derive every segment's source columns (a column may exist only after
+    * an ALTER). */
   private def applyTable(flat: DataFrame, config: MappingConfig, stat: TableStat,
                          numPartitions: Int,
                          applyBatch: (MappingConfig, DataFrame, SegmentCtx) => Unit,
@@ -288,12 +330,15 @@ object CanalStream {
       if (stat.hasDdl || stat.hasTruncate) DdlBarrier.ddlEvents(routedAll, config)
       else Seq.empty
     val dml = routedAll.where(!coalesce(col("isDdl"), lit(false)))
-    val ctx = SegmentCtx(if (stat.hasDdl) None else Some(stat.srcCols))
+    val segments = DdlBarrier.segments(dml, barriers)
+    val segmentCols =
+      if (stat.hasDdl) DdlBarrier.sourceCols(dml, barriers)
+      else segments.map(_ => stat.srcCols.toSeq.sorted)
     val pk = m.targetPk.values.toSeq.sorted
     val order = Seq("order_key", "sub_seq")
     // DDL and TRUNCATE act as ordering barriers (SURVEY §7.4 risk 4): apply
     // each DML segment, then its following barrier, sequentially
-    DdlBarrier.segments(dml, barriers).foreach { case (barrier, segment) =>
+    segments.zip(segmentCols).foreach { case ((barrier, segment), srcCols) =>
       barrier.filterNot(_.truncate).foreach(d => onDdl(config, d))
       // K2 pk-change expansion BEFORE the shuffle: the old-key DELETE
       // must route to the OLD key's partition to stay ordered against
@@ -309,57 +354,9 @@ object CanalStream {
         if (config.concurrent && !barrier.exists(_.truncate))
           PkHash.routeConcurrent(expanded, pk.map(p => s"data.$p"), numPartitions, order)
         else PkHash.routeSerial(expanded, order)
-      applyBatch(config, ordered, ctx)
+      applyBatch(config, ordered, SegmentCtx(Some(srcCols)))
     }
   }
-
-  /** Run a micro-batch's chains: a single chain on the calling thread,
-    * several on threads made for this batch (the first on the calling
-    * thread). Fresh threads inherit the stream thread's Spark local
-    * properties — batch id, job group, SQL execution id — where pooled
-    * ones would keep a previous batch's. Waits for every chain, then
-    * throws the first chain's failure with later ones suppressed.
-    *
-    * An interrupt of the calling thread (`StreamingQuery.stop()` interrupts
-    * the stream thread and joins only that thread) is passed on to the
-    * workers, and the call still returns only after every worker has
-    * ended: no chain outlives the batch, so a restart cannot overlap a
-    * leftover apply to the same target. The call then throws an
-    * `InterruptedException` with the thread's interrupt flag set again. */
-  private[streaming] def runChains(chains: Seq[() => Unit]): Unit =
-    if (chains.size <= 1) chains.foreach(_())
-    else {
-      val failures = new Array[Throwable](chains.size)
-      val workers = chains.zipWithIndex.tail.map { case (chain, i) =>
-        val t = new Thread(() => try chain() catch { case e: Throwable => failures(i) = e },
-          s"canal-stream-chain-$i")
-        t.setDaemon(true)
-        t.start()
-        t
-      }
-      try chains.head() catch { case e: Throwable => failures(0) = e }
-      var interrupted = false
-      def interruptWorkers(): Unit =
-        if (!interrupted) { interrupted = true; workers.foreach(_.interrupt()) }
-      if (failures(0).isInstanceOf[InterruptedException] || Thread.interrupted())
-        interruptWorkers()
-      workers.foreach { t =>
-        while (t.isAlive)
-          try t.join() catch { case _: InterruptedException => interruptWorkers() }
-      }
-      val errors = failures.filter(_ != null).toList
-      val thrown =
-        if (!interrupted) errors.headOption
-        else {
-          Thread.currentThread().interrupt()
-          Some(errors.collectFirst { case e: InterruptedException => e }
-            .getOrElse(new InterruptedException("micro-batch apply interrupted")))
-        }
-      thrown.foreach { first =>
-        errors.filterNot(_ eq first).foreach(first.addSuppressed)
-        throw first
-      }
-    }
 
   /**
    * Apply one routed+ordered micro-batch segment to a JDBC target (the
@@ -391,9 +388,9 @@ object CanalStream {
     // column absent from the probed target schema is warn-and-skipped when
     // true; when false the miss is a schema error (healed below). Mapped
     // columns come from the batch's own row images — via `sourceColsHint`
-    // when the caller already derived them ([[start]]'s single stats pass),
-    // else one distinct-keys agg here (the reference checks the same per
-    // row against metadata).
+    // when the caller already derived them ([[start]] passes them for every
+    // segment as `SegmentCtx.sourceCols`), else one distinct-keys agg here
+    // (the reference checks the same per row against metadata).
     val batchSourceCols = sourceColsHint.getOrElse {
       ordered
         .agg(array_distinct(flatten(collect_set(map_keys(col("data"))))).as("ks"))

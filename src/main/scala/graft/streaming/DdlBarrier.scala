@@ -47,23 +47,61 @@ object DdlBarrier {
       .sortBy(_.seq)
   }
 
-  /** Split the routed DML rows at the split points, in apply order: each
-    * entry is (split point to apply first → rows up to the next point). A
+  /** One entry of a table's split micro-batch: the rows whose `seq` lies
+    * strictly between `after` and `before` (a missing bound is open) or,
+    * for a TRUNCATE point, exactly the TRUNCATE row at `at` — applied after
+    * `barrier`. The row test exists twice, as a column filter and as a
+    * per-row check, and both read these bounds only. */
+  private final case class Segment(barrier: Option[DdlEvent], after: Option[Long] = None,
+                                   before: Option[Long] = None, at: Option[Long] = None) {
+    /** The filter's verdict on a row at `seq` (None: a null `seq`). */
+    def holds(seq: Option[Long]): Boolean =
+      at.fold(after.forall(a => seq.exists(_ > a)) && before.forall(b => seq.exists(_ < b)))(
+        a => seq.contains(a))
+
+    def rows(routed: DataFrame): DataFrame = {
+      val seq = col("seq")
+      val bounds = at.map(seq === _).toSeq ++ after.map(seq > _) ++ before.map(seq < _)
+      bounds.reduceOption(_ && _).fold(routed)(routed.where)
+    }
+  }
+
+  /** The split of a table's rows at the split points, in apply order: a
     * DDL point's entry carries the rows after it; a `truncate` point's
     * entry carries just its TRUNCATE row, and the rows after it follow in
     * an entry of their own. */
-  def segments(routed: DataFrame, ddl: Seq[DdlEvent]): Seq[(Option[DdlEvent], DataFrame)] = {
-    val seq = col("seq")
+  private def split(ddl: Seq[DdlEvent]): Seq[Segment] = {
     val bounds = ddl.map(_.seq)
-    val first = bounds.headOption.fold(routed)(b => routed.where(seq < b))
-    (Option.empty[DdlEvent], first) +: ddl.zipWithIndex.flatMap { case (d, i) =>
-      val after = bounds.lift(i + 1) match {
-        case Some(u) => routed.where(seq > d.seq && seq < u)
-        case None => routed.where(seq > d.seq)
-      }
-      if (d.truncate) Seq((Some(d), routed.where(seq === d.seq)), (None, after))
-      else Seq((Some(d), after))
+    Segment(None, before = bounds.headOption) +: ddl.zipWithIndex.flatMap { case (d, i) =>
+      val rest = Segment(None, after = Some(d.seq), before = bounds.lift(i + 1))
+      if (d.truncate) Seq(Segment(Some(d), at = Some(d.seq)), rest)
+      else Seq(rest.copy(barrier = Some(d)))
     }
+  }
+
+  /** Split the routed DML rows at the split points, in apply order: each
+    * entry is (split point to apply first → rows up to the next point). */
+  def segments(routed: DataFrame, ddl: Seq[DdlEvent]): Seq[(Option[DdlEvent], DataFrame)] =
+    split(ddl).map(s => (s.barrier, s.rows(routed)))
+
+  /** The distinct source columns (`data` map keys) of each of
+    * [[segments]]`(routed, ddl)`'s entries, in the same order, from one
+    * shuffle-free job: each partition folds its rows into per-entry key
+    * sets, merged on the driver. */
+  def sourceCols(routed: DataFrame, ddl: Seq[DdlEvent]): Seq[Seq[String]] = {
+    val segs = split(ddl)
+    val partials = routed.select(col("seq"), map_keys(col("data"))).rdd.mapPartitions { rows =>
+      val keys = Array.fill(segs.size)(Set.empty[String])
+      rows.foreach { r =>
+        val seq = if (r.isNullAt(0)) None else Some(r.getLong(0))
+        val i = segs.indexWhere(_.holds(seq))
+        if (i >= 0 && !r.isNullAt(1)) keys(i) ++= r.getSeq[String](1)
+      }
+      Iterator.single(keys.toSeq)
+    }.collect()
+    partials.foldLeft(Seq.fill(segs.size)(Set.empty[String]))((a, b) => a.zip(b).map {
+      case (x, y) => x ++ y
+    }).map(_.toSeq.sorted)
   }
 
   /**

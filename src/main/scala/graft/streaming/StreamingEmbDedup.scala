@@ -162,8 +162,8 @@ object StreamingEmbDedup {
    * `foreachBatch` bridge from the stream to the BATCH signature store:
    * reduce the micro-batch's band verdicts, then absorb the kept vectors'
    * deep-banding signatures (the batch family's d64_r16b128 config, signed
-   * by [[Similarity.lshSigRowsTyped]] — the stream-internal shallow
-   * banding never leaves the state store) into
+   * by the store's own batch signer, `Stores.EmbSigs.rowsOf` — the
+   * stream-internal shallow banding never leaves the state store) into
    * [[graft.queries.Materialized.embeddingSignatures]]'s store, so batch
    * jobs (`dedupIncrementalEmb`) judge future data against streaming keeps
    * too. Exactly-once per (streamId, micro-batch id) via the store ledger,
@@ -174,11 +174,9 @@ object StreamingEmbDedup {
                     bandVerdicts: DataFrame, streamId: String,
                     microBatchId: Long): DataFrame = {
     val (v, keptVecs) = keptVectors(bandVerdicts)
-    graft.queries.Materialized.absorb(spark, sfDir,
-      graft.queries.Materialized.Stores.EmbSigs,
-      Similarity.lshSigRowsTyped(keptVecs, "docId", "vec",
-        bands = 128, planesPerBand = 16, dims = 64),
-      s"$streamId-$microBatchId")
+    val store = graft.queries.Materialized.Stores.EmbSigs
+    graft.queries.Materialized.absorb(spark, sfDir, store,
+      store.rowsOf(spark, sfDir, keptVecs, "docId", "vec"), s"$streamId-$microBatchId")
     v
   }
 

@@ -209,10 +209,9 @@ object StreamingNearDedup {
     // different queries feeding the same store both start at micro-batch 0,
     // and without the caller-chosen streamId the second stream's early
     // batches would silently no-op against the first's ledger entries
-    graft.queries.Materialized.absorb(spark, sfDir,
-      graft.queries.Materialized.Stores.MinhashSigs,
-      graft.llm.Dedup.minhashSignatureTable(keptDocs, "docId", "text"),
-      s"$streamId-$microBatchId")
+    val store = graft.queries.Materialized.Stores.MinhashSigs
+    graft.queries.Materialized.absorb(spark, sfDir, store,
+      store.rowsOf(spark, sfDir, keptDocs, "docId", "text"), s"$streamId-$microBatchId")
     v
   }
 

@@ -178,6 +178,39 @@ class EtlJobSpec extends AnyFunSuite {
     assert(byName.size == 1 && byName.head.succeeded && byName.head.importedCount > 0)
   }
 
+  test("X3 fan-out: target tables import concurrently, a shared target in config order, results in selected order") {
+    val u = "jdbc:derby:memory:etlfanout;create=true"
+    val c = DriverManager.getConnection(u)
+    try Seq("A", "B").foreach(t => c.createStatement().execute(
+      s"""CREATE TABLE "FAN"."$t" ("ID" BIGINT PRIMARY KEY,
+         | "C_NAME" VARCHAR(64), "C_NATIONKEY" INT, "C_MKTSEGMENT" VARCHAR(32))""".stripMargin))
+    finally c.close()
+    def cfg(target: String, cond: String) = config.copy(destination = "fan",
+      dbMapping = config.dbMapping.copy(targetTable = target, etlCondition = cond))
+    // a1 and a2 share FAN.A; b writes FAN.B
+    val configs = Map("a1" -> cfg("FAN.A", "c_nationkey < {0}"),
+      "a2" -> cfg("FAN.A", "c_nationkey >= {0}"), "b" -> cfg("FAN.B", "c_nationkey = 1"))
+    val selected = configs.values.filter(_.destination == "fan").toSeq
+    val startedAt = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    val name = configs.map { case (k, v) => v -> k }
+    val src = (m: MappingConfig) => {
+      startedAt.put(name(m), System.nanoTime())
+      // a1 holds FAN.A's chain long enough that a concurrent a2 would start
+      if (name(m) == "a1") Thread.sleep(1000)
+      EtlJob.EtlSource.Parquet(s"${TestSpark.sf}/customer.parquet")
+    }
+    val results = EtlJob.etl(spark, "fan", configs, Seq("5"), src, DerbyConn.factory(u),
+      dialect = DeleteInsertDialect)
+    val customers = spark.read.parquet(s"${TestSpark.sf}/customer.parquet")
+    val expected = selected.map(m => customers.where(
+      graft.transform.Conditions.substitute(m.dbMapping.etlCondition, Seq("5"))).count())
+    assert(results.map(_.importedCount) == expected && results.forall(_.succeeded))
+    assert(startedAt.get("a2") - startedAt.get("a1") >= 1000L * 1000 * 1000,
+      "a2 started before a1's import finished")
+    assert(startedAt.get("b") < startedAt.get("a1") + 1000L * 1000 * 1000,
+      "FAN.B waited for FAN.A's chain")
+  }
+
   test("failed import returns an EtlResult error, not an exception (X3)") {
     val bad = config.copy(dbMapping = config.dbMapping.copy(targetTable = "NO.SUCH_TABLE"))
     val r = EtlJob.importOne(spark, bad, s"${TestSpark.sf}/customer.parquet",

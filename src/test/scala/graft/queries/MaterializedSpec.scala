@@ -50,12 +50,10 @@ class MaterializedSpec extends AnyFunSuite {
     def fromVecs(s: Materialized.Store) = s.rowsOf(spark, TestSpark.sf, vecs, "vec_id", "embedding")
     Seq(
       (Stores.MinhashSigs, Materialized.minhashSignatures _,
-        Dedup.minhashSignatureTable(docs, "doc_id", "text")),
+        Stores.MinhashSigs.rowsOf(spark, TestSpark.sf, docs, "doc_id", "text")),
       (Stores.ContentHashes, Materialized.contentHashes _,
         docs.select(col("doc_id").as("id"), Dedup.contentHashSafe(col("text")).as("h"))),
-      (Stores.EmbSigs, Materialized.embeddingSignatures _,
-        Similarity.lshSigRowsTyped(vecs, "vec_id", "embedding",
-          bands = 128, planesPerBand = 16, dims = 64)),
+      (Stores.EmbSigs, Materialized.embeddingSignatures _, fromVecs(Stores.EmbSigs)),
       (Stores.HammingSigs, Materialized.hammingSigs _, fromVecs(Stores.HammingSigs)),
       (Stores.Q8Codes, Materialized.q8Codes _, fromVecs(Stores.Q8Codes)),
       (Stores.HammingSigsIvf, Materialized.hammingSigsIvf _, fromVecs(Stores.HammingSigsIvf)),
@@ -111,6 +109,20 @@ class MaterializedSpec extends AnyFunSuite {
           Tables.documents(spark, TestSpark.sf), "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
       assert(fresh == stored, "stored signatures must equal a fresh signing")
+    }
+  }
+
+  test("the MinHash and LSH signature stores sign a batch exactly as their base build signs the corpus") {
+    withTempStore { _ =>
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+      val docs = Tables.documents(spark, TestSpark.sf).where(col("doc_id") < 40)
+      val vecs = Tables.embeddings(spark, TestSpark.sf).where(col("vec_id") < 40)
+      val minhash = rows(Stores.MinhashSigs.rowsOf(spark, TestSpark.sf, docs, "doc_id", "text"))
+      assert(minhash.nonEmpty)
+      assert(minhash == rows(Materialized.minhashSignatures(spark, TestSpark.sf).where(col("id") < 40)))
+      val lsh = rows(Stores.EmbSigs.rowsOf(spark, TestSpark.sf, vecs, "vec_id", "embedding"))
+      assert(lsh.nonEmpty)
+      assert(lsh == rows(Materialized.embeddingSignatures(spark, TestSpark.sf).where(col("id") < 40)))
     }
   }
 

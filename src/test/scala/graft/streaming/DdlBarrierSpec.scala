@@ -10,6 +10,7 @@ import java.io.File
 import java.nio.file.Files
 import java.sql.DriverManager
 import java.util.concurrent.atomic.AtomicReference
+import scala.jdk.CollectionConverters._
 
 class DdlBarrierSpec extends AnyFunSuite {
   @transient lazy val spark = TestSpark.spark
@@ -59,6 +60,21 @@ class DdlBarrierSpec extends AnyFunSuite {
     assert(segs.map(_._1.map(_.truncate)) == Seq(None, Some(true), None))
     assert(segs.map(_._2.select("seq").collect().map(_.getLong(0)).sorted.toSeq) ==
       Seq(Seq(1L, 2L), Seq(3L), Seq(4L)))
+  }
+
+  test("sourceCols gives each segment the source columns of its own rows, in segment order") {
+    import spark.implicits._
+    val dml = Seq(
+        (1L, Map("id" -> "1", "a" -> "x")), (2L, Map("id" -> "2")),
+        (4L, Map("id" -> "3", "b" -> "y")), (5L, null), (7L, Map("id" -> "4", "c" -> "z")))
+      .toDF("seq", "data").repartition(3)
+    val ddl = Seq(DdlBarrier.DdlEvent(3, "ALTER x"),
+      DdlBarrier.DdlEvent(5, null, truncate = true))
+    // entries: [seq < 3], ALTER x → (3, 5), TRUNCATE → {5}, (5, ∞)
+    assert(DdlBarrier.segments(dml, ddl).size == 4)
+    assert(DdlBarrier.sourceCols(dml, ddl) ==
+      Seq(Seq("a", "id"), Seq("b", "id"), Seq.empty, Seq("c", "id")))
+    assert(DdlBarrier.sourceCols(dml, Seq.empty) == Seq(Seq("a", "b", "c", "id")))
   }
 
   test("streaming TRUNCATE (isDdl=false) is a barrier across 4 PK partitions") {
@@ -117,6 +133,7 @@ class DdlBarrierSpec extends AnyFunSuite {
     Files.write(new File(dir, "b.json").toPath, events.mkString("\n").getBytes("UTF-8"))
 
     val ddlSeen = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val colsSeen = new java.util.concurrent.CopyOnWriteArrayList[Option[Seq[String]]]()
     val raw = spark.readStream.schema("value STRING").text(dir.getAbsolutePath)
     val ref = new AtomicReference[Seq[MappingConfig]](Seq(config))
     // probe the schema fresh per segment — after the DDL the new column appears
@@ -124,10 +141,10 @@ class DdlBarrierSpec extends AnyFunSuite {
       (cfg, ordered, ctx) => {
         val schema = graft.sink.SchemaProbe.probe(cfg.dbMapping,
           DerbyConn.factory(url), DeleteInsertDialect)
-        // ctx.sourceCols is None here — this table has a DDL barrier in the
-        // batch, so columns re-derive per segment (post-ALTER columns exist
-        // only in the later segment)
-        assert(ctx.sourceCols.isEmpty)
+        // this table has a DDL barrier in the batch, so each segment
+        // carries its own columns (post-ALTER columns exist only in a later
+        // segment)
+        colsSeen.add(ctx.sourceCols)
         CanalStream.applyBatchToJdbc(cfg, ordered, schema,
           DerbyConn.factory(url), DeleteInsertDialect, sourceColsHint = ctx.sourceCols)
       },
@@ -146,6 +163,7 @@ class DdlBarrierSpec extends AnyFunSuite {
     q.stop()
 
     assert(ddlSeen.size() == 1)
+    assert(colsSeen.asScala.toSeq == Seq(Some(Seq("id", "name")), Some(Seq("id", "name"))))
     val rs = DriverManager.getConnection(url).createStatement().executeQuery(
       """SELECT "ID", "NAME", "AGE" FROM "MYTEST2"."USER" ORDER BY "ID"""")
     val out = scala.collection.mutable.ListBuffer[(Long, String, Any)]()

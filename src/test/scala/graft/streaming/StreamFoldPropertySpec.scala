@@ -21,7 +21,9 @@ import scala.util.Random
  * `CanalStream.materialize` over the whole log coerced to the target schema.
  * Logs carry repeated keys, PK-changing UPDATEs, DELETEs and a mid-log
  * TRUNCATE; each seed runs with `concurrent` true and false at 1 and 4
- * partitions.
+ * partitions. The same logs written as five files and drained three files
+ * per micro-batch at 8 partitions check that a batch spanning files merges
+ * their stats and ranks their rows.
  */
 class StreamFoldPropertySpec extends AnyFunSuite {
   @transient lazy val spark = TestSpark.spark
@@ -57,14 +59,17 @@ class StreamFoldPropertySpec extends AnyFunSuite {
     }
   }
 
-  /** Write the log as two files, the first one older (the file source
-    * takes the oldest file first). */
-  private def writeLog(seed: Int): Path = {
+  /** Write the log as `files` files, each older than the next (the file
+    * source takes the oldest file first): the first ends at a random point
+    * in the log's middle half, the rest split the remainder evenly. */
+  private def writeLog(seed: Int, files: Int = 2): Path = {
     val rnd = new Random(seed)
     val log = randomLog(rnd)
     val dir = Files.createTempDirectory(s"canal-fold-$seed")
-    val (a, b) = log.splitAt(log.size / 4 + rnd.nextInt(log.size / 2))
-    Seq(a, b).zipWithIndex.foreach { case (lines, i) =>
+    val (head, rest) = log.splitAt(log.size / 4 + rnd.nextInt(log.size / 2))
+    val n = files - 1
+    val parts = head +: (0 until n).map(i => rest.slice(i * rest.size / n, (i + 1) * rest.size / n))
+    parts.zipWithIndex.foreach { case (lines, i) =>
       val f = dir.resolve(f"log-$i%03d.json")
       Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
       Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000000L + i * 60000L))
@@ -84,41 +89,64 @@ class StreamFoldPropertySpec extends AnyFunSuite {
     SchemaProbe.probe(foldMapping, DerbyConn.factory(url), DeleteInsertDialect)
   }
 
-  private def drain(dir: Path, url: String, concurrent: Boolean, numPartitions: Int): Seq[Row3] = {
+  /** The target table after draining `dir`, and the number of micro-batches
+    * that carried rows. */
+  private def drain(dir: Path, url: String, concurrent: Boolean, numPartitions: Int,
+                    filesPerTrigger: Int = 1): (Seq[Row3], Int) = {
     val schema = createTarget(url)
     val cfg = MappingConfig(dataSourceKey = "ds", destination = "example", groupId = "g1",
       concurrent = concurrent, dbMapping = foldMapping)
     val q = CanalStream.start(spark,
-      spark.readStream.schema("value STRING").option("maxFilesPerTrigger", "1").text(dir.toString),
+      spark.readStream.schema("value STRING")
+        .option("maxFilesPerTrigger", filesPerTrigger.toString).text(dir.toString),
       new AtomicReference[Seq[MappingConfig]](Seq(cfg)), numPartitions,
       (cf, ordered, ctx) => CanalStream.applyBatchToJdbc(cf, ordered, schema,
         DerbyConn.factory(url), DeleteInsertDialect, sourceColsHint = ctx.sourceCols),
       ordering = CanalStream.IngressOrdering.FileOrder)
     try q.processAllAvailable() finally q.stop()
+    val batches = q.recentProgress.count(_.numInputRows > 0)
     val cc = DriverManager.getConnection(url)
     try {
       val rs = cc.createStatement().executeQuery(
         """SELECT "ID", "NAME", "SCORE" FROM "FOLD"."T" ORDER BY "ID"""")
       val out = scala.collection.mutable.ListBuffer[Row3]()
       while (rs.next()) out += ((rs.getLong(1), rs.getString(2), rs.getInt(3)))
-      out.toSeq
+      (out.toSeq, batches)
     } finally cc.close()
+  }
+
+  /** The batch fold of the log under `dir`, coerced to the target schema. */
+  private def expectedOf(dir: Path, seed: Int): Seq[Row3] = {
+    val folded = CanalStream.materialize(
+      CanalStream.parse(spark.read.text(dir.toString).toDF("value")),
+      pkCols = Seq("id"), payload = Seq("name", "score"))
+    val targetSchema = createTarget(s"jdbc:derby:memory:foldschema$seed;create=true")
+    val expected = Coercion.coerceTo(folded, targetSchema).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq
+    assert(expected.nonEmpty, s"seed $seed: the log folds to an empty table")
+    expected
   }
 
   Seq(11, 23, 37).foreach { seed =>
     test(s"stream ≡ materialize on a random log (seed $seed; concurrent × 1|4 partitions)") {
       val dir = writeLog(seed)
-      val folded = CanalStream.materialize(
-        CanalStream.parse(spark.read.text(dir.toString).toDF("value")),
-        pkCols = Seq("id"), payload = Seq("name", "score"))
-      val targetSchema = createTarget(s"jdbc:derby:memory:foldschema$seed;create=true")
-      val expected = Coercion.coerceTo(folded, targetSchema).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1).toSeq
-      assert(expected.nonEmpty, s"seed $seed: the log folds to an empty table")
+      val expected = expectedOf(dir, seed)
       for (concurrent <- Seq(true, false); parts <- Seq(1, 4)) {
         val url = s"jdbc:derby:memory:fold${seed}_${concurrent}_$parts;create=true"
-        assert(drain(dir, url, concurrent, parts) == expected,
+        assert(drain(dir, url, concurrent, parts)._1 == expected,
           s"seed $seed, concurrent=$concurrent, numPartitions=$parts")
+      }
+    }
+  }
+
+  Seq(11, 23, 37).foreach { seed =>
+    test(s"stream ≡ materialize, 5 files drained 3 per batch (seed $seed; concurrent × 8 partitions)") {
+      val dir = writeLog(seed, files = 5)
+      val expected = expectedOf(dir, seed + 1000)
+      for (concurrent <- Seq(true, false)) {
+        val url = s"jdbc:derby:memory:fold3f${seed}_$concurrent;create=true"
+        assert(drain(dir, url, concurrent, 8, filesPerTrigger = 3) == ((expected, 2)),
+          s"seed $seed, concurrent=$concurrent")
       }
     }
   }

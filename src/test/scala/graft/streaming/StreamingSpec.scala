@@ -113,11 +113,12 @@ class StreamingSpec extends AnyFunSuite {
     val ta = seen.filter(e => e._1 == "ta" || e._1 == "ddl:ta")
     val tb = seen.filter(_._1 == "tb")
     // ta: [DML < ddl] ; DDL ; [DML > ddl] — offsets place the UPDATE after
-    // the barrier even though (es, ts) are identical everywhere
+    // the barrier even though (es, ts) are identical everywhere; each
+    // segment carries its own source columns
     assert(ta.size == 3)
-    assert(ta(0) == (("ta", Seq((p0 + 100, "INSERT", "a0")), None)))
+    assert(ta(0) == (("ta", Seq((p0 + 100, "INSERT", "a0")), Some(Set("id", "v")))))
     assert(ta(1)._1 == "ddl:ta" && ta(1)._2.head._1 == p0 + 101)
-    assert(ta(2) == (("ta", Seq((p0 + 102, "UPDATE", "a1")), None)))
+    assert(ta(2) == (("ta", Seq((p0 + 102, "UPDATE", "a1")), Some(Set("id", "v")))))
     // tb: no DDL → single segment, per-partition offset order within it, and
     // the source columns came from the batch-level stats pass (no extra agg)
     assert(tb == Seq(("tb",
@@ -155,6 +156,38 @@ class StreamingSpec extends AnyFunSuite {
     val seqs = got.get(0).map(_._3)
     assert(seqs.map(_ >> 42) == Seq(0L, 0L, 1L), seqs)
     assert(seqs(0) < seqs(1))
+  }
+
+  test("FileOrder ingress: a batch spanning files merges the stats of every file") {
+    val dir = Files.createTempDirectory("canal-statsmerge")
+    // table sm's source columns differ between the files; table sn appears
+    // in the last file only
+    val files = Seq(
+      Seq(canal("sm", 1, "INSERT", 1, "a"), canal("sm", 2, "INSERT", 2, "b")),
+      Seq("""{"destination":"example","groupId":"g1","database":"mytest","table":"sm","type":"UPDATE","isDdl":false,"es":3,"ts":3,"data":[{"id":"1","w":"x"}],"old":[{"w":"y"}]}"""),
+      Seq(canal("sn", 4, "INSERT", 9, "z")))
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val f = dir.resolve(s"part-$i.json")
+      Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+      Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+    }
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, (Option[Seq[String]], Seq[Long])]()
+    val q = CanalStream.start(spark,
+      spark.readStream.schema("value STRING").option("maxFilesPerTrigger", "3").text(dir.toString),
+      new AtomicReference[Seq[MappingConfig]](Seq(cfgFor("sm", "SM.T"), cfgFor("sn", "SN.T"))),
+      numPartitions = 2,
+      (cfg, ordered, ctx) => seen.put(cfg.dbMapping.table, (ctx.sourceCols,
+        ordered.orderBy("order_key", "sub_seq").select(col("seq")).collect()
+          .map(_.getLong(0) >> 42).toSeq)),
+      ordering = CanalStream.IngressOrdering.FileOrder)
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "the three files were not one batch")
+    assert(seen.keySet.asScala == Set("sm", "sn"))
+    // sm's columns are the union over both of its files; each row's seq
+    // carries the rank of its file among all three
+    assert(seen.get("sm") == ((Some(Seq("id", "v", "w")), Seq(0L, 0L, 1L))))
+    assert(seen.get("sn") == ((Some(Seq("id", "v")), Seq(2L))))
   }
 
   test("event-time windowed aggregation with watermark (streaming run)") {
@@ -493,7 +526,7 @@ class StreamingSpec extends AnyFunSuite {
   test("runChains waits for every chain and throws the first failure, later ones suppressed") {
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val e = intercept[IllegalStateException] {
-      CanalStream.runChains(Seq(
+      graft.Chains.run(Seq(
         () => throw new IllegalStateException("first"),
         () => { Thread.sleep(300); done.set(true) },
         () => throw new IllegalArgumentException("third")))
@@ -504,7 +537,7 @@ class StreamingSpec extends AnyFunSuite {
     // a single chain runs on the calling thread
     val caller = Thread.currentThread()
     var ranOn: Thread = null
-    CanalStream.runChains(Seq(() => ranOn = Thread.currentThread()))
+    graft.Chains.run(Seq(() => ranOn = Thread.currentThread()))
     assert(ranOn eq caller)
   }
 
