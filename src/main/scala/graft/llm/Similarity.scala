@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -1156,6 +1157,17 @@ object Similarity {
 
   def superBitKernel(v: Seq[Double]): (Long, Long) = packSketch(superBitProj(v))
 
+  /** The one dims guard of the packed-code builds and searches — the
+    * driver-side twin of [[superBitProj]]'s executor require, so a bad
+    * call fails at validation, not mid-job: both codes pack into 64-bit
+    * words and the 128 planes cover at most 64 dims. */
+  private def requireSketch(dims: Int, bitsPerDim: Int = 2): Unit = {
+    require(bitsPerDim == 1 || bitsPerDim == 2,
+      s"bitsPerDim must be 1 (axis signs) or 2 (densified sign sketch), got $bitsPerDim")
+    require(dims >= 1 && dims <= 64,
+      s"the packed sign codes cover 1 to 64 dims, got $dims")
+  }
+
   /**
    * Batch kNN join through a Hamming prefilter over [[binarySig]]
    * signatures with exact-cosine rerank — the 1-bit ANN regime:
@@ -1186,27 +1198,17 @@ object Similarity {
                      vecCol: String, qIdCol: String, k: Int, dims: Int,
                      oversample: Int = 4, excludeSelf: Boolean = true,
                      maxQueries: Int = 4096, bitsPerDim: Int = 1): DataFrame = {
-    require(bitsPerDim == 1 || bitsPerDim == 2,
-      s"bitsPerDim must be 1 (axis signs) or 2 (densified sign sketch), got $bitsPerDim")
-    // driver-side twin of superBitKernel's executor require: a dims > 64
-    // call must fail at validation, not mid-job on an executor
-    if (bitsPerDim == 2) require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
+    requireSketch(dims, bitsPerDim)
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val q = hammingQueryTable(spark, qRows, bitsPerDim, dims)
+    val q = hammingQueryTable(spark,
+      collectHammingQueries(queries, vecCol, qIdCol, maxQueries), bitsPerDim, dims)
     val base = hammingBase(corpus, idCol, vecCol)
     val sigged =
       if (bitsPerDim == 1)
         base.select(col("neighbor_id"), binarySig(col("v"), dims).as("sig"))
-      else base.select(col("neighbor_id"), col("v"))
-        .as[(Long, Seq[Double])]
-        .map { case (id, v) =>
-          val (lo, hi) = superBitKernel(v)
-          (id, lo, hi)
-        }.toDF("neighbor_id", "slo", "shi")
-    hammingSearchFromSigged(base, sigged, q, bitsPerDim, excludeSelf, k, oversample)
+      else liveSketches(base).toDF("neighbor_id", "slo", "shi")
+    rerank(base, hammingCandidates(sigged, q, bitsPerDim, excludeSelf, k * oversample),
+      k, "hamming", requireCoverage = false)
   }
 
   /** The zero-norm-filtered raw-vector corpus view every Hamming-family
@@ -1219,67 +1221,94 @@ object Similarity {
       .withColumn("nrm", norm(col("v")))
       .where(col("nrm") > 0.0)
 
+  /** The live re-sketch of a [[hammingBase]] view: `(id, slo, shi)`. */
+  private def liveSketches(base: DataFrame): Dataset[(Long, Long, Long)] = {
+    import base.sparkSession.implicits._
+    base.select(col("neighbor_id"), col("v"))
+      .as[(Long, Seq[Double])]
+      .map { case (id, v) =>
+        val (lo, hi) = superBitKernel(v)
+        (id, lo, hi)
+      }
+  }
+
+  /** Broadcast-side query table `(query_id, qv, qn)` the rerank reads. */
+  private def queryTable(spark: SparkSession,
+      qRows: Array[(Long, Seq[Double], Double)]): DataFrame = {
+    import spark.implicits._
+    qRows.toSeq.toDF("query_id", "qv", "qn")
+  }
+
   /** Broadcast query table of the SDC cut (signatures beside the vector
     * and norm the rerank needs). */
-  private def hammingQueryTable(spark: org.apache.spark.sql.SparkSession,
+  private def hammingQueryTable(spark: SparkSession,
       qRows: Array[(Long, Seq[Double], Double)], bitsPerDim: Int,
       dims: Int): DataFrame = {
     import spark.implicits._
-    if (bitsPerDim == 1) qRows.toSeq.toDF("query_id", "qv", "qn")
-      .withColumn("qsig", binarySig(col("qv"), dims))
+    if (bitsPerDim == 1)
+      queryTable(spark, qRows).withColumn("qsig", binarySig(col("qv"), dims))
     else qRows.toSeq.map { case (qid, v, qn) =>
       val (lo, hi) = superBitKernel(v)
       (qid, v, qn, lo, hi)
     }.toDF("query_id", "qv", "qn", "qlo", "qhi")
   }
 
-  /** SDC stage 1 + exact rerank from a prepared signature view `sigged`
-    * (`(neighbor_id, sig)` or `(neighbor_id, slo, shi)`) — the ONE body
-    * behind [[knnJoinHamming]] and [[knnJoinHammingFromSigs]], so the
-    * live and stored paths are equivalent by construction. */
-  private def hammingSearchFromSigged(base: DataFrame, sigged: DataFrame,
-      q: DataFrame, bitsPerDim: Int, excludeSelf: Boolean, k: Int,
-      oversample: Int, requireCoverage: Boolean = false): DataFrame =
-    rerankHammingCandidates(base,
-      hammingCandidates(sigged, q, bitsPerDim, excludeSelf, k, oversample),
-      k, "hamming", requireCoverage)
+  /** Hamming distance between the packed 2-bit sketch words and the
+    * query's — two `bit_count(xor)` per row. */
+  private def sketchHamming: Column =
+    (call_function("bit_count", col("slo").bitwiseXOR(col("qlo"))) +
+      call_function("bit_count", col("shi").bitwiseXOR(col("qhi")))).cast("long")
 
-  /** Stage 1 of the SDC family from a prepared signature view: Hamming
+  private def dropSelf(scored: DataFrame, excludeSelf: Boolean): DataFrame =
+    if (excludeSelf) scored.where(col("neighbor_id") =!= col("query_id")) else scored
+
+  /** The stage-1 cut of every Hamming-family search: each `keys` group
+    * keeps its `limit` best rows by `order` — the `row_number <= limit`
+    * filter is pushed into WindowGroupLimit, so each partition forwards
+    * at most that many rows per group into the exchange. */
+  private def cutTop(scored: DataFrame, keys: Seq[String], limit: Int,
+                     order: Column*): DataFrame =
+    scored.withColumn("hrank", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+      .where(col("hrank") <= limit)
+
+  private def byHamming: Seq[Column] = Seq(col("hamming"), col("neighbor_id"))
+
+  /** Stage-1 candidates joined to the query vectors the rerank needs. */
+  private def withQueries(cand: DataFrame, q: DataFrame): DataFrame =
+    cand.join(q.select(col("query_id"), col("qv"), col("qn")), "query_id")
+
+  /** Stage 1 of the SDC family from a prepared signature view `sigged`
+    * (`(neighbor_id, sig)` or `(neighbor_id, slo, shi)`): Hamming
     * distance to every broadcast query signature, per-query cut to
-    * k·oversample via WindowGroupLimit — shared by the exact-rerank
-    * searches and the SQ-rerank search so candidacy cannot diverge. */
-  private def hammingCandidates(sigged: DataFrame,
-      q: DataFrame, bitsPerDim: Int, excludeSelf: Boolean, k: Int,
-      oversample: Int): DataFrame = {
+    * `limit` — shared by the live, stored and SQ-rerank searches so
+    * candidacy cannot diverge. */
+  private def hammingCandidates(sigged: DataFrame, q: DataFrame,
+      bitsPerDim: Int, excludeSelf: Boolean, limit: Int): DataFrame = {
     val qSigCols =
       if (bitsPerDim == 1) Seq(col("query_id"), col("qsig"))
       else Seq(col("query_id"), col("qlo"), col("qhi"))
-    val scored0 = sigged.crossJoin(broadcast(q.select(qSigCols: _*)))
-    val scored = (if (excludeSelf) scored0.where(col("neighbor_id") =!= col("query_id"))
-                  else scored0)
+    val scored = dropSelf(sigged.crossJoin(broadcast(q.select(qSigCols: _*))), excludeSelf)
       .withColumn("hamming",
         if (bitsPerDim == 1)
           call_function("bit_count", col("sig").bitwiseXOR(col("qsig"))).cast("long")
-        else
-          (call_function("bit_count", col("slo").bitwiseXOR(col("qlo"))) +
-            call_function("bit_count", col("shi").bitwiseXOR(col("qhi")))).cast("long"))
-    val wh = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("hamming"), col("neighbor_id"))
-    scored.withColumn("hrank", row_number().over(wh))
-      .where(col("hrank") <= k * oversample)
-      .select(col("query_id"), col("neighbor_id"), col("hamming"))
-      .join(q.select(col("query_id"), col("qv"), col("qn")), "query_id")
+        else sketchHamming)
+    withQueries(cutTop(scored, Seq("query_id"), limit, byHamming: _*)
+      .select(col("query_id"), col("neighbor_id"), col("hamming")), q)
   }
 
   /** ADC stage 1 + exact rerank from prepared `(id, slo, shi)` sketch
     * rows — the ONE body behind [[knnJoinHammingAdc]] and
     * [[knnJoinHammingAdcFromSigs]]. */
-  private def adcSearchFromSketches(base: DataFrame,
-      sketches: org.apache.spark.sql.Dataset[(Long, Long, Long)],
-      q: DataFrame, qProj: Array[(Long, Array[Long])], excludeSelf: Boolean,
-      k: Int, oversample: Int, requireCoverage: Boolean = false): DataFrame = {
+  private def adcSearch(base: DataFrame, sketches: Dataset[(Long, Long, Long)],
+      qRows: Array[(Long, Seq[Double], Double)], excludeSelf: Boolean,
+      k: Int, oversample: Int, requireCoverage: Boolean): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
+    // per-query projection table, computed once on the driver and shipped
+    // in the task closure (≤ maxQueries × 1 KB)
+    val qProj: Array[(Long, Array[Long])] =
+      qRows.map { case (qid, v, _) => (qid, superBitProj(v)) }
     val exSelf = excludeSelf
     val scored = sketches
       .flatMap { case (nid, lo, hi) =>
@@ -1287,13 +1316,11 @@ object Similarity {
           .filter { case (qid, _) => !exSelf || qid != nid }
           .map { case (qid, qp) => (nid, qid, adcScoreKernel(qp, lo, hi)) }
       }.toDF("neighbor_id", "query_id", "ascore")
-    val wh = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("ascore").desc, col("neighbor_id"))
-    val cand = scored.withColumn("hrank", row_number().over(wh))
-      .where(col("hrank") <= k * oversample)
+    val cand = cutTop(scored, Seq("query_id"), k * oversample,
+        col("ascore").desc, col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("ascore"))
-      .join(q.select(col("query_id"), col("qv"), col("qn")), "query_id")
-    rerankHammingCandidates(base, cand, k, "ascore", requireCoverage)
+    rerank(base, withQueries(cand, queryTable(spark, qRows)), k, "ascore",
+      requireCoverage)
   }
 
   /**
@@ -1322,24 +1349,11 @@ object Similarity {
                         vecCol: String, qIdCol: String, k: Int, dims: Int,
                         oversample: Int = 4, excludeSelf: Boolean = true,
                         maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
-    val spark = corpus.sparkSession
-    import spark.implicits._
+    requireSketch(dims)
     val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    // per-query projection table, computed once on the driver and shipped
-    // in the task closure (≤ maxQueries × 1 KB)
-    val qProj: Array[(Long, Array[Long])] =
-      qRows.map { case (qid, v, _) => (qid, superBitProj(v)) }
     val base = hammingBase(corpus, idCol, vecCol)
-    val sketches = base.select(col("neighbor_id"), col("v"))
-      .as[(Long, Seq[Double])]
-      .map { case (nid, v) =>
-        val (lo, hi) = superBitKernel(v)
-        (nid, lo, hi)
-      }
-    adcSearchFromSketches(base, sketches, q, qProj, excludeSelf, k, oversample)
+    adcSearch(base, liveSketches(base), qRows, excludeSelf, k, oversample,
+      requireCoverage = false)
   }
 
   /**
@@ -1359,8 +1373,7 @@ object Similarity {
    */
   def hammingSigRows(emb: DataFrame, idCol: String, vecCol: String,
                      dims: Int): DataFrame = {
-    require(dims >= 1 && dims <= 64,
-      s"the packed sign codes cover <= 64 dims, got $dims")
+    requireSketch(dims)
     val spark = emb.sparkSession
     import spark.implicits._
     emb.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
@@ -1404,44 +1417,44 @@ object Similarity {
     }
   }
 
-  /** Shared exact-cosine rerank of the Hamming ANN family: broadcast the
-    * k·oversample candidates back into the (never-shuffled) corpus scan,
-    * rank by the house cosine — (cosine desc, id asc), HALF_UP 6 dp —
-    * and cut to k. `carry` is the stage-1 score column that rides along
-    * into the output (`hamming` or `ascore`).
+  /** The house exact cosine of a candidate row — (v, nrm) against
+    * (qv, qn), HALF_UP 6 dp. */
+  private def exactCosine: Column =
+    round(dot(col("v"), asDouble(col("qv"))) / (col("nrm") * col("qn")), 6)
+
+  /** The int8 code cosine `Σq_i·qv_i / (√(Σq_i²)·‖qv‖)` — the per-vector
+    * scale cancels, so the rerank never reads it. */
+  private def q8Cosine: Column = {
+    val qd = asDouble(col("q"))
+    round(dot(qd, asDouble(col("qv"))) / (sqrt(dot(qd, qd)) * col("qn")), 6)
+  }
+
+  /** The ONE rerank body behind every stage 2 of the Hamming family:
+    * broadcast the stage-1 candidates into `src` (keyed by `neighbor_id`
+    * — the never-shuffled raw corpus for the exact-cosine paths, the
+    * stored int8 code table for the SQ paths), score with `cosine`, and
+    * cut each `keys` group (one query, or one (nprobe, query) ladder
+    * rung) to the final k by (cosine desc, id asc). `carry` is the
+    * stage-1 score column that rides along into the output (`hamming` or
+    * `ascore`).
     *
     * `requireCoverage` enforces the `FromSigs` CALLER CONTRACT ("`corpus`
     * covers every id in `sigs`") in the plan instead of documentation:
-    * each query's stage-1 candidate count rides the broadcast
+    * each group's stage-1 candidate count rides the broadcast
     * (`cand_cnt`, a window over the tiny candidate set), the joined rows
-    * are re-counted per query (`got_cnt` — same `query_id` partitioning
-    * as the rank window, so no extra exchange), and every output row's
-    * cosine asserts their equality — a sig-store id missing from the
-    * rerank corpus now fails loud with the contract's name instead of
-    * silently shrinking the rerank pool below k·oversample. The one
-    * shape this row-borne assert cannot see is a query whose candidates
-    * are ALL missing (zero joined rows → zero asserts → zero output rows
-    * for that query): not silent wrongness — the query vanishes from the
-    * result instead of returning a plausible-but-wrong top-k. */
-  private def rerankHammingCandidates(base: DataFrame, cand: DataFrame,
-                                      k: Int, carry: String,
-                                      requireCoverage: Boolean = false): DataFrame =
-    rerankCandidatesBy(base, cand, k, carry,
-      round(dot(col("v"), asDouble(col("qv"))) / (col("nrm") * col("qn")), 6),
-      requireCoverage)
-
-  /** The ONE rerank body behind every stage-2 of the Hamming family:
-    * join the broadcast stage-1 candidates into `src` (keyed by
-    * `neighbor_id` — the raw corpus for the exact-cosine paths, the
-    * stored int8 code table for the SQ path), score with the given
-    * `cosine` column, cut to the final k by (cosine desc, id asc). The
-    * coverage guard (the enforced `FromSigs` caller contract) counts
-    * stage-1 candidates vs reranked rows per query and FAILS LOUD on a
-    * gap instead of returning a short result. */
-  private def rerankCandidatesBy(src: DataFrame, cand: DataFrame,
-                                 k: Int, carry: String, cosine: Column,
-                                 requireCoverage: Boolean): DataFrame = {
-    val wq = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+    * are re-counted per group (`got_cnt` — same partitioning as the rank
+    * window, so no extra exchange), and every output row's cosine
+    * asserts their equality — a sig-store id missing from the rerank
+    * corpus fails loud with the contract's name instead of silently
+    * shrinking the rerank pool below k·oversample. The one shape this
+    * row-borne assert cannot see is a query whose candidates are ALL
+    * missing (zero joined rows → zero asserts → zero output rows for that
+    * query): not silent wrongness — the query vanishes from the result
+    * instead of returning a plausible-but-wrong top-k. */
+  private def rerank(src: DataFrame, cand: DataFrame, k: Int, carry: String,
+                     requireCoverage: Boolean, cosine: Column = exactCosine,
+                     keys: Seq[String] = Seq("query_id")): DataFrame = {
+    val wq = Window.partitionBy(keys.map(col): _*)
     val cand2 =
       if (requireCoverage) cand.withColumn("cand_cnt", count(lit(1)).over(wq))
       else cand
@@ -1464,12 +1477,11 @@ object Similarity {
                 "vectors into the corpus view)"))).cast("double"),
             cosine))
       else joined.withColumn("cosine", cosine)
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
+    val wr = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("cosine").desc, col("neighbor_id"))
     rer.withColumn("rank", row_number().over(wr).cast("long"))
       .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col(carry), col("cosine"))
+      .select((keys ++ Seq("neighbor_id", "rank", carry, "cosine")).map(col): _*)
   }
 
   /**
@@ -1492,7 +1504,7 @@ object Similarity {
    * by id, so a sig-store id missing from the corpus view would shrink
    * the rerank pool below k·oversample and break replayability with the
    * live path. The rerank asserts per-query candidate coverage
-   * (see [[rerankHammingCandidates]]) and FAILS LOUD naming this
+   * (see [[rerank]]) and FAILS LOUD naming this
    * contract instead of returning a short result. In the
    * streaming-absorb composition ([[graft.streaming
    * .StreamingEmbDedupAdc.absorbKeepers]]) this means the corpus view
@@ -1504,20 +1516,16 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String, qIdCol: String,
       k: Int, dims: Int, oversample: Int = 4, excludeSelf: Boolean = true,
       maxQueries: Int = 4096, bitsPerDim: Int = 1): DataFrame = {
-    require(bitsPerDim == 1 || bitsPerDim == 2,
-      s"bitsPerDim must be 1 (axis signs) or 2 (densified sign sketch), got $bitsPerDim")
-    if (bitsPerDim == 2) require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
-    val spark = corpus.sparkSession
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val q = hammingQueryTable(spark, qRows, bitsPerDim, dims)
+    requireSketch(dims, bitsPerDim)
+    val q = hammingQueryTable(corpus.sparkSession,
+      collectHammingQueries(queries, vecCol, qIdCol, maxQueries), bitsPerDim, dims)
     val base = hammingBase(corpus, idCol, vecCol)
     // stage 1: the stored codes, nothing else — the whole point
     val sigged =
       if (bitsPerDim == 1) sigs.select(col("id").as("neighbor_id"), col("sig"))
       else sigs.select(col("id").as("neighbor_id"), col("slo"), col("shi"))
-    hammingSearchFromSigged(base, sigged, q, bitsPerDim, excludeSelf, k,
-      oversample, requireCoverage = true)
+    rerank(base, hammingCandidates(sigged, q, bitsPerDim, excludeSelf, k * oversample),
+      k, "hamming", requireCoverage = true)
   }
 
   /**
@@ -1537,19 +1545,12 @@ object Similarity {
       queries: DataFrame, idCol: String, vecCol: String, qIdCol: String,
       k: Int, dims: Int, oversample: Int = 4, excludeSelf: Boolean = true,
       maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
-    val spark = corpus.sparkSession
-    import spark.implicits._
+    requireSketch(dims)
+    import corpus.sparkSession.implicits._
     val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    val qProj: Array[(Long, Array[Long])] =
-      qRows.map { case (qid, v, _) => (qid, superBitProj(v)) }
-    val base = hammingBase(corpus, idCol, vecCol)
-    val sketches = sigs.select(col("id"), col("slo"), col("shi"))
-      .as[(Long, Long, Long)]
-    adcSearchFromSketches(base, sketches, q, qProj, excludeSelf, k,
-      oversample, requireCoverage = true)
+    adcSearch(hammingBase(corpus, idCol, vecCol),
+      sigs.select(col("id"), col("slo"), col("shi")).as[(Long, Long, Long)],
+      qRows, excludeSelf, k, oversample, requireCoverage = true)
   }
 
   /**
@@ -1597,18 +1598,13 @@ object Similarity {
       queries: DataFrame, vecCol: String, qIdCol: String,
       k: Int, dims: Int, oversample: Int = 4, excludeSelf: Boolean = true,
       maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
-    val spark = sigs.sparkSession
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val q = hammingQueryTable(spark, qRows, 2, dims)
+    requireSketch(dims)
+    val q = hammingQueryTable(sigs.sparkSession,
+      collectHammingQueries(queries, vecCol, qIdCol, maxQueries), 2, dims)
     val sigged = sigs.select(col("id").as("neighbor_id"), col("slo"), col("shi"))
-    val cand = hammingCandidates(sigged, q, 2, excludeSelf, k, oversample)
-    val qd = asDouble(col("q"))
-    rerankCandidatesBy(
-      codes.select(col("id").as("neighbor_id"), col("q")), cand, k, "hamming",
-      round(dot(qd, asDouble(col("qv"))) / (sqrt(dot(qd, qd)) * col("qn")), 6),
-      requireCoverage = true)
+    rerank(codes.select(col("id").as("neighbor_id"), col("q")),
+      hammingCandidates(sigged, q, 2, excludeSelf, k * oversample), k, "hamming",
+      requireCoverage = true, cosine = q8Cosine)
   }
 
   /**
@@ -1618,41 +1614,40 @@ object Similarity {
    * pruning over the cell-partitioned signature store —
    * `PartitionFilters` at the scan, PlanSpec-pinned), and the densified
    * sketch prunes WHAT stage 1 reads per row (16 bytes of code, never
-   * the vector). Per query: its `nprobe` nearest cells by squared L2
-   * ((dist, cid) tie rule — [[knnJoinIvf]]'s probe convention,
-   * driver-side against the collected centroid sidecar), then the
-   * Hamming cut over the probed cells' sketches (the [[knnJoinHamming]]
-   * 2-bit metric), then the shared exact-cosine rerank. Recall composes
-   * multiplicatively: cell recall (the probed cells must hold the true
-   * neighbors) × sketch recall (the oversample dial) — the trade that
-   * buys O(probed cells × 16 B/row) stage-1 I/O at 100 TB.
+   * the vector). Per query: its `nprobe` nearest cells ([[probe]]), then
+   * the Hamming cut over the probed cells' sketches (the
+   * [[knnJoinHamming]] 2-bit metric), then the shared exact-cosine
+   * rerank. Recall composes multiplicatively: cell recall (the probed
+   * cells must hold the true neighbors) × sketch recall (the oversample
+   * dial) — the trade that buys O(probed cells × 16 B/row) stage-1 I/O
+   * at 100 TB.
    *
    * `sigs` is the CELL-PARTITIONED signature table
    * ([[graft.queries.Materialized]]'s `hamming_sigs_ivf` store:
    * `(id, sig, slo, shi, centroid_id)`). Same ENFORCED CALLER CONTRACT
    * as [[knnJoinHammingFromSigs]]: `corpus` must cover the sig ids — a
    * coverage gap fails loud in the rerank.
+   *
+   * SCALE NOTE: the exact rerank joins the broadcast candidates into the
+   * FULL corpus scan — stage 1 is partition-pruned but the rerank reads
+   * the whole raw corpus per search batch. The exact-rerank hybrids are
+   * the FIDELITY REFERENCES; the production-scale form is
+   * [[knnJoinHammingIvfResSq]], whose cell-partitioned int8 code store
+   * prunes the rerank scan to probed cells too (and whose int8 rank was
+   * measured recall-identical at every 55k grid point).
    */
   def knnJoinHammingIvf(sigs: DataFrame, corpus: DataFrame,
       centroids: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, qIdCol: String, k: Int, dims: Int, nprobe: Int,
       oversample: Int = 4, excludeSelf: Boolean = true,
       maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
+    requireSketch(dims)
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = collectCentroids(centroids, "knnJoinHammingIvf")
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    // the RAW hybrid: one sketch per query, paired with each probed cell
-    val qp = probeCells(cents, qRows, nprobe).map { case (qid, cid, qv) =>
-      val (lo, hi) = superBitKernel(qv.toSeq)
-      (qid, cid, lo, hi)
-    }.toDF("query_id", "centroid_id", "qlo", "qhi")
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    hammingIvfSearch(sigs, hammingBase(corpus, idCol, vecCol), q, qp,
-      excludeSelf, k, oversample)
+    val p = probe(centroids, queries, vecCol, qIdCol, maxQueries, nprobe,
+      residual = false, "knnJoinHammingIvf")
+    rerank(hammingBase(corpus, idCol, vecCol),
+      hybridCandidates(sigs, p, excludeSelf, k * oversample, residual = false),
+      k, "hamming", requireCoverage = true)
   }
 
   /** Bounded driver pull of a centroid sidecar (≤ k rows by construction),
@@ -1666,42 +1661,71 @@ object Similarity {
     cents
   }
 
-  /** Per query, its `nprobe` nearest cells by squared L2 ((dist, cid) tie
-    * rule — [[knnJoinIvf]]'s probe convention, driver-side against the
-    * collected centroid sidecar). Carries the query vector along so
-    * residual-sketch probes can subtract the probed cell's centroid. */
-  private def probeCells(cents: Array[(Long, Array[Double])],
-      qRows: Array[(Long, Seq[Double], Double)],
-      nprobe: Int): Seq[(Long, Long, Array[Double])] =
-    probeCellsRanked(cents, qRows, nprobe)
-      .map { case (qid, cid, va, _) => (qid, cid, va) }
+  /** `v − cv`: the IVF residual the residual sketches sign (plain IEEE
+    * subtraction) — one kernel for the stored codes and the probes. */
+  private def residualOf(v: Array[Double], cv: Array[Double]): Array[Double] = {
+    val r = new Array[Double](v.length)
+    var i = 0
+    while (i < v.length) { r(i) = v(i) - cv(i); i += 1 }
+    r
+  }
 
-  /** [[probeCells]] carrying each probed cell's PROBE RANK (1-based, the
-    * same (dist, cid) order) — the ladder searches slice one max-nprobe
-    * probe table by `prn <= rung` instead of re-probing per rung. */
-  private def probeCellsRanked(cents: Array[(Long, Array[Double])],
-      qRows: Array[(Long, Seq[Double], Double)],
-      nprobe: Int): Seq[(Long, Long, Array[Double], Int)] =
-    qRows.toSeq.flatMap { case (qid, v, _) =>
+  /** The driver side of a hybrid search: the query table `q`, the
+    * broadcast probe table `qp(query_id, centroid_id, qlo, qhi, prn)` and
+    * the distinct probed `cells` (ascending). */
+  private case class Probed(q: DataFrame, qp: DataFrame, cells: Seq[Long])
+
+  /** The ONE probe of the hybrid searches: per query, its `nprobe`
+    * nearest cells by squared L2 ((dist, cid) tie rule — [[knnJoinIvf]]'s
+    * probe convention, driver-side against the collected centroid
+    * sidecar), each with its PROBE RANK `prn` (1-based, the same order)
+    * and the query's sketch — of the raw vector, or with `residual` of
+    * `v − centroid(cell)`, so both sides of every residual comparison are
+    * offsets from the same centroid. A query whose length differs from
+    * the centroids' fails loud here. ≤ Q·nprobe rows of 16 bytes of code
+    * each. */
+  private def probe(centroids: DataFrame, queries: DataFrame, vecCol: String,
+      qIdCol: String, maxQueries: Int, nprobe: Int, residual: Boolean,
+      caller: String): Probed = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val cents = collectCentroids(centroids, caller)
+    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
+    val rows = qRows.toSeq.flatMap { case (qid, v, _) =>
       val va = v.toArray
       cents.map { case (cid, cv) =>
+          require(va.length == cv.length, s"$caller: query $qid has " +
+            s"${va.length} dims but the centroids have ${cv.length}")
           var s = 0.0; var i = 0
           while (i < cv.length) { val dx = cv(i) - va(i); s += dx * dx; i += 1 }
-          (cid, s)
-        }.sortBy { case (cid, dist) => (dist, cid) }.take(nprobe)
+          (cid, cv, s)
+        }.sortBy { case (cid, _, dist) => (dist, cid) }.take(nprobe)
         .zipWithIndex
-        .map { case ((cid, _), rk) => (qid, cid, va, rk + 1) }
+        .map { case ((cid, cv, _), rk) =>
+          val (lo, hi) = superBitKernel((if (residual) residualOf(va, cv) else va).toSeq)
+          (qid, cid, lo, hi, rk + 1)
+        }
     }
+    Probed(queryTable(spark, qRows),
+      rows.toDF("query_id", "centroid_id", "qlo", "qhi", "prn"),
+      rows.map(_._2).distinct.sorted)
+  }
 
-  /** The ONE stage-1 + rerank body behind the hybrid searches
-    * ([[knnJoinHammingIvf]] raw, [[knnJoinHammingIvfRes]] residual): the
-    * broadcast probe table `qp(query_id, centroid_id, qlo, qhi)` pairs
-    * each query with ONLY its probed cells (the cell equi-join replaces
-    * the crossJoin of the flat searches; the isin prunes partitions at
-    * the scan), Hamming cut via WindowGroupLimit, then the shared
-    * exact-cosine rerank with the coverage guard on.
-    *
-    * `perCellCut` picks the stage-1 rank scope. RAW sketches share one
+  /** Stage 1 of every hybrid search before its cut: ONE scan of the
+    * probed cells' sketches (the isin prunes partitions at the scan),
+    * the broadcast probe equi-join (it replaces the crossJoin of the
+    * flat searches) and the Hamming distance — `prn` rides along so a
+    * ladder can slice rungs. */
+  private def probedScan(sigs: DataFrame, p: Probed,
+                         excludeSelf: Boolean): DataFrame =
+    dropSelf(sigs.where(col("centroid_id").isin(p.cells: _*))
+        .select(col("id").as("neighbor_id"),
+          col("centroid_id").cast("long").as("centroid_id"),
+          col("slo"), col("shi"))
+        .join(broadcast(p.qp), "centroid_id"), excludeSelf)
+      .withColumn("hamming", sketchHamming)
+
+  /** The stage-1 rank scope of the hybrids. RAW sketches share one
     * global sign basis, so their Hamming distances are comparable across
     * cells and the cut is per QUERY (k·oversample candidates total — the
     * FAISS global binary heap). RESIDUAL sketches measure angles of
@@ -1713,49 +1737,18 @@ object Similarity {
     * inverted list, the classic scan-each-list shape — and the exact
     * rerank (cosines, globally comparable) resolves the per-cell
     * winners. Candidate bound: nprobe·k·oversample per query, still a
-    * broadcast-sized set.
-    *
-    * SCALE NOTE: the exact rerank joins the broadcast candidates into
-    * the FULL `base` scan — stage 1 is partition-pruned but the rerank
-    * reads the whole raw corpus per search batch. These exact-rerank
-    * hybrids are the FIDELITY REFERENCES; the production-scale form is
-    * [[knnJoinHammingIvfResSq]], whose cell-partitioned int8 code
-    * store prunes the rerank scan to probed cells too (and whose int8
-    * rank was measured recall-identical at every 55k grid point). */
-  private def hammingIvfSearch(sigs: DataFrame, base: DataFrame,
-      q: DataFrame, qp: DataFrame, excludeSelf: Boolean, k: Int,
-      oversample: Int, perCellCut: Boolean = false): DataFrame =
-    rerankHammingCandidates(base,
-      hammingIvfCandidates(sigs, q, qp, excludeSelf, k, oversample, perCellCut),
-      k, "hamming", requireCoverage = true)
+    * broadcast-sized set. */
+  private def cutKeys(residual: Boolean): Seq[String] =
+    if (residual) Seq("query_id", "centroid_id") else Seq("query_id")
 
-  /** Stage 1 of the hybrid searches, shared by the exact-rerank and the
-    * SQ-rerank variants so candidacy cannot diverge: probed-cell
-    * partition pruning + broadcast probe equi-join + Hamming cut. */
-  private def hammingIvfCandidates(sigs: DataFrame,
-      q: DataFrame, qp: DataFrame, excludeSelf: Boolean, k: Int,
-      oversample: Int, perCellCut: Boolean): DataFrame = {
-    val allCells = qp.select("centroid_id").collect().map(_.getLong(0))
-      .distinct.sorted.toSeq
-    val scored0 = sigs
-      .where(col("centroid_id").isin(allCells: _*))
-      .select(col("id").as("neighbor_id"), col("centroid_id").cast("long").as("centroid_id"),
-        col("slo"), col("shi"))
-      .join(broadcast(qp), "centroid_id")
-    val scored = (if (excludeSelf) scored0.where(col("neighbor_id") =!= col("query_id"))
-                  else scored0)
-      .withColumn("hamming",
-        (call_function("bit_count", col("slo").bitwiseXOR(col("qlo"))) +
-          call_function("bit_count", col("shi").bitwiseXOR(col("qhi")))).cast("long"))
-    val wh = (if (perCellCut)
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id", "centroid_id")
-      else org.apache.spark.sql.expressions.Window.partitionBy("query_id"))
-      .orderBy(col("hamming"), col("neighbor_id"))
-    scored.withColumn("hrank", row_number().over(wh))
-      .where(col("hrank") <= k * oversample)
-      .select(col("query_id"), col("neighbor_id"), col("hamming"))
-      .join(q.select(col("query_id"), col("qv"), col("qn")), "query_id")
-  }
+  /** Stage-1 candidates of the single-shot hybrids, shared by the
+    * exact-rerank and the SQ-rerank variants so candidacy cannot
+    * diverge. */
+  private def hybridCandidates(sigs: DataFrame, p: Probed,
+      excludeSelf: Boolean, limit: Int, residual: Boolean): DataFrame =
+    withQueries(cutTop(probedScan(sigs, p, excludeSelf), cutKeys(residual),
+        limit, byHamming: _*)
+      .select(col("query_id"), col("neighbor_id"), col("hamming")), p.q)
 
   /**
    * One-scan build of the RESIDUAL binary-sketch signature table — the
@@ -1779,8 +1772,7 @@ object Similarity {
    */
   def hammingResidualSigRows(emb: DataFrame, idCol: String, vecCol: String,
                              centroids: DataFrame, dims: Int): DataFrame = {
-    require(dims >= 1 && dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
+    requireSketch(dims)
     val spark = emb.sparkSession
     import spark.implicits._
     val cents = collectCentroids(centroids, "hammingResidualSigRows")
@@ -1804,11 +1796,7 @@ object Similarity {
             if (s < best) { best = s; bestAt = j }
             j += 1
           }
-          val cv = cs(bestAt)._2
-          val r = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { r(i) = v(i) - cv(i); i += 1 }
-          val (lo, hi) = superBitKernel(r.toSeq)
+          val (lo, hi) = superBitKernel(residualOf(v, cs(bestAt)._2).toSeq)
           Iterator.single((id, lo, hi, cs(bestAt)._1))
         }
       }.toDF("id", "slo", "shi", "centroid_id")
@@ -1827,153 +1815,79 @@ object Similarity {
    * stage-1 cut is PER PROBED CELL (k·oversample per inverted list, so
    * up to nprobe·k·oversample candidates reach the rerank) because
    * residual Hamming distances are only comparable within a cell — see
-   * [[hammingIvfSearch]]'s scope note for the measured failure of a
-   * global cut. Same ENFORCED CALLER CONTRACT: `corpus` must cover the
-   * sig ids.
+   * [[cutKeys]] for the measured failure of a global cut. Same ENFORCED
+   * CALLER CONTRACT: `corpus` must cover the sig ids.
    */
   def knnJoinHammingIvfRes(sigs: DataFrame, corpus: DataFrame,
       centroids: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, qIdCol: String, k: Int, dims: Int, nprobe: Int,
       oversample: Int = 4, excludeSelf: Boolean = true,
       maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
+    requireSketch(dims)
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = collectCentroids(centroids, "knnJoinHammingIvfRes")
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val qp = residualProbeTable(spark, cents, qRows, nprobe)
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    hammingIvfSearch(sigs, hammingBase(corpus, idCol, vecCol), q, qp,
-      excludeSelf, k, oversample, perCellCut = true)
-  }
-
-  /** Per (query, probed cell): the query's RESIDUAL sketch w.r.t. that
-    * cell's centroid — the broadcast probe table of the residual
-    * hybrids (≤ Q·nprobe rows of 16 bytes each). */
-  private def residualProbeTable(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[(Long, Array[Double])],
-      qRows: Array[(Long, Seq[Double], Double)], nprobe: Int): DataFrame = {
-    import spark.implicits._
-    val centById = cents.toMap
-    probeCells(cents, qRows, nprobe).map { case (qid, cid, va) =>
-      val cv = centById(cid)
-      val r = new Array[Double](va.length)
-      var i = 0
-      while (i < va.length) { r(i) = va(i) - cv(i); i += 1 }
-      val (lo, hi) = superBitKernel(r.toSeq)
-      (qid, cid, lo, hi)
-    }.toDF("query_id", "centroid_id", "qlo", "qhi")
+    val p = probe(centroids, queries, vecCol, qIdCol, maxQueries, nprobe,
+      residual = true, "knnJoinHammingIvfRes")
+    rerank(hammingBase(corpus, idCol, vecCol),
+      hybridCandidates(sigs, p, excludeSelf, k * oversample, residual = true),
+      k, "hamming", requireCoverage = true)
   }
 
   // ------------------------------------------------------------------
-  // nprobe LADDERS (r16; r15 verdict "next round" #3): the recall-dial
-  // artifacts replay the same search at nprobe 1/2/4/8 — as four
-  // independent plans that was four probe collects, four stage-1 sig
-  // scans and four full-corpus rerank scans. A ladder probes ONCE at
-  // max(nprobes) carrying the probe rank `prn`, scores stage-1
-  // candidates ONCE over the max-rung cells, re-derives each rung's cut
-  // by `prn <= rung` (the rung's candidate set is exactly the scored
-  // rows whose cell ranks within its nprobe — same rows, same Hamming
-  // values), and reranks the UNION against one corpus scan with every
-  // window re-partitioned by (nprobe, query). Each rung's slice is
-  // row-identical to the single-shot search at that nprobe: the raw
-  // ladder re-ranks per rung because its per-QUERY cut depends on which
-  // cells compete; the residual ladder ranks once because its per-
-  // (query, CELL) cut is rung-independent. Oracle unchanged.
+  // nprobe LADDERS: the recall-dial artifacts replay the same search at
+  // nprobe 1/2/4/8 in one plan. A ladder probes ONCE at max(nprobes)
+  // carrying the probe rank `prn`, scores stage 1 over the max-rung
+  // cells, re-derives each rung's cut by `prn <= rung` (the rung's
+  // candidate set is exactly the scored rows whose cell ranks within its
+  // nprobe — same rows, same Hamming values), and reranks the UNION
+  // against one corpus scan with every window keyed by (nprobe, query).
+  // Each rung's slice is row-identical to the single-shot search at that
+  // nprobe: the raw ladder re-ranks per rung because its per-QUERY cut
+  // depends on which cells compete; the residual ladder ranks once
+  // because its per-(query, CELL) cut is rung-independent. So the
+  // residual ladder's one sig scan feeds every rung through a reused
+  // exchange, while the raw ladder's executed plan reads the probed cells
+  // once per rung (PlanSpec pins both counts).
   // ------------------------------------------------------------------
 
-  /** Stage-1 scored candidates for a ladder: one sig scan over the cells
-    * of the MAX rung, broadcast probe join, Hamming — `prn` rides along
-    * so rungs can slice. */
-  private def scoredLadderCandidates(sigs: DataFrame, qp: DataFrame,
-      excludeSelf: Boolean): DataFrame = {
-    val allCells = qp.select("centroid_id").collect().map(_.getLong(0))
-      .distinct.sorted.toSeq
-    val scored0 = sigs
-      .where(col("centroid_id").isin(allCells: _*))
-      .select(col("id").as("neighbor_id"),
-        col("centroid_id").cast("long").as("centroid_id"),
-        col("slo"), col("shi"))
-      .join(broadcast(qp), "centroid_id")
-    (if (excludeSelf) scored0.where(col("neighbor_id") =!= col("query_id"))
-     else scored0)
-      .withColumn("hamming",
-        (call_function("bit_count", col("slo").bitwiseXOR(col("qlo"))) +
-          call_function("bit_count", col("shi").bitwiseXOR(col("qhi")))).cast("long"))
-  }
-
-  /** The shared exact-cosine rerank of [[rerankHammingCandidates]] with
-    * every window keyed by (nprobe, query_id) — one corpus scan reranks
-    * all rungs' candidates; per rung the arithmetic, the coverage guard
-    * and the (cosine desc, id) cut are identical to the single-shot
-    * search. */
-  private def rerankHammingLadder(base: DataFrame, cand: DataFrame,
-                                  k: Int): DataFrame = {
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("nprobe", "query_id")
-    val cand2 = cand.withColumn("cand_cnt", count(lit(1)).over(wq))
-    val joined = base.join(broadcast(cand2), "neighbor_id")
-    val rer = joined.withColumn("got_cnt", count(lit(1)).over(wq))
-      .withColumn("cosine", coalesce(
-        assert_true(col("got_cnt") === col("cand_cnt"), concat(
-          lit("FromSigs caller contract violated: query "),
-          col("query_id").cast("string"),
-          lit(" has "), col("cand_cnt").cast("string"),
-          lit(" stage-1 candidates but only "),
-          col("got_cnt").cast("string"),
-          lit(" corpus rows to rerank — every sig-store id must have " +
-            "a row in the rerank corpus (union absorbed keepers' " +
-            "vectors into the corpus view)"))).cast("double"),
-        round(dot(col("v"), asDouble(col("qv"))) / (col("nrm") * col("qn")), 6)))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy("nprobe", "query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    rer.withColumn("rank", row_number().over(wr).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("nprobe"), col("query_id"), col("neighbor_id"), col("rank"),
-        col("hamming"), col("cosine"))
+  private def ladder(sigs: DataFrame, corpus: DataFrame, centroids: DataFrame,
+      queries: DataFrame, idCol: String, vecCol: String, qIdCol: String,
+      k: Int, dims: Int, nprobes: Seq[Int], oversample: Int,
+      excludeSelf: Boolean, maxQueries: Int, residual: Boolean,
+      caller: String): DataFrame = {
+    requireSketch(dims)
+    require(nprobes.nonEmpty && nprobes.forall(_ >= 1),
+      s"nprobes must be nonempty with every rung >= 1, got $nprobes")
+    val p = probe(centroids, queries, vecCol, qIdCol, maxQueries, nprobes.max,
+      residual, caller)
+    val scored = probedScan(sigs, p, excludeSelf)
+    val limit = k * oversample
+    val cut = if (residual) cutTop(scored, cutKeys(residual), limit, byHamming: _*)
+              else scored
+    val rungs = nprobes.map { np =>
+      val slice = cut.where(col("prn") <= np)
+      (if (residual) slice else cutTop(slice, cutKeys(residual), limit, byHamming: _*))
+        .select(lit(np.toLong).as("nprobe"), col("query_id"),
+          col("neighbor_id"), col("hamming"))
+    }.reduce(_.unionByName(_))
+    rerank(hammingBase(corpus, idCol, vecCol), withQueries(rungs, p.q), k,
+      "hamming", requireCoverage = true, keys = Seq("nprobe", "query_id"))
   }
 
   /** [[knnJoinHammingIvf]] replayed at every rung of `nprobes` in ONE
     * plan — output `(nprobe, query_id, neighbor_id, rank, hamming,
     * cosine)`, each rung's slice row-identical to the single-shot
     * search at that nprobe. The per-QUERY stage-1 cut is re-ranked per
-    * rung (which cells compete depends on the rung); everything else —
-    * probe collect, sig scan, rerank corpus scan — is paid once. */
+    * rung (which cells compete depends on the rung), so each rung reads
+    * the probed cells' sketches again; the probe collect and the rerank
+    * corpus scan are paid once. */
   def knnJoinHammingIvfLadder(sigs: DataFrame, corpus: DataFrame,
       centroids: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, qIdCol: String, k: Int, dims: Int, nprobes: Seq[Int],
       oversample: Int = 4, excludeSelf: Boolean = true,
-      maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
-    require(nprobes.nonEmpty && nprobes.forall(_ >= 1),
-      s"nprobes must be nonempty with every rung >= 1, got $nprobes")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = collectCentroids(centroids, "knnJoinHammingIvfLadder")
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val qp = probeCellsRanked(cents, qRows, nprobes.max)
-      .map { case (qid, cid, qv, prn) =>
-        val (lo, hi) = superBitKernel(qv.toSeq)
-        (qid, cid, lo, hi, prn)
-      }.toDF("query_id", "centroid_id", "qlo", "qhi", "prn")
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    val scoredAll = scoredLadderCandidates(sigs, qp, excludeSelf)
-    val rungs = nprobes.map { np =>
-      val wh = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("hamming"), col("neighbor_id"))
-      scoredAll.where(col("prn") <= np)
-        .withColumn("hrank", row_number().over(wh))
-        .where(col("hrank") <= k * oversample)
-        .select(lit(np.toLong).as("nprobe"), col("query_id"),
-          col("neighbor_id"), col("hamming"))
-    }.reduce(_.unionByName(_))
-    rerankHammingLadder(hammingBase(corpus, idCol, vecCol),
-      rungs.join(q.select(col("query_id"), col("qv"), col("qn")), "query_id"), k)
-  }
+      maxQueries: Int = 4096): DataFrame =
+    ladder(sigs, corpus, centroids, queries, idCol, vecCol, qIdCol, k, dims,
+      nprobes, oversample, excludeSelf, maxQueries, residual = false,
+      "knnJoinHammingIvfLadder")
 
   /** [[knnJoinHammingIvfRes]] replayed at every rung of `nprobes` in ONE
     * plan. The residual stage-1 cut is per (query, probed CELL) — a
@@ -1984,40 +1898,10 @@ object Similarity {
       centroids: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, qIdCol: String, k: Int, dims: Int, nprobes: Seq[Int],
       oversample: Int = 4, excludeSelf: Boolean = true,
-      maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
-    require(nprobes.nonEmpty && nprobes.forall(_ >= 1),
-      s"nprobes must be nonempty with every rung >= 1, got $nprobes")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = collectCentroids(centroids, "knnJoinHammingIvfResLadder")
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val centById = cents.toMap
-    val qp = probeCellsRanked(cents, qRows, nprobes.max)
-      .map { case (qid, cid, va, prn) =>
-        val cv = centById(cid)
-        val r = new Array[Double](va.length)
-        var i = 0
-        while (i < va.length) { r(i) = va(i) - cv(i); i += 1 }
-        val (lo, hi) = superBitKernel(r.toSeq)
-        (qid, cid, lo, hi, prn)
-      }.toDF("query_id", "centroid_id", "qlo", "qhi", "prn")
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    val wh = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id", "centroid_id")
-      .orderBy(col("hamming"), col("neighbor_id"))
-    val cut = scoredLadderCandidates(sigs, qp, excludeSelf)
-      .withColumn("hrank", row_number().over(wh))
-      .where(col("hrank") <= k * oversample)
-    val rungs = nprobes.map { np =>
-      cut.where(col("prn") <= np)
-        .select(lit(np.toLong).as("nprobe"), col("query_id"),
-          col("neighbor_id"), col("hamming"))
-    }.reduce(_.unionByName(_))
-    rerankHammingLadder(hammingBase(corpus, idCol, vecCol),
-      rungs.join(q.select(col("query_id"), col("qv"), col("qn")), "query_id"), k)
-  }
+      maxQueries: Int = 4096): DataFrame =
+    ladder(sigs, corpus, centroids, queries, idCol, vecCol, qIdCol, k, dims,
+      nprobes, oversample, excludeSelf, maxQueries, residual = true,
+      "knnJoinHammingIvfResLadder")
 
   /**
    * The FULLY-COMPOSED all-stored search — every pruning axis of the
@@ -2056,29 +1940,18 @@ object Similarity {
       qIdCol: String, k: Int, dims: Int, nprobe: Int,
       oversample: Int = 4, excludeSelf: Boolean = true,
       maxQueries: Int = 4096): DataFrame = {
-    require(dims <= 64,
-      s"the 128-plane densified sign sketch covers <= 64 dims, got $dims")
+    requireSketch(dims)
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(codes.columns.contains("centroid_id"),
       "knnJoinHammingIvfResSq needs the CELL-PARTITIONED code table " +
         "(id, scale, q, centroid_id) — a flat q8 store would be scanned " +
         "in full at the rerank; use knnJoinHammingSqFromSigs for flat codes")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val cents = collectCentroids(centroids, "knnJoinHammingIvfResSq")
-    val qRows = collectHammingQueries(queries, vecCol, qIdCol, maxQueries)
-    val qp = residualProbeTable(spark, cents, qRows, nprobe)
-    val probedCells = qp.select("centroid_id").collect().map(_.getLong(0))
-      .distinct.sorted.toSeq
-    val q = qRows.toSeq.toDF("query_id", "qv", "qn")
-    val cand = hammingIvfCandidates(sigs, q, qp, excludeSelf, k, oversample,
-      perCellCut = true)
-    val qd = asDouble(col("q"))
-    rerankCandidatesBy(
-      codes.where(col("centroid_id").isin(probedCells: _*))
-        .select(col("id").as("neighbor_id"), col("q")), cand, k, "hamming",
-      round(dot(qd, asDouble(col("qv"))) / (sqrt(dot(qd, qd)) * col("qn")), 6),
-      requireCoverage = true)
+    val p = probe(centroids, queries, vecCol, qIdCol, maxQueries, nprobe,
+      residual = true, "knnJoinHammingIvfResSq")
+    rerank(codes.where(col("centroid_id").isin(p.cells: _*))
+        .select(col("id").as("neighbor_id"), col("q")),
+      hybridCandidates(sigs, p, excludeSelf, k * oversample, residual = true),
+      k, "hamming", requireCoverage = true, cosine = q8Cosine)
   }
 
   /**

@@ -32,36 +32,26 @@ object TextAnalysis {
     docs.repartition(parts, id)
   }
 
-  /** [[spreadByDoc]] gated by `spark.graft.spread.kernelScans` — for
-    * kernel pipelines with NO downstream wide exchange of their own
-    * (signature builds, sketch scans, hashed-feature explodes), where the
-    * repartition ADDS an exchange rather than narrowing an existing one.
-    *
-    * Default `auto` (r16; r15 verdict #6 — the r15 default of TRUE was
-    * the local-favorable constant): the decision DERIVES from the actual
-    * input layout. A small/bench corpus arrives as one parquet row group
-    * (one scan task), so without the spread the whole hash/sign kernel
-    * serializes onto one core (guide §2.5: "one huge unsplittable file …
-    * repartition immediately after the read") — auto spreads. A
-    * production 100 TB corpus arrives with ≥ cluster-parallelism input
-    * splits — the added corpus-sized exchange buys nothing and auto
-    * SKIPS it, with no conf to remember. The split count comes from the
-    * scan relations' file metadata on the driver (never `df.rdd`, which
-    * forces eager AQE stage materialization on computed inputs — the
-    * rejected r15 probe); inputs with no file-source leaves (computed /
-    * local relations) keep the r15 behavior (spread — the call sites are
-    * corpus-scale by construction). `true` / `false` force either shape. */
+  /** [[spreadByDoc]] for kernel pipelines with NO downstream wide
+    * exchange of their own (signature builds, sketch scans, hashed-feature
+    * explodes), where the repartition ADDS an exchange rather than
+    * narrowing an existing one — so it spreads only when the input scans
+    * narrow. The decision DERIVES from the actual input layout. A
+    * small/bench corpus arrives as one parquet row group (one scan task),
+    * so without the spread the whole hash/sign kernel serializes onto one
+    * core (guide §2.5: "one huge unsplittable file … repartition
+    * immediately after the read") — it spreads. A production 100 TB
+    * corpus arrives with ≥ cluster-parallelism input splits — the added
+    * corpus-sized exchange buys nothing and it is SKIPPED, with no conf
+    * to remember. The split count comes from the scan relations' file
+    * metadata on the driver (never `df.rdd`, which forces eager AQE stage
+    * materialization on computed inputs); inputs with no file-source
+    * leaves (computed / local relations) spread — the call sites are
+    * corpus-scale by construction. */
   private[llm] def spreadIfNarrow(docs: DataFrame, id: Column): DataFrame = {
-    val spread = docs.sparkSession.conf
-      .get("spark.graft.spread.kernelScans", "auto").toLowerCase match {
-      case "false" => false
-      case "true" => true
-      case _ =>
-        val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        val parts = scala.util.Try(n.toInt).getOrElse(200)
-        estimatedScanSplits(docs).forall(_ < parts)
-    }
-    if (spread) spreadByDoc(docs, id) else docs
+    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    val parts = scala.util.Try(n.toInt).getOrElse(200)
+    if (estimatedScanSplits(docs).forall(_ < parts)) spreadByDoc(docs, id) else docs
   }
 
   /** Estimated input-split count of the file-source leaves under `docs`'

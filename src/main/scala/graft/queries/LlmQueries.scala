@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -63,6 +64,305 @@ object LlmQueries {
     simKnnHammingQ8, simHammingQ8Recall, simKnnHammingIvfResQ8,
     simHammingIvfResQ8Recall)
 
+  // ------------------------------------------------------------------
+  // The Hamming/IVF search family — 16 queries over one skeleton: a
+  // sketch score with a stage-1 cut (flat, over probed IVF cells, or per
+  // probed cell for residual sketches), an exact or int8 rerank of the
+  // k·oversample = 20 survivors, and the top-5. The oracles are composed
+  // from the hand-written CTE fragments below, so each states only what
+  // is its own. Fragments are defs: a val would interpolate as null into
+  // the queries declared before it.
+  // ------------------------------------------------------------------
+
+  /** The family's two query sets: the sparse sample of the flat searches
+    * and the first 20 vectors of the hybrids and the recall dials. */
+  private def sparseQs = "vec_id % 97 = 3"
+  private def first20 = "vec_id < 20"
+
+  /** The zero-norm prelude: `e(vec_id, v)` — from the IVF training
+    * closure, which also yields `c2` and `a3`, when `ivf` — then
+    * `nz(vec_id, v, nrm)`, the vectors with an angle, and the query set
+    * `qs(query_id, qv, qn)` of `pred`. */
+  private def hamPreludeSql(ivf: Boolean, pred: String): String =
+    (if (ivf) s"$ivfTrainedSql,\n$ivfAssignFromTrainedSql"
+     else "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)") +
+    s""",
+       |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
+       |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
+       |nz AS (SELECT * FROM n WHERE nrm > 0),
+       |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
+       |       WHERE $pred)""".stripMargin
+
+  /** The 128 md5-parity ±1 planes `pb(k, i, s)` of the densified sketch
+    * ([[Similarity.superBitKernel]]). */
+  private def hamPlanesSql: String =
+    """pb AS (SELECT k, i,
+      |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
+      |                   % 2 = 0 THEN 1 ELSE -1 END AS s
+      |       FROM range(0, 128) t1(k), range(0, 64) t2(i))""".stripMargin
+
+  /** The raw sketch: 6-dp µ-unit integer vectors `u`, the planes, each
+    * vector's exact plane projections `proj(vec_id, k, pv)`, its sign
+    * bits `bits(vec_id, k, b)`, and the query side `qb(query_id, k, b,
+    * pv)` of `pred` — bits for the SDC cut, magnitudes for ADC. */
+  private def hamBitsSql(pred: String): String =
+    s"""u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
+       |        for i in range(1, len(v) + 1)] AS u FROM nz),
+       |$hamPlanesSql,
+       |proj AS (SELECT u.vec_id, pb.k,
+       |           sum(u.u[pb.i + 1] * pb.s)::BIGINT AS pv
+       |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
+       |bits AS (SELECT vec_id, k, (pv > 0) AS b FROM proj),
+       |qb AS (SELECT vec_id AS query_id, k, (pv > 0) AS b, pv FROM proj
+       |       WHERE $pred)""".stripMargin
+
+  /** The nprobe probe over the trained `c2`: `np` lists the rungs and
+    * `probe(nprobe, query_id, centroid_id)` holds each query's `nprobe`
+    * nearest cells per rung (squared L2, (dist, cid) ties) — a
+    * single-shot search is the one-rung ladder. */
+  private def hamProbeSql(nprobes: Int*): String =
+    s"""np AS (SELECT unnest([${nprobes.mkString(", ")}])::BIGINT AS nprobe),
+       |pd AS (SELECT q.query_id, c.centroid_id,
+       |         row_number() OVER (PARTITION BY q.query_id
+       |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
+       |                              for i in range(1, 65)]), c.centroid_id) AS prn
+       |       FROM c2 c, qs q),
+       |probe AS (SELECT np.nprobe, pd.query_id, pd.centroid_id
+       |          FROM pd, np WHERE pd.prn <= np.nprobe)""".stripMargin
+
+  /** The residual sketch (needs `pb`, `probe`): each corpus vector's
+    * bits of `v − centroid(own cell)` in `cbits(vec_id, centroid_id, k,
+    * b)`, each query's bits of `qv − centroid(probed cell)` in
+    * `qbits(query_id, centroid_id, k, b)` — the subtraction inside the
+    * same 6-dp µ-unit projection. */
+  private def hamResBitsSql: String =
+    """res AS (SELECT z.vec_id, a3.centroid_id,
+      |          [round(round(z.v[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
+      |           for i in range(1, 65)] AS u
+      |        FROM nz z JOIN a3 ON z.vec_id = a3.vec_id
+      |        JOIN c2 c ON a3.centroid_id = c.centroid_id),
+      |cbits AS (SELECT r.vec_id, r.centroid_id, pb.k,
+      |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
+      |          FROM res r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
+      |qres AS (SELECT p.query_id, p.centroid_id,
+      |           [round(round(q.qv[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
+      |            for i in range(1, 65)] AS u
+      |         FROM (SELECT DISTINCT query_id, centroid_id FROM probe) p
+      |         JOIN qs q ON p.query_id = q.query_id
+      |         JOIN c2 c ON p.centroid_id = c.centroid_id),
+      |qbits AS (SELECT r.query_id, r.centroid_id, pb.k,
+      |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
+      |          FROM qres r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3)""".stripMargin
+
+  /** Stage 1: the scored pairs `ham$x` (the caller's SELECT) and their
+    * cut `cand$x`, ranked by (`order`, id) within `keys` as `hrank`. */
+  private def hamCutSql(x: String, ham: String, keys: String,
+                        order: String = "hamming"): String =
+    s"""ham$x AS ($ham),
+       |cand$x AS (SELECT *, row_number() OVER (PARTITION BY $keys
+       |             ORDER BY $order, neighbor_id) AS hrank FROM ham$x)""".stripMargin
+
+  /** Flat stage 1 over every corpus vector: Hamming over the sketch bits
+    * (SDC) or, with `adc`, the query's projection magnitudes signed by
+    * the corpus bits (higher = closer). */
+  private def hamFlatCutSql(adc: Boolean): String = {
+    val (score, order) =
+      if (adc) ("sum(CASE WHEN cb.b THEN qb.pv ELSE -qb.pv END)::BIGINT AS ascore",
+        "ascore DESC")
+      else ("sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT AS hamming",
+        "hamming")
+    hamCutSql("", s"""SELECT cb.vec_id AS neighbor_id, qb.query_id, $score
+                     |  FROM bits cb JOIN qb USING (k)
+                     |  WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2""".stripMargin,
+      "query_id", order)
+  }
+
+  /** Probed stage 1 of the raw hybrid: Hamming over the probed cells'
+    * members, cut per (rung, query). */
+  private def hamProbedCutSql: String =
+    hamCutSql("",
+      """SELECT p.nprobe, cb.vec_id AS neighbor_id, qb.query_id,
+        |    sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT AS hamming
+        |  FROM bits cb
+        |    JOIN a3 ON cb.vec_id = a3.vec_id
+        |    JOIN probe p ON a3.centroid_id = p.centroid_id
+        |    JOIN qb ON qb.query_id = p.query_id AND qb.k = cb.k
+        |  WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3""".stripMargin,
+      "nprobe, query_id")
+
+  /** Per-cell stage 1 of the residual hybrid: residual Hamming within
+    * each probed cell, cut per (rung, query, cell) — residual distances
+    * are only comparable within a cell. */
+  private def hamCellCutSql(x: String = ""): String = {
+    val perRung = s"""SELECT p.nprobe, h.* FROM cham$x h
+                     |  JOIN probe p ON h.query_id = p.query_id
+                     |    AND h.centroid_id = p.centroid_id""".stripMargin
+    s"""cham$x AS (SELECT cb.vec_id AS neighbor_id, qb.query_id, cb.centroid_id,
+       |    sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT AS hamming
+       |  FROM cbits cb
+       |    JOIN qbits qb ON cb.centroid_id = qb.centroid_id AND cb.k = qb.k
+       |  WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3),
+       |${hamCutSql(x, perRung, "nprobe, query_id, centroid_id")}""".stripMargin
+  }
+
+  /** Stage 2 `out`: the exact cosine of `cand$x`'s 20 survivors or, with
+    * `q8`, their int8-code cosine (`q = round(v/max|v|·127)`, the
+    * `sim_topk_q8` quantizer, codes in `qc`) — every cand column rides
+    * along. */
+  private def hamRerankSql(x: String = "", q8: Boolean = false,
+                           out: String = "rer"): String = {
+    val (codes, src, cos) =
+      if (q8) ("""qc AS (SELECT vec_id, [round(v[i] / list_max([abs(x) for x in v]) * 127.0,
+                 |          0)::BIGINT for i in range(1, len(v) + 1)] AS q FROM nz),
+                 |""".stripMargin, "qc",
+        "list_sum([cv.q[i] * qv.v[i] for i in range(1, 65)])\n" +
+          "                / (sqrt(list_sum([x * x for x in cv.q])) * qv.nrm)")
+      else ("", "nz", "list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])\n" +
+        "                / (cv.nrm * qv.nrm)")
+    s"""$codes$out$x AS (SELECT c.*, round($cos, 6) AS cosine
+       |        FROM cand$x c JOIN $src cv ON cv.vec_id = c.neighbor_id
+       |        JOIN nz qv ON qv.vec_id = c.query_id
+       |        WHERE c.hrank <= 20)""".stripMargin
+  }
+
+  /** `out(keys, neighbor_id)`: each `keys` group's top-5 of `src` by
+    * (cosine desc, id). */
+  private def hamTop5Sql(out: String, src: String,
+                         keys: String = "query_id"): String =
+    s"""$out AS (SELECT $keys, neighbor_id FROM (
+       |        SELECT *, row_number() OVER (PARTITION BY $keys
+       |          ORDER BY cosine DESC, neighbor_id) AS rank FROM $src)
+       |      WHERE rank <= 5)""".stripMargin
+
+  /** The brute-force ground truth `rb`: every query's exact top-5. */
+  private def hamBruteSql: String =
+    s"""sb AS (SELECT q.query_id, n2.vec_id AS neighbor_id,
+       |        round(list_sum([n2.v[i] * q.qv[i] for i in range(1, 65)])
+       |              / (n2.nrm * q.qn), 6) AS cosine
+       |      FROM nz n2, qs q WHERE n2.vec_id <> q.query_id),
+       |${hamTop5Sql("rb", "sb")}""".stripMargin
+
+  /** A search's own output: per query the top-5 of `rer`, with the
+    * stage-1 score `carry`. */
+  private def hamKnnOutSql(carry: String = "hamming"): String =
+    s"""r AS (SELECT query_id, neighbor_id, $carry, cosine,
+       |        row_number() OVER (PARTITION BY query_id
+       |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
+       |SELECT query_id, neighbor_id, rank, $carry, cosine FROM r
+       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** Per-query recall@5 of the search's top-5 `ra` vs brute `rb`. */
+  private def hamRecallOutSql: String =
+    s"""h AS (SELECT rb.query_id, count(*)::BIGINT AS hits
+       |      FROM rb JOIN ra USING (query_id, neighbor_id) GROUP BY 1)
+       |SELECT q.query_id, 5::BIGINT AS k,
+       |  coalesce(h.hits, 0)::BIGINT AS hits,
+       |  round(coalesce(h.hits, 0) / 5.0, 6) AS recall
+       |FROM (SELECT vec_id AS query_id FROM embeddings WHERE $first20) q
+       |LEFT JOIN h USING (query_id) ORDER BY query_id""".stripMargin
+
+  /** Aggregate recall@5 per `np` rung of the ladder top-5 `ra` vs `rb`;
+    * an empty rung still gets its row. */
+  private def hamLadderOutSql: String =
+    """tot AS (SELECT count(*)::BIGINT AS total FROM rb),
+      |h AS (SELECT ra.nprobe, count(*)::BIGINT AS hits
+      |      FROM rb JOIN ra USING (query_id, neighbor_id) GROUP BY 1)
+      |SELECT np.nprobe, coalesce(h.hits, 0)::BIGINT AS hits, tot.total,
+      |  round(coalesce(h.hits, 0)::DOUBLE / tot.total, 6) AS recall
+      |FROM np LEFT JOIN h USING (nprobe), tot ORDER BY nprobe""".stripMargin
+
+  /** Top-5 agreement of the int8 rerank `rq` with the exact rerank `ra`
+    * over the same stage-1 candidates. */
+  private def hamAgreementOutSql: String =
+    s"""${hamRerankSql(out = "rx")},
+       |${hamTop5Sql("ra", "rx")},
+       |${hamRerankSql(q8 = true, out = "rq0")},
+       |${hamTop5Sql("rq", "rq0")},
+       |tot AS (SELECT count(*)::BIGINT AS total FROM ra),
+       |h AS (SELECT count(*)::BIGINT AS hits FROM ra JOIN rq
+       |      USING (query_id, neighbor_id))
+       |SELECT h.hits, tot.total,
+       |  round(h.hits::DOUBLE / tot.total, 6) AS agreement
+       |FROM h, tot""".stripMargin
+
+  /** The raw hybrid's stage 1 at `nprobes` over the first 20 queries. */
+  private def hamIvfSql(nprobes: Int*): String =
+    s"""${hamPreludeSql(ivf = true, first20)},
+       |${hamProbeSql(nprobes: _*)},
+       |${hamBitsSql(first20)},
+       |$hamProbedCutSql""".stripMargin
+
+  /** The residual hybrid's stage 1 at `nprobes` over the first 20 queries. */
+  private def hamIvfResSql(nprobes: Int*): String =
+    s"""${hamPreludeSql(ivf = true, first20)},
+       |${hamProbeSql(nprobes: _*)},
+       |$hamPlanesSql,
+       |$hamResBitsSql,
+       |${hamCellCutSql()}""".stripMargin
+
+  private def ladderRungs: Seq[Int] = Seq(1, 2, 4, 8)
+
+  /** Per-query recall@5 of `search` (a `(query_id, neighbor_id, …)`
+    * top-5) against the brute-force top-5 over `queries`; `search` is
+    * built after the brute side. */
+  private def recallVsBrute(emb: DataFrame, queries: DataFrame,
+                            search: => DataFrame): DataFrame = {
+    val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
+      "vec_id", k = 5)
+    val hits = brute.select(col("query_id"), col("neighbor_id"))
+      .join(search.select(col("query_id"), col("neighbor_id")),
+        Seq("query_id", "neighbor_id"))
+      .groupBy("query_id").agg(count(lit(1)).as("hits"))
+    queries.select(col("vec_id").as("query_id"))
+      .join(hits, Seq("query_id"), "left")
+      .select(col("query_id"), lit(5L).as("k"),
+        coalesce(col("hits"), lit(0L)).as("hits"),
+        round(coalesce(col("hits"), lit(0L)) / 5.0, 6).as("recall"))
+      .orderBy("query_id")
+  }
+
+  /** Aggregate recall@5 per rung of a ladder search (`(nprobe, query_id,
+    * neighbor_id, …)` over [[ladderRungs]]) against the brute top-5,
+    * joined once against the rung-tagged union; an empty rung resurfaces
+    * through the static rung table's left join. */
+  private def ladderRecall(s: SparkSession, emb: DataFrame,
+                           queries: DataFrame, ladder: => DataFrame): DataFrame = {
+    val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
+      "vec_id", k = 5).select(col("query_id"), col("neighbor_id"))
+    val tot = brute.agg(count(lit(1)).as("total"))
+    val hits = brute.join(ladder.select(col("nprobe"), col("query_id"),
+        col("neighbor_id")), Seq("query_id", "neighbor_id"))
+      .groupBy("nprobe").agg(count(lit(1)).as("hits"))
+    import s.implicits._
+    ladderRungs.map(_.toLong).toDF("nprobe")
+      .join(hits, Seq("nprobe"), "left")
+      .crossJoin(tot)
+      .select(col("nprobe"), coalesce(col("hits"), lit(0L)).as("hits"),
+        col("total"),
+        round(coalesce(col("hits"), lit(0L)) / col("total"), 6).as("recall"))
+      .orderBy("nprobe")
+  }
+
+  /** Top-5 agreement of an int8-rerank search `sq` with its exact-rerank
+    * twin `exact` — one row. */
+  private def agreement(exact: DataFrame, sq: DataFrame): DataFrame = {
+    val ex = exact.select(col("query_id"), col("neighbor_id"))
+    val tot = ex.agg(count(lit(1)).as("total"))
+    ex.join(sq.select(col("query_id"), col("neighbor_id")),
+        Seq("query_id", "neighbor_id"))
+      .agg(count(lit(1)).as("hits"))
+      .crossJoin(tot)
+      .select(col("hits"), col("total"),
+        round(col("hits") / col("total"), 6).as("agreement"))
+  }
+
+  /** The 1-bit axis-sign Hamming of every (query, corpus) pair. */
+  private def hamAxisSignSql: String =
+    """SELECT q.query_id, c.vec_id AS neighbor_id,
+      |    len([i for i in range(1, 65)
+      |         if (c.v[i] >= 0) <> (q.qv[i] >= 0)])::BIGINT AS hamming
+      |  FROM nz c, qs q WHERE c.vec_id <> q.query_id""".stripMargin
+
   /** Binary sign quantization as an ANN regime ([[Similarity.knnJoinHamming]]):
     * an 8-byte signature per vector (64× below raw float64) prefilters
     * candidates by `bit_count(xor)` Hamming distance — two codegen'd integer
@@ -77,27 +377,10 @@ object LlmQueries {
           "vec_id", "embedding", "vec_id", k = 5, dims = 64, oversample = 4)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-           |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-           |nz AS (SELECT * FROM n WHERE nrm > 0),
-           |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-           |      WHERE vec_id % 97 = 3),
-           |ham AS (SELECT q.query_id, c.vec_id AS neighbor_id, c.v, c.nrm, q.qv, q.qn,
-           |          len([i for i in range(1, 65)
-           |               if (c.v[i] >= 0) <> (q.qv[i] >= 0)])::BIGINT AS hamming
-           |        FROM nz c, q WHERE c.vec_id <> q.query_id),
-           |cand AS (SELECT *, row_number() OVER (PARTITION BY query_id
-           |           ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-           |rer AS (SELECT query_id, neighbor_id, hamming,
-           |          round(list_sum([v[i] * qv[i] for i in range(1, 65)]) / (nrm * qn), 6)
-           |            AS cosine
-           |        FROM cand WHERE hrank <= 20),
-           |r AS (SELECT query_id, neighbor_id, hamming, cosine,
-           |        row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-           |SELECT query_id, neighbor_id, rank, hamming, cosine FROM r
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+    Some(s"""WITH ${hamPreludeSql(ivf = false, sparseQs)},
+            |${hamCutSql("", hamAxisSignSql, "query_id")},
+            |${hamRerankSql()},
+            |${hamKnnOutSql()}""".stripMargin))
 
   /** The DENSIFIED 2-bit-per-dim Hamming regime
     * ([[Similarity.superBitKernel]]): 128 sign bits of deterministic
@@ -107,46 +390,16 @@ object LlmQueries {
     * BASELINE.md; a naive mean-|v| thermometer measured WORSE than the
     * sign code, see LlmSpec). Projections are exact µ-unit integers, so
     * every bit replays in any engine. Same two-stage construction as
-    * `sim_knn_hamming`, 16 bytes/row. */
-  /** The densified-sketch SDC oracle, shared verbatim by the live
-    * re-sketch query (`sim_knn_hamming2`) and its stored-signature twin
+    * `sim_knn_hamming`, 16 bytes/row. The oracle is shared verbatim by
+    * this live re-sketch query and its stored-signature twin
     * (`sim_knn_hamming4`) — the two Spark paths are bit-replayable by
-    * construction, so one SQL covers both. */
-  private val hammingSdc2Sql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-           |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-           |nz AS (SELECT * FROM n WHERE nrm > 0),
-           |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-           |        for i in range(1, len(v) + 1)] AS u FROM nz),
-           |pb AS (SELECT k, i,
-           |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-           |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-           |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-           |bits AS (SELECT u.vec_id, pb.k,
-           |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-           |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-           |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-           |       WHERE vec_id % 97 = 3),
-           |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-           |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-           |            AS hamming
-           |        FROM bits cb JOIN qb USING (k)
-           |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2),
-           |cand AS (SELECT query_id, neighbor_id, hamming,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-           |rer AS (SELECT c.query_id, c.neighbor_id, c.hamming,
-           |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-           |                / (cv.nrm * qv.nrm), 6) AS cosine
-           |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-           |        JOIN nz qv ON qv.vec_id = c.query_id
-           |        WHERE c.hrank <= 20),
-           |r AS (SELECT query_id, neighbor_id, hamming, cosine,
-           |        row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-           |SELECT query_id, neighbor_id, rank, hamming, cosine FROM r
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    * construction. */
+  private def hammingSdc2Sql: String =
+    s"""WITH ${hamPreludeSql(ivf = false, sparseQs)},
+       |${hamBitsSql(sparseQs)},
+       |${hamFlatCutSql(adc = false)},
+       |${hamRerankSql()},
+       |${hamKnnOutSql()}""".stripMargin
 
   val simKnnHamming2: QueryDef = QueryDef("sim_knn_hamming2",
     (s, d) => {
@@ -184,46 +437,15 @@ object LlmQueries {
     * per-plane projection magnitudes, stage 1 ranks by
     * `Σ q_k·sign_k(corpus)` (higher = more aligned; ties → smaller id)
     * and only the k·oversample survivors pay the exact cosine. The
-    * integer score replays bit-for-bit in the oracle. */
-  /** The ADC oracle, shared verbatim by the live re-sketch query
-    * (`sim_knn_hamming3`) and its stored-signature twin
+    * integer score replays bit-for-bit in the oracle, shared verbatim by
+    * this live re-sketch query and its stored-signature twin
     * (`sim_knn_hamming5`). */
-  private val hammingAdcSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-           |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-           |nz AS (SELECT * FROM n WHERE nrm > 0),
-           |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-           |        for i in range(1, len(v) + 1)] AS u FROM nz),
-           |pb AS (SELECT k, i,
-           |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-           |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-           |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-           |proj AS (SELECT u.vec_id, pb.k,
-           |           sum(u.u[pb.i + 1] * pb.s)::BIGINT AS pv
-           |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-           |bits AS (SELECT vec_id, k, (pv > 0) AS b FROM proj),
-           |qp AS (SELECT vec_id AS query_id, k, pv FROM proj
-           |       WHERE vec_id % 97 = 3),
-           |sc AS (SELECT cb.vec_id AS neighbor_id, qp.query_id,
-           |         sum(CASE WHEN cb.b THEN qp.pv ELSE -qp.pv END)::BIGINT
-           |           AS ascore
-           |       FROM bits cb JOIN qp USING (k)
-           |       WHERE cb.vec_id <> qp.query_id GROUP BY 1, 2),
-           |cand AS (SELECT query_id, neighbor_id, ascore,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY ascore DESC, neighbor_id) AS hrank FROM sc),
-           |rer AS (SELECT c.query_id, c.neighbor_id, c.ascore,
-           |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-           |                / (cv.nrm * qv.nrm), 6) AS cosine
-           |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-           |        JOIN nz qv ON qv.vec_id = c.query_id
-           |        WHERE c.hrank <= 20),
-           |r AS (SELECT query_id, neighbor_id, ascore, cosine,
-           |        row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-           |SELECT query_id, neighbor_id, rank, ascore, cosine FROM r
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+  private def hammingAdcSql: String =
+    s"""WITH ${hamPreludeSql(ivf = false, sparseQs)},
+       |${hamBitsSql(sparseQs)},
+       |${hamFlatCutSql(adc = true)},
+       |${hamRerankSql()},
+       |${hamKnnOutSql("ascore")}""".stripMargin
 
   val simKnnHamming3: QueryDef = QueryDef("sim_knn_hamming3",
     (s, d) => {
@@ -268,42 +490,11 @@ object LlmQueries {
           "embedding", "vec_id", k = 5, dims = 64, oversample = 4)
         .orderBy("query_id", "rank")
     },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-           |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-           |nz AS (SELECT * FROM n WHERE nrm > 0),
-           |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-           |        for i in range(1, len(v) + 1)] AS u FROM nz),
-           |pb AS (SELECT k, i,
-           |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-           |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-           |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-           |bits AS (SELECT u.vec_id, pb.k,
-           |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-           |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-           |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-           |       WHERE vec_id % 97 = 3),
-           |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-           |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-           |            AS hamming
-           |        FROM bits cb JOIN qb USING (k)
-           |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2),
-           |cand AS (SELECT query_id, neighbor_id, hamming,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-           |qc AS (SELECT vec_id, [round(v[i] / list_max([abs(x) for x in v]) * 127.0,
-           |          0)::BIGINT for i in range(1, len(v) + 1)] AS q FROM nz),
-           |rer AS (SELECT c.query_id, c.neighbor_id, c.hamming,
-           |          round(list_sum([cv.q[i] * qv.v[i] for i in range(1, 65)])
-           |                / (sqrt(list_sum([x * x for x in cv.q])) * qv.nrm), 6) AS cosine
-           |        FROM cand c JOIN qc cv ON cv.vec_id = c.neighbor_id
-           |        JOIN nz qv ON qv.vec_id = c.query_id
-           |        WHERE c.hrank <= 20),
-           |r AS (SELECT query_id, neighbor_id, hamming, cosine,
-           |        row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-           |SELECT query_id, neighbor_id, rank, hamming, cosine FROM r
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+    Some(s"""WITH ${hamPreludeSql(ivf = false, sparseQs)},
+            |${hamBitsSql(sparseQs)},
+            |${hamFlatCutSql(adc = false)},
+            |${hamRerankSql(q8 = true)},
+            |${hamKnnOutSql()}""".stripMargin))
 
   /** Fidelity dial of the int8 rerank: top-5 agreement between the
     * all-stored SQ search and its exact-rerank twin
@@ -316,72 +507,282 @@ object LlmQueries {
       val emb = Tables.embeddings(s, d)
       val queries = emb.where(col("vec_id") % 97 === 3)
       val sigs = Materialized.hammingSigs(s, d)
-      val exact = Similarity.knnJoinHammingFromSigs(emb, sigs, queries,
+      agreement(
+        Similarity.knnJoinHammingFromSigs(emb, sigs, queries,
           "vec_id", "embedding", "vec_id", k = 5, dims = 64, oversample = 4,
-          bitsPerDim = 2)
-        .select(col("query_id"), col("neighbor_id"))
-      val sq = Similarity.knnJoinHammingSqFromSigs(Materialized.q8Codes(s, d),
+          bitsPerDim = 2),
+        Similarity.knnJoinHammingSqFromSigs(Materialized.q8Codes(s, d),
           sigs, queries, "embedding", "vec_id", k = 5, dims = 64,
-          oversample = 4)
-        .select(col("query_id"), col("neighbor_id"))
-      val tot = exact.agg(count(lit(1)).as("total"))
-      exact.join(sq, Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(tot)
-        .select(col("hits"), col("total"),
-          round(col("hits") / col("total"), 6).as("agreement"))
+          oversample = 4))
     },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-           |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-           |nz AS (SELECT * FROM n WHERE nrm > 0),
-           |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-           |        for i in range(1, len(v) + 1)] AS u FROM nz),
-           |pb AS (SELECT k, i,
-           |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-           |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-           |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-           |bits AS (SELECT u.vec_id, pb.k,
-           |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-           |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-           |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-           |       WHERE vec_id % 97 = 3),
-           |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-           |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-           |            AS hamming
-           |        FROM bits cb JOIN qb USING (k)
-           |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2),
-           |cand AS (SELECT query_id, neighbor_id,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-           |qc AS (SELECT vec_id, [round(v[i] / list_max([abs(x) for x in v]) * 127.0,
-           |          0)::BIGINT for i in range(1, len(v) + 1)] AS q FROM nz),
-           |rx AS (SELECT c.query_id, c.neighbor_id,
-           |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-           |                / (cv.nrm * qv.nrm), 6) AS cosine
-           |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-           |        JOIN nz qv ON qv.vec_id = c.query_id
-           |        WHERE c.hrank <= 20),
-           |ra AS (SELECT query_id, neighbor_id FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rx)
-           |      WHERE rank <= 5),
-           |rq0 AS (SELECT c.query_id, c.neighbor_id,
-           |          round(list_sum([cv.q[i] * qv.v[i] for i in range(1, 65)])
-           |                / (sqrt(list_sum([x * x for x in cv.q])) * qv.nrm), 6) AS cosine
-           |        FROM cand c JOIN qc cv ON cv.vec_id = c.neighbor_id
-           |        JOIN nz qv ON qv.vec_id = c.query_id
-           |        WHERE c.hrank <= 20),
-           |rq AS (SELECT query_id, neighbor_id FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rq0)
-           |      WHERE rank <= 5),
-           |tot AS (SELECT count(*)::BIGINT AS total FROM ra),
-           |h AS (SELECT count(*)::BIGINT AS hits FROM ra JOIN rq
-           |      USING (query_id, neighbor_id))
-           |SELECT h.hits, tot.total,
-           |  round(h.hits::DOUBLE / tot.total, 6) AS agreement
-           |FROM h, tot""".stripMargin))
+    Some(s"""WITH ${hamPreludeSql(ivf = false, sparseQs)},
+            |${hamBitsSql(sparseQs)},
+            |${hamFlatCutSql(adc = false)},
+            |$hamAgreementOutSql""".stripMargin))
+
+  /** Recall@k of the ASYMMETRIC binary-sketch search vs the brute-force
+    * ground truth as a first-class oracled artifact — the `sim_ivf_recall`
+    * discipline applied to the ADC rung ([[Similarity.knnJoinHammingAdc]]
+    * at oversample 4): both sides share the (cosine desc, id) tie rule
+    * and the stage-1 cut is an exact integer score, so the sets are
+    * deterministic in both engines. The honest corpus-scale numbers live
+    * in BASELINE.md (RecallProbeMain at 105 truth pairs); this makes the
+    * dial replayable per run. The ADC side reads the STORED signature
+    * table ([[Similarity.knnJoinHammingAdcFromSigs]] over
+    * [[Materialized.hammingSigs]] — the production read path; output
+    * bit-identical to the live re-sketch, oracle unchanged). */
+  val simHammingRecall: QueryDef = QueryDef("sim_hamming_recall",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val queries = emb.where(col("vec_id") < 20)
+      recallVsBrute(emb, queries, Similarity.knnJoinHammingAdcFromSigs(emb,
+        Materialized.hammingSigs(s, d), queries, "vec_id",
+        "embedding", "vec_id", k = 5, dims = 64, oversample = 4))
+    },
+    Some(s"""WITH ${hamPreludeSql(ivf = false, first20)},
+            |${hamBitsSql(first20)},
+            |${hamFlatCutSql(adc = true)},
+            |${hamRerankSql()},
+            |${hamTop5Sql("ra", "rer")},
+            |$hamBruteSql,
+            |$hamRecallOutSql""".stripMargin))
+
+  /** IVF × binary-sketch HYBRID kNN ([[Similarity.knnJoinHammingIvf]]
+    * over [[Materialized.hammingSigsIvf]]): the coarse quantizer prunes
+    * which PARTITIONS stage 1 reads (probed cells), the densified sketch
+    * prunes what it reads per row (16 bytes) — the FAISS
+    * IVF-binary-quantization shape, both pruning axes in one plan
+    * (PlanSpec pins PartitionFilters + the sketch-only ReadSchema).
+    * Probe convention = `sim_knn_join_ivf`'s (squared L2, (dist, cid)
+    * ties); sketch metric = `sim_knn_hamming2`'s; rerank = the shared
+    * exact cosine. The oracle composes the two existing replays. */
+  val simKnnHammingIvf: QueryDef = QueryDef("sim_knn_hamming_ivf",
+    (s, d) => {
+      val idx = Materialized.ivfIndex(s, d)
+      Similarity.knnJoinHammingIvf(Materialized.hammingSigsIvf(s, d),
+          Tables.embeddings(s, d), idx.centroids,
+          Tables.embeddings(s, d).where(col("vec_id") < 20),
+          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
+          oversample = 4)
+        .orderBy("query_id", "rank")
+    },
+    Some(s"""WITH ${hamIvfSql(2)},
+            |${hamRerankSql()},
+            |${hamKnnOutSql()}""".stripMargin))
+
+  /** Recall@5 of the HYBRID search vs brute-force ground truth — the
+    * `sim_hamming_recall` discipline on the composed dial: the hybrid's
+    * misses decompose into cell misses (the true neighbor's cell wasn't
+    * probed — `nprobe`'s axis) and sketch misses (probed but cut —
+    * `oversample`'s axis), so this artifact is the honest price of the
+    * partition-pruned 16-byte stage 1. Both sides share the
+    * (cosine desc, id) tie rule; deterministic in both engines. */
+  val simHammingIvfRecall: QueryDef = QueryDef("sim_hamming_ivf_recall",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val queries = emb.where(col("vec_id") < 20)
+      val idx = Materialized.ivfIndex(s, d)
+      recallVsBrute(emb, queries, Similarity.knnJoinHammingIvf(
+        Materialized.hammingSigsIvf(s, d), emb, idx.centroids, queries,
+        "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
+        oversample = 4))
+    },
+    Some(s"""WITH ${hamIvfSql(2)},
+            |${hamRerankSql()},
+            |${hamTop5Sql("ra", "rer")},
+            |$hamBruteSql,
+            |$hamRecallOutSql""".stripMargin))
+
+  /** The hybrid recall dial as a LADDER — `sim_hamming_ivf_recall`
+    * measures one (nprobe=2, oversample=4) point; this artifact replays
+    * the whole nprobe axis (1/2/4/8 at the fixed oversample), one row
+    * per rung: aggregate recall@5 of the hybrid vs brute ground truth
+    * over the 20 queries. The top rung probes every trained cell, so
+    * cell-miss is structurally zero there and the row equals the flat
+    * sketch recall — the ladder separates the two recall factors the
+    * composed dial multiplies (`nprobe`'s cell recall × `oversample`'s
+    * sketch recall). The four rungs share one probe and one rerank
+    * ([[Similarity.knnJoinHammingIvfLadder]], each rung row-identical to
+    * the single-shot search) and one brute join. */
+  val simHammingIvfRecall2: QueryDef = QueryDef("sim_hamming_ivf_recall2",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val queries = emb.where(col("vec_id") < 20)
+      val idx = Materialized.ivfIndex(s, d)
+      val sigs = Materialized.hammingSigsIvf(s, d)
+      ladderRecall(s, emb, queries, Similarity.knnJoinHammingIvfLadder(sigs,
+        emb, idx.centroids, queries, "vec_id", "embedding", "vec_id", k = 5,
+        dims = 64, nprobes = ladderRungs, oversample = 4))
+    },
+    Some(s"""WITH ${hamIvfSql(ladderRungs: _*)},
+            |${hamRerankSql()},
+            |${hamTop5Sql("ra", "rer", "nprobe, query_id")},
+            |$hamBruteSql,
+            |$hamLadderOutSql""".stripMargin))
+
+  /** IVF × RESIDUAL-sketch hybrid kNN
+    * ([[Similarity.knnJoinHammingIvfRes]] over
+    * [[Materialized.hammingSigsIvfRes]]) — the FAISS binary-IVF
+    * refinement: stage 1 Hamming compares sketches of `v −
+    * centroid(cell)` on BOTH sides (the query re-sketches its residual
+    * per probed cell), concentrating all 128 sign bits on the
+    * within-cell variance the coarse quantizer leaves. Same probe
+    * convention, partition pruning and exact rerank as
+    * `sim_knn_hamming_ivf`; the stage-1 cut is PER PROBED CELL (residual
+    * distances are only comparable within a cell — the measured failure
+    * of a global cut is in BASELINE.md); the oracle replays the residual
+    * subtraction inside the same 6-dp µ-unit plane projection and the
+    * per-cell rank. */
+  val simKnnHammingIvfRes: QueryDef = QueryDef("sim_knn_hamming_ivfres",
+    (s, d) => {
+      val idx = Materialized.ivfIndex(s, d)
+      Similarity.knnJoinHammingIvfRes(Materialized.hammingSigsIvfRes(s, d),
+          Tables.embeddings(s, d), idx.centroids,
+          Tables.embeddings(s, d).where(col("vec_id") < 20),
+          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
+          oversample = 4)
+        .orderBy("query_id", "rank")
+    },
+    Some(s"""WITH ${hamIvfResSql(2)},
+            |${hamRerankSql()},
+            |${hamKnnOutSql()}""".stripMargin))
+
+  /** Recall@5 of the RESIDUAL-sketch hybrid vs the RAW-sketch hybrid at
+    * the same (nprobe, oversample) point, both against brute-force
+    * ground truth — the honest measurement of whether residual
+    * sketching buys recall on THIS corpus (it concentrates sketch
+    * entropy only where cells actually absorb variance; on an isotropic
+    * corpus with weak cells the two variants should tie — the
+    * `sdc-opq` honest-negative discipline applied to the sketch
+    * family). One row per variant; both chains replayed in SQL. */
+  val simHammingIvfResRecall: QueryDef = QueryDef("sim_hamming_ivfres_recall",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val queries = emb.where(col("vec_id") < 20)
+      val idx = Materialized.ivfIndex(s, d)
+      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
+        "vec_id", k = 5).select(col("query_id"), col("neighbor_id"))
+      val tot = brute.agg(count(lit(1)).as("total"))
+      def hitRow(name: String, hyb: DataFrame) =
+        brute.join(hyb.select(col("query_id"), col("neighbor_id")),
+            Seq("query_id", "neighbor_id"))
+          .agg(count(lit(1)).as("hits"))
+          .select(lit(name).as("variant"), col("hits"))
+      hitRow("raw", Similarity.knnJoinHammingIvf(
+          Materialized.hammingSigsIvf(s, d), emb, idx.centroids, queries,
+          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
+          oversample = 4))
+        .unionByName(hitRow("residual", Similarity.knnJoinHammingIvfRes(
+          Materialized.hammingSigsIvfRes(s, d), emb, idx.centroids, queries,
+          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
+          oversample = 4)))
+        .crossJoin(tot)
+        .select(col("variant"), col("hits"), col("total"),
+          round(col("hits") / col("total"), 6).as("recall"))
+        .orderBy("variant")
+    },
+    Some(s"""WITH ${hamIvfSql(2)},
+            |${hamRerankSql()},
+            |${hamTop5Sql("rar", "rer")},
+            |$hamResBitsSql,
+            |${hamCellCutSql("s")},
+            |${hamRerankSql("s")},
+            |${hamTop5Sql("ras", "rers")},
+            |$hamBruteSql,
+            |tot AS (SELECT count(*)::BIGINT AS total FROM rb),
+            |hr AS (SELECT count(*)::BIGINT AS hits
+            |       FROM rb JOIN rar USING (query_id, neighbor_id)),
+            |hs AS (SELECT count(*)::BIGINT AS hits
+            |       FROM rb JOIN ras USING (query_id, neighbor_id))
+            |SELECT * FROM (
+            |  SELECT 'raw' AS variant, hr.hits, tot.total,
+            |    round(hr.hits::DOUBLE / tot.total, 6) AS recall FROM hr, tot
+            |  UNION ALL
+            |  SELECT 'residual' AS variant, hs.hits, tot.total,
+            |    round(hs.hits::DOUBLE / tot.total, 6) AS recall FROM hs, tot)
+            |ORDER BY variant""".stripMargin))
+
+  /** The RESIDUAL hybrid's recall dial as a LADDER —
+    * `sim_hamming_ivf_recall2`'s artifact for the residual variant:
+    * aggregate recall@5 vs brute ground truth at nprobe 1/2/4/8, fixed
+    * oversample 4, one row per rung, with the PER-CELL stage-1 cut
+    * replayed (residual Hamming distances are only comparable within a
+    * cell — BASELINE.md records the measured collapse of a global cut,
+    * recall FALLING as nprobe grew; this stored artifact is the
+    * monotone dial that fix bought). Against `sim_hamming_ivf_recall2`
+    * at the same rungs the two ladders decompose the design choice:
+    * same cells probed, same rerank — only the sketch basis differs.
+    * The residual ladder ranks stage 1 ONCE (the per-(query, cell) cut
+    * is rung-independent). */
+  val simHammingIvfResRecall2: QueryDef = QueryDef("sim_hamming_ivfres_recall2",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val queries = emb.where(col("vec_id") < 20)
+      val idx = Materialized.ivfIndex(s, d)
+      val sigs = Materialized.hammingSigsIvfRes(s, d)
+      ladderRecall(s, emb, queries, Similarity.knnJoinHammingIvfResLadder(sigs,
+        emb, idx.centroids, queries, "vec_id", "embedding", "vec_id", k = 5,
+        dims = 64, nprobes = ladderRungs, oversample = 4))
+    },
+    Some(s"""WITH ${hamIvfResSql(ladderRungs: _*)},
+            |${hamRerankSql()},
+            |${hamTop5Sql("ra", "rer", "nprobe, query_id")},
+            |$hamBruteSql,
+            |$hamLadderOutSql""".stripMargin))
+
+  /** The FULLY-COMPOSED all-stored search
+    * ([[Similarity.knnJoinHammingIvfResSq]] over
+    * [[Materialized.hammingSigsIvfRes]] + [[Materialized.q8CodesIvf]]):
+    * probed-cell PartitionFilters prune WHICH rows BOTH scans read —
+    * the sketch scan AND the rerank's code scan (the cell-partitioned
+    * code store closes the last full-scan in the search; both
+    * PartitionFilters PlanSpec-pinned) — the residual sketch prunes
+    * WHAT stage 1 reads per row (16 B), and the rerank ranks by the
+    * int8 quantized cosine from the stored codes. NO raw corpus vector
+    * is read anywhere in the plan. Stage-1 candidacy is bit-equal to
+    * `sim_knn_hamming_ivfres` (shared body, per-cell cut); the
+    * probed-cell restriction of the rerank cannot drop a candidate
+    * (same assignment on both stores), so the result is identical to a
+    * flat-code rerank and the oracle replays the probe, the residual
+    * µ-unit sketches, the per-cell rank AND the integer-code cosine
+    * without modeling the partition layout. */
+  val simKnnHammingIvfResQ8: QueryDef = QueryDef("sim_knn_hamming_ivfres_q8",
+    (s, d) => {
+      val idx = Materialized.ivfIndex(s, d)
+      Similarity.knnJoinHammingIvfResSq(Materialized.q8CodesIvf(s, d),
+          Materialized.hammingSigsIvfRes(s, d), idx.centroids,
+          Tables.embeddings(s, d).where(col("vec_id") < 20),
+          "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
+          oversample = 4)
+        .orderBy("query_id", "rank")
+    },
+    Some(s"""WITH ${hamIvfResSql(2)},
+            |${hamRerankSql(q8 = true)},
+            |${hamKnnOutSql()}""".stripMargin))
+
+  /** Fidelity dial of the fully-composed search: top-5 agreement
+    * between the SQ-rerank residual hybrid and its exact-rerank twin
+    * (`sim_knn_hamming_ivfres`) at the same (nprobe=2, oversample=4)
+    * point — identical stage-1 candidates by construction (shared
+    * body), so any disagreement is PURELY what the int8 rerank moves in
+    * the final ranking, with the partition-pruning axis along for the
+    * ride. One row; both chains replayed in SQL. */
+  val simHammingIvfResQ8Recall: QueryDef = QueryDef("sim_hamming_ivfres_q8_recall",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val queries = emb.where(col("vec_id") < 20)
+      val idx = Materialized.ivfIndex(s, d)
+      val sigs = Materialized.hammingSigsIvfRes(s, d)
+      agreement(
+        Similarity.knnJoinHammingIvfRes(sigs, emb, idx.centroids,
+          queries, "vec_id", "embedding", "vec_id", k = 5, dims = 64,
+          nprobe = 2, oversample = 4),
+        Similarity.knnJoinHammingIvfResSq(Materialized.q8CodesIvf(s, d),
+          sigs, idx.centroids, queries, "embedding", "vec_id", k = 5,
+          dims = 64, nprobe = 2, oversample = 4))
+    },
+    Some(s"""WITH ${hamIvfResSql(2)},
+            |$hamAgreementOutSql""".stripMargin))
 
   /** Hybrid retrieval ([[TextAnalysis.rrfFuse]]): BM25 keyword top-10 and
     * embedding-kNN top-10 for the same three document-anchored queries
@@ -1307,108 +1708,13 @@ object LlmQueries {
     * the probed set's overlap with ground truth. Both sides share the
     * (cosine desc, id) tie-break, so the sets are deterministic in both
     * engines. */
-  /** Recall@k of the ASYMMETRIC binary-sketch search vs the brute-force
-    * ground truth as a first-class oracled artifact — the `sim_ivf_recall`
-    * discipline applied to the ADC rung ([[Similarity.knnJoinHammingAdc]]
-    * at oversample 4): both sides share the (cosine desc, id) tie rule
-    * and the stage-1 cut is an exact integer score, so the sets are
-    * deterministic in both engines. The honest corpus-scale numbers live
-    * in BASELINE.md (RecallProbeMain at 105 truth pairs); this makes the
-    * dial replayable per run. The ADC side reads the STORED signature
-    * table ([[Similarity.knnJoinHammingAdcFromSigs]] over
-    * [[Materialized.hammingSigs]] — the production read path; output
-    * bit-identical to the live re-sketch, oracle unchanged). */
-  val simHammingRecall: QueryDef = QueryDef("sim_hamming_recall",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
-        "vec_id", k = 5)
-      val adc = Similarity.knnJoinHammingAdcFromSigs(emb,
-        Materialized.hammingSigs(s, d), queries, "vec_id",
-        "embedding", "vec_id", k = 5, dims = 64, oversample = 4)
-      val hits = brute.select(col("query_id"), col("neighbor_id"))
-        .join(adc.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      queries.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), lit(5L).as("k"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          round(coalesce(col("hits"), lit(0L)) / 5.0, 6).as("recall"))
-        .orderBy("query_id")
-    },
-    Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-           |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-           |nz AS (SELECT * FROM n WHERE nrm > 0),
-           |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-           |        for i in range(1, len(v) + 1)] AS u FROM nz),
-           |pb AS (SELECT k, i,
-           |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-           |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-           |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-           |proj AS (SELECT u.vec_id, pb.k,
-           |           sum(u.u[pb.i + 1] * pb.s)::BIGINT AS pv
-           |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-           |bits AS (SELECT vec_id, k, (pv > 0) AS b FROM proj),
-           |qp AS (SELECT vec_id AS query_id, k, pv FROM proj
-           |       WHERE vec_id < 20),
-           |sc AS (SELECT cb.vec_id AS neighbor_id, qp.query_id,
-           |         sum(CASE WHEN cb.b THEN qp.pv ELSE -qp.pv END)::BIGINT
-           |           AS ascore
-           |       FROM bits cb JOIN qp USING (k)
-           |       WHERE cb.vec_id <> qp.query_id GROUP BY 1, 2),
-           |cand AS (SELECT query_id, neighbor_id,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY ascore DESC, neighbor_id) AS hrank FROM sc),
-           |rer AS (SELECT c.query_id, c.neighbor_id,
-           |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-           |                / (cv.nrm * qv.nrm), 6) AS cosine
-           |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-           |        JOIN nz qv ON qv.vec_id = c.query_id
-           |        WHERE c.hrank <= 20),
-           |ra AS (SELECT query_id, neighbor_id FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-           |      WHERE rank <= 5),
-           |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-           |       WHERE vec_id < 20),
-           |sb AS (SELECT q.query_id, n2.vec_id AS neighbor_id,
-           |        round(list_sum([n2.v[i] * q.qv[i] for i in range(1, 65)])
-           |              / (n2.nrm * q.qn), 6) AS cosine
-           |      FROM nz n2, qs q WHERE n2.vec_id <> q.query_id),
-           |rb AS (SELECT query_id, neighbor_id FROM (
-           |        SELECT *, row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cosine DESC, neighbor_id) AS rank FROM sb)
-           |      WHERE rank <= 5),
-           |h AS (SELECT rb.query_id, count(*)::BIGINT AS hits
-           |      FROM rb JOIN ra USING (query_id, neighbor_id) GROUP BY 1)
-           |SELECT q.query_id, 5::BIGINT AS k,
-           |  coalesce(h.hits, 0)::BIGINT AS hits,
-           |  round(coalesce(h.hits, 0) / 5.0, 6) AS recall
-           |FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 20) q
-           |LEFT JOIN h USING (query_id) ORDER BY query_id""".stripMargin))
-
   val simIvfRecall: QueryDef = QueryDef("sim_ivf_recall",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val queries = emb.where(col("vec_id") < 20)
       val idx = Materialized.ivfIndex(s, d)
-      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
-        "vec_id", k = 5)
-      val probed = Similarity.knnJoinIvf(idx.assignment, idx.centroids,
-        queries, "vec_id", "embedding", k = 5, nprobe = 2)
-      val hits = brute.select(col("query_id"), col("neighbor_id"))
-        .join(probed.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      queries.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), lit(5L).as("k"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          round(coalesce(col("hits"), lit(0L)) / 5.0, 6).as("recall"))
-        .orderBy("query_id")
+      recallVsBrute(emb, queries, Similarity.knnJoinIvf(idx.assignment,
+        idx.centroids, queries, "vec_id", "embedding", k = 5, nprobe = 2))
     },
     Some(s"""WITH $ivfTrainedSql,
             |$ivfAssignFromTrainedSql,
@@ -4983,778 +5289,6 @@ object LlmQueries {
             |FROM g LEFT JOIN g g2 ON g.query_id = g2.neighbor_id
             |  AND g.neighbor_id = g2.query_id
             |ORDER BY g.query_id, g.rank""".stripMargin))
-
-  /** IVF × binary-sketch HYBRID kNN ([[Similarity.knnJoinHammingIvf]]
-    * over [[Materialized.hammingSigsIvf]]): the coarse quantizer prunes
-    * which PARTITIONS stage 1 reads (probed cells), the densified sketch
-    * prunes what it reads per row (16 bytes) — the FAISS
-    * IVF-binary-quantization shape, both pruning axes in one plan
-    * (PlanSpec pins PartitionFilters + the sketch-only ReadSchema).
-    * Probe convention = `sim_knn_join_ivf`'s (squared L2, (dist, cid)
-    * ties); sketch metric = `sim_knn_hamming2`'s; rerank = the shared
-    * exact cosine. The oracle composes the two existing replays. */
-  val simKnnHammingIvf: QueryDef = QueryDef("sim_knn_hamming_ivf",
-    (s, d) => {
-      val idx = Materialized.ivfIndex(s, d)
-      Similarity.knnJoinHammingIvf(Materialized.hammingSigsIvf(s, d),
-          Tables.embeddings(s, d), idx.centroids,
-          Tables.embeddings(s, d).where(col("vec_id") < 20),
-          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
-          oversample = 4)
-        .orderBy("query_id", "rank")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT query_id, centroid_id FROM pd WHERE prn <= 2),
-            |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-            |        for i in range(1, len(v) + 1)] AS u FROM nz),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |bits AS (SELECT u.vec_id, pb.k,
-            |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-            |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-            |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-            |       WHERE vec_id < 20),
-            |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM bits cb
-            |          JOIN a3 ON cb.vec_id = a3.vec_id
-            |          JOIN probe p ON a3.centroid_id = p.centroid_id
-            |          JOIN qb ON qb.query_id = p.query_id AND qb.k = cb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2),
-            |cand AS (SELECT query_id, neighbor_id, hamming,
-            |           row_number() OVER (PARTITION BY query_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-            |rer AS (SELECT c.query_id, c.neighbor_id, c.hamming,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |r AS (SELECT query_id, neighbor_id, hamming, cosine,
-            |        row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-            |SELECT query_id, neighbor_id, rank, hamming, cosine FROM r
-            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
-
-  /** Recall@5 of the HYBRID search vs brute-force ground truth — the
-    * `sim_hamming_recall` discipline on the composed dial: the hybrid's
-    * misses decompose into cell misses (the true neighbor's cell wasn't
-    * probed — `nprobe`'s axis) and sketch misses (probed but cut —
-    * `oversample`'s axis), so this artifact is the honest price of the
-    * partition-pruned 16-byte stage 1. Both sides share the
-    * (cosine desc, id) tie rule; deterministic in both engines. */
-  val simHammingIvfRecall: QueryDef = QueryDef("sim_hamming_ivf_recall",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      val idx = Materialized.ivfIndex(s, d)
-      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
-        "vec_id", k = 5)
-      val hyb = Similarity.knnJoinHammingIvf(Materialized.hammingSigsIvf(s, d),
-        emb, idx.centroids, queries, "vec_id", "embedding", "vec_id",
-        k = 5, dims = 64, nprobe = 2, oversample = 4)
-      val hits = brute.select(col("query_id"), col("neighbor_id"))
-        .join(hyb.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-      queries.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), lit(5L).as("k"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          round(coalesce(col("hits"), lit(0L)) / 5.0, 6).as("recall"))
-        .orderBy("query_id")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT query_id, centroid_id FROM pd WHERE prn <= 2),
-            |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-            |        for i in range(1, len(v) + 1)] AS u FROM nz),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |bits AS (SELECT u.vec_id, pb.k,
-            |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-            |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-            |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-            |       WHERE vec_id < 20),
-            |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM bits cb
-            |          JOIN a3 ON cb.vec_id = a3.vec_id
-            |          JOIN probe p ON a3.centroid_id = p.centroid_id
-            |          JOIN qb ON qb.query_id = p.query_id AND qb.k = cb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2),
-            |cand AS (SELECT query_id, neighbor_id,
-            |           row_number() OVER (PARTITION BY query_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-            |rer AS (SELECT c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |ra AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-            |      WHERE rank <= 5),
-            |sb AS (SELECT q.query_id, n2.vec_id AS neighbor_id,
-            |        round(list_sum([n2.v[i] * q.qv[i] for i in range(1, 65)])
-            |              / (n2.nrm * q.qn), 6) AS cosine
-            |      FROM nz n2, qs q WHERE n2.vec_id <> q.query_id),
-            |rb AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM sb)
-            |      WHERE rank <= 5),
-            |h AS (SELECT rb.query_id, count(*)::BIGINT AS hits
-            |      FROM rb JOIN ra USING (query_id, neighbor_id) GROUP BY 1)
-            |SELECT q.query_id, 5::BIGINT AS k,
-            |  coalesce(h.hits, 0)::BIGINT AS hits,
-            |  round(coalesce(h.hits, 0) / 5.0, 6) AS recall
-            |FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 20) q
-            |LEFT JOIN h USING (query_id) ORDER BY query_id""".stripMargin))
-
-  /** The hybrid recall dial as a LADDER — `sim_hamming_ivf_recall`
-    * measures one (nprobe=2, oversample=4) point; this artifact replays
-    * the whole nprobe axis (1/2/4/8 at the fixed oversample), one row
-    * per rung: aggregate recall@5 of the hybrid vs brute ground truth
-    * over the 20 queries. The top rung probes every trained cell, so
-    * cell-miss is structurally zero there and the row equals the flat
-    * sketch recall — the ladder separates the two recall factors the
-    * composed dial multiplies (`nprobe`'s cell recall × `oversample`'s
-    * sketch recall). The stored artifact replays the dial, not a sample
-    * of it. */
-  val simHammingIvfRecall2: QueryDef = QueryDef("sim_hamming_ivf_recall2",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      val idx = Materialized.ivfIndex(s, d)
-      val sigs = Materialized.hammingSigsIvf(s, d)
-      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
-        "vec_id", k = 5).select(col("query_id"), col("neighbor_id"))
-      val tot = brute.agg(count(lit(1)).as("total"))
-      // r16: the four rungs share ONE probe/stage-1/rerank plan (the
-      // ladder search) and the brute ground truth is joined ONCE against
-      // the rung-tagged union instead of once per rung — same rows per
-      // rung (ladder equivalence note in Similarity), same output schema;
-      // empty rungs resurface via the static rung table's left join.
-      val nprobes = Seq(1, 2, 4, 8)
-      val hybAll = Similarity.knnJoinHammingIvfLadder(sigs, emb, idx.centroids,
-        queries, "vec_id", "embedding", "vec_id", k = 5, dims = 64,
-        nprobes = nprobes, oversample = 4)
-        .select(col("nprobe"), col("query_id"), col("neighbor_id"))
-      val hits = brute.join(hybAll, Seq("query_id", "neighbor_id"))
-        .groupBy("nprobe").agg(count(lit(1)).as("hits"))
-      import s.implicits._
-      nprobes.map(_.toLong).toDF("nprobe")
-        .join(hits, Seq("nprobe"), "left")
-        .crossJoin(tot)
-        .select(col("nprobe"), coalesce(col("hits"), lit(0L)).as("hits"),
-          col("total"),
-          round(coalesce(col("hits"), lit(0L)) / col("total"), 6).as("recall"))
-        .orderBy("nprobe")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |np AS (SELECT unnest([1, 2, 4, 8])::BIGINT AS nprobe),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT np.nprobe, pd.query_id, pd.centroid_id
-            |          FROM pd, np WHERE pd.prn <= np.nprobe),
-            |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-            |        for i in range(1, len(v) + 1)] AS u FROM nz),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |bits AS (SELECT u.vec_id, pb.k,
-            |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-            |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-            |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-            |       WHERE vec_id < 20),
-            |ham AS (SELECT p.nprobe, cb.vec_id AS neighbor_id, qb.query_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM bits cb
-            |          JOIN a3 ON cb.vec_id = a3.vec_id
-            |          JOIN probe p ON a3.centroid_id = p.centroid_id
-            |          JOIN qb ON qb.query_id = p.query_id AND qb.k = cb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3),
-            |cand AS (SELECT nprobe, query_id, neighbor_id,
-            |           row_number() OVER (PARTITION BY nprobe, query_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-            |rer AS (SELECT c.nprobe, c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |ra AS (SELECT nprobe, query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY nprobe, query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-            |      WHERE rank <= 5),
-            |sb AS (SELECT q.query_id, n2.vec_id AS neighbor_id,
-            |        round(list_sum([n2.v[i] * q.qv[i] for i in range(1, 65)])
-            |              / (n2.nrm * q.qn), 6) AS cosine
-            |      FROM nz n2, qs q WHERE n2.vec_id <> q.query_id),
-            |rb AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM sb)
-            |      WHERE rank <= 5),
-            |tot AS (SELECT count(*)::BIGINT AS total FROM rb),
-            |h AS (SELECT ra.nprobe, count(*)::BIGINT AS hits
-            |      FROM rb JOIN ra USING (query_id, neighbor_id) GROUP BY 1)
-            |SELECT np.nprobe, coalesce(h.hits, 0)::BIGINT AS hits, tot.total,
-            |  round(coalesce(h.hits, 0)::DOUBLE / tot.total, 6) AS recall
-            |FROM np LEFT JOIN h USING (nprobe), tot ORDER BY nprobe""".stripMargin))
-
-  /** IVF × RESIDUAL-sketch hybrid kNN
-    * ([[Similarity.knnJoinHammingIvfRes]] over
-    * [[Materialized.hammingSigsIvfRes]]) — the FAISS binary-IVF
-    * refinement: stage 1 Hamming compares sketches of `v −
-    * centroid(cell)` on BOTH sides (the query re-sketches its residual
-    * per probed cell), concentrating all 128 sign bits on the
-    * within-cell variance the coarse quantizer leaves. Same probe
-    * convention, partition pruning and exact rerank as
-    * `sim_knn_hamming_ivf`; the stage-1 cut is PER PROBED CELL (residual
-    * distances are only comparable within a cell — the measured failure
-    * of a global cut is in BASELINE.md); the oracle replays the residual
-    * subtraction inside the same 6-dp µ-unit plane projection and the
-    * per-cell rank. */
-  val simKnnHammingIvfRes: QueryDef = QueryDef("sim_knn_hamming_ivfres",
-    (s, d) => {
-      val idx = Materialized.ivfIndex(s, d)
-      Similarity.knnJoinHammingIvfRes(Materialized.hammingSigsIvfRes(s, d),
-          Tables.embeddings(s, d), idx.centroids,
-          Tables.embeddings(s, d).where(col("vec_id") < 20),
-          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
-          oversample = 4)
-        .orderBy("query_id", "rank")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT query_id, centroid_id FROM pd WHERE prn <= 2),
-            |res AS (SELECT z.vec_id, a3.centroid_id,
-            |          [round(round(z.v[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |           for i in range(1, 65)] AS u
-            |        FROM nz z JOIN a3 ON z.vec_id = a3.vec_id
-            |        JOIN c2 c ON a3.centroid_id = c.centroid_id),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |cbits AS (SELECT r.vec_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM res r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |qres AS (SELECT p.query_id, p.centroid_id,
-            |           [round(round(q.qv[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |            for i in range(1, 65)] AS u
-            |         FROM probe p JOIN qs q ON p.query_id = q.query_id
-            |         JOIN c2 c ON p.centroid_id = c.centroid_id),
-            |qbits AS (SELECT r.query_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM qres r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          cb.centroid_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM cbits cb
-            |          JOIN qbits qb ON cb.centroid_id = qb.centroid_id
-            |            AND cb.k = qb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3),
-            |cand AS (SELECT query_id, neighbor_id, hamming,
-            |           row_number() OVER (PARTITION BY query_id, centroid_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-            |rer AS (SELECT c.query_id, c.neighbor_id, c.hamming,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |r AS (SELECT query_id, neighbor_id, hamming, cosine,
-            |        row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-            |SELECT query_id, neighbor_id, rank, hamming, cosine FROM r
-            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
-
-  /** Recall@5 of the RESIDUAL-sketch hybrid vs the RAW-sketch hybrid at
-    * the same (nprobe, oversample) point, both against brute-force
-    * ground truth — the honest measurement of whether residual
-    * sketching buys recall on THIS corpus (it concentrates sketch
-    * entropy only where cells actually absorb variance; on an isotropic
-    * corpus with weak cells the two variants should tie — the
-    * `sdc-opq` honest-negative discipline applied to the sketch
-    * family). One row per variant; both chains replayed in SQL. */
-  val simHammingIvfResRecall: QueryDef = QueryDef("sim_hamming_ivfres_recall",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      val idx = Materialized.ivfIndex(s, d)
-      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
-        "vec_id", k = 5).select(col("query_id"), col("neighbor_id"))
-      val tot = brute.agg(count(lit(1)).as("total"))
-      def hitRow(name: String, hyb: org.apache.spark.sql.DataFrame) =
-        brute.join(hyb.select(col("query_id"), col("neighbor_id")),
-            Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("hits"))
-          .select(lit(name).as("variant"), col("hits"))
-      hitRow("raw", Similarity.knnJoinHammingIvf(
-          Materialized.hammingSigsIvf(s, d), emb, idx.centroids, queries,
-          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
-          oversample = 4))
-        .unionByName(hitRow("residual", Similarity.knnJoinHammingIvfRes(
-          Materialized.hammingSigsIvfRes(s, d), emb, idx.centroids, queries,
-          "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
-          oversample = 4)))
-        .crossJoin(tot)
-        .select(col("variant"), col("hits"), col("total"),
-          round(col("hits") / col("total"), 6).as("recall"))
-        .orderBy("variant")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT query_id, centroid_id FROM pd WHERE prn <= 2),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |u AS (SELECT vec_id, [round(round(v[i], 6) * 1000000, 0)::BIGINT
-            |        for i in range(1, len(v) + 1)] AS u FROM nz),
-            |bits AS (SELECT u.vec_id, pb.k,
-            |           (sum(u.u[pb.i + 1] * pb.s) > 0) AS b
-            |         FROM u, pb WHERE pb.i < len(u.u) GROUP BY 1, 2),
-            |qb AS (SELECT vec_id AS query_id, k, b FROM bits
-            |       WHERE vec_id < 20),
-            |hamr AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM bits cb
-            |          JOIN a3 ON cb.vec_id = a3.vec_id
-            |          JOIN probe p ON a3.centroid_id = p.centroid_id
-            |          JOIN qb ON qb.query_id = p.query_id AND qb.k = cb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2),
-            |candr AS (SELECT query_id, neighbor_id,
-            |           row_number() OVER (PARTITION BY query_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM hamr),
-            |rerr AS (SELECT c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM candr c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |rar AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rerr)
-            |      WHERE rank <= 5),
-            |res AS (SELECT z.vec_id, a3.centroid_id,
-            |          [round(round(z.v[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |           for i in range(1, 65)] AS u
-            |        FROM nz z JOIN a3 ON z.vec_id = a3.vec_id
-            |        JOIN c2 c ON a3.centroid_id = c.centroid_id),
-            |cbits AS (SELECT r.vec_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM res r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |qres AS (SELECT p.query_id, p.centroid_id,
-            |           [round(round(q.qv[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |            for i in range(1, 65)] AS u
-            |         FROM probe p JOIN qs q ON p.query_id = q.query_id
-            |         JOIN c2 c ON p.centroid_id = c.centroid_id),
-            |qbits AS (SELECT r.query_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM qres r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |hams AS (SELECT cb.vec_id AS neighbor_id, qb2.query_id,
-            |          cb.centroid_id,
-            |          sum(CASE WHEN cb.b <> qb2.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM cbits cb
-            |          JOIN qbits qb2 ON cb.centroid_id = qb2.centroid_id
-            |            AND cb.k = qb2.k
-            |        WHERE cb.vec_id <> qb2.query_id GROUP BY 1, 2, 3),
-            |cands AS (SELECT query_id, neighbor_id,
-            |           row_number() OVER (PARTITION BY query_id, centroid_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM hams),
-            |rers AS (SELECT c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cands c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |ras AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rers)
-            |      WHERE rank <= 5),
-            |sb AS (SELECT q.query_id, n2.vec_id AS neighbor_id,
-            |        round(list_sum([n2.v[i] * q.qv[i] for i in range(1, 65)])
-            |              / (n2.nrm * q.qn), 6) AS cosine
-            |      FROM nz n2, qs q WHERE n2.vec_id <> q.query_id),
-            |rb AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM sb)
-            |      WHERE rank <= 5),
-            |tot AS (SELECT count(*)::BIGINT AS total FROM rb),
-            |hr AS (SELECT count(*)::BIGINT AS hits
-            |       FROM rb JOIN rar USING (query_id, neighbor_id)),
-            |hs AS (SELECT count(*)::BIGINT AS hits
-            |       FROM rb JOIN ras USING (query_id, neighbor_id))
-            |SELECT * FROM (
-            |  SELECT 'raw' AS variant, hr.hits, tot.total,
-            |    round(hr.hits::DOUBLE / tot.total, 6) AS recall FROM hr, tot
-            |  UNION ALL
-            |  SELECT 'residual' AS variant, hs.hits, tot.total,
-            |    round(hs.hits::DOUBLE / tot.total, 6) AS recall FROM hs, tot)
-            |ORDER BY variant""".stripMargin))
-
-  /** The RESIDUAL hybrid's recall dial as a LADDER —
-    * `sim_hamming_ivf_recall2`'s artifact for the residual variant:
-    * aggregate recall@5 vs brute ground truth at nprobe 1/2/4/8, fixed
-    * oversample 4, one row per rung, with the PER-CELL stage-1 cut
-    * replayed (residual Hamming distances are only comparable within a
-    * cell — BASELINE.md records the measured collapse of a global cut,
-    * recall FALLING as nprobe grew; this stored artifact is the
-    * monotone dial that fix bought). Against `sim_hamming_ivf_recall2`
-    * at the same rungs the two ladders decompose the design choice:
-    * same cells probed, same rerank — only the sketch basis differs. */
-  val simHammingIvfResRecall2: QueryDef = QueryDef("sim_hamming_ivfres_recall2",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      val idx = Materialized.ivfIndex(s, d)
-      val sigs = Materialized.hammingSigsIvfRes(s, d)
-      val brute = Similarity.knnJoin(emb, queries, "vec_id", "embedding",
-        "vec_id", k = 5).select(col("query_id"), col("neighbor_id"))
-      val tot = brute.agg(count(lit(1)).as("total"))
-      // r16: one shared ladder plan + one brute join — see
-      // sim_hamming_ivf_recall2; the residual ladder additionally ranks
-      // stage 1 ONCE (the per-(query, cell) cut is rung-independent).
-      val nprobes = Seq(1, 2, 4, 8)
-      val hybAll = Similarity.knnJoinHammingIvfResLadder(sigs, emb,
-        idx.centroids, queries, "vec_id", "embedding", "vec_id", k = 5,
-        dims = 64, nprobes = nprobes, oversample = 4)
-        .select(col("nprobe"), col("query_id"), col("neighbor_id"))
-      val hits = brute.join(hybAll, Seq("query_id", "neighbor_id"))
-        .groupBy("nprobe").agg(count(lit(1)).as("hits"))
-      import s.implicits._
-      nprobes.map(_.toLong).toDF("nprobe")
-        .join(hits, Seq("nprobe"), "left")
-        .crossJoin(tot)
-        .select(col("nprobe"), coalesce(col("hits"), lit(0L)).as("hits"),
-          col("total"),
-          round(coalesce(col("hits"), lit(0L)) / col("total"), 6).as("recall"))
-        .orderBy("nprobe")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |np AS (SELECT unnest([1, 2, 4, 8])::BIGINT AS nprobe),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT np.nprobe, pd.query_id, pd.centroid_id
-            |          FROM pd, np WHERE pd.prn <= np.nprobe),
-            |res AS (SELECT z.vec_id, a3.centroid_id,
-            |          [round(round(z.v[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |           for i in range(1, 65)] AS u
-            |        FROM nz z JOIN a3 ON z.vec_id = a3.vec_id
-            |        JOIN c2 c ON a3.centroid_id = c.centroid_id),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |cbits AS (SELECT r.vec_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM res r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |qcells AS (SELECT DISTINCT query_id, centroid_id FROM probe),
-            |qres AS (SELECT p.query_id, p.centroid_id,
-            |           [round(round(q.qv[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |            for i in range(1, 65)] AS u
-            |         FROM qcells p JOIN qs q ON p.query_id = q.query_id
-            |         JOIN c2 c ON p.centroid_id = c.centroid_id),
-            |qbits AS (SELECT r.query_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM qres r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          cb.centroid_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM cbits cb
-            |          JOIN qbits qb ON cb.centroid_id = qb.centroid_id
-            |            AND cb.k = qb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3),
-            |hamn AS (SELECT p.nprobe, h.query_id, h.neighbor_id,
-            |           h.centroid_id, h.hamming
-            |         FROM ham h JOIN probe p ON h.query_id = p.query_id
-            |           AND h.centroid_id = p.centroid_id),
-            |cand AS (SELECT nprobe, query_id, neighbor_id,
-            |           row_number() OVER (PARTITION BY nprobe, query_id, centroid_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM hamn),
-            |rer AS (SELECT c.nprobe, c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |ra AS (SELECT nprobe, query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY nprobe, query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-            |      WHERE rank <= 5),
-            |sb AS (SELECT q.query_id, n2.vec_id AS neighbor_id,
-            |        round(list_sum([n2.v[i] * q.qv[i] for i in range(1, 65)])
-            |              / (n2.nrm * q.qn), 6) AS cosine
-            |      FROM nz n2, qs q WHERE n2.vec_id <> q.query_id),
-            |rb AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM sb)
-            |      WHERE rank <= 5),
-            |tot AS (SELECT count(*)::BIGINT AS total FROM rb),
-            |h AS (SELECT ra.nprobe, count(*)::BIGINT AS hits
-            |      FROM rb JOIN ra USING (query_id, neighbor_id) GROUP BY 1)
-            |SELECT np.nprobe, coalesce(h.hits, 0)::BIGINT AS hits, tot.total,
-            |  round(coalesce(h.hits, 0)::DOUBLE / tot.total, 6) AS recall
-            |FROM np LEFT JOIN h USING (nprobe), tot ORDER BY nprobe""".stripMargin))
-
-  /** The FULLY-COMPOSED all-stored search
-    * ([[Similarity.knnJoinHammingIvfResSq]] over
-    * [[Materialized.hammingSigsIvfRes]] + [[Materialized.q8CodesIvf]]):
-    * probed-cell PartitionFilters prune WHICH rows BOTH scans read —
-    * the sketch scan AND the rerank's code scan (the cell-partitioned
-    * code store closes the last full-scan in the search; both
-    * PartitionFilters PlanSpec-pinned) — the residual sketch prunes
-    * WHAT stage 1 reads per row (16 B), and the rerank ranks by the
-    * int8 quantized cosine from the stored codes. NO raw corpus vector
-    * is read anywhere in the plan. Stage-1 candidacy is bit-equal to
-    * `sim_knn_hamming_ivfres` (shared body, per-cell cut); the
-    * probed-cell restriction of the rerank cannot drop a candidate
-    * (same assignment on both stores), so the result is identical to a
-    * flat-code rerank and the oracle replays the probe, the residual
-    * µ-unit sketches, the per-cell rank AND the integer-code cosine
-    * without modeling the partition layout. */
-  val simKnnHammingIvfResQ8: QueryDef = QueryDef("sim_knn_hamming_ivfres_q8",
-    (s, d) => {
-      val idx = Materialized.ivfIndex(s, d)
-      Similarity.knnJoinHammingIvfResSq(Materialized.q8CodesIvf(s, d),
-          Materialized.hammingSigsIvfRes(s, d), idx.centroids,
-          Tables.embeddings(s, d).where(col("vec_id") < 20),
-          "embedding", "vec_id", k = 5, dims = 64, nprobe = 2,
-          oversample = 4)
-        .orderBy("query_id", "rank")
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT query_id, centroid_id FROM pd WHERE prn <= 2),
-            |res AS (SELECT z.vec_id, a3.centroid_id,
-            |          [round(round(z.v[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |           for i in range(1, 65)] AS u
-            |        FROM nz z JOIN a3 ON z.vec_id = a3.vec_id
-            |        JOIN c2 c ON a3.centroid_id = c.centroid_id),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |cbits AS (SELECT r.vec_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM res r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |qres AS (SELECT p.query_id, p.centroid_id,
-            |           [round(round(q.qv[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |            for i in range(1, 65)] AS u
-            |         FROM probe p JOIN qs q ON p.query_id = q.query_id
-            |         JOIN c2 c ON p.centroid_id = c.centroid_id),
-            |qbits AS (SELECT r.query_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM qres r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          cb.centroid_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM cbits cb
-            |          JOIN qbits qb ON cb.centroid_id = qb.centroid_id
-            |            AND cb.k = qb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3),
-            |cand AS (SELECT query_id, neighbor_id, hamming,
-            |           row_number() OVER (PARTITION BY query_id, centroid_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-            |qc AS (SELECT vec_id, [round(v[i] / list_max([abs(x) for x in v]) * 127.0,
-            |          0)::BIGINT for i in range(1, len(v) + 1)] AS q FROM nz),
-            |rer AS (SELECT c.query_id, c.neighbor_id, c.hamming,
-            |          round(list_sum([cv.q[i] * qv.v[i] for i in range(1, 65)])
-            |                / (sqrt(list_sum([x * x for x in cv.q])) * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN qc cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |r AS (SELECT query_id, neighbor_id, hamming, cosine,
-            |        row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rer)
-            |SELECT query_id, neighbor_id, rank, hamming, cosine FROM r
-            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
-
-  /** Fidelity dial of the fully-composed search: top-5 agreement
-    * between the SQ-rerank residual hybrid and its exact-rerank twin
-    * (`sim_knn_hamming_ivfres`) at the same (nprobe=2, oversample=4)
-    * point — identical stage-1 candidates by construction (shared
-    * body), so any disagreement is PURELY what the int8 rerank moves in
-    * the final ranking, with the partition-pruning axis along for the
-    * ride. One row; both chains replayed in SQL. */
-  val simHammingIvfResQ8Recall: QueryDef = QueryDef("sim_hamming_ivfres_q8_recall",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.where(col("vec_id") < 20)
-      val idx = Materialized.ivfIndex(s, d)
-      val sigs = Materialized.hammingSigsIvfRes(s, d)
-      val exact = Similarity.knnJoinHammingIvfRes(sigs, emb, idx.centroids,
-          queries, "vec_id", "embedding", "vec_id", k = 5, dims = 64,
-          nprobe = 2, oversample = 4)
-        .select(col("query_id"), col("neighbor_id"))
-      val sq = Similarity.knnJoinHammingIvfResSq(Materialized.q8CodesIvf(s, d),
-          sigs, idx.centroids, queries, "embedding", "vec_id", k = 5,
-          dims = 64, nprobe = 2, oversample = 4)
-        .select(col("query_id"), col("neighbor_id"))
-      val tot = exact.agg(count(lit(1)).as("total"))
-      exact.join(sq, Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(tot)
-        .select(col("hits"), col("total"),
-          round(col("hits") / col("total"), 6).as("agreement"))
-    },
-    Some(s"""WITH $ivfTrainedSql,
-            |$ivfAssignFromTrainedSql,
-            |n AS (SELECT vec_id, v, sqrt(list_sum([x * x for x in v])) AS nrm
-            |      FROM e WHERE v IS NOT NULL AND len(v) > 0),
-            |nz AS (SELECT * FROM n WHERE nrm > 0),
-            |qs AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM nz
-            |       WHERE vec_id < 20),
-            |pd AS (SELECT q.query_id, c.centroid_id,
-            |         row_number() OVER (PARTITION BY q.query_id
-            |           ORDER BY list_sum([(c.cv[i] - q.qv[i]) * (c.cv[i] - q.qv[i])
-            |                              for i in range(1, 65)]), c.centroid_id) AS prn
-            |       FROM c2 c, qs q),
-            |probe AS (SELECT query_id, centroid_id FROM pd WHERE prn <= 2),
-            |res AS (SELECT z.vec_id, a3.centroid_id,
-            |          [round(round(z.v[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |           for i in range(1, 65)] AS u
-            |        FROM nz z JOIN a3 ON z.vec_id = a3.vec_id
-            |        JOIN c2 c ON a3.centroid_id = c.centroid_id),
-            |pb AS (SELECT k, i,
-            |         CASE WHEN ('0x' || substr(md5('hb|' || k || '|' || i), 1, 15))::BIGINT
-            |                   % 2 = 0 THEN 1 ELSE -1 END AS s
-            |       FROM range(0, 128) t1(k), range(0, 64) t2(i)),
-            |cbits AS (SELECT r.vec_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM res r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |qres AS (SELECT p.query_id, p.centroid_id,
-            |           [round(round(q.qv[i] - c.cv[i], 6) * 1000000, 0)::BIGINT
-            |            for i in range(1, 65)] AS u
-            |         FROM probe p JOIN qs q ON p.query_id = q.query_id
-            |         JOIN c2 c ON p.centroid_id = c.centroid_id),
-            |qbits AS (SELECT r.query_id, r.centroid_id, pb.k,
-            |            (sum(r.u[pb.i + 1] * pb.s) > 0) AS b
-            |          FROM qres r, pb WHERE pb.i < len(r.u) GROUP BY 1, 2, 3),
-            |ham AS (SELECT cb.vec_id AS neighbor_id, qb.query_id,
-            |          cb.centroid_id,
-            |          sum(CASE WHEN cb.b <> qb.b THEN 1 ELSE 0 END)::BIGINT
-            |            AS hamming
-            |        FROM cbits cb
-            |          JOIN qbits qb ON cb.centroid_id = qb.centroid_id
-            |            AND cb.k = qb.k
-            |        WHERE cb.vec_id <> qb.query_id GROUP BY 1, 2, 3),
-            |cand AS (SELECT query_id, neighbor_id,
-            |           row_number() OVER (PARTITION BY query_id, centroid_id
-            |             ORDER BY hamming, neighbor_id) AS hrank FROM ham),
-            |qc AS (SELECT vec_id, [round(v[i] / list_max([abs(x) for x in v]) * 127.0,
-            |          0)::BIGINT for i in range(1, len(v) + 1)] AS q FROM nz),
-            |rx AS (SELECT c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.v[i] * qv.v[i] for i in range(1, 65)])
-            |                / (cv.nrm * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN nz cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |ra AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rx)
-            |      WHERE rank <= 5),
-            |rq0 AS (SELECT c.query_id, c.neighbor_id,
-            |          round(list_sum([cv.q[i] * qv.v[i] for i in range(1, 65)])
-            |                / (sqrt(list_sum([x * x for x in cv.q])) * qv.nrm), 6) AS cosine
-            |        FROM cand c JOIN qc cv ON cv.vec_id = c.neighbor_id
-            |        JOIN nz qv ON qv.vec_id = c.query_id
-            |        WHERE c.hrank <= 20),
-            |rq AS (SELECT query_id, neighbor_id FROM (
-            |        SELECT *, row_number() OVER (PARTITION BY query_id
-            |          ORDER BY cosine DESC, neighbor_id) AS rank FROM rq0)
-            |      WHERE rank <= 5),
-            |tot AS (SELECT count(*)::BIGINT AS total FROM ra),
-            |h AS (SELECT count(*)::BIGINT AS hits FROM ra JOIN rq
-            |      USING (query_id, neighbor_id))
-            |SELECT h.hits, tot.total,
-            |  round(h.hits::DOUBLE / tot.total, 6) AS agreement
-            |FROM h, tot""".stripMargin))
 
   /** OPQ-ROTATED SemDeDup at code bytes ([[Dedup.semanticDedupSdc]] with
     * the rotation over the stored OPQ artifacts): `dedup_semantic_sdc`'s

@@ -2531,6 +2531,98 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF ladders: every rung is row-identical to the single-shot search at that nprobe, raw and residual") {
+    val sf = TestSpark.sf
+    val emb = graft.queries.Tables.embeddings(spark, sf)
+    val qs = emb.where(col("vec_id") < 20)
+    val idx = graft.queries.Materialized.ivfIndex(spark, sf)
+    val rungs = Seq(1, 2, 4, 8)
+    def sorted(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.sortBy(r => (r.getLong(0), r.getLong(2)))
+    Seq(("raw", graft.queries.Materialized.hammingSigsIvf(spark, sf)),
+        ("residual", graft.queries.Materialized.hammingSigsIvfRes(spark, sf)))
+      .foreach { case (variant, sigs) =>
+        val ladder =
+          if (variant == "raw") Similarity.knnJoinHammingIvfLadder(sigs, emb,
+            idx.centroids, qs, "vec_id", "embedding", "vec_id", k = 5,
+            dims = 64, nprobes = rungs, oversample = 4)
+          else Similarity.knnJoinHammingIvfResLadder(sigs, emb,
+            idx.centroids, qs, "vec_id", "embedding", "vec_id", k = 5,
+            dims = 64, nprobes = rungs, oversample = 4)
+        assert(ladder.columns.toSeq == Seq("nprobe", "query_id", "neighbor_id",
+          "rank", "hamming", "cosine"))
+        val byRung = ladder.collect().toSeq.groupBy(_.getLong(0))
+        assert(byRung.keySet == rungs.map(_.toLong).toSet, s"$variant rungs")
+        rungs.foreach { np =>
+          val single =
+            if (variant == "raw") Similarity.knnJoinHammingIvf(sigs, emb,
+              idx.centroids, qs, "vec_id", "embedding", "vec_id", k = 5,
+              dims = 64, nprobe = np, oversample = 4)
+            else Similarity.knnJoinHammingIvfRes(sigs, emb, idx.centroids, qs,
+              "vec_id", "embedding", "vec_id", k = 5, dims = 64, nprobe = np,
+              oversample = 4)
+          // every column: query, neighbor, rank, the stage-1 hamming and
+          // the reranked cosine
+          val got = sorted(byRung(np.toLong).map(r =>
+            org.apache.spark.sql.Row.fromSeq(r.toSeq.tail)))
+          val want = sorted(single.collect().toSeq)
+          assert(want.nonEmpty && got == want,
+            s"$variant rung $np differs from the single-shot search:\n" +
+              s"ladder=$got\nsingle=$want")
+        }
+      }
+  }
+
+  test("IVF hybrids: a query whose length differs from the centroids' fails loud naming both lengths") {
+    val sf = TestSpark.sf
+    val emb = graft.queries.Tables.embeddings(spark, sf)
+    val idx = graft.queries.Materialized.ivfIndex(spark, sf)
+    // 32 of the index's 64 dims: the probe used to read past the query's
+    // end (ArrayIndexOutOfBoundsException on the driver)
+    val short = emb.where(col("vec_id") < 3)
+      .select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))
+    val raw = intercept[IllegalArgumentException] {
+      Similarity.knnJoinHammingIvf(graft.queries.Materialized.hammingSigsIvf(spark, sf),
+        emb, idx.centroids, short, "vec_id", "embedding", "vec_id", k = 5,
+        dims = 64, nprobe = 2)
+    }
+    val res = intercept[IllegalArgumentException] {
+      Similarity.knnJoinHammingIvfRes(graft.queries.Materialized.hammingSigsIvfRes(spark, sf),
+        emb, idx.centroids, short, "vec_id", "embedding", "vec_id", k = 5,
+        dims = 64, nprobe = 2)
+    }
+    Seq(raw, res).foreach { e =>
+      assert("query \\d+ has 32 dims but the centroids have 64".r
+        .findFirstIn(e.getMessage).isDefined, e.getMessage)
+    }
+  }
+
+  test("spreadIfNarrow: a one-split parquet input spreads by id; an input estimated at >= shuffle.partitions splits does not") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val dir = java.nio.file.Files.createTempDirectory("spread-if-narrow")
+    try {
+      s.range(0, 2000).selectExpr("id", "cast(id * 7 AS string) AS text")
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      val spreadById = "hashpartitioning\\(id#\\d+L?, 4\\)".r
+      def plan(df: org.apache.spark.sql.DataFrame): String =
+        TextAnalysis.spreadIfNarrow(df, col("id")).queryExecution.executedPlan.toString
+      // one small file: one scan split < 4 partitions — spread
+      val narrow = plan(s.read.parquet(dir.toString))
+      assert(spreadById.findFirstIn(narrow).isDefined, narrow)
+      // 64-byte splits put the same file at far more than 4 splits — the
+      // input already scans wide, so no exchange is added
+      s.conf.set("spark.sql.files.maxPartitionBytes", "64")
+      val wide = plan(s.read.parquet(dir.toString))
+      assert(!wide.contains("hashpartitioning"), wide)
+    } finally {
+      val files = java.nio.file.Files.walk(dir)
+      try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally files.close()
+    }
+  }
+
   test("SQ searches: corpus-covering dials degrade to the brute int8 ranking (topKQuantized), flat and composed") {
     val sf = TestSpark.sf
     val emb = graft.queries.Tables.embeddings(spark, sf)

@@ -869,4 +869,20 @@ class PlanSpec extends AnyFunSuite {
     assert("FileScan parquet.*documents".r.findAllIn(p).size <= 2,
       "fingerprinting must not run more than once per join side\n" + p)
   }
+
+  test("IVF recall ladders: the executed plan scans the signature store once (residual) and once per rung (raw)") {
+    // the FINAL adaptive plan: exchange reuse only shows after execution
+    def sigScans(name: String): Int = {
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val fin = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      "ReadSchema: struct<id:bigint,slo:bigint,shi:bigint>".r.findAllIn(fin).size
+    }
+    // the residual ladder cuts once per (query, cell) before slicing
+    // rungs, so its one scan feeds every rung through a reused exchange;
+    // the raw ladder cuts per rung, and each of its 4 rungs scans the
+    // probed cells again
+    assert(sigScans("sim_hamming_ivfres_recall2") == 1)
+    assert(sigScans("sim_hamming_ivf_recall2") == 4)
+  }
 }
