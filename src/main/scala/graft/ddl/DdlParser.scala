@@ -12,7 +12,9 @@ object DdlParser {
 
   sealed trait DdlOp { def column: String }
   /** `ADD [COLUMN] name type [NOT NULL] [DEFAULT expr]`
-    * (reference handles default-expr capture at `:298-327`). */
+    * (reference handles default-expr capture at `:298-327`). `default` is
+    * the literal's value — quotes stripped, `''` unescaped; `DEFAULT NULL`
+    * is no default (there is nothing to backfill). */
   final case class AddColumn(column: String, mysqlType: String,
                              notNull: Boolean, default: Option[String]) extends DdlOp
   /** `DROP [COLUMN] name` (`:280-297`). */
@@ -27,7 +29,7 @@ object DdlParser {
   private val dropRe =
     """(?is)DROP\s+(?:COLUMN\s+)?[`"]?(\w+)[`"]?\s*""".r
   private val defaultRe =
-    """(?is).*\bDEFAULT\s+('[^']*'|\S+).*""".r
+    """(?is).*\bDEFAULT\s+('(?:[^']|'')*'|\S+).*""".r
   private val truncRe =
     """(?is)\s*TRUNCATE\s+(?:TABLE\s+)?[`"]?([\w.]+)[`"]?\s*""".r
 
@@ -43,7 +45,9 @@ object DdlParser {
       val ops = items.flatMap {
         case addRe(name, typ, rest) =>
           val default = rest match {
-            case defaultRe(d) => Some(d.stripPrefix("'").stripSuffix("'"))
+            case defaultRe(d) if d.startsWith("'") =>
+              Some(d.substring(1, d.length - 1).replace("''", "'"))
+            case defaultRe(d) if !d.equalsIgnoreCase("NULL") => Some(d)
             case _ => None
           }
           val notNull = "(?is).*\\bNOT\\s+NULL\\b.*".r.matches(rest)

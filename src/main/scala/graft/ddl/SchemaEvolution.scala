@@ -58,7 +58,7 @@ object SchemaEvolution {
         s"ALTER TABLE ${PhoenixDialect.tableName(mapping)} ADD IF NOT EXISTS ${esc(c.name)} $t"
       }
       val backfills = missing.flatMap { c =>
-        c.default.map(d => backfillSql(mapping, c.name, d))
+        c.default.map(d => backfillSql(mapping, c.name, c.columnType, d))
       }
       Plan(None, adds, backfills)
     }
@@ -66,13 +66,22 @@ object SchemaEvolution {
 
   /** D3 — default-value backfill: stamp the default onto all existing rows
     * target-side (`PhoenixSyncService.java:334-361`) — cheaper than a
-    * round-trip through Spark since it's a single remote self-scan. */
-  def backfillSql(mapping: DbMapping, column: String, default: String): String = {
+    * round-trip through Spark since it's a single remote self-scan. The
+    * default is rendered by the MySQL column type: a number (or boolean)
+    * literal on a numeric or boolean column stays bare, anything else is a
+    * quoted string with `'` doubled. */
+  def backfillSql(mapping: DbMapping, column: String, mysqlType: String,
+                  default: String): String = {
+    import org.apache.spark.sql.types.{BooleanType, NumericType}
     val esc = (s: String) => PhoenixDialect.escape(s, mapping.escapeUpper)
     val pks = mapping.targetPk.keys.toSeq.sorted.map(esc)
     val t = PhoenixDialect.tableName(mapping)
-    val lit = if (default.forall(ch => ch.isDigit || ch == '.' || ch == '-')) default
-              else s"'$default'"
+    val bare = TypeMapping.map(mysqlType, limit = false).spark match {
+      case _: NumericType => default.matches("[-+]?(\\d+\\.?\\d*|\\.\\d+)([eE][-+]?\\d+)?")
+      case BooleanType => default.matches("(?i)true|false|[01]")
+      case _ => false
+    }
+    val lit = if (bare) default else "'" + default.replace("'", "''") + "'"
     s"UPSERT INTO $t (${(pks :+ esc(column)).mkString(", ")}) " +
       s"SELECT ${(pks :+ lit).mkString(", ")} FROM $t"
   }

@@ -85,9 +85,10 @@ object TextAnalysis {
       else None
     }.toOption.flatten
 
-  /** Largest type count [[kn5QuantModel]] accepts: past ~1.15·10¹² the
-    * `2·10⁶·(4c−3)` exact-integer quantization wraps a long; 10¹² leaves
-    * headroom and fails LOUD instead of corrupting stored probabilities. */
+  /** Largest type count [[kn5QuantModel]] accepts: past ~1.5·10¹² the
+    * `2·ΣDₖµNₖ ≤ 6·10⁶·N` exact-integer quantization wraps a long; 10¹²
+    * leaves headroom and fails LOUD instead of corrupting stored
+    * probabilities. */
   val MaxQuantCount: Long = 1000000000000L
 
   /** Stopword marker lists per language for the n-gram/stopword heuristic.
@@ -1050,6 +1051,22 @@ object TextAnalysis {
       .withColumnRenamed("id", idCol)
   }
 
+  /** The token stream of `docs` with its four history lags: one row per
+    * position `(id, pos, w, h1..h4)`, `h1` the closest history word and
+    * missing history slots null. Spread by document first; the only
+    * windows are per-doc `lag`s, bounded by document length. The training
+    * side of [[kn5TypeTable]] and the scoring side of every KN5 scorer. */
+  private def kn5History(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byDoc = Window.partitionBy("id").orderBy("pos")
+    val toks = spreadByDoc(docs.select(col(idCol).as("id"), col(textCol)), col("id"))
+      .select(col("id"), posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
+    (1 to 4).foldLeft(toks)((df, k) => df.withColumn(s"h$k", lag(col("w"), k).over(byDoc)))
+  }
+
+  /** History key columns of an order-`k` n-gram, farthest word first. */
+  private def kn5Keys(k: Int): Seq[String] = Seq("h4", "h3", "h2", "h1").takeRight(k - 1)
+
   /**
    * Unified n-gram type table for the 5-gram Kneser–Ney model
    * ([[lmScoreKn5]]): one row per attested n-gram TYPE of every order
@@ -1068,15 +1085,6 @@ object TextAnalysis {
    * corpus-sized).
    */
   def kn5TypeTable(train: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val th = spreadByDoc(train.select(col(idCol).as("id"), col(textCol)),
-        col("id"))
-      .select(col("id"), posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
-      .withColumn("h1", lag(col("w"), 1).over(byDoc))
-      .withColumn("h2", lag(col("w"), 2).over(byDoc))
-      .withColumn("h3", lag(col("w"), 3).over(byDoc))
-      .withColumn("h4", lag(col("w"), 4).over(byDoc))
     val ns = lit(null).cast("string")
     def gram(ord: Int, h4: Column, h3: Column, h2: Column, h1: Column) =
       struct(lit(ord).as("ord"), h4.as("h4"), h3.as("h3"), h2.as("h2"),
@@ -1088,12 +1096,145 @@ object TextAnalysis {
       when(col("h3").isNotNull, gram(4, ns, col("h3"), col("h2"), col("h1"))),
       when(col("h4").isNotNull,
         gram(5, col("h4"), col("h3"), col("h2"), col("h1"))))
-    th.select(explode(filter(entries, e => e.isNotNull)).as("g"))
+    kn5History(train, idCol, textCol)
+      .select(explode(filter(entries, e => e.isNotNull)).as("g"))
       .select(col("g.ord").as("ord"), col("g.h4").as("h4"),
         col("g.h3").as("h3"), col("g.h2").as("h2"), col("g.h1").as("h1"),
         col("g.w").as("w"))
       .groupBy("ord", "h4", "h3", "h2", "h1", "w")
       .agg(count(lit(1)).cast("double").as("cnt"))
+  }
+
+  /** The smoothing count tables of a KN5 type table, derived once for
+    * both the double scorer ([[lmScoreKn5FromModel]]) and the quantized
+    * builder ([[kn5QuantModel]]). Slices carry the count column `cnt`;
+    * every derived row count has type `dt`.
+    *  - `t(k)`, k = 1..5: the order-k slice `(keys, w, ck)`;
+    *  - `ctx(k)`, k = 2..5: per history the mass `csk` and the follower
+    *    count classes `ek_1..3` (N₁, N₂, N₃₊);
+    *  - `cc(k)`, k = 2..4: continuation counts `cck = N₁₊(·hw)` from the
+    *    order above, and `cx(k)` their per-history `ccsk` and `fk_1..3`;
+    *  - `cont1 (w, nc1)`; one-row `nv (n, v)` and `tts (tt, u_1..3)` —
+    *    `tt = Σnc1` is the bigram type count (null on an empty bigram
+    *    table), `u_` the count classes of `nc1`. */
+  private final case class Kn5Model(t: Map[Int, DataFrame], ctx: Map[Int, DataFrame],
+                                    cc: Map[Int, DataFrame], cx: Map[Int, DataFrame],
+                                    cont1: DataFrame, nv: DataFrame, tts: DataFrame) {
+    /** The eight distributions that carry a discount triple: (table, count
+      * column, triple prefix) — raw levels from raw counts, continuation
+      * levels from continuation counts, the base from `cont1`. */
+    def levels: Seq[(DataFrame, String, String)] =
+      (2 to 5).map(k => (t(k), s"c$k", s"r${k}d")) ++
+        (2 to 4).map(k => (cc(k), s"cc$k", s"c${k}d")) :+ ((cont1, "nc1", "ud"))
+  }
+
+  private def kn5Model(types: DataFrame, cnt: Column, dt: String): Kn5Model = {
+    def rows: Column = count(lit(1)).cast(dt)
+    def classes(c: Column, p: String): Seq[Column] = Seq(
+      count(when(c === 1, 1)).cast(dt).as(s"${p}1"),
+      count(when(c === 2, 1)).cast(dt).as(s"${p}2"),
+      count(when(c >= 3, 1)).cast(dt).as(s"${p}3"))
+    def agg(tbl: DataFrame, keys: Seq[String], aggs: Seq[Column]): DataFrame =
+      tbl.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    def ctxOf(tbl: DataFrame, keys: Seq[String], c: String, cs: String,
+              p: String): DataFrame =
+      agg(tbl, keys, sum(col(c)).as(cs) +: classes(col(c), p))
+    val t = (1 to 5).map(k => k -> types.where(col("ord") === k)
+      .select((kn5Keys(k) :+ "w").map(col) :+ cnt.as(s"c$k"): _*)).toMap
+    val cc = (2 to 4).map(k =>
+      k -> agg(t(k + 1), kn5Keys(k) :+ "w", Seq(rows.as(s"cc$k")))).toMap
+    val cont1 = agg(t(2), Seq("w"), Seq(rows.as("nc1")))
+    Kn5Model(t,
+      (2 to 5).map(k => k -> ctxOf(t(k), kn5Keys(k), s"c$k", s"cs$k", s"e${k}_")).toMap,
+      cc,
+      cc.map { case (k, c) => k -> ctxOf(c, kn5Keys(k), s"cc$k", s"ccs$k", s"f${k}_") },
+      cont1,
+      t(1).agg(sum(col("c1")).as("n"), rows.as("v")),
+      agg(cont1, Nil, sum(col("nc1")).as("tt") +: classes(col("nc1"), "u_")))
+  }
+
+  /** One distribution's modified-KN discount triple as a one-row frame
+    * `<p>1, <p>2, <p>3`: Chen & Goodman's estimator over the
+    * count-of-counts n₁..n₄ of `tbl.c` — `Y = n₁/(n₁+2n₂)`,
+    * `D₁ = 1−2Y·n₂/n₁`, `D₂ = 2−3Y·n₃/n₂`, `D₃ = 3−4Y·n₄/n₃` — under
+    * KenLM's validity rule: a level whose estimate falls outside
+    * `0 < Dₖ ≤ k` (or whose count-of-counts has a zero) falls back to
+    * 0.75 WHOLE-TRIPLE. The positivity half of the rule is what
+    * guarantees p > 0 everywhere: a zero discount zeroes a sparse
+    * history's entire backoff mass, and an unseen word under it would
+    * score ln(0). `mu` rounds each discount to micro-unit longs,
+    * `round(round(D, 6)·10⁶)` (0.75 → exactly 750000), which makes every
+    * quantized numerator downstream exact integer arithmetic. The SAME
+    * expression text as the oracle's replay. */
+  private def kn5Discounts(tbl: DataFrame, c: String, p: String, mu: Boolean): DataFrame = {
+    val coc = tbl.agg(
+      count(when(col(c) === 1, 1)).cast("double").as("n1"),
+      count(when(col(c) === 2, 1)).cast("double").as("n2"),
+      count(when(col(c) === 3, 1)).cast("double").as("n3"),
+      count(when(col(c) === 4, 1)).cast("double").as("n4"))
+    // try_divide: under ANSI a zero denominator would THROW before the
+    // n-zero guard can choose the fallback; a null estimate instead makes
+    // `invalid` true through the n-zero disjuncts (a denominator is zero
+    // only when some nₖ is), and when all nₖ > 0 try_divide is the plain
+    // IEEE division the oracle computes
+    val y = try_divide(col("n1"), col("n1") + lit(2.0) * col("n2"))
+    val d1r = lit(1.0) - try_divide(lit(2.0) * y * col("n2"), col("n1"))
+    val d2r = lit(2.0) - try_divide(lit(3.0) * y * col("n3"), col("n2"))
+    val d3r = lit(3.0) - try_divide(lit(4.0) * y * col("n4"), col("n3"))
+    val invalid = col("n1") === 0.0 || col("n2") === 0.0 ||
+      col("n3") === 0.0 || col("n4") === 0.0 ||
+      d1r <= 0.0 || d1r > 1.0 || d2r <= 0.0 || d2r > 2.0 ||
+      d3r <= 0.0 || d3r > 3.0
+    def dk(k: Int, raw: Column): Column = {
+      val d = when(invalid, lit(0.75)).otherwise(raw)
+      (if (mu) round(round(d, 6) * 1e6, 0).cast("long") else d).as(s"$p$k")
+    }
+    coc.select(dk(1, d1r), dk(2, d2r), dk(3, d3r))
+  }
+
+  /** `df` with the discount triples of `levels` as columns `<p>1..3` —
+    * the one place a KN5 builder reads `modified`. Modified KN takes the
+    * Chen–Goodman estimates ([[kn5Discounts]], one-row broadcasts
+    * cross-joined in); fixed-discount interpolated KN is modified KN with
+    * `D₁ = D₂ = D₃ = 0.75` (Chen & Goodman 1998), added as literal
+    * columns, so it pays no extra join. */
+  private def kn5WithDiscounts(df: DataFrame, levels: Seq[(DataFrame, String, String)],
+                               modified: Boolean, mu: Boolean): DataFrame =
+    if (modified) levels.foldLeft(df) { case (acc, (tbl, c, p)) =>
+      acc.crossJoin(broadcast(kn5Discounts(tbl, c, p, mu)))
+    }
+    else df.select(col("*") +: (for ((_, _, p) <- levels; k <- 1 to 3)
+      yield (if (mu) lit(750000L) else lit(0.75)).as(s"$p$k")): _*)
+
+  /** The interpolated KN5 chain and per-doc epilogue of both scorers.
+    * `level(k, continuation, lower)` is the scorer's interpolation step:
+    * `p1` is level 1 over `base`; for k = 2..4 a continuation level `pkc`
+    * and a raw top `pkr` interpolate over `p(k−1)c`; `p5` is the raw top
+    * over `p4c`. Per position (0-based) the chain top is the longest
+    * available order; position 0 scores `p0` (the ML unigram); a null
+    * `known` marks an out-of-vocabulary position, counted (`n_oov`) and
+    * never dropped. Per-position `ln` is 6-dp rounded before the doc sum
+    * (the [[lmScoreStupidBackoff]] convention). */
+  private def kn5Chain(joined: DataFrame, idCol: String, known: Column, p0: Column,
+                       base: Column)(level: (Int, Boolean, Column) => Column): DataFrame = {
+    val staged = (2 to 5).foldLeft(joined.withColumn("p1", level(1, true, base))) { (df, k) =>
+      val lower = col(if (k == 2) "p1" else s"p${k - 1}c")
+      if (k == 5) df.withColumn("p5", level(5, false, lower))
+      else df.withColumn(s"p${k}c", level(k, true, lower))
+        .withColumn(s"p${k}r", level(k, false, lower))
+    }
+    val s = when(known.isNull, lit(null).cast("double"))
+      .when(col("pos") === 0, p0)
+      .when(col("pos") === 1, col("p2r"))
+      .when(col("pos") === 2, col("p3r"))
+      .when(col("pos") === 3, col("p4r"))
+      .otherwise(col("p5"))
+    staged.select(col("id"), round(log(s), 6).as("lp"))
+      .groupBy("id")
+      .agg(count(lit(1)).cast("long").as("n_words"),
+        sum(when(col("lp").isNull, 1L).otherwise(0L)).as("n_oov"),
+        round(-sum(coalesce(col("lp"), lit(0.0))), 6).as("nll_sum"))
+      .withColumnRenamed("id", idCol)
   }
 
   /**
@@ -1119,22 +1260,20 @@ object TextAnalysis {
    *    (`n_oov`), never silently dropped
    *
    * `D = 0.75` at every order (exactly representable in binary — the
-   * same literal in both engines; KenLM's count-of-count-estimated
-   * modified discounts are the remaining fidelity dial). Per-position
-   * `ln` is 6-dp rounded before the doc sum (the [[lmScoreStupidBackoff]]
-   * convention).
+   * same literal in both engines); `modified = true` estimates the
+   * discounts instead ([[lmScoreKn5FromModel]]). Per-position `ln` is
+   * 6-dp rounded before the doc sum.
    *
    * 100 TB shape: all n-gram/continuation/context tables stay hash joins
    * on their word keys — NEVER broadcast, never collected (the order-5
-   * table is corpus-sized); the only broadcasts are the two one-row
-   * scalar aggregates; the only windows are per-doc `lag`s. The live
-   * form replays the model subtree per join — production scoring uses
-   * the STORED type table ([[graft.queries.Materialized.kn5Types]]),
-   * which makes every join side a parquet read.
+   * table is corpus-sized); the only broadcast is the one-row scalar
+   * aggregate; the only windows are per-doc `lag`s. The live form replays
+   * the model subtree per join — production scoring uses the STORED type
+   * table ([[graft.queries.Materialized.kn5Types]]), which makes every
+   * join side a parquet read.
    */
   def lmScoreKn5(docs: DataFrame, train: DataFrame, idCol: String,
-                 textCol: String, discount: Double = 0.75,
-                 modified: Boolean = false): DataFrame = {
+                 textCol: String, modified: Boolean = false): DataFrame = {
     // the live form branches the type table into ~15 join legs — persist
     // it so the live measurement times SCORING, not 15× re-aggregation
     // (the in-memory analogue of the stored path's parquet reads; r11
@@ -1144,7 +1283,7 @@ object TextAnalysis {
     // cached model tables.
     val types = kn5TypeTable(train, idCol, textCol).persist()
     Dedup.materializeAndRelease(
-      lmScoreKn5FromModel(docs, idCol, textCol, types, discount, modified),
+      lmScoreKn5FromModel(docs, idCol, textCol, types, modified),
       materialize = true, types)
   }
 
@@ -1153,20 +1292,18 @@ object TextAnalysis {
     * smoothing count tables from the types alone — corpus text is never
     * re-read for the model side.
     *
-    * `modified = true` switches to MODIFIED Kneser–Ney (Chen & Goodman
-    * 1998 §3; the estimator KenLM ships): instead of one fixed `D`,
-    * each distribution level carries THREE discounts estimated from its
-    * own count-of-counts — `Y = n₁/(n₁+2n₂)`, `D₁ = 1−2Y·n₂/n₁`,
-    * `D₂ = 2−3Y·n₃/n₂`, `D₃ = 3−4Y·n₄/n₃` (clamped to `[0, k]`; any
-    * zero among n₁..n₄ falls back to the fixed `discount` — a degenerate
-    * count-of-counts table has nothing to estimate from) — applied by
-    * count class (`D(c) = D₁, D₂, D₃` for `c = 1, 2, ≥3`) with backoff
-    * mass `γ(h) = (D₁N₁(h·)+D₂N₂(h·)+D₃N₃₊(h·))/c(h·)`. Raw-count
-    * levels estimate from raw counts, continuation levels from
-    * continuation counts, the base from the continuation unigram. All
-    * eight discount triples are one-row aggregates of the (bounded) type
-    * tables — broadcast scalars, never corpus scans — so modified
-    * scoring reads the SAME stored artifact as fixed scoring.
+    * Every level applies its discount triple by count class
+    * (`D(c) = D₁, D₂, D₃` for `c = 1, 2, ≥3`) with backoff mass
+    * `γ(h) = (D₁N₁(h·)+D₂N₂(h·)+D₃N₃₊(h·))/c(h·)`. `modified = true` is
+    * MODIFIED Kneser–Ney (Chen & Goodman 1998 §3; the estimator KenLM
+    * ships): each triple is estimated from its level's own
+    * count-of-counts ([[kn5Discounts]]). `modified = false` holds every
+    * triple at 0.75, which is exactly the fixed-discount chain of
+    * [[lmScoreKn5]]: `c − 0.75 = max(c − 0.75, 0)` for `c ≥ 1`, and
+    * `0.75·N₁ + 0.75·N₂ + 0.75·N₃₊ = 0.75·N₁₊` in IEEE doubles. All
+    * eight triples are one-row aggregates of the (bounded) type tables —
+    * broadcast scalars, never corpus scans — so both read the SAME
+    * stored artifact.
     *
     * PRECONDITION on `types` (r15 ADVICE, pinned by LlmSpec's "kn5
     * pre-join invariant" test): every continuation key must be attested
@@ -1177,150 +1314,35 @@ object TextAnalysis {
     * low-order rows) would silently null out continuation/context counts
     * through the model-side left pre-joins below. */
   def lmScoreKn5FromModel(docs: DataFrame, idCol: String, textCol: String,
-                          types: DataFrame, discount: Double = 0.75,
-                          modified: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d = lit(discount)
-    val uni = types.where(col("ord") === 1).select(col("w"), col("cnt").as("c1"))
-    val t2 = types.where(col("ord") === 2)
-      .select(col("h1"), col("w"), col("cnt").as("c2"))
-    val t3 = types.where(col("ord") === 3)
-      .select(col("h2"), col("h1"), col("w"), col("cnt").as("c3"))
-    val t4 = types.where(col("ord") === 4)
-      .select(col("h3"), col("h2"), col("h1"), col("w"), col("cnt").as("c4"))
-    val t5 = types.where(col("ord") === 5)
-      .select(col("h4"), col("h3"), col("h2"), col("h1"), col("w"),
-        col("cnt").as("c5"))
-    // per-count-class follower counts (N₁, N₂, N₃₊ per history) — the
-    // modified-KN backoff mass needs them; the fixed path stays narrow
-    def cls(c: Column, p: String): Seq[Column] =
-      if (!modified) Nil
-      else Seq(count(when(c === 1.0, 1)).cast("double").as(s"${p}1"),
-        count(when(c === 2.0, 1)).cast("double").as(s"${p}2"),
-        count(when(c >= 3.0, 1)).cast("double").as(s"${p}3"))
-    def ctxAgg(tbl: DataFrame, keys: Seq[String], c: String,
-               cs: String, nf: String, p: String): DataFrame = {
-      val aggs = Seq(sum(col(c)).as(cs),
-        count(lit(1)).cast("double").as(nf)) ++ cls(col(c), p)
-      tbl.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-    // raw context masses + follower counts per history
-    val ctx2 = ctxAgg(t2, Seq("h1"), "c2", "cs2", "nf2", "e2_")
-    val ctx3 = ctxAgg(t3, Seq("h2", "h1"), "c3", "cs3", "nf3", "e3_")
-    val ctx4 = ctxAgg(t4, Seq("h3", "h2", "h1"), "c4", "cs4", "nf4", "e4_")
-    val ctx5 = ctxAgg(t5, Seq("h4", "h3", "h2", "h1"), "c5", "cs5", "nf5", "e5_")
-    // continuation counts N₁₊(·hw) per middle order, from the order above
-    val cc2 = t3.groupBy("h1", "w").agg(count(lit(1)).cast("double").as("cc2"))
-    val cx2 = ctxAgg(cc2, Seq("h1"), "cc2", "ccs2", "ncf2", "f2_")
-    val cc3 = t4.groupBy("h2", "h1", "w")
-      .agg(count(lit(1)).cast("double").as("cc3"))
-    val cx3 = ctxAgg(cc3, Seq("h2", "h1"), "cc3", "ccs3", "ncf3", "f3_")
-    val cc4 = t5.groupBy("h3", "h2", "h1", "w")
-      .agg(count(lit(1)).cast("double").as("cc4"))
-    val cx4 = ctxAgg(cc4, Seq("h3", "h2", "h1"), "cc4", "ccs4", "ncf4", "f4_")
-    // continuation unigram + the two scalar aggregates
-    val cont1 = t2.groupBy("w").agg(count(lit(1)).cast("double").as("nc1"))
-    val nv = uni.agg(sum(col("c1")).as("n"), count(lit(1)).cast("double").as("v"))
-    val tts = t2.agg(count(lit(1)).cast("double").as("tt"),
-      countDistinct(col("w")).cast("double").as("w1"))
-    // modified-KN discount triples: one-row count-of-counts aggregates per
-    // distribution level, Chen & Goodman's Y/D₁/D₂/D₃ estimator with
-    // KenLM's validity rule — a level whose estimate falls outside
-    // `0 < Dₖ ≤ k` (or whose count-of-counts has a zero) falls back to the
-    // fixed `discount` WHOLE-TRIPLE. The positivity half of the rule is
-    // what guarantees p > 0 everywhere: a zero discount zeroes a sparse
-    // history's entire backoff mass, and an unseen word under it would
-    // score ln(0). The SAME expression text as the oracle's replay.
-    def discountsOf(tbl: DataFrame, c: String, p: String): DataFrame = {
-      val coc = tbl.agg(
-        count(when(col(c) === 1.0, 1)).cast("double").as("n1"),
-        count(when(col(c) === 2.0, 1)).cast("double").as("n2"),
-        count(when(col(c) === 3.0, 1)).cast("double").as("n3"),
-        count(when(col(c) === 4.0, 1)).cast("double").as("n4"))
-      // try_divide: under ANSI a zero denominator would THROW before the
-      // n-zero guard can choose the fallback; a null estimate instead
-      // makes `invalid` true through the n-zero disjuncts (a denominator
-      // is zero only when some nₖ is), and when all nₖ > 0 try_divide is
-      // the plain IEEE division the oracle computes
-      val y = try_divide(col("n1"), col("n1") + lit(2.0) * col("n2"))
-      val d1r = lit(1.0) - try_divide(lit(2.0) * y * col("n2"), col("n1"))
-      val d2r = lit(2.0) - try_divide(lit(3.0) * y * col("n3"), col("n2"))
-      val d3r = lit(3.0) - try_divide(lit(4.0) * y * col("n4"), col("n3"))
-      val invalid = col("n1") === 0.0 || col("n2") === 0.0 ||
-        col("n3") === 0.0 || col("n4") === 0.0 ||
-        d1r <= 0.0 || d1r > 1.0 || d2r <= 0.0 || d2r > 2.0 ||
-        d3r <= 0.0 || d3r > 3.0
-      def dk(k: Int, raw: Column): Column =
-        when(invalid, d).otherwise(raw).as(s"$p$k")
-      coc.select(dk(1, d1r), dk(2, d2r), dk(3, d3r))
-    }
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val occ = spreadByDoc(docs.select(col(idCol).as("id"), col(textCol)), col("id"))
-      .select(col("id"), posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
-      .withColumn("h1", lag(col("w"), 1).over(byDoc))
-      .withColumn("h2", lag(col("w"), 2).over(byDoc))
-      .withColumn("h3", lag(col("w"), 3).over(byDoc))
-      .withColumn("h4", lag(col("w"), 4).over(byDoc))
-    // r15 optimization (guide §2.4/§3): the token stream used to take one
-    // join per model table — 15 legs + 2 (or 11, modified) one-row
-    // cross-joins. Legs that share a key are now pre-joined MODEL-SIDE
-    // (gram tables with their continuation twins on the gram key, context
-    // tables with their continuation-context twins on the history key), so
-    // the token stream is probed once per KEY instead of once per table:
-    // 9 legs. The pre-joins are LEFT joins, which keeps them broadcastable
-    // (a full-outer join would force a sort-merge with two extra exchanges
-    // per leg — and broadcast is exactly what AQE picks for these at spec
-    // scale). Left is equivalent to the two independent occ-side left
-    // joins because every continuation table's keys are a SUBSET of its
-    // raw twin's: continuation counts are distinct (history, w) of the
-    // order ABOVE, and n-gram counting (and the pruning schedule's
-    // suffix-count monotonicity — see kn5Prune) keeps every such key
-    // attested at its own order. All one-row aggregates (n/v, tt/w1, and
-    // the 8 modified-KN discount triples) collapse into ONE one-row
-    // broadcast instead of a chain of 2-11 BroadcastNestedLoopJoins
+                          types: DataFrame, modified: Boolean = false): DataFrame = {
+    val m = kn5Model(types, col("cnt"), "double")
+    // r15 optimization (guide §2.4/§3): legs that share a key are
+    // pre-joined MODEL-SIDE (gram tables with their continuation twins on
+    // the gram key, context tables with their continuation-context twins
+    // on the history key), so the token stream is probed once per KEY: 9
+    // legs instead of 15. The pre-joins are LEFT joins, which keeps them
+    // broadcastable (a full-outer join would force a sort-merge with two
+    // extra exchanges per leg). Left is equivalent to two independent
+    // occ-side left joins because every continuation table's keys are a
+    // SUBSET of its raw twin's (the precondition above). All one-row
+    // aggregates (n/v, tt/u, the eight discount triples) collapse into
+    // ONE one-row broadcast instead of a BroadcastNestedLoopJoin chain
     // through the token stream.
-    val g2 = t2.join(cc2, Seq("h1", "w"), "left")
-    val x2 = ctx2.join(cx2, Seq("h1"), "left")
-    val g3 = t3.join(cc3, Seq("h2", "h1", "w"), "left")
-    val x3 = ctx3.join(cx3, Seq("h2", "h1"), "left")
-    val g4 = t4.join(cc4, Seq("h3", "h2", "h1", "w"), "left")
-    val x4 = ctx4.join(cx4, Seq("h3", "h2", "h1"), "left")
-    val u1 = uni.join(cont1, Seq("w"), "left")
-    val scalars0 = nv.crossJoin(tts)
-    val scalars =
-      if (!modified) scalars0
-      else scalars0
-        .crossJoin(discountsOf(t2, "c2", "r2d"))
-        .crossJoin(discountsOf(t3, "c3", "r3d"))
-        .crossJoin(discountsOf(t4, "c4", "r4d"))
-        .crossJoin(discountsOf(t5, "c5", "r5d"))
-        .crossJoin(discountsOf(cc2, "cc2", "c2d"))
-        .crossJoin(discountsOf(cc3, "cc3", "c3d"))
-        .crossJoin(discountsOf(cc4, "cc4", "c4d"))
-        .crossJoin(discountsOf(cont1, "nc1", "ud"))
-        .crossJoin(
-          cont1.agg(cls(col("nc1"), "u_").head, cls(col("nc1"), "u_").tail: _*))
-    val joinedD = occ
-      .join(u1, Seq("w"), "left")
-      .join(g2, Seq("h1", "w"), "left")
-      .join(x2, Seq("h1"), "left")
-      .join(g3, Seq("h2", "h1", "w"), "left")
-      .join(x3, Seq("h2", "h1"), "left")
-      .join(g4, Seq("h3", "h2", "h1", "w"), "left")
-      .join(x4, Seq("h3", "h2", "h1"), "left")
-      .join(t5, Seq("h4", "h3", "h2", "h1", "w"), "left")
-      .join(ctx5, Seq("h4", "h3", "h2", "h1"), "left")
-      .crossJoin(broadcast(scalars))
+    val legs = (2 to 4).flatMap { k =>
+      val keys = kn5Keys(k)
+      Seq(m.t(k).join(m.cc(k), keys :+ "w", "left") -> (keys :+ "w"),
+        m.ctx(k).join(m.cx(k), keys, "left") -> keys)
+    } ++ Seq(m.t(5) -> (kn5Keys(5) :+ "w"), m.ctx(5) -> kn5Keys(5))
+    val scalars = kn5WithDiscounts(m.nv.crossJoin(m.tts), m.levels, modified, mu = false)
+    val joined = legs.foldLeft(kn5History(docs, idCol, textCol)
+        .join(m.t(1).join(m.cont1, Seq("w"), "left"), Seq("w"), "left")) {
+        case (acc, (tbl, keys)) => acc.join(tbl, keys, "left")
+      }.crossJoin(broadcast(scalars))
     // the discounted-interpolation step, identical shape at every level —
-    // the SAME expression text as the oracle's replay
-    def interp(cnt: Column, cs: Column, nf: Column, lower: Column): Column =
-      when(cs.isNotNull,
-        greatest(coalesce(cnt, lit(0.0)) - d, lit(0.0)) / cs +
-          d * nf / cs * lower)
-        .otherwise(lower)
-    // modified-KN level: per-count-class discount, class-weighted backoff
-    def interpM(cnt: Column, cs: Column, kp: String, dp: String,
-                lower: Column): Column = {
+    // the SAME expression text as the oracle's replay. The base level's
+    // `tt` is null exactly when the bigram table is empty.
+    def interp(cnt: Column, cs: Column, kp: String, dp: String,
+               lower: Column): Column = {
       val (d1, d2, d3) = (col(s"${dp}1"), col(s"${dp}2"), col(s"${dp}3"))
       when(cs.isNotNull,
         (when(cnt.isNull, lit(0.0))
@@ -1331,49 +1353,13 @@ object TextAnalysis {
             cs * lower)
         .otherwise(lower)
     }
-    val staged =
-      if (!modified) joinedD
-        .withColumn("p1",
-          when(col("tt") > 0.0,
-            greatest(coalesce(col("nc1"), lit(0.0)) - d, lit(0.0)) / col("tt") +
-              d * col("w1") / col("tt") * (lit(1.0) / col("v")))
-            .otherwise(lit(1.0) / col("v")))
-        .withColumn("p2c", interp(col("cc2"), col("ccs2"), col("ncf2"), col("p1")))
-        .withColumn("p2r", interp(col("c2"), col("cs2"), col("nf2"), col("p1")))
-        .withColumn("p3c", interp(col("cc3"), col("ccs3"), col("ncf3"), col("p2c")))
-        .withColumn("p3r", interp(col("c3"), col("cs3"), col("nf3"), col("p2c")))
-        .withColumn("p4c", interp(col("cc4"), col("ccs4"), col("ncf4"), col("p3c")))
-        .withColumn("p4r", interp(col("c4"), col("cs4"), col("nf4"), col("p3c")))
-        .withColumn("p5", interp(col("c5"), col("cs5"), col("nf5"), col("p4c")))
-      else joinedD
-        .withColumn("p1",
-          when(col("tt") > 0.0,
-            (when(col("nc1").isNull, lit(0.0))
-              .when(col("nc1") === 1.0, col("nc1") - col("ud1"))
-              .when(col("nc1") === 2.0, col("nc1") - col("ud2"))
-              .otherwise(col("nc1") - col("ud3"))) / col("tt") +
-              (col("ud1") * col("u_1") + col("ud2") * col("u_2") +
-                col("ud3") * col("u_3")) / col("tt") * (lit(1.0) / col("v")))
-            .otherwise(lit(1.0) / col("v")))
-        .withColumn("p2c", interpM(col("cc2"), col("ccs2"), "f2_", "c2d", col("p1")))
-        .withColumn("p2r", interpM(col("c2"), col("cs2"), "e2_", "r2d", col("p1")))
-        .withColumn("p3c", interpM(col("cc3"), col("ccs3"), "f3_", "c3d", col("p2c")))
-        .withColumn("p3r", interpM(col("c3"), col("cs3"), "e3_", "r3d", col("p2c")))
-        .withColumn("p4c", interpM(col("cc4"), col("ccs4"), "f4_", "c4d", col("p3c")))
-        .withColumn("p4r", interpM(col("c4"), col("cs4"), "e4_", "r4d", col("p3c")))
-        .withColumn("p5", interpM(col("c5"), col("cs5"), "e5_", "r5d", col("p4c")))
-    val s = when(col("c1").isNull, lit(null).cast("double"))
-      .when(col("pos") === 0, col("c1") / col("n"))
-      .when(col("pos") === 1, col("p2r"))
-      .when(col("pos") === 2, col("p3r"))
-      .when(col("pos") === 3, col("p4r"))
-      .otherwise(col("p5"))
-    staged.select(col("id"), round(log(s), 6).as("lp"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(when(col("lp").isNull, 1L).otherwise(0L)).as("n_oov"),
-        round(-sum(coalesce(col("lp"), lit(0.0))), 6).as("nll_sum"))
-      .withColumnRenamed("id", idCol)
+    kn5Chain(joined, idCol, col("c1"), col("c1") / col("n"), lit(1.0) / col("v")) {
+      case (1, _, lower) => interp(col("nc1"), col("tt"), "u_", "ud", lower)
+      case (k, true, lower) =>
+        interp(col(s"cc$k"), col(s"ccs$k"), s"f${k}_", s"c${k}d", lower)
+      case (k, false, lower) =>
+        interp(col(s"c$k"), col(s"cs$k"), s"e${k}_", s"r${k}d", lower)
+    }
   }
 
   /** KenLM-shape count-threshold pruning of a [[kn5TypeTable]] (the
@@ -1401,24 +1387,30 @@ object TextAnalysis {
    * per-gram discounted probabilities and per-context backoff masses,
    * quantized to 6-dp micro-units, as ONE unified `(kind, ord)` table:
    *
-   *  - `kind = 'gram'`, ord 2–5: `qa6 = ⌈(c−D)/c(h·)⌉₆` (raw-top numerator),
-   *    `qb6 = ⌈(N₁₊(·hw)−D)/N₁₊(·h·)⌉₆` (continuation numerator, null when
-   *    the gram never extends leftward);
-   *  - `kind = 'ctx'`, ord 2–5: `qa6 = ⌈D·nf/cs⌉₆` (raw backoff γ),
+   *  - `kind = 'gram'`, ord 2–5: `qa6 = ⌈(c−D(c))/c(h·)⌉₆` (raw-top
+   *    numerator), `qb6 = ⌈(N₁₊(·hw)−D(N₁₊(·hw)))/N₁₊(·h·)⌉₆`
+   *    (continuation numerator, null when the gram never extends
+   *    leftward);
+   *  - `kind = 'ctx'`, ord 2–5: `qa6 = ⌈ΣDₖNₖ/cs⌉₆` (raw backoff γ),
    *    `qb6` the continuation γ — both CLAMPED to ≥ 1 micro-unit: a γ
    *    quantized to zero would zero a sparse history's entire backoff
    *    mass and score an unseen word ln(0) (the cross-engine error/null
    *    divergence); one micro-unit is the soft-EM singles discipline;
    *  - `kind = 'uni'`: per vocab word, `qa6 = ⌈c₁/N⌉₆` (the pos-0 ML
    *    unigram, clamped ≥ 1 — a hapax in a >2M-token corpus must not
-   *    quantize to ln(0)) and `qb6 = ⌈(nc₁−D)/N₁₊(··)⌉₆`;
-   *  - `kind = 'scal'`: one row — `qa6 = ⌈D·W₁/N₁₊(··)⌉₆` (base γ),
+   *    quantize to ln(0)) and `qb6 = ⌈(nc₁−D(nc₁))/N₁₊(··)⌉₆`;
+   *  - `kind = 'scal'`: one row — `qa6 = ⌈ΣDₖuₖ/N₁₊(··)⌉₆` (base γ),
    *    `qb6 = ⌈1/|V|⌉₆` (uniform floor), both clamped.
    *
-   * Every quantity is EXACT-INTEGER half-up 6-dp: with `D = 3/4`,
-   * `(c−D)/cs = (4c−3)/(4cs)`, so `q6 = (2·10⁶·a + b) div (2b)` on longs —
-   * the identical operation in any engine (the softDedup discipline; both
-   * operands positive, so truncating and floor division coincide).
+   * The discount triples are the fixed 0.75 or, `modified = true`, the
+   * Chen–Goodman estimates ([[kn5Discounts]]), quantized to micro-unit
+   * longs Dµ FIRST, so every quantity is EXACT-INTEGER half-up 6-dp:
+   * `(c−D)/cs` rounds to `(2(10⁶c − Dµ) + cs) div (2cs)` and
+   * `ΣDₖNₖ/cs` to `(2·ΣDₖµNₖ + cs) div (2cs)` on longs — the identical
+   * operation in any engine (the softDedup discipline; both operands
+   * positive, so truncating and floor division coincide). The validity
+   * bounds `Dₖ ≤ k` keep every numerator non-negative. At D = 0.75 these
+   * equal the fixed model's `(2·10⁶(4c−3) + 4cs) div (8cs)` bit for bit.
    *
    * 100 TB shape: scoring against this artifact is TWO hash joins per
    * order (gram + context) on bounded parquet slices — the derivation
@@ -1430,211 +1422,74 @@ object TextAnalysis {
     def q6(a: String, b: String): Column =
       expr(s"(2000000 * ($a) + ($b)) div (2 * ($b))")
     def clamp(c: Column): Column = greatest(c, lit(1L))
-    val ns = lit(null).cast("string")
     val nl = lit(null).cast("long")
-    // fail-loud overflow bound (r12 ADVICE): q6 computes 2·10⁶·(4c−3) on
-    // longs, which silently wraps past c ≈ 1.15·10¹², corrupting quantized
-    // probabilities in non-ANSI mode — assert the input counts are inside
-    // the exact-integer envelope instead (derived counts — context sums,
-    // follower/continuation counts — are denominators or row counts of the
-    // same magnitude and inherit the bound). assert_true returns null when
-    // the contract holds, so the coalesce is free in codegen.
-    def checkedCnt: Column = coalesce(
+    // fail-loud overflow bound (r12 ADVICE): the γ numerator 2·ΣDₖµNₖ
+    // reaches 6·10⁶·N₁₊ on longs, which silently wraps past ~1.5·10¹²,
+    // corrupting quantized probabilities in non-ANSI mode — assert the
+    // input counts are inside the exact-integer envelope instead (derived
+    // counts — context sums, follower/continuation counts — are
+    // denominators or row counts of the same magnitude and inherit the
+    // bound). assert_true returns null when the contract holds, so the
+    // coalesce is free in codegen.
+    val checkedCnt: Column = coalesce(
       assert_true(col("cnt").cast("long") <= MaxQuantCount,
         lit(s"kn5QuantModel: a type count exceeds $MaxQuantCount — the " +
-          "2·10⁶·(4c−3) integer quantization would overflow a long; " +
+          "6·10⁶·N integer quantization would overflow a long; " +
           "rescale or shard the corpus before quantizing")).cast("long"),
       col("cnt").cast("long"))
-    def slice(k: Int, c: String): DataFrame =
-      types.where(col("ord") === k)
-        .select(Seq("h4", "h3", "h2", "h1", "w").map(col) :+
-          checkedCnt.as(c): _*)
-    val uniT = slice(1, "c1").select(col("w"), col("c1"))
-    val t2 = slice(2, "c2").select(col("h1"), col("w"), col("c2"))
-    val t3 = slice(3, "c3").select(col("h2"), col("h1"), col("w"), col("c3"))
-    val t4 = slice(4, "c4").select(col("h3"), col("h2"), col("h1"), col("w"),
-      col("c4"))
-    val t5 = slice(5, "c5")
-    val nv = uniT.agg(sum(col("c1")).as("n"), count(lit(1)).as("v"))
-    val tts = t2.agg(count(lit(1)).as("tt"),
-      countDistinct(col("w")).as("w1"))
-    val cont1 = t2.groupBy("w").agg(count(lit(1)).as("nc1"))
-    // per-history count-class follower counts (N₁, N₂, N₃₊) ride the
-    // context aggregates only in MODIFIED mode — the class-weighted γ
-    // needs them; the fixed path stays narrow
-    def cls(c: Column, p: String): Seq[Column] =
-      if (!modified) Nil
-      else Seq(count(when(c === 1L, 1)).as(s"${p}1"),
-        count(when(c === 2L, 1)).as(s"${p}2"),
-        count(when(c >= 3L, 1)).as(s"${p}3"))
-    def ctxOf(tbl: DataFrame, keys: Seq[String], c: String, cs: String,
-              nf: String, p: String): DataFrame = {
-      val aggs = Seq(sum(col(c)).as(cs), count(lit(1)).as(nf)) ++ cls(col(c), p)
-      tbl.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-    def ccOf(tbl: DataFrame, keys: Seq[String], cc: String): DataFrame =
-      tbl.groupBy((keys :+ "w").map(col): _*).agg(count(lit(1)).as(cc))
-    // MODIFIED-KN discount triples as MICRO-UNIT LONGS — Chen & Goodman's
-    // Y/D₁/D₂/D₃ estimator with KenLM's validity rule, the SAME expression
-    // text as [[lmScoreKn5FromModel]]'s discountsOf, then 6-dp half-up
-    // quantized (round(round(d,6)·10⁶) — the phash/µ-unit discipline).
-    // Quantizing the DISCOUNTS first makes every downstream numerator an
-    // exact integer: q6 = round((10⁶·c − Dµ)/cs) = (2(10⁶c − Dµ) + cs)
-    // div (2cs) — identical in any engine. The validity bounds D₁ ≤ 1,
-    // D₂ ≤ 2, D₃ ≤ 3 guarantee c·10⁶ − Dµ(c) ≥ 0 per count class (the
-    // fallback 0.75 quantizes to exactly 750000, reproducing the fixed
-    // model's numerators bit-for-bit on degenerate levels).
-    def discountsMu(tbl: DataFrame, c: String, p: String): DataFrame = {
-      val coc = tbl.agg(
-        count(when(col(c) === 1L, 1)).cast("double").as("n1"),
-        count(when(col(c) === 2L, 1)).cast("double").as("n2"),
-        count(when(col(c) === 3L, 1)).cast("double").as("n3"),
-        count(when(col(c) === 4L, 1)).cast("double").as("n4"))
-      val y = try_divide(col("n1"), col("n1") + lit(2.0) * col("n2"))
-      val d1r = lit(1.0) - try_divide(lit(2.0) * y * col("n2"), col("n1"))
-      val d2r = lit(2.0) - try_divide(lit(3.0) * y * col("n3"), col("n2"))
-      val d3r = lit(3.0) - try_divide(lit(4.0) * y * col("n4"), col("n3"))
-      val invalid = col("n1") === 0.0 || col("n2") === 0.0 ||
-        col("n3") === 0.0 || col("n4") === 0.0 ||
-        d1r <= 0.0 || d1r > 1.0 || d2r <= 0.0 || d2r > 2.0 ||
-        d3r <= 0.0 || d3r > 3.0
-      def dk(k: Int, raw: Column): Column =
-        round(round(when(invalid, lit(0.75)).otherwise(raw), 6) * 1e6, 0)
-          .cast("long").as(s"$p$k")
-      coc.select(dk(1, d1r), dk(2, d2r), dk(3, d3r))
-    }
-    // the count-class pick D(c) over a µ-long triple
-    def dmuOf(cnt: Column, p: String): Column =
-      when(cnt === 1L, col(s"${p}1")).when(cnt === 2L, col(s"${p}2"))
-        .otherwise(col(s"${p}3"))
-    val k2 = Seq("h1"); val k3 = Seq("h2", "h1")
-    val k4 = Seq("h3", "h2", "h1"); val k5 = Seq("h4", "h3", "h2", "h1")
-    val ctx2 = ctxOf(t2, k2, "c2", "cs2", "nf2", "e2_")
-    val ctx3 = ctxOf(t3, k3, "c3", "cs3", "nf3", "e3_")
-    val ctx4 = ctxOf(t4, k4, "c4", "cs4", "nf4", "e4_")
-    val ctx5 = ctxOf(t5.select((k5 :+ "w").map(col) :+ col("c5"): _*), k5,
-      "c5", "cs5", "nf5", "e5_")
-    val cc2 = ccOf(t3.select(col("h1"), col("w"), col("c3")), k2, "cc2")
-    val cc3 = ccOf(t4.select(col("h2"), col("h1"), col("w"), col("c4")), k3, "cc3")
-    val cc4 = ccOf(t5.select(col("h3"), col("h2"), col("h1"), col("w"),
-      col("c5")), k4, "cc4")
-    val cx2 = ctxOf(cc2, k2, "cc2", "ccs2", "ncf2", "f2_")
-    val cx3 = ctxOf(cc3, k3, "cc3", "ccs3", "ncf3", "f3_")
-    val cx4 = ctxOf(cc4, k4, "cc4", "ccs4", "ncf4", "f4_")
-    // the eight discount triples (only materialized in MODIFIED mode):
-    // raw levels from raw counts, continuation levels from continuation
-    // counts, the base from the continuation unigram — one-row broadcast
-    // aggregates of the bounded type tables, never corpus scans
-    lazy val r2d = discountsMu(t2, "c2", "r2d")
-    lazy val r3d = discountsMu(t3, "c3", "r3d")
-    lazy val r4d = discountsMu(t4, "c4", "r4d")
-    lazy val r5d = discountsMu(t5, "c5", "r5d")
-    lazy val c2d = discountsMu(cc2, "cc2", "c2d")
-    lazy val c3d = discountsMu(cc3, "cc3", "c3d")
-    lazy val c4d = discountsMu(cc4, "cc4", "c4d")
-    lazy val udd = discountsMu(cont1, "nc1", "ud")
+    val m = kn5Model(types, checkedCnt, "long")
+    def withD(df: DataFrame, p: String): DataFrame =
+      kn5WithDiscounts(df, m.levels.filter(_._3 == p), modified, mu = true)
+    // numerator q6 with the count-class discount D(c) of triple `p`
+    def qm(c: String, p: String, cs: String): Column = expr(
+      s"(2 * (1000000 * $c - CASE WHEN $c = 1 THEN ${p}1 WHEN $c = 2 " +
+        s"THEN ${p}2 ELSE ${p}3 END) + $cs) div (2 * $cs)")
+    // backoff γ = (Σ Dₖµ·Nₖ)/cs, clamped ≥ 1 µ
+    def gm(p: String, kp: String, cs: String): Column =
+      clamp(expr(s"(2 * (${p}1 * ${kp}1 + ${p}2 * ${kp}2 + " +
+        s"${p}3 * ${kp}3) + $cs) div (2 * $cs)"))
     def pad(df: DataFrame, k: Int, kind: String, qa: Column,
             qb: Column): DataFrame = {
       val have = df.columns.toSet
-      def hcol(n: String) = if (have(n)) col(n) else ns
+      def hcol(n: String) = if (have(n)) col(n) else lit(null).cast("string")
       df.select(lit(kind).as("kind"), lit(k).as("ord"),
         hcol("h4").as("h4"), hcol("h3").as("h3"), hcol("h2").as("h2"),
         hcol("h1").as("h1"), hcol("w").as("w"),
         qa.as("qa6"), qb.as("qb6"))
     }
-    // MODIFIED gram numerator: q6 = (2(10⁶c − Dµ(c)) + cs) div (2cs) —
-    // the count-class discount picked row-wise from the broadcast triple
-    def qm(c: String, dmu: String, cs: String): Column =
-      expr(s"(2 * (1000000 * $c - $dmu) + $cs) div (2 * $cs)")
-    // MODIFIED backoff γ: (Σ Dₖµ·Nₖ)/cs, clamped ≥ 1 µ like the fixed form
-    def gm(dp: String, kp: String, cs: String): Column =
-      clamp(expr(s"(2 * (${dp}1 * ${kp}1 + ${dp}2 * ${kp}2 + " +
-        s"${dp}3 * ${kp}3) + $cs) div (2 * $cs)"))
-    def gramRows(k: Int, t: DataFrame, keys: Seq[String], c: String,
-                 ctx: DataFrame, cs: String,
-                 cc: Option[(DataFrame, String, DataFrame, String,
-                   DataFrame, String)], rd: DataFrame, rdP: String): DataFrame = {
-      val base0 = t.join(ctx, keys)
-      val base = if (modified) base0.crossJoin(broadcast(rd)) else base0
-      val withCc = cc match {
-        case Some((ccT, ccC, cxT, ccsC, cd, cdP)) =>
-          val j0 = base.join(ccT, keys :+ "w", "left").join(cxT, keys, "left")
-          val j = if (modified) j0.crossJoin(broadcast(cd))
-            .withColumn("dmu_c", dmuOf(col(ccC), cdP)) else j0
-          j.withColumn("qb", when(col(ccC).isNotNull,
-            if (modified) qm(ccC, "dmu_c", ccsC)
-            else q6(s"4 * $ccC - 3", s"4 * $ccsC")).otherwise(nl))
-        case None => base.withColumn("qb", nl)
-      }
-      val withQa =
-        if (modified) withCc.withColumn("dmu_r", dmuOf(col(c), rdP))
-          .withColumn("qa", qm(c, "dmu_r", cs))
-        else withCc.withColumn("qa", q6(s"4 * $c - 3", s"4 * $cs"))
-      pad(withQa, k, "gram", col("qa"), col("qb"))
+    // per order: the raw level's numerator / γ, and (below order 5) the
+    // continuation level's, null where the gram or history never extends
+    // leftward
+    def rows(k: Int, kind: String): DataFrame = {
+      val keys = kn5Keys(k)
+      val raw = withD(if (kind == "gram") m.t(k).join(m.ctx(k), keys) else m.ctx(k),
+        s"r${k}d")
+      val withQb =
+        if (k == 5) raw.withColumn("qb", nl)
+        else if (kind == "gram")
+          withD(raw.join(m.cc(k), keys :+ "w", "left").join(m.cx(k), keys, "left"),
+            s"c${k}d").withColumn("qb", when(col(s"cc$k").isNotNull,
+            qm(s"cc$k", s"c${k}d", s"ccs$k")).otherwise(nl))
+        else
+          withD(raw.join(m.cx(k), keys, "left"), s"c${k}d")
+            .withColumn("qb", when(col(s"ccs$k").isNotNull,
+              gm(s"c${k}d", s"f${k}_", s"ccs$k")).otherwise(nl))
+      pad(withQb, k, kind,
+        if (kind == "gram") qm(s"c$k", s"r${k}d", s"cs$k")
+        else gm(s"r${k}d", s"e${k}_", s"cs$k"),
+        col("qb"))
     }
-    def ctxRows(k: Int, ctx: DataFrame, cs: String, nf: String, eP: String,
-                cx: Option[(DataFrame, String, String, String,
-                  DataFrame, String)], rd: DataFrame, rdP: String): DataFrame = {
-      val withRd = if (modified) ctx.crossJoin(broadcast(rd)) else ctx
-      val base = cx match {
-        case Some((cxT, ccs, ncf, fP, cd, cdP)) =>
-          val j0 = withRd.join(cxT,
-            ctx.columns.filter(_.startsWith("h")).toSeq, "left")
-          val j = if (modified) j0.crossJoin(broadcast(cd)) else j0
-          j.withColumn("qb", when(col(ccs).isNotNull,
-            if (modified) gm(cdP, fP, ccs)
-            else clamp(q6(s"3 * $ncf", s"4 * $ccs"))).otherwise(nl))
-        case None => withRd.withColumn("qb", nl)
-      }
-      pad(base.withColumn("qa",
-          if (modified) gm(rdP, eP, cs) else clamp(q6(s"3 * $nf", s"4 * $cs"))),
-        k, "ctx", col("qa"), col("qb"))
-    }
-    val uniBase0 = uniT.crossJoin(nv).join(cont1, Seq("w"), "left")
-      .crossJoin(tts)
-    val uniBase = if (modified) uniBase0.crossJoin(broadcast(udd))
-      .withColumn("dmu_u", dmuOf(col("nc1"), "ud")) else uniBase0
     val uniRows = pad(
-      uniBase
-        .withColumn("qa", clamp(q6("c1", "n")))
-        .withColumn("qb", when(col("nc1").isNotNull && col("tt") > 0L,
-          if (modified) qm("nc1", "dmu_u", "tt")
-          else q6("4 * nc1 - 3", "4 * tt")).otherwise(nl)),
-      1, "uni", col("qa"), col("qb"))
-    // base γ₁: fixed = D·W₁/tt; modified = (Σ Dₖµ·u_k)/tt over the global
-    // count classes of the continuation unigram
-    lazy val ucls = cont1.agg(
-      count(when(col("nc1") === 1L, 1)).as("u_1"),
-      count(when(col("nc1") === 2L, 1)).as("u_2"),
-      count(when(col("nc1") >= 3L, 1)).as("u_3"))
-    val scalBase = if (modified)
-      tts.crossJoin(nv).crossJoin(broadcast(udd)).crossJoin(broadcast(ucls))
-    else tts.crossJoin(nv)
-    val scalRow = pad(
-      scalBase
-        .withColumn("qa", when(col("tt") > 0L,
-          if (modified) gm("ud", "u_", "tt")
-          else clamp(q6("3 * w1", "4 * tt"))).otherwise(nl))
-        .withColumn("qb", clamp(q6("1", "v"))),
-      0, "scal", col("qa"), col("qb"))
-    uniRows
-      .unionByName(gramRows(2, t2, k2, "c2", ctx2, "cs2",
-        Some((cc2, "cc2", cx2, "ccs2", c2d, "c2d")), r2d, "r2d"))
-      .unionByName(gramRows(3, t3, k3, "c3", ctx3, "cs3",
-        Some((cc3, "cc3", cx3, "ccs3", c3d, "c3d")), r3d, "r3d"))
-      .unionByName(gramRows(4, t4, k4, "c4", ctx4, "cs4",
-        Some((cc4, "cc4", cx4, "ccs4", c4d, "c4d")), r4d, "r4d"))
-      .unionByName(gramRows(5,
-        t5.select((k5 :+ "w").map(col) :+ col("c5"): _*), k5, "c5",
-        ctx5, "cs5", None, r5d, "r5d"))
-      .unionByName(ctxRows(2, ctx2, "cs2", "nf2", "e2_",
-        Some((cx2, "ccs2", "ncf2", "f2_", c2d, "c2d")), r2d, "r2d"))
-      .unionByName(ctxRows(3, ctx3, "cs3", "nf3", "e3_",
-        Some((cx3, "ccs3", "ncf3", "f3_", c3d, "c3d")), r3d, "r3d"))
-      .unionByName(ctxRows(4, ctx4, "cs4", "nf4", "e4_",
-        Some((cx4, "ccs4", "ncf4", "f4_", c4d, "c4d")), r4d, "r4d"))
-      .unionByName(ctxRows(5, ctx5, "cs5", "nf5", "e5_", None, r5d, "r5d"))
-      .unionByName(scalRow)
+      withD(m.t(1).crossJoin(m.nv).join(m.cont1, Seq("w"), "left")
+        .crossJoin(m.tts), "ud"),
+      1, "uni", clamp(q6("c1", "n")),
+      when(col("nc1").isNotNull && col("tt") > 0L, qm("nc1", "ud", "tt"))
+        .otherwise(nl))
+    val scalRow = pad(withD(m.tts.crossJoin(m.nv), "ud"), 0, "scal",
+      when(col("tt") > 0L, gm("ud", "u_", "tt")).otherwise(nl),
+      clamp(q6("1", "v")))
+    (Seq("gram", "ctx").flatMap(kind => (2 to 5).map(rows(_, kind))) :+ scalRow)
+      .foldLeft(uniRows)(_ unionByName _)
   }
 
   /**
@@ -1658,69 +1513,32 @@ object TextAnalysis {
    */
   def lmScoreKn5Quant(docs: DataFrame, idCol: String, textCol: String,
                       quant: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val m = lit(1e6)
     val uni = quant.where(col("kind") === "uni")
       .select(col("w"), col("qa6").as("q0"), col("qb6").as("q1u"))
     val scal = quant.where(col("kind") === "scal")
       .select(col("qa6").as("gam1"), col("qb6").as("vinv"))
-    def keysOf(k: Int): Seq[String] =
-      Seq("h4", "h3", "h2", "h1").takeRight(k - 1)
     def gram(k: Int) = quant.where(col("kind") === "gram" && col("ord") === k)
-      .select((keysOf(k) :+ "w").map(col) :+ col("qa6").as(s"qr$k") :+
+      .select((kn5Keys(k) :+ "w").map(col) :+ col("qa6").as(s"qr$k") :+
         col("qb6").as(s"qc$k"): _*)
     def ctx(k: Int) = quant.where(col("kind") === "ctx" && col("ord") === k)
-      .select(keysOf(k).map(col) :+ col("qa6").as(s"gr$k") :+
+      .select(kn5Keys(k).map(col) :+ col("qa6").as(s"gr$k") :+
         col("qb6").as(s"gc$k"): _*)
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val occ = spreadByDoc(docs.select(col(idCol).as("id"), col(textCol)),
-        col("id"))
-      .select(col("id"), posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
-      .withColumn("h1", lag(col("w"), 1).over(byDoc))
-      .withColumn("h2", lag(col("w"), 2).over(byDoc))
-      .withColumn("h3", lag(col("w"), 3).over(byDoc))
-      .withColumn("h4", lag(col("w"), 4).over(byDoc))
-    val joined = occ
-      .join(uni, Seq("w"), "left")
-      .join(gram(2), Seq("h1", "w"), "left")
-      .join(ctx(2), Seq("h1"), "left")
-      .join(gram(3), Seq("h2", "h1", "w"), "left")
-      .join(ctx(3), Seq("h2", "h1"), "left")
-      .join(gram(4), Seq("h3", "h2", "h1", "w"), "left")
-      .join(ctx(4), Seq("h3", "h2", "h1"), "left")
-      .join(gram(5), Seq("h4", "h3", "h2", "h1", "w"), "left")
-      .join(ctx(5), Seq("h4", "h3", "h2", "h1"), "left")
-      .crossJoin(broadcast(scal))
+    val joined = (2 to 5).foldLeft(
+        kn5History(docs, idCol, textCol).join(uni, Seq("w"), "left")) { (acc, k) =>
+        acc.join(gram(k), kn5Keys(k) :+ "w", "left").join(ctx(k), kn5Keys(k), "left")
+      }.crossJoin(broadcast(scal))
     // the quantized interpolation level: q + γ·lower, weight-1 backoff on
     // an absent context — the SAME expression text as the oracle's replay
     def lvl(q: Column, g: Column, lower: Column): Column =
       when(g.isNotNull,
         coalesce(q, lit(0L)) / m + g / m * lower).otherwise(lower)
-    val staged = joined
-      .withColumn("p1",
-        when(col("gam1").isNotNull,
-          coalesce(col("q1u"), lit(0L)) / m + col("gam1") / m *
-            (col("vinv") / m))
-          .otherwise(col("vinv") / m))
-      .withColumn("p2c", lvl(col("qc2"), col("gc2"), col("p1")))
-      .withColumn("p2r", lvl(col("qr2"), col("gr2"), col("p1")))
-      .withColumn("p3c", lvl(col("qc3"), col("gc3"), col("p2c")))
-      .withColumn("p3r", lvl(col("qr3"), col("gr3"), col("p2c")))
-      .withColumn("p4c", lvl(col("qc4"), col("gc4"), col("p3c")))
-      .withColumn("p4r", lvl(col("qr4"), col("gr4"), col("p3c")))
-      .withColumn("p5", lvl(col("qr5"), col("gr5"), col("p4c")))
-    val s = when(col("q0").isNull, lit(null).cast("double"))
-      .when(col("pos") === 0, col("q0") / m)
-      .when(col("pos") === 1, col("p2r"))
-      .when(col("pos") === 2, col("p3r"))
-      .when(col("pos") === 3, col("p4r"))
-      .otherwise(col("p5"))
-    staged.select(col("id"), round(log(s), 6).as("lp"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(when(col("lp").isNull, 1L).otherwise(0L)).as("n_oov"),
-        round(-sum(coalesce(col("lp"), lit(0.0))), 6).as("nll_sum"))
-      .withColumnRenamed("id", idCol)
+    kn5Chain(joined, idCol, col("q0"), col("q0") / m, col("vinv") / m) {
+      case (1, _, lower) => lvl(col("q1u"), col("gam1"), lower)
+      case (k, cont, lower) =>
+        val s = if (cont) "c" else "r"
+        lvl(col(s"q$s$k"), col(s"g$s$k"), lower)
+    }
   }
 
   /** Count-min-sketch bucket for word `w` under hash row `seed`:

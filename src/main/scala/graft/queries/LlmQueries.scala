@@ -6555,30 +6555,27 @@ object LlmQueries {
            |  round(-sum(coalesce(round(ln(s), 6), 0.0)), 6) AS nll_sum
            |FROM j GROUP BY 1 ORDER BY 1""".stripMargin))
 
-  /** The 5-gram interpolated-KN score replay, shared by `text_lm_kn5`,
-    * its stored twin and the perplexity-bucket consumer: model tables
-    * from the even-doc_id train split, the full backoff chain (raw-count
-    * top per position order, continuation-count middles, uniform-
-    * interpolated base), per-position 6-dp `ln`. Ends with `kn5s AS
-    * (doc_id, n_words, n_oov, nll_sum)`. */
   /** The shared 5-gram KN model/token CTEs: even-split training tables of
     * every order, continuation tables, the held-out token stream with its
-    * four history lags — both discount variants build on this prefix.
+    * four history lags — every KN5 replay builds on this prefix.
     * `prune345` replays the KenLM `--prune 0 0 1 1 1` dial: order-3/4/5
     * singleton types dropped; continuation tables derive from the PRUNED
     * orders, exactly like [[graft.llm.TextAnalysis.kn5Prune]] consumers. */
   private def kn5ModelSqlFor(prune345: Boolean): String = {
     val hv = if (prune345) " HAVING count(*) >= 2" else ""
-    s"""tr AS (SELECT doc_id, string_split(text, ' ') AS ws
-      |       FROM documents WHERE doc_id % 2 = 0),
-      |ttok AS (SELECT doc_id, unnest(ws) AS w,
-      |           generate_subscripts(ws, 1)::BIGINT AS pos FROM tr),
-      |th AS (SELECT doc_id, pos, w,
-      |         lag(w)    OVER (PARTITION BY doc_id ORDER BY pos) AS h1,
-      |         lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS h2,
-      |         lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS h3,
-      |         lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS h4
-      |       FROM ttok),
+    // a document split's token stream with its four history lags
+    def hist(ws: String, tok: String, h: String, where: String): String =
+      s"""$ws AS (SELECT doc_id, string_split(text, ' ') AS ws
+        |       FROM documents$where),
+        |$tok AS (SELECT doc_id, unnest(ws) AS w,
+        |           generate_subscripts(ws, 1)::BIGINT AS pos FROM $ws),
+        |$h AS (SELECT doc_id, pos, w,
+        |         lag(w)    OVER (PARTITION BY doc_id ORDER BY pos) AS h1,
+        |         lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS h2,
+        |         lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS h3,
+        |         lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS h4
+        |       FROM $tok)""".stripMargin
+    s"""${hist("tr", "ttok", "th", " WHERE doc_id % 2 = 0")},
       |uni AS (SELECT w, count(*)::DOUBLE AS c1 FROM th GROUP BY 1),
       |nv AS (SELECT sum(c1) AS n, count(*)::DOUBLE AS v FROM uni),
       |t2 AS (SELECT h1, w, count(*)::DOUBLE AS c2 FROM th
@@ -6597,127 +6594,46 @@ object LlmQueries {
       |cont1 AS (SELECT w, count(*)::DOUBLE AS nc1 FROM t2 GROUP BY 1),
       |tts AS (SELECT count(*)::DOUBLE AS tt,
       |          count(DISTINCT w)::DOUBLE AS w1 FROM t2),
-      |sa AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-      |stok AS (SELECT doc_id, unnest(ws) AS w,
-      |           generate_subscripts(ws, 1)::BIGINT AS pos FROM sa),
-      |sh AS (SELECT doc_id, pos, w,
-      |         lag(w)    OVER (PARTITION BY doc_id ORDER BY pos) AS h1,
-      |         lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS h2,
-      |         lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS h3,
-      |         lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS h4
-      |       FROM stok)""".stripMargin
+      |${hist("sa", "stok", "sh", "")}""".stripMargin
   }
 
-  private val kn5ModelSql: String = kn5ModelSqlFor(prune345 = false)
+  /** History columns of an order-k n-gram, farthest word first. */
+  private def kn5Hs(k: Int): Seq[String] = Seq("h4", "h3", "h2", "h1").takeRight(k - 1)
 
-  /** Fixed-discount scoring chain over a given model prefix — shared by
-    * the full and the pruned replays (the chain itself is identical; only
-    * the model tables differ). Ends in `kn5s`. */
-  private def kn5ScoreSqlOver(modelSql: String): String =
-    s"""$modelSql,
-      |ctx2 AS (SELECT h1, sum(c2) AS cs2, count(*)::DOUBLE AS nf2
-      |         FROM t2 GROUP BY 1),
-      |ctx3 AS (SELECT h2, h1, sum(c3) AS cs3, count(*)::DOUBLE AS nf3
-      |         FROM t3 GROUP BY 1, 2),
-      |ctx4 AS (SELECT h3, h2, h1, sum(c4) AS cs4, count(*)::DOUBLE AS nf4
-      |         FROM t4 GROUP BY 1, 2, 3),
-      |ctx5 AS (SELECT h4, h3, h2, h1, sum(c5) AS cs5,
-      |           count(*)::DOUBLE AS nf5 FROM t5 GROUP BY 1, 2, 3, 4),
-      |cx2 AS (SELECT h1, sum(cc2) AS ccs2, count(*)::DOUBLE AS ncf2
-      |        FROM cc2 GROUP BY 1),
-      |cx3 AS (SELECT h2, h1, sum(cc3) AS ccs3, count(*)::DOUBLE AS ncf3
-      |        FROM cc3 GROUP BY 1, 2),
-      |cx4 AS (SELECT h3, h2, h1, sum(cc4) AS ccs4, count(*)::DOUBLE AS ncf4
-      |        FROM cc4 GROUP BY 1, 2, 3),
-      |j0 AS (SELECT sh.doc_id, sh.pos, u.c1, cont1.nc1,
-      |         t2.c2, ctx2.cs2, ctx2.nf2, cc2.cc2, cx2.ccs2, cx2.ncf2,
-      |         t3.c3, ctx3.cs3, ctx3.nf3, cc3.cc3, cx3.ccs3, cx3.ncf3,
-      |         t4.c4, ctx4.cs4, ctx4.nf4, cc4.cc4, cx4.ccs4, cx4.ncf4,
-      |         t5.c5, ctx5.cs5, ctx5.nf5, nv.n, nv.v, tts.tt, tts.w1
-      |       FROM sh
-      |       LEFT JOIN uni u ON sh.w = u.w
-      |       LEFT JOIN cont1 ON sh.w = cont1.w
-      |       LEFT JOIN t2 ON sh.h1 = t2.h1 AND sh.w = t2.w
-      |       LEFT JOIN ctx2 ON sh.h1 = ctx2.h1
-      |       LEFT JOIN cc2 ON sh.h1 = cc2.h1 AND sh.w = cc2.w
-      |       LEFT JOIN cx2 ON sh.h1 = cx2.h1
-      |       LEFT JOIN t3 ON sh.h2 = t3.h2 AND sh.h1 = t3.h1 AND sh.w = t3.w
-      |       LEFT JOIN ctx3 ON sh.h2 = ctx3.h2 AND sh.h1 = ctx3.h1
-      |       LEFT JOIN cc3 ON sh.h2 = cc3.h2 AND sh.h1 = cc3.h1
-      |         AND sh.w = cc3.w
-      |       LEFT JOIN cx3 ON sh.h2 = cx3.h2 AND sh.h1 = cx3.h1
-      |       LEFT JOIN t4 ON sh.h3 = t4.h3 AND sh.h2 = t4.h2
-      |         AND sh.h1 = t4.h1 AND sh.w = t4.w
-      |       LEFT JOIN ctx4 ON sh.h3 = ctx4.h3 AND sh.h2 = ctx4.h2
-      |         AND sh.h1 = ctx4.h1
-      |       LEFT JOIN cc4 ON sh.h3 = cc4.h3 AND sh.h2 = cc4.h2
-      |         AND sh.h1 = cc4.h1 AND sh.w = cc4.w
-      |       LEFT JOIN cx4 ON sh.h3 = cx4.h3 AND sh.h2 = cx4.h2
-      |         AND sh.h1 = cx4.h1
-      |       LEFT JOIN t5 ON sh.h4 = t5.h4 AND sh.h3 = t5.h3
-      |         AND sh.h2 = t5.h2 AND sh.h1 = t5.h1 AND sh.w = t5.w
-      |       LEFT JOIN ctx5 ON sh.h4 = ctx5.h4 AND sh.h3 = ctx5.h3
-      |         AND sh.h2 = ctx5.h2 AND sh.h1 = ctx5.h1
-      |       CROSS JOIN nv CROSS JOIN tts),
-      |l1 AS (SELECT *, CASE WHEN tt > 0.0 THEN
-      |           greatest(coalesce(nc1, 0.0) - 0.75, 0.0) / tt
-      |             + 0.75 * w1 / tt * (1.0 / v)
-      |         ELSE 1.0 / v END AS p1 FROM j0),
-      |l2 AS (SELECT *,
-      |         CASE WHEN ccs2 IS NOT NULL THEN
-      |             greatest(coalesce(cc2, 0.0) - 0.75, 0.0) / ccs2
-      |               + 0.75 * ncf2 / ccs2 * p1
-      |           ELSE p1 END AS p2c,
-      |         CASE WHEN cs2 IS NOT NULL THEN
-      |             greatest(coalesce(c2, 0.0) - 0.75, 0.0) / cs2
-      |               + 0.75 * nf2 / cs2 * p1
-      |           ELSE p1 END AS p2r FROM l1),
-      |l3 AS (SELECT *,
-      |         CASE WHEN ccs3 IS NOT NULL THEN
-      |             greatest(coalesce(cc3, 0.0) - 0.75, 0.0) / ccs3
-      |               + 0.75 * ncf3 / ccs3 * p2c
-      |           ELSE p2c END AS p3c,
-      |         CASE WHEN cs3 IS NOT NULL THEN
-      |             greatest(coalesce(c3, 0.0) - 0.75, 0.0) / cs3
-      |               + 0.75 * nf3 / cs3 * p2c
-      |           ELSE p2c END AS p3r FROM l2),
-      |l4 AS (SELECT *,
-      |         CASE WHEN ccs4 IS NOT NULL THEN
-      |             greatest(coalesce(cc4, 0.0) - 0.75, 0.0) / ccs4
-      |               + 0.75 * ncf4 / ccs4 * p3c
-      |           ELSE p3c END AS p4c,
-      |         CASE WHEN cs4 IS NOT NULL THEN
-      |             greatest(coalesce(c4, 0.0) - 0.75, 0.0) / cs4
-      |               + 0.75 * nf4 / cs4 * p3c
-      |           ELSE p3c END AS p4r FROM l3),
-      |l5 AS (SELECT *,
-      |         CASE WHEN cs5 IS NOT NULL THEN
-      |             greatest(coalesce(c5, 0.0) - 0.75, 0.0) / cs5
-      |               + 0.75 * nf5 / cs5 * p4c
-      |           ELSE p4c END AS p5 FROM l4),
-      |sp AS (SELECT doc_id,
-      |         CASE WHEN c1 IS NULL THEN NULL
-      |              WHEN pos = 1 THEN c1 / n
-      |              WHEN pos = 2 THEN p2r
-      |              WHEN pos = 3 THEN p3r
-      |              WHEN pos = 4 THEN p4r
-      |              ELSE p5 END AS s FROM l5),
-      |kn5s AS (SELECT doc_id, count(*)::BIGINT AS n_words,
-      |           sum(CASE WHEN s IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-      |           round(-sum(coalesce(round(ln(s), 6), 0.0)), 6) AS nll_sum
-      |         FROM sp GROUP BY 1)""".stripMargin
+  private def kn5On(a: String, b: String, cols: Seq[String]): String =
+    cols.map(c => s"$a.$c = $b.$c").mkString(" AND ")
 
-  private val kn5ScoreSql: String = kn5ScoreSqlOver(kn5ModelSql)
-  private val kn5pScoreSql: String =
-    kn5ScoreSqlOver(kn5ModelSqlFor(prune345 = true))
+  /** The per-history context CTEs, typed `ty`: `<ctx>k` (k = 2..5) over
+    * the order-k table with mass `csk` and follower count classes
+    * `ek_1..3` (N₁, N₂, N₃₊); `<cx>k` (k = 2..4) over the continuation
+    * table with `ccsk` and `fk_1..3`. */
+  private def kn5CtxsSql(ctx: String, cx: String, ty: String): String = {
+    def one(cte: String, tbl: String, k: Int, c: String, cs: String, p: String) =
+      s"""$cte AS (SELECT ${kn5Hs(k).mkString(", ")}, sum($c)::$ty AS $cs,
+         |           ${knCls(c, p, ty)}
+         |         FROM $tbl GROUP BY ${(1 until k).mkString(", ")})""".stripMargin
+    ((2 to 5).map(k => one(s"$ctx$k", s"t$k", k, s"c$k", s"cs$k", s"e${k}_")) ++
+      (2 to 4).map(k => one(s"$cx$k", s"cc$k", k, s"cc$k", s"ccs$k", s"f${k}_")))
+      .mkString(",\n")
+  }
 
-  /** One modified-KN discount CTE: count-of-counts n₁..n₄ of `tbl.c`,
-    * Chen & Goodman's `Y/D₁/D₂/D₃` under KenLM's validity rule — any
-    * zero among n₁..n₄ or any estimate outside `0 < Dₖ ≤ k` falls the
-    * WHOLE triple back to the fixed 0.75 (positivity is what keeps every
-    * probability > 0) — the same expression text as
-    * [[graft.llm.TextAnalysis.lmScoreKn5FromModel]]'s `discountsOf`. */
-  private def knmDiscountSql(cte: String, tbl: String, c: String): String = {
+  private def knCls(c: String, p: String, ty: String): String =
+    s"""(count(*) FILTER (WHERE $c = 1))::$ty AS ${p}1,
+       |           (count(*) FILTER (WHERE $c = 2))::$ty AS ${p}2,
+       |           (count(*) FILTER (WHERE $c >= 3))::$ty AS ${p}3""".stripMargin
+
+  /** One discount-triple CTE `p (p1, p2, p3)` over the counts `tbl.c`.
+    * Modified: count-of-counts n₁..n₄, Chen & Goodman's `Y/D₁/D₂/D₃`
+    * under KenLM's validity rule — any zero among n₁..n₄ or any estimate
+    * outside `0 < Dₖ ≤ k` falls the WHOLE triple back to 0.75
+    * (positivity is what keeps every probability > 0) — the same
+    * expression text as [[graft.llm.TextAnalysis]]'s `kn5Discounts`.
+    * Fixed: the constant 0.75 (fixed-discount KN is modified KN with
+    * D₁ = D₂ = D₃ = D). `mu` rounds to micro-unit BIGINTs,
+    * `round(round(d, 6)·10⁶)` (0.75 → 750000), as the quantized model
+    * stores them. */
+  private def knDiscountSql(p: String, tbl: String, c: String, modified: Boolean,
+                            mu: Boolean): String = {
     val y = "(n1 / (n1 + 2.0 * n2))"
     val d1r = s"1.0 - 2.0 * $y * n2 / n1"
     val d2r = s"2.0 - 3.0 * $y * n3 / n2"
@@ -6727,137 +6643,201 @@ object LlmQueries {
          |         OR $d1r <= 0.0 OR $d1r > 1.0
          |         OR $d2r <= 0.0 OR $d2r > 2.0
          |         OR $d3r <= 0.0 OR $d3r > 3.0""".stripMargin
-    def dk(k: Int, raw: String) =
-      s"""CASE WHEN $invalid
-         |    THEN 0.75 ELSE $raw END AS $cte$k""".stripMargin
-    s"""$cte AS (SELECT
-       |    ${dk(1, d1r)},
-       |    ${dk(2, d2r)},
-       |    ${dk(3, d3r)}
+    def dk(k: Int, raw: String) = {
+      val d = if (modified) s"CASE WHEN $invalid\n    THEN 0.75 ELSE $raw END"
+        else "0.75::DOUBLE"
+      (if (mu) s"round(round($d, 6) * 1000000, 0)::BIGINT" else d) + s" AS $p$k"
+    }
+    val coc =
+      if (!modified) ""
+      else s"""
        |  FROM (SELECT (count(*) FILTER (WHERE $c = 1))::DOUBLE AS n1,
        |          (count(*) FILTER (WHERE $c = 2))::DOUBLE AS n2,
        |          (count(*) FILTER (WHERE $c = 3))::DOUBLE AS n3,
-       |          (count(*) FILTER (WHERE $c = 4))::DOUBLE AS n4 FROM $tbl))""".stripMargin
+       |          (count(*) FILTER (WHERE $c = 4))::DOUBLE AS n4 FROM $tbl)""".stripMargin
+    s"""$p AS (SELECT
+       |    ${dk(1, d1r)},
+       |    ${dk(2, d2r)},
+       |    ${dk(3, d3r)}$coc)""".stripMargin
   }
 
-  /** One modified-KN interpolation level: per-count-class discount,
-    * class-weighted backoff mass — mirrors the Spark `interpM`. */
+  /** The eight discounted distributions `(triple, counts table, count
+    * column)`: raw levels `r2d..r5d` from raw counts, continuation levels
+    * `c2d..c4d` from continuation counts, the base `ud` from the
+    * continuation unigram. */
+  private def kn5Levels: Seq[(String, String, String)] =
+    (2 to 5).map(k => (s"r${k}d", s"t$k", s"c$k")) ++
+      (2 to 4).map(k => (s"c${k}d", s"cc$k", s"cc$k")) :+ (("ud", "cont1", "nc1"))
+
+  /** The eight discount-triple CTEs plus the base level's count classes
+    * `ucls (u_1..3)`, typed `ty`. */
+  private def kn5DiscountsSql(modified: Boolean, mu: Boolean, ty: String): String =
+    (kn5Levels.map { case (p, tbl, c) => knDiscountSql(p, tbl, c, modified, mu) } :+
+      s"ucls AS (SELECT ${knCls("nc1", "u_", ty)} FROM cont1)").mkString(",\n")
+
+  /** `cte AS (SELECT cols FROM sh LEFT JOIN …)`: the held-out token
+    * stream probing each leg `(table, alias, join columns, value
+    * columns)`; `head` names the leading columns. */
+  private def kn5JoinSql(cte: String, head: String,
+                         legs: Seq[(String, String, Seq[String], Seq[String])],
+                         tail: String = ""): String =
+    s"""$cte AS (SELECT sh.doc_id, sh.pos, $head,
+       |         ${legs.flatMap { case (_, a, _, vs) => vs.map(v => s"$a.$v") }.mkString(", ")}
+       |       FROM sh
+       |${legs.map { case (t, a, on, _) => s"       LEFT JOIN $t $a ON ${kn5On("sh", a, on)}" }.mkString("\n")}$tail)""".stripMargin
+
+  /** The interpolation chain CTEs `t2..t5` over `t1` (which carries
+    * `p1`): for k = 2..4 a continuation level `pkc` and a raw top `pkr`
+    * over `p(k−1)c`, then the raw top `p5` over `p4c`. */
+  private def kn5ChainSql(t: String, level: (Int, Boolean, String) => String): String =
+    (2 to 5).map { k =>
+      val lower = if (k == 2) "p1" else s"p${k - 1}c"
+      val ps = if (k == 5) Seq(s"${level(5, false, lower)} AS p5")
+        else Seq(s"${level(k, true, lower)} AS p${k}c",
+          s"${level(k, false, lower)} AS p${k}r")
+      s"$t$k AS (SELECT *,\n         ${ps.mkString(",\n         ")} FROM $t${k - 1})"
+    }.mkString(",\n")
+
+  /** The per-doc epilogue of every KN5 replay: the chain top per 1-based
+    * position (`p0` at position 1), a null `known` marks an OOV position;
+    * per-position 6-dp `ln`. Ends in `kn5s (doc_id, n_words, n_oov,
+    * nll_sum)`. */
+  private def kn5sSql(from: String, known: String, p0: String): String =
+    s"""sp AS (SELECT doc_id,
+       |         CASE WHEN $known IS NULL THEN NULL
+       |              WHEN pos = 1 THEN $p0
+       |              WHEN pos = 2 THEN p2r
+       |              WHEN pos = 3 THEN p3r
+       |              WHEN pos = 4 THEN p4r
+       |              ELSE p5 END AS s FROM $from),
+       |kn5s AS (SELECT doc_id, count(*)::BIGINT AS n_words,
+       |           sum(CASE WHEN s IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
+       |           round(-sum(coalesce(round(ln(s), 6), 0.0)), 6) AS nll_sum
+       |         FROM sp GROUP BY 1)""".stripMargin
+
+  /** One KN interpolation level: per-count-class discount, class-weighted
+    * backoff mass — mirrors the Spark `interp`. */
   private def knmLevel(c: String, cs: String, kp: String, dp: String,
-                       lower: String): String =
-    s"""CASE WHEN $cs IS NOT NULL THEN
+                       lower: String, guard: String = ""): String =
+    s"""CASE WHEN ${if (guard.isEmpty) s"$cs IS NOT NULL" else guard} THEN
        |           (CASE WHEN $c IS NULL THEN 0.0 WHEN $c = 1 THEN $c - ${dp}1
        |                 WHEN $c = 2 THEN $c - ${dp}2 ELSE $c - ${dp}3 END) / $cs
        |           + (${dp}1 * ${kp}1 + ${dp}2 * ${kp}2 + ${dp}3 * ${kp}3)
        |             / $cs * $lower
        |         ELSE $lower END""".stripMargin
 
-  /** Per-history count-class columns for a modified-KN context CTE. */
-  private def knmCls(c: String, p: String): String =
-    s"""(count(*) FILTER (WHERE $c = 1))::DOUBLE AS ${p}1,
-       |           (count(*) FILTER (WHERE $c = 2))::DOUBLE AS ${p}2,
-       |           (count(*) FILTER (WHERE $c >= 3))::DOUBLE AS ${p}3""".stripMargin
+  /** The 5-gram interpolated-KN score replay: model prefix, context CTEs
+    * with count-class follower counts, eight discount triples (modified:
+    * estimated; fixed: 0.75), class-weighted interpolation at every
+    * level, the raw-count top per position order over continuation-count
+    * middles and the uniform-interpolated base. Ends in `kn5s`. */
+  private def kn5ScoreSqlFor(prune345: Boolean, modified: Boolean): String = {
+    val legs = (2 to 5).flatMap { k =>
+      val (h, g) = (kn5Hs(k), kn5Hs(k) :+ "w")
+      Seq((s"t$k", s"t$k", g, Seq(s"c$k")),
+        (s"ctx$k", s"ctx$k", h, s"cs$k" +: (1 to 3).map(i => s"e${k}_$i"))) ++
+        (if (k == 5) Nil
+         else Seq((s"cc$k", s"cc$k", g, Seq(s"cc$k")),
+           (s"cx$k", s"cx$k", h, s"ccs$k" +: (1 to 3).map(i => s"f${k}_$i"))))
+    }
+    s"""${kn5ModelSqlFor(prune345)},
+      |${kn5CtxsSql("ctx", "cx", "DOUBLE")},
+      |${kn5DiscountsSql(modified, mu = false, "DOUBLE")},
+      |${kn5JoinSql("jm", "u.c1, cont1.nc1",
+          (("uni", "u", Seq("w"), Nil)) +: (("cont1", "cont1", Seq("w"), Nil)) +: legs)},
+      |l1 AS (SELECT *, ${knmLevel("nc1", "tt", "u_", "ud", "(1.0 / v)", guard = "tt > 0.0")} AS p1
+      |       FROM jm CROSS JOIN nv CROSS JOIN tts CROSS JOIN ${kn5Levels.map(_._1).mkString(" CROSS JOIN ")}
+      |         CROSS JOIN ucls),
+      |${kn5ChainSql("l", {
+          case (k, true, lower) => knmLevel(s"cc$k", s"ccs$k", s"f${k}_", s"c${k}d", lower)
+          case (k, false, lower) => knmLevel(s"c$k", s"cs$k", s"e${k}_", s"r${k}d", lower)
+        })},
+      |${kn5sSql("l5", "c1", "c1 / n")}""".stripMargin
+  }
 
-  /** The MODIFIED-KN replay: same model prefix, context CTEs widened with
-    * count-class follower counts, eight discount triples, class-weighted
-    * interpolation at every level. Ends in `kn5s` like the fixed form. */
-  private def kn5mScoreSqlOver(modelSql: String): String =
-    s"""$modelSql,
-      |ctx2 AS (SELECT h1, sum(c2) AS cs2,
-      |           ${knmCls("c2", "e2_")}
-      |         FROM t2 GROUP BY 1),
-      |ctx3 AS (SELECT h2, h1, sum(c3) AS cs3,
-      |           ${knmCls("c3", "e3_")}
-      |         FROM t3 GROUP BY 1, 2),
-      |ctx4 AS (SELECT h3, h2, h1, sum(c4) AS cs4,
-      |           ${knmCls("c4", "e4_")}
-      |         FROM t4 GROUP BY 1, 2, 3),
-      |ctx5 AS (SELECT h4, h3, h2, h1, sum(c5) AS cs5,
-      |           ${knmCls("c5", "e5_")}
-      |         FROM t5 GROUP BY 1, 2, 3, 4),
-      |cx2 AS (SELECT h1, sum(cc2) AS ccs2,
-      |           ${knmCls("cc2", "f2_")}
-      |        FROM cc2 GROUP BY 1),
-      |cx3 AS (SELECT h2, h1, sum(cc3) AS ccs3,
-      |           ${knmCls("cc3", "f3_")}
-      |        FROM cc3 GROUP BY 1, 2),
-      |cx4 AS (SELECT h3, h2, h1, sum(cc4) AS ccs4,
-      |           ${knmCls("cc4", "f4_")}
-      |        FROM cc4 GROUP BY 1, 2, 3),
-      |${knmDiscountSql("r2d", "t2", "c2")},
-      |${knmDiscountSql("r3d", "t3", "c3")},
-      |${knmDiscountSql("r4d", "t4", "c4")},
-      |${knmDiscountSql("r5d", "t5", "c5")},
-      |${knmDiscountSql("c2d", "cc2", "cc2")},
-      |${knmDiscountSql("c3d", "cc3", "cc3")},
-      |${knmDiscountSql("c4d", "cc4", "cc4")},
-      |${knmDiscountSql("ud", "cont1", "nc1")},
-      |ucls AS (SELECT (count(*) FILTER (WHERE nc1 = 1))::DOUBLE AS u_1,
-      |           (count(*) FILTER (WHERE nc1 = 2))::DOUBLE AS u_2,
-      |           (count(*) FILTER (WHERE nc1 >= 3))::DOUBLE AS u_3 FROM cont1),
-      |jm AS (SELECT sh.doc_id, sh.pos, u.c1, cont1.nc1,
-      |         t2.c2, ctx2.cs2, ctx2.e2_1, ctx2.e2_2, ctx2.e2_3,
-      |         cc2.cc2, cx2.ccs2, cx2.f2_1, cx2.f2_2, cx2.f2_3,
-      |         t3.c3, ctx3.cs3, ctx3.e3_1, ctx3.e3_2, ctx3.e3_3,
-      |         cc3.cc3, cx3.ccs3, cx3.f3_1, cx3.f3_2, cx3.f3_3,
-      |         t4.c4, ctx4.cs4, ctx4.e4_1, ctx4.e4_2, ctx4.e4_3,
-      |         cc4.cc4, cx4.ccs4, cx4.f4_1, cx4.f4_2, cx4.f4_3,
-      |         t5.c5, ctx5.cs5, ctx5.e5_1, ctx5.e5_2, ctx5.e5_3
-      |       FROM sh
-      |       LEFT JOIN uni u ON sh.w = u.w
-      |       LEFT JOIN cont1 ON sh.w = cont1.w
-      |       LEFT JOIN t2 ON sh.h1 = t2.h1 AND sh.w = t2.w
-      |       LEFT JOIN ctx2 ON sh.h1 = ctx2.h1
-      |       LEFT JOIN cc2 ON sh.h1 = cc2.h1 AND sh.w = cc2.w
-      |       LEFT JOIN cx2 ON sh.h1 = cx2.h1
-      |       LEFT JOIN t3 ON sh.h2 = t3.h2 AND sh.h1 = t3.h1 AND sh.w = t3.w
-      |       LEFT JOIN ctx3 ON sh.h2 = ctx3.h2 AND sh.h1 = ctx3.h1
-      |       LEFT JOIN cc3 ON sh.h2 = cc3.h2 AND sh.h1 = cc3.h1
-      |         AND sh.w = cc3.w
-      |       LEFT JOIN cx3 ON sh.h2 = cx3.h2 AND sh.h1 = cx3.h1
-      |       LEFT JOIN t4 ON sh.h3 = t4.h3 AND sh.h2 = t4.h2
-      |         AND sh.h1 = t4.h1 AND sh.w = t4.w
-      |       LEFT JOIN ctx4 ON sh.h3 = ctx4.h3 AND sh.h2 = ctx4.h2
-      |         AND sh.h1 = ctx4.h1
-      |       LEFT JOIN cc4 ON sh.h3 = cc4.h3 AND sh.h2 = cc4.h2
-      |         AND sh.h1 = cc4.h1 AND sh.w = cc4.w
-      |       LEFT JOIN cx4 ON sh.h3 = cx4.h3 AND sh.h2 = cx4.h2
-      |         AND sh.h1 = cx4.h1
-      |       LEFT JOIN t5 ON sh.h4 = t5.h4 AND sh.h3 = t5.h3
-      |         AND sh.h2 = t5.h2 AND sh.h1 = t5.h1 AND sh.w = t5.w
-      |       LEFT JOIN ctx5 ON sh.h4 = ctx5.h4 AND sh.h3 = ctx5.h3
-      |         AND sh.h2 = ctx5.h2 AND sh.h1 = ctx5.h1),
-      |l1 AS (SELECT *, CASE WHEN tt > 0.0 THEN
-      |           (CASE WHEN nc1 IS NULL THEN 0.0 WHEN nc1 = 1 THEN nc1 - ud1
-      |                 WHEN nc1 = 2 THEN nc1 - ud2 ELSE nc1 - ud3 END) / tt
-      |           + (ud1 * u_1 + ud2 * u_2 + ud3 * u_3) / tt * (1.0 / v)
-      |         ELSE 1.0 / v END AS p1
-      |       FROM jm CROSS JOIN nv CROSS JOIN tts CROSS JOIN r2d
-      |         CROSS JOIN r3d CROSS JOIN r4d CROSS JOIN r5d CROSS JOIN c2d
-      |         CROSS JOIN c3d CROSS JOIN c4d CROSS JOIN ud CROSS JOIN ucls),
-      |l2 AS (SELECT *,
-      |         ${knmLevel("cc2", "ccs2", "f2_", "c2d", "p1")} AS p2c,
-      |         ${knmLevel("c2", "cs2", "e2_", "r2d", "p1")} AS p2r FROM l1),
-      |l3 AS (SELECT *,
-      |         ${knmLevel("cc3", "ccs3", "f3_", "c3d", "p2c")} AS p3c,
-      |         ${knmLevel("c3", "cs3", "e3_", "r3d", "p2c")} AS p3r FROM l2),
-      |l4 AS (SELECT *,
-      |         ${knmLevel("cc4", "ccs4", "f4_", "c4d", "p3c")} AS p4c,
-      |         ${knmLevel("c4", "cs4", "e4_", "r4d", "p3c")} AS p4r FROM l3),
-      |l5 AS (SELECT *,
-      |         ${knmLevel("c5", "cs5", "e5_", "r5d", "p4c")} AS p5 FROM l4),
-      |sp AS (SELECT doc_id,
-      |         CASE WHEN c1 IS NULL THEN NULL
-      |              WHEN pos = 1 THEN c1 / n
-      |              WHEN pos = 2 THEN p2r
-      |              WHEN pos = 3 THEN p3r
-      |              WHEN pos = 4 THEN p4r
-      |              ELSE p5 END AS s FROM l5),
-      |kn5s AS (SELECT doc_id, count(*)::BIGINT AS n_words,
-      |           sum(CASE WHEN s IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-      |           round(-sum(coalesce(round(ln(s), 6), 0.0)), 6) AS nll_sum
-      |         FROM sp GROUP BY 1)""".stripMargin
+  /** The quantized-ARPA replay over the pruned model prefix: micro-unit
+    * discount triples (modified: estimated; fixed: 750000), count-class
+    * numerators `(2(10⁶c − Dµ(c)) + cs) div (2cs)` and class-weighted γ
+    * `(2·ΣDₖµNₖ + cs) div (2cs)` clamped to 1 µ (and the uniform floor),
+    * then the q+γ·lower chain. Ends in `kn5s`. */
+  private def kn5qScoreSqlFor(modified: Boolean): String = {
+    def q6(a: String, b: String) = s"(2000000 * ($a) + ($b)) // (2 * ($b))"
+    def qm(c: String, p: String, cs: String) =
+      s"(2 * (1000000 * ($c)::BIGINT - CASE WHEN $c = 1 THEN ${p}1 " +
+        s"WHEN $c = 2 THEN ${p}2 ELSE ${p}3 END) + $cs) // (2 * ($cs))"
+    def gmx(dp: String, kp: String, cs: String) =
+      s"greatest((2 * (${dp}1 * ${kp}1 + ${dp}2 * ${kp}2 + ${dp}3 * ${kp}3) " +
+        s"+ $cs) // (2 * ($cs)), 1)"
+    // per order: the raw numerator/γ, plus (below order 5) the
+    // continuation numerator/γ of the left-extended grams
+    val grams = (2 to 5).map { k =>
+      val (h, g) = (kn5Hs(k), kn5Hs(k) :+ "w")
+      val (qc, cj) =
+        if (k == 5) ("", "")
+        else (s""",
+          |          CASE WHEN u.cc$k IS NOT NULL THEN
+          |            ${qm(s"u.cc$k", s"c${k}d", s"x.ccs$k")} END AS qc$k""".stripMargin,
+          s"""
+          |        LEFT JOIN cc$k u ON ${kn5On("u", "t", g)}
+          |        LEFT JOIN cxq$k x ON ${kn5On("x", "t", h)} CROSS JOIN c${k}d""".stripMargin)
+      s"""qg$k AS (SELECT ${g.map("t." + _).mkString(", ")},
+        |          ${qm(s"t.c$k", s"r${k}d", s"c.cs$k")} AS qr$k$qc
+        |        FROM t$k t JOIN ctq$k c USING (${h.mkString(", ")}) CROSS JOIN r${k}d$cj)""".stripMargin
+    }
+    val ctxs = (2 to 5).map { k =>
+      val h = kn5Hs(k)
+      val (gc, cj) =
+        if (k == 5) ("", "")
+        else (s""",
+          |          CASE WHEN x.ccs$k IS NOT NULL THEN
+          |            ${gmx(s"c${k}d", s"x.f${k}_", s"x.ccs$k")} END AS gc$k""".stripMargin,
+          s" LEFT JOIN cxq$k x USING (${h.mkString(", ")}) CROSS JOIN c${k}d")
+      s"""qx$k AS (SELECT ${h.map("c." + _).mkString(", ")},
+        |          ${gmx(s"r${k}d", s"c.e${k}_", s"c.cs$k")} AS gr$k$gc
+        |        FROM ctq$k c$cj CROSS JOIN r${k}d)""".stripMargin
+    }
+    val legs = (2 to 5).flatMap { k =>
+      Seq((s"qg$k", s"g$k", kn5Hs(k) :+ "w", s"qr$k" +: (if (k < 5) Seq(s"qc$k") else Nil)),
+        (s"qx$k", s"x$k", kn5Hs(k), s"gr$k" +: (if (k < 5) Seq(s"gc$k") else Nil)))
+    }
+    def lvl(q: String, g: String, lower: String) =
+      s"CASE WHEN $g IS NOT NULL THEN coalesce($q, 0) / 1000000.0\n" +
+        s"             + ($g / 1000000.0) * $lower ELSE $lower END"
+    s"""${kn5ModelSqlFor(prune345 = true)},
+      |${kn5CtxsSql("ctq", "cxq", "BIGINT")},
+      |${kn5DiscountsSql(modified, mu = true, "BIGINT")},
+      |${grams.mkString(",\n")},
+      |${ctxs.mkString(",\n")},
+      |qu AS (SELECT u.w,
+      |         greatest(${q6("u.c1::BIGINT", "nv.n::BIGINT")}, 1) AS q0,
+      |         CASE WHEN cont1.nc1 IS NOT NULL AND tts.tt > 0 THEN
+      |           ${qm("cont1.nc1", "ud", "tts.tt::BIGINT")}
+      |         END AS q1u
+      |       FROM uni u LEFT JOIN cont1 ON u.w = cont1.w
+      |       CROSS JOIN nv CROSS JOIN tts CROSS JOIN ud),
+      |qsc AS (SELECT CASE WHEN tts.tt > 0 THEN
+      |          ${gmx("ud", "ucls.u_", "tts.tt::BIGINT")}
+      |        END AS gam1,
+      |        greatest(${q6("1", "nv.v::BIGINT")}, 1) AS vinv
+      |       FROM tts CROSS JOIN nv CROSS JOIN ud CROSS JOIN ucls),
+      |${kn5JoinSql("jq", "qu.q0, qu.q1u, qsc.gam1, qsc.vinv", (("qu", "qu", Seq("w"), Nil)) +: legs,
+          tail = "\n       CROSS JOIN qsc")},
+      |m1 AS (SELECT *, ${lvl("q1u", "gam1", "(vinv / 1000000.0)")} AS p1 FROM jq),
+      |${kn5ChainSql("m", { (k, cont, lower) =>
+          val s = if (cont) "c" else "r"
+          lvl(s"q$s$k", s"g$s$k", lower)
+        })},
+      |${kn5sSql("m5", "q0", "q0 / 1000000.0")}""".stripMargin
+  }
 
-  private val kn5mScoreSql: String = kn5mScoreSqlOver(kn5ModelSql)
+  private val kn5ScoreSql: String = kn5ScoreSqlFor(prune345 = false, modified = false)
+  private val kn5pScoreSql: String = kn5ScoreSqlFor(prune345 = true, modified = false)
+
+  /** A per-doc KN5 score oracle over a replay ending in `kn5s`. */
+  private def kn5Oracle(scoreSql: String): Option[String] =
+    Some(s"""WITH $scoreSql
+            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
+            |ORDER BY doc_id""".stripMargin)
 
   /** Interpolated 5-gram Kneser–Ney scoring ([[TextAnalysis.lmScoreKn5]],
     * D=0.75 at every order) — the KenLM-shape gate CCNet ships: raw-count
@@ -6872,9 +6852,7 @@ object LlmQueries {
           "doc_id", "text")
         .orderBy("doc_id")
     },
-    Some(s"""WITH $kn5ScoreSql
-            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
-            |ORDER BY doc_id""".stripMargin))
+    kn5Oracle(kn5ScoreSql))
 
   /** 5-gram KN scoring from the STORED unified type table
     * ([[Materialized.kn5Types]] ∘ [[TextAnalysis.lmScoreKn5FromModel]]) —
@@ -6900,9 +6878,7 @@ object LlmQueries {
     (s, d) => TextAnalysis.lmScoreKn5FromModel(Tables.documents(s, d),
         "doc_id", "text", Materialized.kn5Types(s, d), modified = true)
       .orderBy("doc_id"),
-    Some(s"""WITH $kn5mScoreSql
-            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
-            |ORDER BY doc_id""".stripMargin))
+    kn5Oracle(kn5ScoreSqlFor(prune345 = false, modified = true)))
 
   /** CCNet's ACTUAL gate composition: per-language perplexity terciles
     * over the STORED 5-gram KN scores — the `text_ppl_buckets2` threshold
@@ -6968,341 +6944,7 @@ object LlmQueries {
     (s, d) => TextAnalysis.lmScoreKn5FromModel(Tables.documents(s, d),
         "doc_id", "text", Materialized.kn5TypesPruned(s, d))
       .orderBy("doc_id"),
-    Some(s"""WITH $kn5pScoreSql
-            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
-            |ORDER BY doc_id""".stripMargin))
-
-  /** The quantized-ARPA replay: pruned model prefix → 6-dp micro-unit
-    * integer quantization of every per-gram numerator and per-context
-    * backoff γ (half-up integer division, γ/uniform floors clamped to
-    * 1 µ), then the q+γ·lower chain. Ends in `kn5s`. */
-  private lazy val kn5qScoreSql: String = {
-    def q6(a: String, b: String) = s"(2000000 * ($a) + ($b)) // (2 * ($b))"
-    s"""${kn5ModelSqlFor(prune345 = true)},
-      |ctq2 AS (SELECT h1, sum(c2)::BIGINT AS cs2,
-      |           count(*)::BIGINT AS nf2 FROM t2 GROUP BY 1),
-      |ctq3 AS (SELECT h2, h1, sum(c3)::BIGINT AS cs3,
-      |           count(*)::BIGINT AS nf3 FROM t3 GROUP BY 1, 2),
-      |ctq4 AS (SELECT h3, h2, h1, sum(c4)::BIGINT AS cs4,
-      |           count(*)::BIGINT AS nf4 FROM t4 GROUP BY 1, 2, 3),
-      |ctq5 AS (SELECT h4, h3, h2, h1, sum(c5)::BIGINT AS cs5,
-      |           count(*)::BIGINT AS nf5 FROM t5 GROUP BY 1, 2, 3, 4),
-      |cxq2 AS (SELECT h1, sum(cc2)::BIGINT AS ccs2,
-      |           count(*)::BIGINT AS ncf2 FROM cc2 GROUP BY 1),
-      |cxq3 AS (SELECT h2, h1, sum(cc3)::BIGINT AS ccs3,
-      |           count(*)::BIGINT AS ncf3 FROM cc3 GROUP BY 1, 2),
-      |cxq4 AS (SELECT h3, h2, h1, sum(cc4)::BIGINT AS ccs4,
-      |           count(*)::BIGINT AS ncf4 FROM cc4 GROUP BY 1, 2, 3),
-      |qg2 AS (SELECT t.h1, t.w,
-      |          ${q6("4 * t.c2::BIGINT - 3", "4 * c.cs2")} AS qr2,
-      |          CASE WHEN u.cc2 IS NOT NULL THEN
-      |            ${q6("4 * u.cc2::BIGINT - 3", "4 * x.ccs2")} END AS qc2
-      |        FROM t2 t JOIN ctq2 c USING (h1)
-      |        LEFT JOIN cc2 u ON u.h1 = t.h1 AND u.w = t.w
-      |        LEFT JOIN cxq2 x ON x.h1 = t.h1),
-      |qg3 AS (SELECT t.h2, t.h1, t.w,
-      |          ${q6("4 * t.c3::BIGINT - 3", "4 * c.cs3")} AS qr3,
-      |          CASE WHEN u.cc3 IS NOT NULL THEN
-      |            ${q6("4 * u.cc3::BIGINT - 3", "4 * x.ccs3")} END AS qc3
-      |        FROM t3 t JOIN ctq3 c USING (h2, h1)
-      |        LEFT JOIN cc3 u ON u.h2 = t.h2 AND u.h1 = t.h1 AND u.w = t.w
-      |        LEFT JOIN cxq3 x ON x.h2 = t.h2 AND x.h1 = t.h1),
-      |qg4 AS (SELECT t.h3, t.h2, t.h1, t.w,
-      |          ${q6("4 * t.c4::BIGINT - 3", "4 * c.cs4")} AS qr4,
-      |          CASE WHEN u.cc4 IS NOT NULL THEN
-      |            ${q6("4 * u.cc4::BIGINT - 3", "4 * x.ccs4")} END AS qc4
-      |        FROM t4 t JOIN ctq4 c USING (h3, h2, h1)
-      |        LEFT JOIN cc4 u ON u.h3 = t.h3 AND u.h2 = t.h2
-      |          AND u.h1 = t.h1 AND u.w = t.w
-      |        LEFT JOIN cxq4 x ON x.h3 = t.h3 AND x.h2 = t.h2
-      |          AND x.h1 = t.h1),
-      |qg5 AS (SELECT t.h4, t.h3, t.h2, t.h1, t.w,
-      |          ${q6("4 * t.c5::BIGINT - 3", "4 * c.cs5")} AS qr5
-      |        FROM t5 t JOIN ctq5 c USING (h4, h3, h2, h1)),
-      |qx2 AS (SELECT c.h1,
-      |          greatest(${q6("3 * c.nf2", "4 * c.cs2")}, 1) AS gr2,
-      |          CASE WHEN x.ccs2 IS NOT NULL THEN
-      |            greatest(${q6("3 * x.ncf2", "4 * x.ccs2")}, 1) END AS gc2
-      |        FROM ctq2 c LEFT JOIN cxq2 x USING (h1)),
-      |qx3 AS (SELECT c.h2, c.h1,
-      |          greatest(${q6("3 * c.nf3", "4 * c.cs3")}, 1) AS gr3,
-      |          CASE WHEN x.ccs3 IS NOT NULL THEN
-      |            greatest(${q6("3 * x.ncf3", "4 * x.ccs3")}, 1) END AS gc3
-      |        FROM ctq3 c LEFT JOIN cxq3 x USING (h2, h1)),
-      |qx4 AS (SELECT c.h3, c.h2, c.h1,
-      |          greatest(${q6("3 * c.nf4", "4 * c.cs4")}, 1) AS gr4,
-      |          CASE WHEN x.ccs4 IS NOT NULL THEN
-      |            greatest(${q6("3 * x.ncf4", "4 * x.ccs4")}, 1) END AS gc4
-      |        FROM ctq4 c LEFT JOIN cxq4 x USING (h3, h2, h1)),
-      |qx5 AS (SELECT h4, h3, h2, h1,
-      |          greatest(${q6("3 * nf5", "4 * cs5")}, 1) AS gr5 FROM ctq5),
-      |qu AS (SELECT u.w,
-      |         greatest(${q6("u.c1::BIGINT", "nv.n::BIGINT")}, 1) AS q0,
-      |         CASE WHEN cont1.nc1 IS NOT NULL AND tts.tt > 0 THEN
-      |           ${q6("4 * cont1.nc1::BIGINT - 3", "4 * tts.tt::BIGINT")}
-      |         END AS q1u
-      |       FROM uni u LEFT JOIN cont1 ON u.w = cont1.w
-      |       CROSS JOIN nv CROSS JOIN tts),
-      |qsc AS (SELECT CASE WHEN tts.tt > 0 THEN
-      |          greatest(${q6("3 * tts.w1::BIGINT", "4 * tts.tt::BIGINT")}, 1)
-      |        END AS gam1,
-      |        greatest(${q6("1", "nv.v::BIGINT")}, 1) AS vinv
-      |       FROM tts CROSS JOIN nv),
-      |jq AS (SELECT sh.doc_id, sh.pos, qu.q0, qu.q1u,
-      |         g2.qr2, g2.qc2, x2.gr2, x2.gc2,
-      |         g3.qr3, g3.qc3, x3.gr3, x3.gc3,
-      |         g4.qr4, g4.qc4, x4.gr4, x4.gc4,
-      |         g5.qr5, x5.gr5, qsc.gam1, qsc.vinv
-      |       FROM sh
-      |       LEFT JOIN qu ON sh.w = qu.w
-      |       LEFT JOIN qg2 g2 ON sh.h1 = g2.h1 AND sh.w = g2.w
-      |       LEFT JOIN qx2 x2 ON sh.h1 = x2.h1
-      |       LEFT JOIN qg3 g3 ON sh.h2 = g3.h2 AND sh.h1 = g3.h1
-      |         AND sh.w = g3.w
-      |       LEFT JOIN qx3 x3 ON sh.h2 = x3.h2 AND sh.h1 = x3.h1
-      |       LEFT JOIN qg4 g4 ON sh.h3 = g4.h3 AND sh.h2 = g4.h2
-      |         AND sh.h1 = g4.h1 AND sh.w = g4.w
-      |       LEFT JOIN qx4 x4 ON sh.h3 = x4.h3 AND sh.h2 = x4.h2
-      |         AND sh.h1 = x4.h1
-      |       LEFT JOIN qg5 g5 ON sh.h4 = g5.h4 AND sh.h3 = g5.h3
-      |         AND sh.h2 = g5.h2 AND sh.h1 = g5.h1 AND sh.w = g5.w
-      |       LEFT JOIN qx5 x5 ON sh.h4 = x5.h4 AND sh.h3 = x5.h3
-      |         AND sh.h2 = x5.h2 AND sh.h1 = x5.h1
-      |       CROSS JOIN qsc),
-      |m1 AS (SELECT *, CASE WHEN gam1 IS NOT NULL THEN
-      |           coalesce(q1u, 0) / 1000000.0
-      |             + (gam1 / 1000000.0) * (vinv / 1000000.0)
-      |         ELSE vinv / 1000000.0 END AS p1 FROM jq),
-      |m2 AS (SELECT *,
-      |         CASE WHEN gc2 IS NOT NULL THEN coalesce(qc2, 0) / 1000000.0
-      |             + (gc2 / 1000000.0) * p1 ELSE p1 END AS p2c,
-      |         CASE WHEN gr2 IS NOT NULL THEN coalesce(qr2, 0) / 1000000.0
-      |             + (gr2 / 1000000.0) * p1 ELSE p1 END AS p2r FROM m1),
-      |m3 AS (SELECT *,
-      |         CASE WHEN gc3 IS NOT NULL THEN coalesce(qc3, 0) / 1000000.0
-      |             + (gc3 / 1000000.0) * p2c ELSE p2c END AS p3c,
-      |         CASE WHEN gr3 IS NOT NULL THEN coalesce(qr3, 0) / 1000000.0
-      |             + (gr3 / 1000000.0) * p2c ELSE p2c END AS p3r FROM m2),
-      |m4 AS (SELECT *,
-      |         CASE WHEN gc4 IS NOT NULL THEN coalesce(qc4, 0) / 1000000.0
-      |             + (gc4 / 1000000.0) * p3c ELSE p3c END AS p4c,
-      |         CASE WHEN gr4 IS NOT NULL THEN coalesce(qr4, 0) / 1000000.0
-      |             + (gr4 / 1000000.0) * p3c ELSE p3c END AS p4r FROM m3),
-      |m5 AS (SELECT *,
-      |         CASE WHEN gr5 IS NOT NULL THEN coalesce(qr5, 0) / 1000000.0
-      |             + (gr5 / 1000000.0) * p4c ELSE p4c END AS p5 FROM m4),
-      |spq AS (SELECT doc_id,
-      |         CASE WHEN q0 IS NULL THEN NULL
-      |              WHEN pos = 1 THEN q0 / 1000000.0
-      |              WHEN pos = 2 THEN p2r
-      |              WHEN pos = 3 THEN p3r
-      |              WHEN pos = 4 THEN p4r
-      |              ELSE p5 END AS s FROM m5),
-      |kn5s AS (SELECT doc_id, count(*)::BIGINT AS n_words,
-      |           sum(CASE WHEN s IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-      |           round(-sum(coalesce(round(ln(s), 6), 0.0)), 6) AS nll_sum
-      |         FROM spq GROUP BY 1)""".stripMargin
-  }
-
-  /** One QUANTIZED modified-KN discount-triple CTE: the knmDiscountSql
-    * doubles (same expression text, same KenLM validity rule) rounded to
-    * micro-unit longs — `round(round(d, 6)·10⁶)`, the exact quantization
-    * [[TextAnalysis.kn5QuantModel]] applies in modified mode (the
-    * fallback 0.75 quantizes to exactly 750000). */
-  private def knqDiscountSql(cte: String, tbl: String, c: String,
-                             p: String): String = {
-    val y = "(n1 / (n1 + 2.0 * n2))"
-    val d1r = s"1.0 - 2.0 * $y * n2 / n1"
-    val d2r = s"2.0 - 3.0 * $y * n3 / n2"
-    val d3r = s"3.0 - 4.0 * $y * n4 / n3"
-    val invalid =
-      s"""n1 = 0 OR n2 = 0 OR n3 = 0 OR n4 = 0
-         |         OR $d1r <= 0.0 OR $d1r > 1.0
-         |         OR $d2r <= 0.0 OR $d2r > 2.0
-         |         OR $d3r <= 0.0 OR $d3r > 3.0""".stripMargin
-    def dk(k: Int, raw: String) =
-      s"""round(round(CASE WHEN $invalid
-         |    THEN 0.75 ELSE $raw END, 6) * 1000000, 0)::BIGINT AS $p$k""".stripMargin
-    s"""$cte AS (SELECT
-       |    ${dk(1, d1r)},
-       |    ${dk(2, d2r)},
-       |    ${dk(3, d3r)}
-       |  FROM (SELECT (count(*) FILTER (WHERE $c = 1))::DOUBLE AS n1,
-       |          (count(*) FILTER (WHERE $c = 2))::DOUBLE AS n2,
-       |          (count(*) FILTER (WHERE $c = 3))::DOUBLE AS n3,
-       |          (count(*) FILTER (WHERE $c = 4))::DOUBLE AS n4 FROM $tbl))""".stripMargin
-  }
-
-  /** The quantized MODIFIED-KN replay: pruned model prefix, eight
-    * µ-quantized discount triples, count-class numerators
-    * `(2(10⁶c − Dµ(c)) + cs) div (2cs)` and class-weighted γ
-    * `(2·ΣDₖµNₖ + cs) div (2cs)` clamped to 1 µ, then the same q+γ·lower
-    * chain as the fixed quant replay. Ends in `kn5s`. */
-  private lazy val kn5qmScoreSql: String = {
-    // count-class discount pick and the exact-integer modified numerator
-    def pick(c: String, p: String) =
-      s"CASE WHEN $c = 1 THEN ${p}1 WHEN $c = 2 THEN ${p}2 ELSE ${p}3 END"
-    def qm(c: String, p: String, cs: String) =
-      s"(2 * (1000000 * ($c)::BIGINT - ${pick(c, p)}) + $cs) // (2 * ($cs))"
-    def gmx(dp: String, kp: String, cs: String) =
-      s"greatest((2 * (${dp}1 * ${kp}1 + ${dp}2 * ${kp}2 + ${dp}3 * ${kp}3) " +
-        s"+ $cs) // (2 * ($cs)), 1)"
-    def clsSql(c: String, p: String) =
-      s"""(count(*) FILTER (WHERE $c = 1))::BIGINT AS ${p}1,
-         |           (count(*) FILTER (WHERE $c = 2))::BIGINT AS ${p}2,
-         |           (count(*) FILTER (WHERE $c >= 3))::BIGINT AS ${p}3""".stripMargin
-    def q6(a: String, b: String) = s"(2000000 * ($a) + ($b)) // (2 * ($b))"
-    s"""${kn5ModelSqlFor(prune345 = true)},
-      |ctq2 AS (SELECT h1, sum(c2)::BIGINT AS cs2,
-      |           ${clsSql("c2", "e2_")}
-      |         FROM t2 GROUP BY 1),
-      |ctq3 AS (SELECT h2, h1, sum(c3)::BIGINT AS cs3,
-      |           ${clsSql("c3", "e3_")}
-      |         FROM t3 GROUP BY 1, 2),
-      |ctq4 AS (SELECT h3, h2, h1, sum(c4)::BIGINT AS cs4,
-      |           ${clsSql("c4", "e4_")}
-      |         FROM t4 GROUP BY 1, 2, 3),
-      |ctq5 AS (SELECT h4, h3, h2, h1, sum(c5)::BIGINT AS cs5,
-      |           ${clsSql("c5", "e5_")}
-      |         FROM t5 GROUP BY 1, 2, 3, 4),
-      |cxq2 AS (SELECT h1, sum(cc2)::BIGINT AS ccs2,
-      |           ${clsSql("cc2", "f2_")}
-      |         FROM cc2 GROUP BY 1),
-      |cxq3 AS (SELECT h2, h1, sum(cc3)::BIGINT AS ccs3,
-      |           ${clsSql("cc3", "f3_")}
-      |         FROM cc3 GROUP BY 1, 2),
-      |cxq4 AS (SELECT h3, h2, h1, sum(cc4)::BIGINT AS ccs4,
-      |           ${clsSql("cc4", "f4_")}
-      |         FROM cc4 GROUP BY 1, 2, 3),
-      |${knqDiscountSql("rq2", "t2", "c2", "r2d")},
-      |${knqDiscountSql("rq3", "t3", "c3", "r3d")},
-      |${knqDiscountSql("rq4", "t4", "c4", "r4d")},
-      |${knqDiscountSql("rq5", "t5", "c5", "r5d")},
-      |${knqDiscountSql("cq2", "cc2", "cc2", "c2d")},
-      |${knqDiscountSql("cq3", "cc3", "cc3", "c3d")},
-      |${knqDiscountSql("cq4", "cc4", "cc4", "c4d")},
-      |${knqDiscountSql("uq", "cont1", "nc1", "ud")},
-      |ucls AS (SELECT (count(*) FILTER (WHERE nc1 = 1))::BIGINT AS u_1,
-      |           (count(*) FILTER (WHERE nc1 = 2))::BIGINT AS u_2,
-      |           (count(*) FILTER (WHERE nc1 >= 3))::BIGINT AS u_3 FROM cont1),
-      |qg2 AS (SELECT t.h1, t.w,
-      |          ${qm("t.c2", "r2d", "c.cs2")} AS qr2,
-      |          CASE WHEN u.cc2 IS NOT NULL THEN
-      |            ${qm("u.cc2", "c2d", "x.ccs2")} END AS qc2
-      |        FROM t2 t JOIN ctq2 c USING (h1)
-      |        LEFT JOIN cc2 u ON u.h1 = t.h1 AND u.w = t.w
-      |        LEFT JOIN cxq2 x ON x.h1 = t.h1
-      |        CROSS JOIN rq2 CROSS JOIN cq2),
-      |qg3 AS (SELECT t.h2, t.h1, t.w,
-      |          ${qm("t.c3", "r3d", "c.cs3")} AS qr3,
-      |          CASE WHEN u.cc3 IS NOT NULL THEN
-      |            ${qm("u.cc3", "c3d", "x.ccs3")} END AS qc3
-      |        FROM t3 t JOIN ctq3 c USING (h2, h1)
-      |        LEFT JOIN cc3 u ON u.h2 = t.h2 AND u.h1 = t.h1 AND u.w = t.w
-      |        LEFT JOIN cxq3 x ON x.h2 = t.h2 AND x.h1 = t.h1
-      |        CROSS JOIN rq3 CROSS JOIN cq3),
-      |qg4 AS (SELECT t.h3, t.h2, t.h1, t.w,
-      |          ${qm("t.c4", "r4d", "c.cs4")} AS qr4,
-      |          CASE WHEN u.cc4 IS NOT NULL THEN
-      |            ${qm("u.cc4", "c4d", "x.ccs4")} END AS qc4
-      |        FROM t4 t JOIN ctq4 c USING (h3, h2, h1)
-      |        LEFT JOIN cc4 u ON u.h3 = t.h3 AND u.h2 = t.h2
-      |          AND u.h1 = t.h1 AND u.w = t.w
-      |        LEFT JOIN cxq4 x ON x.h3 = t.h3 AND x.h2 = t.h2
-      |          AND x.h1 = t.h1
-      |        CROSS JOIN rq4 CROSS JOIN cq4),
-      |qg5 AS (SELECT t.h4, t.h3, t.h2, t.h1, t.w,
-      |          ${qm("t.c5", "r5d", "c.cs5")} AS qr5
-      |        FROM t5 t JOIN ctq5 c USING (h4, h3, h2, h1)
-      |        CROSS JOIN rq5),
-      |qx2 AS (SELECT c.h1,
-      |          ${gmx("rq2.r2d", "c.e2_", "c.cs2")} AS gr2,
-      |          CASE WHEN x.ccs2 IS NOT NULL THEN
-      |            ${gmx("cq2.c2d", "x.f2_", "x.ccs2")} END AS gc2
-      |        FROM ctq2 c LEFT JOIN cxq2 x USING (h1)
-      |        CROSS JOIN rq2 CROSS JOIN cq2),
-      |qx3 AS (SELECT c.h2, c.h1,
-      |          ${gmx("rq3.r3d", "c.e3_", "c.cs3")} AS gr3,
-      |          CASE WHEN x.ccs3 IS NOT NULL THEN
-      |            ${gmx("cq3.c3d", "x.f3_", "x.ccs3")} END AS gc3
-      |        FROM ctq3 c LEFT JOIN cxq3 x USING (h2, h1)
-      |        CROSS JOIN rq3 CROSS JOIN cq3),
-      |qx4 AS (SELECT c.h3, c.h2, c.h1,
-      |          ${gmx("rq4.r4d", "c.e4_", "c.cs4")} AS gr4,
-      |          CASE WHEN x.ccs4 IS NOT NULL THEN
-      |            ${gmx("cq4.c4d", "x.f4_", "x.ccs4")} END AS gc4
-      |        FROM ctq4 c LEFT JOIN cxq4 x USING (h3, h2, h1)
-      |        CROSS JOIN rq4 CROSS JOIN cq4),
-      |qx5 AS (SELECT h4, h3, h2, h1,
-      |          ${gmx("rq5.r5d", "e5_", "cs5")} AS gr5
-      |        FROM ctq5 CROSS JOIN rq5),
-      |qu AS (SELECT u.w,
-      |         greatest(${q6("u.c1::BIGINT", "nv.n::BIGINT")}, 1) AS q0,
-      |         CASE WHEN cont1.nc1 IS NOT NULL AND tts.tt > 0 THEN
-      |           ${qm("cont1.nc1", "ud", "tts.tt::BIGINT")}
-      |         END AS q1u
-      |       FROM uni u LEFT JOIN cont1 ON u.w = cont1.w
-      |       CROSS JOIN nv CROSS JOIN tts CROSS JOIN uq),
-      |qsc AS (SELECT CASE WHEN tts.tt > 0 THEN
-      |          ${gmx("uq.ud", "ucls.u_", "tts.tt::BIGINT")}
-      |        END AS gam1,
-      |        greatest(${q6("1", "nv.v::BIGINT")}, 1) AS vinv
-      |       FROM tts CROSS JOIN nv CROSS JOIN uq CROSS JOIN ucls),
-      |jq AS (SELECT sh.doc_id, sh.pos, qu.q0, qu.q1u,
-      |         g2.qr2, g2.qc2, x2.gr2, x2.gc2,
-      |         g3.qr3, g3.qc3, x3.gr3, x3.gc3,
-      |         g4.qr4, g4.qc4, x4.gr4, x4.gc4,
-      |         g5.qr5, x5.gr5, qsc.gam1, qsc.vinv
-      |       FROM sh
-      |       LEFT JOIN qu ON sh.w = qu.w
-      |       LEFT JOIN qg2 g2 ON sh.h1 = g2.h1 AND sh.w = g2.w
-      |       LEFT JOIN qx2 x2 ON sh.h1 = x2.h1
-      |       LEFT JOIN qg3 g3 ON sh.h2 = g3.h2 AND sh.h1 = g3.h1
-      |         AND sh.w = g3.w
-      |       LEFT JOIN qx3 x3 ON sh.h2 = x3.h2 AND sh.h1 = x3.h1
-      |       LEFT JOIN qg4 g4 ON sh.h3 = g4.h3 AND sh.h2 = g4.h2
-      |         AND sh.h1 = g4.h1 AND sh.w = g4.w
-      |       LEFT JOIN qx4 x4 ON sh.h3 = x4.h3 AND sh.h2 = x4.h2
-      |         AND sh.h1 = x4.h1
-      |       LEFT JOIN qg5 g5 ON sh.h4 = g5.h4 AND sh.h3 = g5.h3
-      |         AND sh.h2 = g5.h2 AND sh.h1 = g5.h1 AND sh.w = g5.w
-      |       LEFT JOIN qx5 x5 ON sh.h4 = x5.h4 AND sh.h3 = x5.h3
-      |         AND sh.h2 = x5.h2 AND sh.h1 = x5.h1
-      |       CROSS JOIN qsc),
-      |m1 AS (SELECT *, CASE WHEN gam1 IS NOT NULL THEN
-      |           coalesce(q1u, 0) / 1000000.0
-      |             + (gam1 / 1000000.0) * (vinv / 1000000.0)
-      |         ELSE vinv / 1000000.0 END AS p1 FROM jq),
-      |m2 AS (SELECT *,
-      |         CASE WHEN gc2 IS NOT NULL THEN coalesce(qc2, 0) / 1000000.0
-      |             + (gc2 / 1000000.0) * p1 ELSE p1 END AS p2c,
-      |         CASE WHEN gr2 IS NOT NULL THEN coalesce(qr2, 0) / 1000000.0
-      |             + (gr2 / 1000000.0) * p1 ELSE p1 END AS p2r FROM m1),
-      |m3 AS (SELECT *,
-      |         CASE WHEN gc3 IS NOT NULL THEN coalesce(qc3, 0) / 1000000.0
-      |             + (gc3 / 1000000.0) * p2c ELSE p2c END AS p3c,
-      |         CASE WHEN gr3 IS NOT NULL THEN coalesce(qr3, 0) / 1000000.0
-      |             + (gr3 / 1000000.0) * p2c ELSE p2c END AS p3r FROM m2),
-      |m4 AS (SELECT *,
-      |         CASE WHEN gc4 IS NOT NULL THEN coalesce(qc4, 0) / 1000000.0
-      |             + (gc4 / 1000000.0) * p3c ELSE p3c END AS p4c,
-      |         CASE WHEN gr4 IS NOT NULL THEN coalesce(qr4, 0) / 1000000.0
-      |             + (gr4 / 1000000.0) * p3c ELSE p3c END AS p4r FROM m3),
-      |m5 AS (SELECT *,
-      |         CASE WHEN gr5 IS NOT NULL THEN coalesce(qr5, 0) / 1000000.0
-      |             + (gr5 / 1000000.0) * p4c ELSE p4c END AS p5 FROM m4),
-      |spq AS (SELECT doc_id,
-      |         CASE WHEN q0 IS NULL THEN NULL
-      |              WHEN pos = 1 THEN q0 / 1000000.0
-      |              WHEN pos = 2 THEN p2r
-      |              WHEN pos = 3 THEN p3r
-      |              WHEN pos = 4 THEN p4r
-      |              ELSE p5 END AS s FROM m5),
-      |kn5s AS (SELECT doc_id, count(*)::BIGINT AS n_words,
-      |           sum(CASE WHEN s IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-      |           round(-sum(coalesce(round(ln(s), 6), 0.0)), 6) AS nll_sum
-      |         FROM spq GROUP BY 1)""".stripMargin
-  }
+    kn5Oracle(kn5pScoreSql))
 
   /** 5-gram KN scoring against the QUANTIZED ARPA-style stored model
     * ([[Materialized.kn5Quant]] ∘ [[TextAnalysis.lmScoreKn5Quant]]) —
@@ -7315,9 +6957,7 @@ object LlmQueries {
     (s, d) => TextAnalysis.lmScoreKn5Quant(Tables.documents(s, d),
         "doc_id", "text", Materialized.kn5Quant(s, d))
       .orderBy("doc_id"),
-    Some(s"""WITH $kn5qScoreSql
-            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
-            |ORDER BY doc_id""".stripMargin))
+    kn5Oracle(kn5qScoreSqlFor(modified = false)))
 
   /** The CCNet perplexity-tercile gate consuming the PRUNED stored scores
     * ([[Materialized.kn5ScoresPruned]]) — `text_ppl_buckets5`'s
@@ -7346,9 +6986,7 @@ object LlmQueries {
     (s, d) => TextAnalysis.lmScoreKn5FromModel(Tables.documents(s, d),
         "doc_id", "text", Materialized.kn5TypesPruned(s, d), modified = true)
       .orderBy("doc_id"),
-    Some(s"""WITH ${kn5mScoreSqlOver(kn5ModelSqlFor(prune345 = true))}
-            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
-            |ORDER BY doc_id""".stripMargin))
+    kn5Oracle(kn5ScoreSqlFor(prune345 = true, modified = true)))
 
   /** Quantized MODIFIED-KN scoring ([[Materialized.kn5QuantMod]] ∘
     * [[TextAnalysis.lmScoreKn5Quant]]) — the two KenLM production dials
@@ -7366,9 +7004,7 @@ object LlmQueries {
     (s, d) => TextAnalysis.lmScoreKn5Quant(Tables.documents(s, d),
         "doc_id", "text", Materialized.kn5QuantMod(s, d))
       .orderBy("doc_id"),
-    Some(s"""WITH $kn5qmScoreSql
-            |SELECT doc_id, n_words, n_oov, nll_sum FROM kn5s
-            |ORDER BY doc_id""".stripMargin))
+    kn5Oracle(kn5qScoreSqlFor(modified = true)))
 
   /** Count-min sketch frequency probe ([[TextAnalysis.cmsCells]] /
     * [[TextAnalysis.cmsEstimate]], Cormode & Muthukrishnan 2005): 4×1024

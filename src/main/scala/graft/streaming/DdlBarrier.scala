@@ -138,7 +138,7 @@ object DdlBarrier {
         val t = graft.model.TypeMapping.map(typ, m.limit).targetDdl
         val add = s"ALTER TABLE ${dialect.tableName(m)} ADD IF NOT EXISTS ${esc(c)} $t"
         val backfill = default.map(d =>
-          graft.ddl.SchemaEvolution.backfillSql(m, c, d))
+          graft.ddl.SchemaEvolution.backfillSql(m, c, typ, d))
         add +: backfill.toSeq
       case DdlParser.DropColumn(c) if m.drop =>
         Seq(s"ALTER TABLE ${dialect.tableName(m)} DROP COLUMN IF EXISTS ${esc(c)}")

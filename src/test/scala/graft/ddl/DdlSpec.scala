@@ -58,6 +58,25 @@ class DdlSpec extends AnyFunSuite {
     assert(p.createTable.isEmpty && p.addColumns.isEmpty && p.backfills.isEmpty)
   }
 
+  test("D3 DEFAULT renders by column type: '' and '1' quoted, NULL not backfilled, quotes escaped") {
+    assert(parse("ALTER TABLE user ADD COLUMN nick VARCHAR(16) NOT NULL DEFAULT ''")._2 ==
+      Seq(AddColumn("nick", "VARCHAR(16)", notNull = true, Some(""))))
+    assert(parse("ALTER TABLE user ADD COLUMN note VARCHAR(16) DEFAULT NULL")._2 ==
+      Seq(AddColumn("note", "VARCHAR(16)", notNull = false, None)))
+    assert(parse("ALTER TABLE user ADD COLUMN q VARCHAR(16) DEFAULT 'it''s'")._2 ==
+      Seq(AddColumn("q", "VARCHAR(16)", notNull = false, Some("it's"))))
+    val added = Seq(
+      SchemaEvolution.SourceColumn("nick", "varchar(16)", isPk = false, nullable = false, Some("")),
+      SchemaEvolution.SourceColumn("code", "varchar(4)", isPk = false, nullable = true, Some("1")),
+      SchemaEvolution.SourceColumn("q", "varchar(16)", isPk = false, nullable = true, Some("it's")),
+      SchemaEvolution.SourceColumn("ratio", "decimal(10,2)", isPk = false, nullable = true, Some("-0.5")))
+    val p = SchemaEvolution.plan(mapping, source ++ added, Set("id", "name", "age"))
+    def upsert(c: String, v: String) =
+      s"""UPSERT INTO "MYTEST2"."USER" ("ID", "$c") SELECT "ID", $v FROM "MYTEST2"."USER""""
+    assert(p.backfills == Seq(upsert("NICK", "''"), upsert("CODE", "'1'"),
+      upsert("Q", "'it''s'"), upsert("RATIO", "-0.5")))
+  }
+
   test("D4 limit=true keeps varchar lengths") {
     val p = SchemaEvolution.plan(mapping.copy(limit = true), source, Set.empty)
     assert(p.createTable.get.contains(""""NAME" VARCHAR(64) NOT NULL"""))

@@ -40,6 +40,18 @@ class DdlBarrierSpec extends AnyFunSuite {
     assert(excluded.isEmpty)
   }
 
+  test("DDL statement generation: a DEFAULT renders by column type ('', NULL, quoted digits)") {
+    def stmts(sql: String) = DdlBarrier.ddlStatements(config, DdlBarrier.DdlEvent(1, sql))
+    def add(c: String) = s"""ALTER TABLE "MYTEST2"."USER" ADD IF NOT EXISTS "$c" VARCHAR"""
+    def upsert(c: String, v: String) =
+      s"""UPSERT INTO "MYTEST2"."USER" ("ID", "$c") SELECT "ID", $v FROM "MYTEST2"."USER""""
+    assert(stmts("ALTER TABLE user ADD COLUMN nick VARCHAR(16) NOT NULL DEFAULT ''") ==
+      Seq(add("NICK"), upsert("NICK", "''")))
+    assert(stmts("ALTER TABLE user ADD COLUMN note VARCHAR(16) DEFAULT NULL") == Seq(add("NOTE")))
+    assert(stmts("ALTER TABLE user ADD COLUMN code VARCHAR(4) DEFAULT '1'") ==
+      Seq(add("CODE"), upsert("CODE", "'1'")))
+  }
+
   test("segments split DML at DDL sequence boundaries in order") {
     import spark.implicits._
     val dml = Seq((1L, "a"), (2L, "b"), (4L, "c"), (6L, "d"))

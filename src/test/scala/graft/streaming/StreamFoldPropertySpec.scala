@@ -23,7 +23,10 @@ import scala.util.Random
  * TRUNCATE; each seed runs with `concurrent` true and false at 1 and 4
  * partitions. The same logs written as five files and drained three files
  * per micro-batch at 8 partitions check that a batch spanning files merges
- * their stats and ranks their rows.
+ * their stats and ranks their rows. The same logs also drain through the
+ * two other ingress orderings: SingleStream over the text source, and
+ * KafkaOffsets over JSON-lines files whose rows carry the canal event as
+ * `value` with its `partition` and `offset`.
  */
 class StreamFoldPropertySpec extends AnyFunSuite {
   @transient lazy val spark = TestSpark.spark
@@ -61,10 +64,16 @@ class StreamFoldPropertySpec extends AnyFunSuite {
 
   /** Write the log as `files` files, each older than the next (the file
     * source takes the oldest file first): the first ends at a random point
-    * in the log's middle half, the rest split the remainder evenly. */
-  private def writeLog(seed: Int, files: Int = 2): Path = {
+    * in the log's middle half, the rest split the remainder evenly. With
+    * `kafka`, each line wraps its event as a Kafka record: the event text
+    * as `value`, one partition (canal's MQ mode sends a table's events to
+    * one partition) and the event's position in the log as `offset`. */
+  private def writeLog(seed: Int, files: Int = 2, kafka: Boolean = false): Path = {
     val rnd = new Random(seed)
-    val log = randomLog(rnd)
+    val log = randomLog(rnd).zipWithIndex.map { case (e, i) =>
+      if (kafka) s"""{"value":"${e.replace("\"", "\\\"")}","partition":3,"offset":${100 + i}}"""
+      else e
+    }
     val dir = Files.createTempDirectory(s"canal-fold-$seed")
     val (head, rest) = log.splitAt(log.size / 4 + rnd.nextInt(log.size / 2))
     val n = files - 1
@@ -89,20 +98,26 @@ class StreamFoldPropertySpec extends AnyFunSuite {
     SchemaProbe.probe(foldMapping, DerbyConn.factory(url), DeleteInsertDialect)
   }
 
-  /** The target table after draining `dir`, and the number of micro-batches
-    * that carried rows. */
+  /** The target table after draining `dir` under `ordering`, and the
+    * number of micro-batches that carried rows. KafkaOffsets reads
+    * `writeLog(kafka = true)` files; the other orderings read text. */
   private def drain(dir: Path, url: String, concurrent: Boolean, numPartitions: Int,
-                    filesPerTrigger: Int = 1): (Seq[Row3], Int) = {
+                    filesPerTrigger: Int = 1,
+                    ordering: CanalStream.IngressOrdering = CanalStream.IngressOrdering.FileOrder
+                   ): (Seq[Row3], Int) = {
     val schema = createTarget(url)
     val cfg = MappingConfig(dataSourceKey = "ds", destination = "example", groupId = "g1",
       concurrent = concurrent, dbMapping = foldMapping)
-    val q = CanalStream.start(spark,
-      spark.readStream.schema("value STRING")
-        .option("maxFilesPerTrigger", filesPerTrigger.toString).text(dir.toString),
+    val reader = spark.readStream.option("maxFilesPerTrigger", filesPerTrigger.toString)
+    val raw =
+      if (ordering == CanalStream.IngressOrdering.KafkaOffsets)
+        reader.schema("value STRING, partition INT, offset BIGINT").json(dir.toString)
+      else reader.schema("value STRING").text(dir.toString)
+    val q = CanalStream.start(spark, raw,
       new AtomicReference[Seq[MappingConfig]](Seq(cfg)), numPartitions,
       (cf, ordered, ctx) => CanalStream.applyBatchToJdbc(cf, ordered, schema,
         DerbyConn.factory(url), DeleteInsertDialect, sourceColsHint = ctx.sourceCols),
-      ordering = CanalStream.IngressOrdering.FileOrder)
+      ordering = ordering)
     try q.processAllAvailable() finally q.stop()
     val batches = q.recentProgress.count(_.numInputRows > 0)
     val cc = DriverManager.getConnection(url)
@@ -147,6 +162,20 @@ class StreamFoldPropertySpec extends AnyFunSuite {
         val url = s"jdbc:derby:memory:fold3f${seed}_$concurrent;create=true"
         assert(drain(dir, url, concurrent, 8, filesPerTrigger = 3) == ((expected, 2)),
           s"seed $seed, concurrent=$concurrent")
+      }
+    }
+  }
+
+  Seq(11, 23, 37).foreach { seed =>
+    test(s"stream ≡ materialize through SingleStream and KafkaOffsets ingress (seed $seed; 4 partitions)") {
+      val expected = expectedOf(writeLog(seed), seed + 2000)
+      val modes = Seq(
+        CanalStream.IngressOrdering.SingleStream -> writeLog(seed),
+        CanalStream.IngressOrdering.KafkaOffsets -> writeLog(seed, kafka = true))
+      for ((mode, dir) <- modes) {
+        val url = s"jdbc:derby:memory:foldin${seed}_$mode;create=true"
+        assert(drain(dir, url, concurrent = true, 4, ordering = mode) == ((expected, 2)),
+          s"seed $seed, ordering=$mode")
       }
     }
   }
